@@ -610,9 +610,16 @@ class PlanSpec extends SparkSpec {
     cat.createTable("t", StructType(Seq(
       StructField("day", LongType), StructField("v", LongType))),
       partitionBy = Seq("day"))
-    // partition-layout write: one file per day value
-    cat.insert("t", spark.range(0, 8000)
+    // partition-layout write at a pinned width: the layout hash-buckets
+    // day values into shuffle.partitions buckets, so the file count
+    // follows the width (3 files at 4, 7 at 32); pinning it gives the
+    // same multi-file layout on every host
+    val width = "spark.sql.shuffle.partitions"
+    val priorWidth = spark.conf.get(width)
+    spark.conf.set(width, "32")
+    try cat.insert("t", spark.range(0, 8000)
       .selectExpr("id % 8 AS day", "id AS v"))
+    finally spark.conf.set(width, priorWidth)
     val total = cat.current.tables("t").files.size
     // hash clustering may co-locate a couple of day values — the test
     // only needs a multi-file layout with day-disjoint files
