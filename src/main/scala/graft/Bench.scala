@@ -1,280 +1,41 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-/** Driver-run benchmark: times every data-scale query at the given SF and
-  * prints ONE JSON line. Besides the per-query seconds it emits the
-  * spark/duckdb ratio table the 2x bar is judged on: `bench/duckdb_baseline_
-  * sf0.1.json` holds min-of-3 DuckDB timings for the same oracle SQL on the
-  * same parquet (regenerate with scripts/duckdb_bench.py), and the output
-  * decomposes the oracle-comparable subset into `floor` (queries at Spark's
-  * per-query plan+schedule floor, which amortizes away on a cluster) vs
-  * `heavy` (real compute, the honest engine-vs-engine comparison). */
+/** Suite benchmark: builds and fully evaluates every data-scale query
+  * (`SparkEntry.queries` minus the `l*` lake scenarios) once, and prints
+  * ONE bare JSON line last, after the session has stopped:
+  * `{"metric":"total","value":<sec>,"unit":"sec","failed":[<names>]}`.
+  *
+  * Each result goes to the `noop` sink, which evaluates every output row
+  * and column; a `count()` would let Catalyst drop the final projection,
+  * aggregates and sort. A failed query is named in `failed` and its time
+  * left out of the total. The benchmark of record, with per-operation and
+  * per-layer metrics, is `perfbench/`.
+  *
+  * Usage: `SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.Bench"`. */
 object Bench {
-
-  /** Queries whose Spark min-time is below this sit at the local-mode
-    * job-scheduling floor: their cost is plan+schedule, not data. */
-  val FloorSec = 0.25
-
-  private def baseline(sfDir: String): Map[String, Double] = {
-    val candidates = Seq(
-      sys.env.get("SPARK_GRAFT_DUCKDB_BASELINE"),
-      Some(s"bench/duckdb_baseline_sf${sfDir.split("/sf").last}.json"),
-      Some("/root/repo/bench/duckdb_baseline_sf0.1.json")).flatten
-    candidates.map(new java.io.File(_)).find(_.isFile).map { f =>
-      JsonMethods.parse(f) \ "queries" match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v))  => k -> v
-          case (k, JDecimal(v)) => k -> v.toDouble
-          case (k, JInt(v))     => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty[String, Double]
-      }
-    }.getOrElse(Map.empty)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CBO=0 re-runs the A/B (plan-stats estimation off)
-    val cboOn = (!sys.env.get("SPARK_GRAFT_CBO").contains("0")).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // cost-based optimization: lake-table scans carry exact manifest
-      // statistics (rowCount/size/min-max/NDV via RelationStats), so the
-      // INITIAL plan picks broadcast sides and join order from stats
-      // instead of relying on AQE runtime repair; plain parquet reads
-      // (no catalog stats) keep their default size-only estimates
-      .config("spark.sql.cbo.enabled", cboOn)
-      .config("spark.sql.cbo.planStats.enabled", cboOn)
-      .config("spark.sql.cbo.joinReorder.enabled", cboOn)
-      // Adaptive execution stays at its default (ON): the A/B in
-      // bench/FLOOR_ANALYSIS.md measured AQE-off as a net LOSS here
-      // (heavy leg +2 s from losing runtime coalescing; floor leg flat
-      // because the constant is scheduler+action machinery, not AQE).
-      // SPARK_GRAFT_AQE=0 re-runs that experiment.
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.get("SPARK_GRAFT_AQE").contains("0")).toString)
-      .getOrCreate()
+    val spark = SparkEntry.session(SparkEntry.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
-    // warm the session (executor threads, codegen compiler, shuffle infra,
-    // hadoop-fs + parquet reader paths) so the first timed query doesn't
-    // absorb one-time JVM init
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    // materialize the ten driver tables in memory once: the suite runs ~70
-    // queries over the same ~17 MB of parquet — re-listing, footer-reading
-    // and re-decoding it per query is floor, not workload (cluster analog:
-    // a cache tier). Queries and plans are unchanged; Tables memoizes.
+    // the queries re-read the same ten tables: cache them once, so
+    // re-decoding the parquet per query is not timed as query work
     Tables.warm(spark, sfDir)
-    // l* lake scenarios build fixed-size throwaway catalogs (correctness
-    // surfaces, not data-scale queries) — bench times the data-scale set.
-    // Three runs per query, report the min: the first execution pays
-    // one-time Janino/codegen compilation (cached per session) — the min
-    // reflects the steady-state engine cost, which is what scales to 100 TB
-    // Two PASSES over the suite, two back-to-back runs per visit, per-query
-    // min of the four. The back-to-back second run is the steady-state
-    // engine cost (codegen compiled, caches materialized, JIT hot) — that's
-    // what scales to a cluster. The two visits sit ~2 minutes apart, so a
-    // transient machine-load spike (the round-4 artifact recorded ~2x
-    // across the board from exactly that) can't cover every run of a query.
-    val passes = 2; val burst = 2; val runs = passes * burst
-    val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(_._1.startsWith("l"))
-    // Per-query TASK time alongside wall time: `ideal32` = executor task
-    // ms / CPUs for the run that achieved the min wall. Wall time on a
-    // shared host moves ±25-40% with machine load at identical code
-    // (FLOOR_ANALYSIS round 14/15 drift brackets); summed task time is
-    // load-invariant, so round-over-round performance claims anchor on
-    // it — a claim changes only when ideal32 moves. Events post async,
-    // so every read is preceded by a listener-bus drain (see
-    // ListenerDrain) to keep attribution per-query exact.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) taskMs.addAndGet(m.executorRunTime)
-      }
-    })
-    def taskMsNow(): Long = {
-      org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-      taskMs.get()
-    }
-    // dd*-family JIT pre-warm: the shingle-index pipelines (dd2 espec.)
-    // carried a 2.3x cross-SESSION drift bracket at identical code —
-    // whether C2 converged their generated loops depended on what
-    // compiled earlier in the session (FLOOR_ANALYSIS round 14). One
-    // untimed pass compiles those exact codegen classes before any
-    // timed run, so every session measures the converged code, not a
-    // compilation race. Errors surface in the timed loop, not here.
-    for ((name, fn) <- qlist if name.startsWith("dd")) {
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
-    ops.Cached.release()
-    val mins = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // ideal32 of the run that achieved the min wall (task s / cpus)
-    val ideals = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val nCpus = cpus.toDouble
-    // a query that throws must surface as a named failure, not a fast
-    // timing — a swallowed exception here is indistinguishable from a
-    // sub-second query in the round artifact
-    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    for (_ <- 1 to passes; (name, fn) <- qlist) {
-      for (_ <- 1 to burst) {
-        val tm0 = taskMsNow()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (sec < mins.getOrElse(name, Double.MaxValue)) {
-            mins(name) = sec
-            ideals(name) = (taskMsNow() - tm0) / 1e3 / nCpus
-          }
-        } catch { case e: Throwable =>
-          failed(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
-          System.err.println(s"[bench] $name FAILED: ${failed(name)}")
-        }
-      }
-      // drop this query's tracked intermediate caches before moving on —
-      // the burst's back-to-back run still reuses them (CacheManager keys
-      // by analyzed plan), but the session never accumulates 200 queries'
-      // worth of cached exploded-token frames
-      ops.Cached.release()
-    }
-    val results = mins.toSeq
-    // The streaming leg's honest unit of work is the PIPELINE SET, not the
-    // lone query: one drain keeps only 4-8 state partitions busy on 32
-    // cores (state-store commit cost caps useful width — see
-    // FLOOR_ANALYSIS), so a production box runs the pipelines CONCURRENTLY
-    // and the leg's cost is their joint wall-clock. Measure it: all eight
-    // st* drains started together, each in its own child session (own
-    // SQLConf — drainToTable mutates shuffle.partitions, which would race
-    // on a shared session), two passes, min wall. The sequential per-query
-    // mins above remain the per-pipeline latency record.
-    val stNames = qlist.map(_._1).filter(_.startsWith("st"))
-    val stWall: Option[Double] = if (stNames.isEmpty) None else Some {
-      import java.util.concurrent.Executors
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = Executors.newFixedThreadPool(stNames.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val walls = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val fs = stNames.map { n => Future {
-          try { SparkEntry.queries(n)(spark.newSession(), sfDir).count(); () }
-          catch { case e: Throwable =>
-            // LinkedHashMap is not thread-safe and these run on pool
-            // threads — synchronize; and key under a __concurrent suffix
-            // so a drain that only fails under concurrency doesn't mark
-            // the (passed) sequential timing as failed in the artifact
-            val msg = s"concurrent: ${e.getClass.getSimpleName}: ${e.getMessage}"
-            failed.synchronized { failed(s"${n}__concurrent") = msg }
-            System.err.println(s"[bench] concurrent $n FAILED: $msg")
-          }
-        }}
-        fs.foreach(Await.result(_, Duration.Inf))
-        (System.nanoTime() - t0) / 1e9
-      }
-      pool.shutdown()
-      walls.min
-    }
-    val duck = baseline(sfDir)
-    // The 46 l* lake scenarios are correctness surfaces (throwaway
-    // catalogs replaying DDL/DML/time-travel logic), not data-scale
-    // queries — they stay out of the DuckDB-ratio legs. But leaving them
-    // UNTIMED let round 11's dd7 wobble hide in the unbenched half of the
-    // suite: time each once per round (they are dominated by fixed commit
-    // machinery, not steady-state compute, so min-of-4 buys nothing) and
-    // record the seconds so a regression shows up as a round-over-round
-    // diff in the artifact.
-    val lakeTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // lake ideal32 is DIAGNOSTIC, not a claim anchor: these scenarios
-    // are dominated by driver-side commit machinery (manifest publish,
-    // OCC, per-statement planning), so wall >> task time BY DESIGN —
-    // the split tells the next optimization pass whether a scenario's
-    // wall is executor work (task time) or commit constants (the rest)
-    val lakeIdeals = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    var total = 0.0
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-           if name.startsWith("l")) {
-      val tm0 = taskMsNow()
+         if !name.startsWith("l")) {
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).count()
-        lakeTimes(name) = (System.nanoTime() - t0) / 1e9
-        lakeIdeals(name) = (taskMsNow() - tm0) / 1e3 / nCpus
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        total += (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
-        failed(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
-        System.err.println(s"[bench] $name FAILED: ${failed(name)}")
-      }
+        failed += name
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      } finally ops.Cached.release()
     }
-    def j(d: Double): String = f"$d%.4f"
-    val qs = results.map { case (k, v) => s"\"$k\":${j(v)}" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // oracle-comparable subset: per-query ratio + floor/heavy decomposition.
-    // Two groups are split into their own legs because their oracle proves
-    // CORRECTNESS without doing equivalent work: streaming queries (st* —
-    // the duckdb side is a one-shot batch statement, not micro-batch
-    // replay + state-store machinery) and contract-verified queries (ss3 —
-    // the duckdb side derives the query set while the Spark side runs the
-    // IVF search PLUS the brute-force recall audit). The floor/heavy legs
-    // cover the engine-vs-engine batch subset.
-    // contract-verified queries: the DuckDB side derives the query set /
-    // exact top-k only, NOT equivalent compute (ss3/ss5 run the ANN
-    // search plus a brute-force recall audit; a16 builds the sketch and
-    // audits its bound) — so they are split out of engine-vs-engine legs
-    val contractOnly = Set("ss3_ann_ivf", "ss5_ann_pq", "a16_cms_heavy_hitters")
-    val oracled = results.filter { case (k, _) => duck.contains(k) }
-    val ratios = oracled.map { case (k, v) =>
-      s"\"$k\":${j(v / duck(k))}" }.mkString("{", ",", "}")
-    val (streaming, batch0) = oracled.partition(_._1.startsWith("st"))
-    val (contract, batch) = batch0.partition(x => contractOnly.contains(x._1))
-    val (floor, heavy) = batch.partition(_._2 < FloorSec)
-    def leg(xs: Seq[(String, Double)]): String = {
-      val s = xs.map(_._2).sum; val d = xs.map(x => duck(x._1)).sum
-      val ideal = xs.flatMap(x => ideals.get(x._1)).sum
-      s"""{"n":${xs.size},"spark_s":${j(s)},"ideal32_s":${j(ideal)},"duckdb_s":${j(d)},"ratio":${j(if (d > 0) s / d else 0)}}"""
-    }
-    val sparkOracle = oracled.map(_._2).sum
-    val duckOracle = oracled.map(x => duck(x._1)).sum
-    val summary =
-      if (duck.isEmpty) "\"duckdb_baseline\":\"missing\""
-      else s""""oracle_subset":${leg(oracled)},"batch":${leg(batch)},"floor":${leg(floor)},"heavy":${leg(heavy)},"streaming":${leg(streaming)}${stWall.map(w => s""","streaming_concurrent_wall_s":${j(w)}""").getOrElse("")},"contract":${leg(contract)}"""
-    val failedJson = failed.keys.map(k => s"\"$k\"").mkString("[", ",", "]")
-    val head = s""""metric":"total","value":${j(total)},"unit":"sec","runs_per_query":$runs,"agg":"min","failed":$failedJson,"spark_oracle_s":${j(sparkOracle)},"duckdb_oracle_s":${j(duckOracle)},$summary"""
-    // Full detail (the per-query seconds/ideal32/ratio maps) goes to a
-    // file: the driver archives only the LAST 2000 CHARS of stdout, and a
-    // line that outgrows that budget is recorded unparsed — r16 and r17
-    // both shipped a ~5 KB stdout line (178-entry "queries" map) and the
-    // driver recorded `parsed: null` twice, leaving PERF with no totals.
-    // So the final stdout line is a compact summary (total, legs, failed
-    // list, detail path — measured ~1.1 KB, under the 2 KB tail minus
-    // sbt's trailing "[success]" line) and the full per-query map lives
-    // ONLY in the detail file. Methodology (queries timed, runs, agg) is
-    // unchanged; nothing is dropped from the detail artifact.
-    // SPARK_GRAFT_BENCH_OUT redirects the detail artifact (e.g. a
-    // scratch path for exploratory runs); the committed pair of record
-    // lives at bench/BENCH_PAIR.json (copied there deliberately), so a
-    // driver-triggered re-run overwriting the default path never dirties
-    // the tree's artifact of record.
-    val detail = new java.io.File(sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_OUT", "bench/BENCH_LATEST.json"))
-    Option(detail.getParentFile).foreach(_.mkdirs())
-    val lakeJson = lakeTimes.toSeq.map { case (k, v) => s"\"$k\":${j(v)}" }
-      .mkString("{", ",", "}")
-    val lakeHead =
-      s""""lake":{"n":${lakeTimes.size},"total_s":${j(lakeTimes.values.sum)},"ideal32_s":${j(lakeIdeals.values.sum)},"runs":1}"""
-    val idealJson = results.flatMap { case (k, _) =>
-      ideals.get(k).map(v => s"\"$k\":${j(v)}") }.mkString("{", ",", "}")
-    val lakeIdealJson = lakeIdeals.toSeq.map { case (k, v) =>
-      s"\"$k\":${j(v)}" }.mkString("{", ",", "}")
-    val fullLine =
-      s"""{$head,$lakeHead,"ratios":$ratios,"queries":$qs,"ideal32":$idealJson,"lake_s":$lakeJson,"lake_ideal32":$lakeIdealJson,"sf":"$sfDir"}"""
-    val w = new java.io.PrintWriter(detail, "UTF-8")
-    try w.println(fullLine) finally w.close()
-    println(s"""{$head,$lakeHead,"detail":"${detail.getPath}","sf":"$sfDir"}""")
     spark.stop()
+    val names = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    println(f"""{"metric":"total","value":$total%.4f,"unit":"sec","failed":$names}""")
   }
 }

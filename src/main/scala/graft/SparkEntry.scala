@@ -39,6 +39,30 @@ object SparkEntry {
       .limit(10)
   }
 
+  /** Core count for a local session: `SPARK_GRAFT_CPUS` when set, else
+    * `default`. */
+  def cpus(default: => Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** The one session shape every runtime surface and the test suites
+    * share: `local[cores]` with the shuffle width equal to the cores, UTC,
+    * no UI, and cost-based optimization. Lake-table scans carry exact
+    * manifest statistics (rowCount/size/min-max/NDV via RelationStats), so
+    * the INITIAL plan picks broadcast sides and join order from stats
+    * instead of relying on AQE runtime repair; plain parquet reads (no
+    * catalog stats) keep their default size-only estimates. */
+  def session(cores: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.cbo.enabled", "true")
+      .config("spark.sql.cbo.planStats.enabled", "true")
+      .config("spark.sql.cbo.joinReorder.enabled", "true")
+      .getOrCreate()
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(q => q.name -> q.build).toMap

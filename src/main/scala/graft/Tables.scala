@@ -12,11 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
 
   /** Memoized source frames, keyed per (session, dir, table). The suite
-    * surfaces (Bench/Verify) call each loader dozens of times; re-running
-    * `spark.read.parquet` re-lists the dir and re-reads footers for schema
-    * inference every call — pure per-query floor. The memo returns the same
-    * (immutable) DataFrame, so plans are unchanged; it also lets
-    * [[warm]] persist once and have every later lookup hit the cache. */
+    * surfaces (Verify, Bench, perfbench) call each loader dozens of times;
+    * re-running `spark.read.parquet` re-lists the dir and re-reads footers
+    * for schema inference every call — pure per-query floor. The memo
+    * returns the same (immutable) DataFrame, so plans are unchanged; it
+    * also lets [[warm]] persist once and have every later lookup hit the
+    * cache. */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
@@ -29,9 +30,10 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Persist + materialize every driver table for repeated-query sessions
-    * (Bench/Verify run ~70 queries over the same ten tables; re-decoding
-    * the same parquet per query is floor, not workload). Test sessions
-    * never call this, so plan-hygiene specs still see the parquet scans.
+    * (Bench and perfbench run up to ~165 queries over the same ten
+    * tables; re-decoding the same parquet per query is floor, not
+    * workload). Test sessions never call this, so plan-hygiene specs
+    * still see the parquet scans.
     * At 100 TB the analog is a cluster-level cache/alluxio tier — an
     * explicit opt-in, which is why this is not done inside [[t]].
     *
@@ -121,21 +123,14 @@ object Tables {
   private def warm0(spark: SparkSession, sfDir: String): Unit = {
     names.foreach { n =>
       val raw = t(spark, sfDir, n)
-      // GRAFT_WARM_SPREAD=0 re-runs the A/B without the spread;
-      // GRAFT_WARM_ROWS overrides the rows-per-partition target (the
-      // measured sweet spot: big enough that per-task fixed costs — cache
-      // batch decode, agg hash-map setup — stay amortized, small enough
-      // that a 600k-row join+distinct stage is not 3 tasks wide)
-      val perPart =
-        sys.env.get("GRAFT_WARM_ROWS").map(_.toLong)
-          .orElse(perPartRows.get(n)).getOrElse(65536L)
-      val target =
-        if (sys.env.get("GRAFT_WARM_SPREAD").contains("0")) 1
-        else math.min(spark.sparkContext.defaultParallelism.toLong,
-          math.max(1L, raw.count() / perPart)).toInt
-      // GRAFT_WARM_BUCKET=0 re-runs the A/B with round-robin spread
-      val bkey = if (sys.env.get("GRAFT_WARM_BUCKET").contains("0")) None
-                 else bucketKey.get(n)
+      // rows-per-partition target: the measured sweet spot — big enough
+      // that per-task fixed costs (cache batch decode, agg hash-map setup)
+      // stay amortized, small enough that a 600k-row join+distinct stage
+      // is not 3 tasks wide
+      val perPart = perPartRows.getOrElse(n, 65536L)
+      val target = math.min(spark.sparkContext.defaultParallelism.toLong,
+        math.max(1L, raw.count() / perPart)).toInt
+      val bkey = bucketKey.get(n)
       val df =
         if (target > 1) bkey match {
           case Some(k) =>

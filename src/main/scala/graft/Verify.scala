@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CBO=0 re-runs the A/B (plan-stats estimation off)
-    val cboOn = (!sys.env.get("SPARK_GRAFT_CBO").contains("0")).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cost-based optimization: lake-table scans carry exact manifest
-      // statistics (rowCount/size/min-max/NDV via RelationStats), so the
-      // INITIAL plan picks broadcast sides and join order from stats
-      // instead of relying on AQE runtime repair; plain parquet reads
-      // (no catalog stats) keep their default size-only estimates
-      .config("spark.sql.cbo.enabled", cboOn)
-      .config("spark.sql.cbo.planStats.enabled", cboOn)
-      .config("spark.sql.cbo.joinReorder.enabled", cboOn)
-      .getOrCreate()
+    val spark = SparkEntry.session(SparkEntry.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws writes no parquet, and one that emits 0 rows

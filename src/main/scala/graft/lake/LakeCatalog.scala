@@ -2111,9 +2111,9 @@ object LakeCatalog {
   private[lake] val metaViewSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** JVM-wide count of OCC publish retries (a failed conditional put that
-    * re-ran its transaction body). Diagnostic only — read/reset it around
-    * a workload to measure commit contention (LakeOpProbe's concurrent-
-    * writer ledger does). */
+    * re-ran its transaction body). Diagnostic only — read it before and
+    * after a workload to measure commit contention (perfbench's
+    * `lake.occ_retries` does); concurrent workloads in one JVM share it. */
   val occRetries = new java.util.concurrent.atomic.LongAdder()
   /** Split `s` on `sep` at paren-depth 0 outside single-quoted strings —
     * the minimal scanner [[LakeCatalog.execute]]'s UPDATE head needs

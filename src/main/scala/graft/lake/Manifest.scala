@@ -636,7 +636,7 @@ trait ManifestStore {
     manifestFileReads.incrementAndGet()
     val doc = JsonMethods.parse(readDoc(v)).extract[SnapshotDoc]
     // Cold loads parse every blob's JSON — measured ~12 µs/entry
-    // single-threaded (FileIndexProbe: 12 s for a 10⁶-entry table), and
+    // single-threaded (12 s for a 10⁶-entry table, BASELINE.md), and
     // a long-lived table spreads its entries over MANY per-commit
     // blobs, so the parses are independent work. Load uncached blobs in
     // parallel (order restored by name afterwards); warm loads hit the

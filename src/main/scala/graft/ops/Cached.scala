@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Query builders persist frames that are reused inside one plan (a
   * self-joined band table, an exploded token table). Left alone, a
-  * 200-query Verify/Bench session accumulates every one of those cached
-  * frames in the block manager — MEMORY_AND_DISK evicts, so it is memory
+  * Verify or Bench session (~200 queries) accumulates every one of those
+  * cached frames in the block manager — MEMORY_AND_DISK evicts, so it is memory
   * PRESSURE rather than corruption, but at bench time eviction churn is
   * real work. Builders register through [[track]]; the harness calls
   * [[release]] once a query's result is materialized, which unpersists

@@ -2857,17 +2857,18 @@ object LakeScenarios {
     // versions — one per transaction, no overwrites), and the classic
     // read-modify-write hazard must show no lost update: a shared counter
     // each writer increments M times through a transaction lands at
-    // exactly K·M. Retry/wall numbers are measured by LakeOpProbe
-    // (FLOOR_ANALYSIS receipt) — the judged ledger holds the
-    // deterministic outcomes. Oracle: serializability contracts as
+    // exactly K·M. TxPropertySpec races up to 4 writers on shared and on
+    // disjoint tables (re-run counts: FLOOR_ANALYSIS) — the judged ledger
+    // holds the deterministic outcomes. Oracle: serializability contracts as
     // literals; row landing replayed as a DuckDB cross-range sum.
     QDef("l52_concurrent_writers",
       (s, d) => {
         val cat = freshLake(s)
         // judged sizes kept SMALL: the invariants (linear history, no
         // lost update, serializable counter) are size-independent, and
-        // contention THROUGHPUT is LakeOpProbe's job — round 15 spent
-        // 44.5 s of the lake leg re-proving it here every bench run
+        // contention over random K, M and table layouts is
+        // TxPropertySpec's job — round 15 spent 44.5 s of the lake leg
+        // re-proving it here every bench run
         val K = 4; val M = 2; val R = 3
         cat.createTable("log", StructType(Seq(
           StructField("writer", LongType), StructField("seq", LongType),

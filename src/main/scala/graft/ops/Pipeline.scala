@@ -202,7 +202,7 @@ object Pipeline {
       "v[t.band * 16 + j + 1] >= 0 THEN (1::BIGINT << j) ELSE 0 END))::BIGINT AS bv "
 
   /** CORPUS-SIZED LSH band key (dd5's candidate generator — the 100-TB
-    * sizing rule measured by [[graft.tools.Dd5ScaleProbe]]): 8 bands of
+    * sizing rule measured with planted twins, BASELINE.md): 8 bands of
     * `bits` sign bits over band-permuted dims (offset 29·band, stride 5,
     * both coprime with the 64-dim space, so each band reads `bits`
     * DISTINCT dims in a band-specific order). Bucket count per band is
@@ -1058,7 +1058,7 @@ object Pipeline {
     // bucket at EVERY scale), exact cosine >= 0.45 verifies. The
     // fixed-width 4×8-bit key this replaces saturates its 256
     // buckets/band once N outgrows them and candidate generation goes
-    // quadratic (Dd5ScaleProbe, BASELINE.md); bucket count ∝ N is the
+    // quadratic (measured in BASELINE.md); bucket count ∝ N is the
     // textbook LSH sizing rule and the 100-TB deployment shape. The
     // corpus count is parquet-footer metadata, not a data scan; both
     // engines compute the same width from the same files.

@@ -85,7 +85,7 @@ object Pq {
       .persist()
     // the corpus count rides the memo: shortlist() needs it on every
     // pqTop3 call, and a fresh points.count() per call is an extra job
-    // over the cached index (Bench replays each query four times)
+    // over the cached index (benchmarks replay each query many times)
     (encoded, books.result(), total)
   }
 

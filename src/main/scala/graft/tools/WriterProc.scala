@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone writer PROCESS for the cross-JVM concurrent-commit pin
   * (LakeSpec spawns two of these against one lake root while committing
   * itself): args = root, table, writerId, txnCount, rowsPerTxn. Each
@@ -14,12 +12,7 @@ object WriterProc {
     val root = args(0); val table = args(1)
     val writer = args(2).toLong
     val m = args(3).toInt; val r = args(4).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-writerproc-$writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.session(2)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val cat = new graft.lake.LakeCatalog(spark, root)

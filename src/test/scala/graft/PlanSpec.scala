@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions.col
 
 /** Physical-plan audits: the properties that decide whether these plans
@@ -523,15 +530,16 @@ class PlanSpec extends SparkSpec {
   /** Physical-plan OPERATOR names, walked from the plan tree itself (not
     * substring-matched on the formatted string, where an expression or
     * column name containing "Window"/"Generate" would false-match). */
-  private def planNodeNames(name: String): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def walk(x: SparkPlan): Seq[SparkPlan] = x match {
-      case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
-      case o => o +: o.children.flatMap(walk)
-    }
+  private def planNodeNames(name: String): Seq[String] =
     walk(SparkEntry.queries(name)(spark, d).queryExecution.executedPlan)
       .map(_.nodeName)
+
+  /** `x` and every node below it, looking through adaptive wrappers and
+    * into the plans of cached frames the query scans. */
+  private def walk(x: SparkPlan): Seq[SparkPlan] = x match {
+    case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+    case m: InMemoryTableScanExec => m +: walk(m.relation.cachedPlan)
+    case o => o +: o.children.flatMap(walk)
   }
 
   test("shingle extraction runs in-task: no window exchange, posting-array pairs") {
@@ -561,10 +569,22 @@ class PlanSpec extends SparkSpec {
     // state) feeding a semi-join, so no aggregation buffer ever holds an
     // uncapped posting set. The shape is: some aggregate computes the df
     // count, and the collect_set aggregate sits above a semi join.
-    val dd2 = planString("dd2_ngram_jaccard")
-    assert(dd2.contains("LeftSemi"),
-      "dd2's df<=64 cap must pre-filter shingles via a semi-join " +
-        "BEFORE collect_set materializes posting lists\n" + dd2.take(2000))
+    val dd2 = walk(SparkEntry.queries("dd2_ngram_jaccard")(spark, d)
+      .queryExecution.executedPlan)
+    val postingAggs = dd2.collect {
+      case a: ObjectHashAggregateExec if a.aggregateExpressions
+          .exists(_.aggregateFunction.isInstanceOf[CollectSet]) => a
+    }
+    assert(postingAggs.nonEmpty, "dd2 must build posting lists with an " +
+      "ObjectHashAggregate over collect_set, got: " +
+      dd2.map(_.nodeName).distinct.mkString(", "))
+    postingAggs.foreach { a =>
+      assert(walk(a).exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, "dd2's df<=64 cap must pre-filter shingles via a semi-join " +
+        "BELOW the collect_set aggregate\n" + a.treeString.take(2000))
+    }
   }
 
   test("quality buckets: tercile window partitions by source, no global sort") {

@@ -5,31 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.{BeforeAndAfterAll, Outcome}
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs
-  * must not stop() it). Mirrors the driver's session shape: UTC, CPU-count
-  * shuffle partitions. Suites never use it directly: each gets a child
+  * must not stop() it), built by `SparkEntry.session` like every runtime
+  * surface. It is sized from `SPARK_GRAFT_CPUS` when set, else from the
+  * host's cores (at least 4). Suites never use it directly: each gets a child
   * session (class SparkSpec) that inherits these confs, and each test runs
   * with that child as the thread's active session. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    // SPARK_GRAFT_CBO=0 re-runs the A/B (plan-stats estimation off)
-    val cboOn = (!sys.env.get("SPARK_GRAFT_CBO").contains("0")).toString
-    val cpus = math.max(4, Runtime.getRuntime.availableProcessors())
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cost-based optimization: lake-table scans carry exact manifest
-      // statistics (rowCount/size/min-max/NDV via RelationStats), so the
-      // INITIAL plan picks broadcast sides and join order from stats
-      // instead of relying on AQE runtime repair; plain parquet reads
-      // (no catalog stats) keep their default size-only estimates
-      .config("spark.sql.cbo.enabled", cboOn)
-      .config("spark.sql.cbo.planStats.enabled", cboOn)
-      .config("spark.sql.cbo.joinReorder.enabled", cboOn)
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = SparkEntry.session(
+    SparkEntry.cpus(math.max(4, Runtime.getRuntime.availableProcessors())))
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import graft.lake.LakeCatalog
 
 /** Property tests for transactional invariants (SURVEY.md §5): under any
@@ -390,6 +391,56 @@ class TxPropertySpec extends SparkSpec {
     // every row reads a value for the evolved column (default applied to
     // files written before the ADD COLUMN)
     assert(rows.filter(col("origin").isNull).count() === 0)
+  }
+
+  test("K racing writers x M commits land exactly once; disjoint writers rebase") {
+    // K writer threads released together, each committing M single-row
+    // transactions into one shared table (true write-write conflicts:
+    // losers re-run their body) or into a table of its own (losers
+    // REBASE: republish on the new head without re-running the body).
+    // Body runs are counted locally — LakeCatalog.occRetries is one
+    // JVM-wide counter that concurrently running suites share.
+    val caseGen = for {
+      k <- Gen.choose(2, 4)
+      m <- Gen.choose(1, 3)
+      disjoint <- Gen.oneOf(false, true)
+    } yield (k, m, disjoint)
+    val prop = Prop.forAllNoShrink(caseGen) { case (k, m, disjoint) =>
+      val cat = new LakeCatalog(spark, tmpDir("lakerace"))
+      val tableOf = (w: Int) => if (disjoint) s"w$w" else "shared"
+      val tables = (0 until k).map(tableOf).distinct
+      tables.foreach(t =>
+        cat.createTable(t, StructType(Seq(StructField("id", LongType)))))
+      val v0 = cat.currentVersion
+      val bodies = new java.util.concurrent.atomic.AtomicInteger()
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val writers = (0 until k).map { w =>
+        new Thread(() => try {
+          gate.await()
+          (0 until m).foreach { i =>
+            val id = w * 1000L + i
+            cat.transaction { tx =>
+              bodies.incrementAndGet()
+              tx.insert(tableOf(w), spark.range(id, id + 1).toDF("id"))
+            }
+          }
+        } catch { case e: Throwable => errors.add(e) })
+      }
+      writers.foreach(_.start()); gate.countDown(); writers.foreach(_.join())
+      val ids = tables.flatMap(t => cat.read(t).as[Long].collect()).sorted
+      val expected = (0 until k).flatMap(w => (0 until m).map(w * 1000L + _))
+      val versions = cat.currentVersion - v0
+      Prop.all(
+        errors.isEmpty :| s"writer failed: ${errors.peek()}",
+        (ids == expected) :| s"${ids.size} rows landed for K·M = ${k * m}",
+        (versions == k * m) :| s"$versions new versions for K·M = ${k * m}",
+        (!disjoint || bodies.get == k * m) :|
+          s"disjoint writers re-ran bodies: ${bodies.get} runs, ${k * m} commits")
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("deletePartitions is semantics-equal to delete on random layouts and probes") {
