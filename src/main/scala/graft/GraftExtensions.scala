@@ -44,10 +44,14 @@ object GraftExtensions {
         }))
 
   /** Session-scoped registration (shares `functions` with the extensions
-    * path) for hosts that didn't launch with the extensions conf. */
-  def register(spark: SparkSession): Unit =
+    * path) for hosts that didn't launch with the extensions conf.
+    * Idempotent: a name the session already resolves (injected by the
+    * extensions hook, or registered by an earlier call) is left as is. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
+  }
 }

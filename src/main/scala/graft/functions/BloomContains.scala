@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 
 /** SQL registration for the broadcast-bloom semi-join pattern: the bloom
   * bitset is built with the PUBLIC `DataFrame.stat.bloomFilter` API (one
@@ -17,11 +16,6 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   * probable matches (false positives are removed by the exact join that
   * follows — results stay exact, the oracle proves it). */
 object BloomContains {
-  /** Delegates to the shared registry list — see
-    * [[graft.GraftExtensions.functions]]. */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.register(spark)
-
   /** Serialized form accepted by BloomFilterMightContain. */
   def serialize(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

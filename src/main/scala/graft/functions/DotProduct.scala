@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -68,12 +67,3 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object DotProduct {
-  /** Idempotently register the engine's native functions (incl.
-    * `graft_dot`) in the session registry so SQL-string plans
-    * (`selectExpr`) can call them. Single source of truth:
-    * [[graft.GraftExtensions.functions]] — the same list the
-    * `spark.sql.extensions=graft.GraftExtensions` cluster hook injects. */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.register(spark)
-}

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   *    work, never change answers (same contract as [[Stats.overlaps]]).
   *
   * One index per (schema-version, has-deletion-vector) file group —
-  * matching the scan grouping in `LakeCatalog.readStateInternal` — so
+  * matching the scan grouping in `LakeCatalog.readState` — so
   * column names here are the group's write-time names, which is exactly
   * the namespace the pushed filters use (they are pushed below the
   * rename-align projection).

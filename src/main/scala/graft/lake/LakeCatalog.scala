@@ -2,6 +2,24 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier,
+  UnresolvedProcedure, UnresolvedRelation, UnresolvedTable,
+  UnresolvedTableOrView, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo,
+  Expression, Literal, PrimaryKeyConstraint, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Aggregate,
+  AlterColumnSpec, AlterColumns, Assignment, Call, Command,
+  CreateMaterializedViewAsSelect, CreateTable, CreateTableAsSelect,
+  CreateView, DeleteAction, DeleteFromTable, DescribeRelation, DropColumns,
+  DropTable, DropView, Filter, InsertIntoStatement, InsertStarAction, Join,
+  LogicalPlan, MergeIntoTable, ParsedStatement, RenameColumn,
+  RenameTable, ShowTables, SubqueryAlias, TruncateTable, UnresolvedTableSpec,
+  UnresolvedWith, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils.{replaceCharVarcharWithString => typeOf}
+import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.graftshim.SqlFront
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -62,25 +80,6 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * (see graft.streaming.LakeStream). */
   def tableDataDir(table: String): String = absPath(s"$table/data").toString
 
-  /** Read a table state: per-schema-version file groups are each scanned
-    * with their OWN written schema, then aligned to the current schema by
-    * stable column id — add-with-default / drop / rename are pure metadata
-    * (no file rewrites), exactly DuckLake's evolution semantics
-    * (ref demos/03_schema_evolution/demo.py:112-198). */
-  private[lake] def readState(st: TableState): DataFrame =
-    readState(st, spark)
-
-  private[lake] def readState(st: TableState, sess: SparkSession): DataFrame =
-    readStateInternal(st, sess, None)
-
-  /** [[readState]] plus a `fileCol` string column carrying each row's
-    * source file path — sourced from `_metadata.file_path` at SCAN level,
-    * so it stays resolvable even when the plan gains joins (deletion-
-    * vector anti-joins make `input_file_name()` illegal). Inlined rows
-    * tag NULL. */
-  private[lake] def readStateTagged(st: TableState, fileCol: String): DataFrame =
-    readStateInternal(st, spark, Some(fileCol))
-
   /** Catalyst statistics for one schema-version file group, built from
     * manifest metadata already in memory (zero file reads, zero jobs):
     * exact row count and byte size, per-column min/max for numeric
@@ -99,16 +98,11 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.catalyst.TableIdentifier
     import org.apache.spark.sql.catalyst.catalog._
     val cols = st.columnsAt(v)
-    def numeric(c: ColumnDef): Boolean = c.typeJson match {
-      case "\"integer\"" | "\"long\"" | "\"short\"" | "\"byte\"" |
-           "\"double\"" | "\"float\"" => true
-      case _ => false
-    }
+    val integralTypes = Set("\"integer\"", "\"long\"", "\"short\"", "\"byte\"")
+    def integral(c: ColumnDef) = integralTypes(c.typeJson)
+    def numeric(c: ColumnDef) =
+      integral(c) || c.typeJson == "\"double\"" || c.typeJson == "\"float\""
     val totalRows = entries.map(_.rowCount).sum
-    def integral(c: ColumnDef): Boolean = c.typeJson match {
-      case "\"integer\"" | "\"long\"" | "\"short\"" | "\"byte\"" => true
-      case _ => false
-    }
     val colStats = cols.iterator.flatMap { c =>
       val ranges = entries.map(_.stats.get(c.name))
       val covered = entries.nonEmpty && ranges.forall(_.isDefined)
@@ -203,8 +197,17 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         colStats = colStats)))
   }
 
-  private def readStateInternal(st: TableState, sess: SparkSession,
-      tagCol: Option[String]): DataFrame = {
+  /** Read a table state: per-schema-version file groups are each scanned
+    * with their OWN written schema, then aligned to the current schema by
+    * stable column id — add-with-default / drop / rename are pure metadata
+    * (no file rewrites), exactly DuckLake's evolution semantics
+    * (ref demos/03_schema_evolution/demo.py:112-198). With `tagCol`, a
+    * string column of that name carries each row's source file path —
+    * sourced from `_metadata.file_path` at SCAN level, so it stays
+    * resolvable even when the plan gains joins (deletion-vector anti-joins
+    * make `input_file_name()` illegal); inlined rows tag NULL. */
+  private[lake] def readState(st: TableState,
+      tagCol: Option[String] = None): DataFrame = {
     val cur = st.columns
     val curSchema = tagCol match {
       case Some(t) => structOf(cur).add(StructField(t, StringType))
@@ -237,7 +240,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
           fs.makeQualified(new Path(root)), entries, st.columnsAt(v),
           absPath, (rel, value) => loadBloom(rel).mightContainString(value))
         val raw0 = org.apache.spark.sql.graftshim.RelationStats.manifestScan(
-          sess, index, structOf(st.columnsAt(v)),
+          spark, index, structOf(st.columnsAt(v)),
           manifestCatalogStats(st, v, entries))
         val raw = tagCol match {
           case Some(t) => raw0.withColumn(t, col("_metadata.file_path"))
@@ -250,7 +253,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
           // projection — the scan itself never widens, and files whose
           // positions aren't tombstoned stream through untouched
           val dvDirs = entries.flatMap(_.dv).distinct
-          val dv = sess.read
+          val dv = spark.read
             .schema(StructType(Seq(StructField("file", StringType),
               StructField("pos", LongType))))
             .parquet(dvDirs.map(d => absPath(d).toString): _*)
@@ -263,9 +266,9 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         }
       }
     val inlineParts = st.inlined.groupBy(_.schemaVersion).toSeq.map { case (v, batches) =>
-      import sess.implicits._
-      val raw0 = sess.read.schema(structOf(st.columnsAt(v)))
-        .json(sess.createDataset(batches.flatMap(_.rows)))
+      import spark.implicits._
+      val raw0 = spark.read.schema(structOf(st.columnsAt(v)))
+        .json(spark.createDataset(batches.flatMap(_.rows)))
       val raw = tagCol match {
         case Some(t) => raw0.withColumn(t, lit(null).cast(StringType))
         case None => raw0
@@ -274,13 +277,17 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     }
     val parts = fileParts ++ inlineParts
     if (parts.isEmpty)
-      sess.createDataFrame(sess.sparkContext.emptyRDD[Row], curSchema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], curSchema)
     else parts.reduce(_ unionByName _)
   }
 
   private def stateOf(s: Snapshot, table: String): TableState =
     s.tables.getOrElse(table,
       throw new NoSuchElementException(s"table not found: $table"))
+
+  private def columnOf(st: TableState, table: String, name: String): ColumnDef =
+    st.columns.find(_.name == name).getOrElse(
+      throw new NoSuchElementException(s"no such column: $table.$name"))
 
   /** Zero-job manifest check: did `table`'s data-bearing state (schema,
     * file list, inlined batches) change between two catalog versions?
@@ -325,8 +332,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * numerically). */
   def readRange(table: String, colName: String, lo: String, hi: String): DataFrame = {
     val st = stateOf(current, table)
-    val c = st.columns.find(_.name == colName).getOrElse(
-      throw new NoSuchElementException(s"no such column: $table.$colName"))
+    val c = columnOf(st, table, colName)
     val pruned =
       if (!Stats.comparable(c)) st
       else st.copy(files = st.files.filter(e =>
@@ -348,9 +354,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   def readPartition(table: String, eq: Map[String, String]): DataFrame = {
     val st = stateOf(current, table)
     val typed = eq.map { case (cn, v) =>
-      val c = st.columns.find(_.name == cn).getOrElse(
-        throw new NoSuchElementException(s"no such column: $table.$cn"))
-      (c, v)
+      (columnOf(st, table, cn), v)
     }
     val pruned = st.copy(files = st.files.filter(f =>
       typed.forall { case (c, v) =>
@@ -434,8 +438,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * on top of whatever survives. */
   def readPoint(table: String, colName: String, value: String): DataFrame = {
     val st = stateOf(current, table)
-    val c = st.columns.find(_.name == colName).getOrElse(
-      throw new NoSuchElementException(s"no such column: $table.$colName"))
+    val c = columnOf(st, table, colName)
     readState(st.copy(files = pointCandidates(st, c, value)))
       .filter(col(colName) === lit(value).cast(DataType.fromJson(c.typeJson)))
   }
@@ -444,8 +447,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * the pruning observable the bloom-index contract is judged on. */
   def pointScanFiles(table: String, colName: String, value: String): Long = {
     val st = stateOf(current, table)
-    val c = st.columns.find(_.name == colName).getOrElse(
-      throw new NoSuchElementException(s"no such column: $table.$colName"))
+    val c = columnOf(st, table, colName)
     pointCandidates(st, c, value).size.toLong
   }
 
@@ -502,275 +504,178 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     v
   }
 
-  /** Ad-hoc SQL over the lake's current snapshot — the reference's
-    * user-facing surface (`ATTACH ...; SELECT ... FROM lake.t`, ref
-    * demos/01_transaction_rollback/demo.py:30,74): every table of the
-    * catalog is visible by name, resolution happens in an isolated child
-    * session so caller temp views are untouched. */
-  /** SQL statement router — the reference's interface is SQL end-to-end
+  /** SQL statement surface — the reference's interface is SQL end to end
     * (`conn.execute(...)` against the attached DuckLake), so the catalog
     * accepts the DML/DDL subset too, each statement one atomic commit
-    * (auto-commit semantics) unless an interactive transaction is open:
+    * unless an interactive transaction is open. Mutating statements
+    * return an empty frame, queries their result.
     *
-    *  - `BEGIN [TRANSACTION]` / `COMMIT` / `ROLLBACK` — interactive
-    *    transactions (ref demos/01:85-104): while open, every statement
-    *    below stages into ONE pending commit, SELECTs read the staged
-    *    state, COMMIT publishes a single snapshot, ROLLBACK discards
-    *    everything; a losing commit race aborts (no statement replay)
-    *  - `INSERT INTO t [(col, ...)] VALUES ... | SELECT ... | WITH ...`
-    *    (VALUES columns align positionally to the table schema, or to
-    *    the explicit column list with DEFAULT/NULL fill for the rest)
-    *  - `UPDATE t SET a = e[, ...] [WHERE cond]`
-    *  - `DELETE FROM t [WHERE cond]`
-    *  - `MERGE INTO t USING (...) ON ... WHEN ...` (see [[executeMerge]])
-    *  - `CREATE TABLE t (col TYPE [PRIMARY KEY|NOT NULL], ...)
-    *    [PARTITIONED BY (col, ...)]` (DuckDB-flavored type names
-    *    normalized) / `CREATE TABLE t AS select` /
-    *    `CREATE [OR REPLACE] VIEW v AS ...`
-    *  - `ALTER TABLE t ADD COLUMN c TYPE [DEFAULT e] | DROP COLUMN c |
-    *    RENAME COLUMN a TO b | ALTER COLUMN c SET NOT NULL |
-    *    ALTER COLUMN c [SET DATA] TYPE T`
-    *  - `DROP TABLE|VIEW x`, `TRUNCATE TABLE t`,
-    *    `ALTER TABLE t RENAME TO u`
-    *  - `CREATE MATERIALIZED VIEW mv AS SELECT keys…, COUNT(*) AS
-    *    n_rows[, SUM(c) AS sum_c…][, AVG(c) AS avg_c…] FROM base
-    *    [JOIN dim ON fk = pk] [WHERE pred] GROUP BY keys…` and
-    *    `REFRESH MATERIALIZED VIEW mv`
-    *    (returns the refresh path taken) — the incrementally-maintained
-    *    subset only (AVG rides on maintained sum+count, derived at
-    *    write); other shapes are rejected loudly
-    *  - queries support `t AT (VERSION|TIMESTAMP => ...)` time travel
-    *    (quoted wall-clocks resolve in the session timezone; unquoted
-    *    digits are epoch millis) and the `graft_snapshots()/
-    *    graft_table_info()/graft_files()/graft_table_changes(t, v1, v2)`
-    *    metadata functions; occurrences inside string LITERALS are data,
-    *    not syntax, and are never rewritten
-    *  - `CALL graft_vacuum(…) | graft_expire_snapshots(…) |
-    *    graft_compact(…) | graft_cluster(…) | graft_zorder(…) |
-    *    graft_restore(…) | graft_add_data_files(…)` — the maintenance
-    *    verbs (see [[executeCall]]); each returns one row of
-    *    deterministic after-facts
-    *  - anything else runs as a query via [[sql]]
+    * Parsing is Spark's own. A pre-pass over Spark's SQL lexer rewrites
+    * the DuckDB forms Spark 4.1 rejects: `t AT (VERSION|TIMESTAMP => x)`
+    * becomes `t VERSION|TIMESTAMP AS OF x`; in CREATE/ALTER TABLE type
+    * position `TEXT`, `VARCHAR`/`CHAR` without a length, `DATETIME`,
+    * `BLOB`/`BYTEA` and `DOUBLE PRECISION` become Spark types and `SET
+    * DATA TYPE` becomes `TYPE`. It also takes the heads Spark has no
+    * grammar for: `BEGIN|COMMIT|ROLLBACK [TRANSACTION|WORK]` (interactive
+    * transactions, ref demos/01:85-104 — while open, statements stage
+    * into ONE pending commit and queries read the staged state; a losing
+    * commit race aborts, no statement replay), `REFRESH MATERIALIZED VIEW
+    * mv` (returns the refresh path taken) and `EXPLAIN ANALYZE q`.
+    * Everything else is one match on the node `parsePlan` returns:
     *
-    * Expressions (SET right-hand sides, WHERE conditions) are handed to
-    * Spark's own parser via `expr`, so the full scalar-function surface
-    * works; only the statement HEAD is recognized here. Mutating
-    * statements return an empty frame; queries return their result. */
+    *  - `InsertIntoStatement` (`VALUES` or a query, mapped positionally
+    *    onto the table's columns or onto the listed ones — the rest fill
+    *    DEFAULT/NULL), `UpdateTable`, `DeleteFromTable`, `MergeIntoTable`
+    *    (see [[executeMerge]]); conditions and assignments stay Catalyst
+    *    expressions, so the full function surface works
+    *  - `CreateTable` (`PRIMARY KEY`, `NOT NULL`, `PARTITIONED BY`),
+    *    `CreateTableAsSelect`, `CreateView`, `AddColumns` (`DEFAULT`),
+    *    `DropColumns`, `RenameColumn`, `AlterColumns` (`SET NOT NULL`,
+    *    `TYPE`), `RenameTable`, `TruncateTable`, `DropTable`, `DropView`
+    *  - `CreateMaterializedViewAsSelect`, the incrementally maintained
+    *    subset only (see [[createMaterializedView]])
+    *  - `DescribeRelation`, `ShowTables` — the metadata frames (D10/D11)
+    *  - `ExplainCommand` — Spark's formatted plan, one row per line; under
+    *    ANALYZE the statement's own plan runs and its runtime metrics
+    *    follow (engine-specific text: spec-pinned, not oracle-compared)
+    *  - `Call` — the `graft_*` maintenance verbs (see [[executeCall]])
+    *  - a query runs via [[sql]]; any other write or DDL node is refused
+    *    with an `IllegalArgumentException` naming it */
   def execute(statement: String): DataFrame = {
-    import LakeCatalog.{splitTopLevel, topLevelSplitOnce}
-    val s0 = statement.trim.stripSuffix(";").trim
-    val InsertRe = """(?is)^INSERT\s+INTO\s+(\w+)\s+(.+)$""".r
-    val InsertColsRe =
-      """(?is)^INSERT\s+INTO\s+(\w+)\s*\(([A-Za-z_][\w\s,]*)\)\s*(.+)$""".r
-    val DeleteRe = """(?is)^DELETE\s+FROM\s+(\w+)(\s+WHERE\s+.+)?$""".r
-    val UpdateRe = """(?is)^UPDATE\s+(\w+)\s+SET\s+(.+)$""".r
-    val CtasRe = """(?is)^CREATE\s+TABLE\s+(\w+)\s+AS\s+(.+)$""".r
-    val ViewRe = """(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+(.+)$""".r
-    val MvCreateRe =
-      """(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+AS\s+(.+)$""".r
-    val MvRefreshRe = """(?is)^REFRESH\s+MATERIALIZED\s+VIEW\s+(\w+)$""".r
-    val DropTRe = """(?is)^DROP\s+TABLE\s+(\w+)$""".r
-    val DropVRe = """(?is)^DROP\s+VIEW\s+(\w+)$""".r
-    val TruncRe = """(?is)^TRUNCATE\s+TABLE\s+(\w+)$""".r
-    val RenameRe = """(?is)^ALTER\s+TABLE\s+(\w+)\s+RENAME\s+TO\s+(\w+)$""".r
-    def empty: DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Nil))
-    // txn-control statements tolerate the standard variants and flexible
-    // whitespace, like every other statement head in this router
-    if (s0.matches("(?is)^BEGIN(\\s+(TRANSACTION|WORK))?$")) {
-      beginTransaction(); return empty
-    }
-    if (s0.matches("(?is)^COMMIT(\\s+(TRANSACTION|WORK))?$")) {
-      commitTransaction(); return empty
-    }
-    if (s0.matches("(?is)^ROLLBACK(\\s+(TRANSACTION|WORK))?$")) {
-      rollbackTransaction(); return empty
-    }
-    if (s0.toUpperCase.startsWith("MERGE INTO")) return executeMerge(s0)
-    // introspection statements the reference's conn.execute accepts
-    // (DuckDB surface): DESCRIBE <table> and SHOW TABLES route to the
-    // existing metadata DataFrames (D10/D11)
-    val DescribeRe = """(?is)^DESC(?:RIBE)?\s+(\w+)$""".r
-    s0 match {
-      case DescribeRe(t) => return describe(t)
-      case _ if s0.matches("(?is)^SHOW\\s+TABLES$") => return listTables()
-      case _ => ()
-    }
-    // CALL graft_*(…) — maintenance verbs through the SQL surface (the
-    // reference's whole interface is conn.execute(sql); DuckLake exposes
-    // ducklake_expire_snapshots()-style procedure calls). Each returns a
-    // one-row ledger of deterministic after-facts.
-    val CallRe = """(?is)^CALL\s+(\w+)\s*\((.*)\)$""".r
-    s0 match {
-      case CallRe(fn, argStr) =>
-        return executeCall(fn.toLowerCase(java.util.Locale.ROOT), argStr)
-      case _ => ()
-    }
-    // EXPLAIN [ANALYZE] <select> — the reference's conn.execute accepts
-    // it (DuckDB surface); plan TEXT is engine-specific by nature, so
-    // this returns Spark's formatted plan (with executed metrics under
-    // ANALYZE) as one row per line. Spec-pinned, not oracle-compared.
-    val ExplainRe = """(?is)^EXPLAIN(\s+ANALYZE)?\s+(.+)$""".r
-    s0 match {
-      case ExplainRe(analyze, body) =>
-        val df = sql(body.trim)
-        val text =
-          if (analyze != null) {
-            // Execute THIS DataFrame's own QueryExecution (df.count()
-            // would build a separate one whose metrics die with it),
-            // then render its formatted plan plus the runtime metrics
-            // walked off the executed tree — AQE wraps the final plan
-            // in AdaptiveSparkPlanExec/QueryStageExec leaf nodes, so
-            // the walk unwraps them explicitly.
-            import org.apache.spark.sql.execution.SparkPlan
-            import org.apache.spark.sql.execution.adaptive.{
-              AdaptiveSparkPlanExec, QueryStageExec}
-            val qe = df.queryExecution
-            qe.executedPlan.execute().count() // distributed; no row fetch
-            def metricLines(p: SparkPlan): Seq[String] = p match {
-              case a: AdaptiveSparkPlanExec => metricLines(a.executedPlan)
-              case q: QueryStageExec => metricLines(q.plan)
-              case _ =>
-                val own =
-                  if (p.metrics.isEmpty) Nil
-                  else Seq(s"${p.nodeName}: " + p.metrics.toSeq
-                    .sortBy(_._1)
-                    .map { case (k, m) => s"$k=${m.value}" }
-                    .mkString(", "))
-                own ++ p.children.flatMap(metricLines)
-            }
-            qe.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")) +
-              "\n== Runtime Metrics ==\n" +
-              metricLines(qe.executedPlan).mkString("\n")
-          } else df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        val rows = text.linesIterator.map(l => Row(l)).toSeq
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          StructType(Seq(StructField("explain", StringType))))
-      case _ => ()
-    }
-    val CreateTblPartRe =
-      ("""(?is)^CREATE\s+TABLE\s+(\w+)\s*\((.+)\)""" +
-        """\s+PARTITIONED\s+BY\s*\(([^)]*)\)\s*$""").r
-    val CreateTblRe = """(?is)^CREATE\s+TABLE\s+(\w+)\s*\((.+)\)\s*$""".r
-    val AddColRe =
-      """(?is)^ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(\w+)\s+(.+?)(?:\s+DEFAULT\s+(.+))?$""".r
-    val DropColRe =
-      """(?is)^ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(\w+)$""".r
-    val RenameColRe =
-      """(?is)^ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)$""".r
-    val NotNullRe =
-      """(?is)^ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+NOT\s+NULL$""".r
-    val SetTypeRe =
-      """(?is)^ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+(?:SET\s+DATA\s+)?TYPE\s+(.+)$""".r
-    s0 match {
-      case _ if s0.toUpperCase.startsWith("CREATE TABLE") &&
-          !s0.toUpperCase.matches("(?s)^CREATE\\s+TABLE\\s+\\w+\\s+AS\\s.*") =>
-        val (t, colsBody, partBy) = s0 match {
-          case CreateTblPartRe(n, c, p) => (n, c, Some(p))
-          case CreateTblRe(n, c) => (n, c, None)
-          case other => throw new IllegalArgumentException(
-            s"unparseable CREATE TABLE: $other")
-        }
-        val pk = scala.collection.mutable.ArrayBuffer.empty[String]
-        val nn = scala.collection.mutable.ArrayBuffer.empty[String]
-        val colDdl = splitTopLevel(colsBody, ',').map { c0 =>
-          var c = c0.trim
-          val name = c.takeWhile(!_.isWhitespace)
-          if (c.toUpperCase.contains("PRIMARY KEY")) {
-            pk += name
-            c = c.replaceAll("(?i)\\s+PRIMARY\\s+KEY", "")
-          }
-          if (c.toUpperCase.contains("NOT NULL")) {
-            nn += name
-            c = c.replaceAll("(?i)\\s+NOT\\s+NULL", "")
-          }
-          s"$name ${sqlTypeToSpark(c.trim.drop(name.length).trim)}"
-        }.mkString(", ")
-        val parts = partBy.toSeq
-          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        inTx(_.createTable(t, StructType.fromDDL(colDdl), pk.toSeq, nn.toSeq, parts))
-        return empty
-      case AddColRe(t, name, tpe, dflt) =>
-        inTx(_.addColumn(t, name,
-          StructType.fromDDL(s"x ${sqlTypeToSpark(tpe.trim)}").head.dataType,
-          Option(dflt).map(_.trim)))
-        return empty
-      case DropColRe(t, name) =>
-        inTx(_.dropColumn(t, name)); return empty
-      case RenameColRe(t, from, to) =>
-        inTx(_.renameColumn(t, from, to)); return empty
-      case NotNullRe(t, name) =>
-        inTx(_.setNotNull(t, name)); return empty
-      case SetTypeRe(t, name, tpe) =>
-        inTx(_.changeColumnType(t, name,
-          StructType.fromDDL(s"x ${sqlTypeToSpark(tpe.trim)}").head.dataType))
-        return empty
-      case _ => ()
-    }
-    s0 match {
-      case InsertColsRe(t, colList, body) =>
-        // INSERT with an explicit column list: source columns map
-        // positionally onto the LISTED names; unlisted table columns
-        // fill their DEFAULT (then NULL) via the by-name insert path
-        val cols = colList.split(',').map(_.trim).toSeq
-        val src = sql(body.trim)
-        require(src.columns.length == cols.length,
-          s"INSERT arity ${src.columns.length} != column list ${cols.length}")
-        inTx(_.insert(t, src.toDF(cols: _*)))
-        if (activeTx.isEmpty) maybeAutoCompact(t)
-        empty
-      case InsertRe(t, body) =>
-        // SQL INSERT maps the source POSITIONALLY (both VALUES and
-        // SELECT bodies), unlike the by-name DataFrame API insert
-        val src = sql(body.trim)
-        val st = liveState(t)
-        require(src.columns.length == st.columns.length,
-          s"INSERT arity ${src.columns.length} != table ${st.columns.length}")
-        inTx(_.insert(t, src.toDF(st.columns.map(_.name): _*)))
-        if (activeTx.isEmpty) maybeAutoCompact(t)
-        empty
-      case DeleteRe(t, where) =>
-        val cond = Option(where)
-          .map(w => expr(w.trim.replaceFirst("(?is)^WHERE\\s+", "")))
-          .getOrElse(lit(true))
-        inTx(_.delete(t, cond)); empty
-      case UpdateRe(t, rest) =>
-        val (setList, whereOpt) = topLevelSplitOnce(rest, "where")
-        val sets = splitTopLevel(setList, ',').map { a =>
-          val (lhs, rhs) = topLevelSplitOnce(a, "=") match {
-            case (l, Some(r)) => (l.trim, r.trim)
-            case _ => throw new IllegalArgumentException(s"bad assignment: $a")
-          }
-          lhs -> expr(rhs)
-        }.toMap
-        inTx(_.update(t, whereOpt.map(expr).getOrElse(lit(true)), sets)); empty
-      case MvCreateRe(mv, select) =>
-        // MV create/refresh are multi-commit workflows keyed to a
-        // PUBLISHED base-version watermark — staging them into an open
-        // interactive transaction would record a watermark the rollback
-        // could orphan (and their own commit would make the interactive
-        // COMMIT lose its OCC race). Reject loudly instead of silently
-        // breaking the BEGIN/COMMIT contract.
-        require(activeTx.isEmpty, "CREATE MATERIALIZED VIEW is not " +
-          "supported inside an open transaction — COMMIT first")
-        createMaterializedView(mv, select.trim); empty
-      case MvRefreshRe(mv) =>
+    val lx = new LakeCatalog.Lexed(statement)
+    val txnOnly = lx.sig.size == 1 ||
+      lx.sig.size == 2 && Set("TRANSACTION", "WORK")(lx.up(1))
+    (lx.up(0), lx.up(1)) match {
+      case ("BEGIN", _) if txnOnly => beginTransaction(); empty
+      case ("COMMIT", _) if txnOnly => commitTransaction(); empty
+      case ("ROLLBACK", _) if txnOnly => rollbackTransaction(); empty
+      case ("REFRESH", "MATERIALIZED") if lx.up(2) == "VIEW" && lx.sig.size == 4 =>
         require(activeTx.isEmpty, "REFRESH MATERIALIZED VIEW is not " +
           "supported inside an open transaction — COMMIT first")
+        val mv = lx.text(3).stripPrefix("`").stripSuffix("`")
         import spark.implicits._
         Seq((mv, Mv.refresh(this, mv))).toDF("mv", "refresh_path")
-      case CtasRe(t, select) => inTx(_.createTableAs(t, sql(select.trim))); empty
-      case ViewRe(v, body) => inTx(_.createView(v, body.trim)); empty
-      case DropTRe(t) => inTx(_.dropTable(t)); empty
-      case DropVRe(v) => inTx(_.dropView(v)); empty
-      case TruncRe(t) => inTx(_.truncateTable(t)); empty
-      case RenameRe(from, to) => inTx(_.renameTable(from, to)); empty
-      case q => sql(q)
+      case ("EXPLAIN", "ANALYZE") if lx.sig.size > 2 =>
+        explain(parse(lx.all.drop(lx.sig(2)).mkString), analyze = true)
+      case _ => run(spark.sessionState.sqlParser.parsePlan(LakeCatalog.prePass(lx)))
     }
+  }
+
+  private def empty: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Nil))
+
+  private def parse(text: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(LakeCatalog.prePass(new LakeCatalog.Lexed(text)))
+
+  /** The one lake name a parsed statement targets. */
+  private def nameOf(p: LogicalPlan): String = p match {
+    case UnresolvedIdentifier(Seq(n), _) => n
+    case UnresolvedRelation(Seq(n), _, _) => n
+    case UnresolvedTable(Seq(n), _, _) => n
+    case UnresolvedTableOrView(Seq(n), _, _) => n
+    case _ => throw new IllegalArgumentException(
+      s"expected a single-part lake table or view name: ${p.simpleString(3)}")
+  }
+
+  private def run(plan: LogicalPlan): DataFrame = plan match {
+    case InsertIntoStatement(t, part, cols, query, false, false, false) if part.isEmpty =>
+      val (src, table) = (frame(query), nameOf(t))
+      val names = if (cols.nonEmpty) cols else liveState(table).columns.map(_.name)
+      require(src.columns.length == names.length, s"INSERT arity " +
+        s"${src.columns.length} != ${if (cols.nonEmpty) "column list" else "table"} ${names.length}")
+      inTx(_.insert(table, src.toDF(names: _*)))
+      if (activeTx.isEmpty) maybeAutoCompact(table)
+      empty
+    case UpdateTable(t, assignments, cond) =>
+      val sets = assignments.map {
+        case Assignment(UnresolvedAttribute(k), v) => k.last -> SqlFront.column(v)
+        case a => throw new IllegalArgumentException(s"bad assignment: ${a.sql}")
+      }.toMap
+      inTx(_.update(nameOf(t), cond.map(SqlFront.column).getOrElse(lit(true)), sets)); empty
+    case DeleteFromTable(t, cond) => inTx(_.delete(nameOf(t), SqlFront.column(cond))); empty
+    case m: MergeIntoTable => executeMerge(m)
+    case CreateTable(t, cols, partitioning, spec, _) =>
+      val pk = spec match {
+        case u: UnresolvedTableSpec =>
+          u.constraints.collect { case k: PrimaryKeyConstraint => k.columns }.flatten
+        case _ => Nil
+      }
+      val parts = partitioning.map { p =>
+        require(p.name == "identity", s"unsupported partition transform: ${p.describe}")
+        p.references.head.fieldNames.mkString(".")
+      }
+      inTx(_.createTable(nameOf(t),
+        StructType(cols.map(c => StructField(c.name, typeOf(c.dataType)))), pk,
+        cols.filter(c => !c.nullable && !pk.contains(c.name)).map(_.name), parts))
+      empty
+    case c: CreateTableAsSelect => inTx(_.createTableAs(nameOf(c.name), frame(c.query))); empty
+    case c: CreateView if c.userSpecifiedColumns.isEmpty && c.originalText.isDefined =>
+      inTx(_.createView(nameOf(c.child), c.originalText.get)); empty
+    case c: CreateMaterializedViewAsSelect =>
+      // MV create/refresh are multi-commit workflows keyed to a
+      // PUBLISHED base-version watermark — staging them into an open
+      // interactive transaction would record a watermark the rollback
+      // could orphan (and their own commit would make the interactive
+      // COMMIT lose its OCC race). Reject loudly instead of silently
+      // breaking the BEGIN/COMMIT contract.
+      require(activeTx.isEmpty, "CREATE MATERIALIZED VIEW is not " +
+        "supported inside an open transaction — COMMIT first")
+      createMaterializedView(nameOf(c.name), c.query); empty
+    case AddColumns(t, cols) => inTx(tx => cols.foreach(c => tx.addColumn(nameOf(t),
+      c.colName, typeOf(c.dataType), c.default.map(_.originalSQL)))); empty
+    case DropColumns(t, cols, _) =>
+      inTx(tx => cols.foreach(c => tx.dropColumn(nameOf(t), c.name.last))); empty
+    case RenameColumn(t, c, to) => inTx(_.renameColumn(nameOf(t), c.name.last, to)); empty
+    case AlterColumns(t, specs) => inTx(tx => specs.foreach {
+      case AlterColumnSpec(c, None, Some(false), None, None, None, false) =>
+        tx.setNotNull(nameOf(t), c.name.last)
+      case AlterColumnSpec(c, Some(dt), None, None, None, None, false) =>
+        tx.changeColumnType(nameOf(t), c.name.last, typeOf(dt))
+      case spec => throw new IllegalArgumentException(
+        s"unsupported ALTER COLUMN: ${spec.sql} — supported: SET NOT NULL, TYPE")
+    }); empty
+    case RenameTable(t, to, _) => inTx(_.renameTable(nameOf(t), to.last)); empty
+    case TruncateTable(t) => inTx(_.truncateTable(nameOf(t))); empty
+    case DropTable(t, _, _) => inTx(_.dropTable(nameOf(t))); empty
+    case DropView(v, _) => inTx(_.dropView(nameOf(v))); empty
+    case d: DescribeRelation => describe(nameOf(d.relation))
+    case _: ShowTables => listTables()
+    case ExplainCommand(q, _) => explain(q, analyze = false)
+    case Call(UnresolvedProcedure(fn), args, _) =>
+      executeCall(fn.last.toLowerCase(java.util.Locale.ROOT), args)
+    case q => frame(q)
+  }
+
+  private def explain(plan: LogicalPlan, analyze: Boolean): DataFrame = {
+    import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val qe = frame(plan).queryExecution
+    val formatted = qe.explainString(ExplainMode.fromString("formatted"))
+    val text =
+      if (analyze) {
+        // Execute THIS DataFrame's own QueryExecution (df.count() would
+        // build a separate one whose metrics die with it), then render
+        // its formatted plan plus the runtime metrics walked off the
+        // executed tree — AQE wraps the final plan in
+        // AdaptiveSparkPlanExec/QueryStageExec leaf nodes, so the walk
+        // unwraps them explicitly.
+        qe.executedPlan.execute().count() // distributed; no row fetch
+        def metricLines(p: SparkPlan): Seq[String] = p match {
+          case a: AdaptiveSparkPlanExec => metricLines(a.executedPlan)
+          case q: QueryStageExec => metricLines(q.plan)
+          case _ =>
+            val own =
+              if (p.metrics.isEmpty) Nil
+              else Seq(s"${p.nodeName}: " + p.metrics.toSeq.sortBy(_._1)
+                .map { case (k, m) => s"$k=${m.value}" }.mkString(", "))
+            own ++ p.children.flatMap(metricLines)
+        }
+        formatted + "\n== Runtime Metrics ==\n" +
+          metricLines(qe.executedPlan).mkString("\n")
+      } else formatted
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(text.linesIterator.map(l => Row(l)).toSeq, 1),
+      StructType(Seq(StructField("explain", StringType))))
   }
 
   /** `CREATE MATERIALIZED VIEW` — a declared-subset grammar mapped onto
@@ -781,6 +686,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     *     [, MIN(col) AS min_col…][, MAX(col) AS max_col…]
     *   FROM base [JOIN dim ON fk = pk] [WHERE pred] GROUP BY key[, key…]
     * }}}
+    * matched on the parsed `Aggregate` / `Filter` / `Join` nodes.
     * Sums are maintained NULL-safe (COALESCE(SUM(col),0): an all-NULL
     * group reports 0 where plain SQL SUM returns NULL — the convention
     * the incremental delta apply requires; see [[Mv]]). MIN/MAX keep SQL
@@ -789,190 +695,112 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * the refresher cannot maintain would corrupt on first refresh. The
     * WHERE predicate (base-side filter) is only part of the maintained
     * algebra in the join form, mirroring the Scala API. */
-  private def createMaterializedView(mv: String, select: String): Unit = {
-    import LakeCatalog.splitTopLevel
-    val BodyRe = ("""(?is)^SELECT\s+(.+?)\s+FROM\s+(\w+)""" +
-      """(?:\s+JOIN\s+(\w+)\s+ON\s+(\w+)\s*=\s*(\w+))?""" +
-      """(?:\s+WHERE\s+(.+?))?\s+GROUP\s+BY\s+([\w\s,]+)$""").r
-    select.stripSuffix(";").trim match {
-      case BodyRe(selList, base, dim, fk, pk, where, grpBy) =>
-        val CountRe = """(?i)^COUNT\s*\(\s*\*\s*\)\s+AS\s+n_rows$""".r
-        val SumRe = """(?i)^SUM\s*\(\s*(\w+)\s*\)\s+AS\s+sum_(\w+)$""".r
-        val AvgRe = """(?i)^AVG\s*\(\s*(\w+)\s*\)\s+AS\s+avg_(\w+)$""".r
-        val MinRe = """(?i)^MIN\s*\(\s*(\w+)\s*\)\s+AS\s+min_(\w+)$""".r
-        val MaxRe = """(?i)^MAX\s*\(\s*(\w+)\s*\)\s+AS\s+max_(\w+)$""".r
-        val KeyRe = """^(\w+)$""".r
-        val keys = scala.collection.mutable.ArrayBuffer.empty[String]
-        val sums = scala.collection.mutable.ArrayBuffer.empty[String]
-        val avgs = scala.collection.mutable.ArrayBuffer.empty[String]
-        val mins = scala.collection.mutable.ArrayBuffer.empty[String]
-        val maxs = scala.collection.mutable.ArrayBuffer.empty[String]
-        var sawCount = false
-        def checkAlias(fn: String, c: String, a: String): Unit =
-          require(c.equalsIgnoreCase(a),
-            s"$fn($c) must be aliased ${fn.toLowerCase}_$c (the " +
-              s"maintainer's column naming), got ${fn.toLowerCase}_$a")
-        splitTopLevel(selList, ',').map(_.trim).foreach {
-          case KeyRe(k) => keys += k
-          case CountRe() => sawCount = true
-          case SumRe(c, a) => checkAlias("SUM", c, a); sums += c
-          case AvgRe(c, a) => checkAlias("AVG", c, a); avgs += c
-          case MinRe(c, a) => checkAlias("MIN", c, a); mins += c
-          case MaxRe(c, a) => checkAlias("MAX", c, a); maxs += c
-          case other => throw new IllegalArgumentException(
-            s"unsupported MV select item '$other' — supported: bare group " +
-              "keys, COUNT(*) AS n_rows, SUM(col) AS sum_col, " +
-              "AVG(col) AS avg_col, MIN(col) AS min_col, " +
-              "MAX(col) AS max_col. Note: sums are " +
-              "maintained NULL-safe as COALESCE(SUM(col),0) — an all-NULL " +
-              "group reports 0, not NULL (avg/min/max keep SQL semantics: " +
-              "an all-NULL group is NULL). An AVG materializes its sum_ " +
-              "and cnt_ building blocks as MV columns alongside avg_")
-        }
-        require(sawCount,
-          "MV select list must include COUNT(*) AS n_rows (the maintainer " +
-            "needs the group cardinality to retire emptied groups)")
-        val grpKeys = grpBy.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        require(grpKeys == keys.toSeq,
-          s"GROUP BY (${grpKeys.mkString(",")}) must list exactly the " +
-            s"selected keys (${keys.mkString(",")}) in order")
-        if (dim == null) {
-          require(where == null,
-            "WHERE without JOIN is outside the maintained subset " +
-              "(the Scala API mirrors this: Mv.create has no filter)")
-          Mv.create(this, mv, base, keys.toSeq, sums.toSeq,
-            mins.toSeq, maxs.toSeq, avgs.toSeq)
-        } else {
-          require(mins.isEmpty && maxs.isEmpty,
-            "MIN/MAX are not maintainable on join MVs (a dim-churn leg " +
-              "would need per-group history) — supported on single-table " +
-              "MVs only")
-          // SQL ON is order-insensitive but Mv.createJoin binds (fk, pk)
-          // to (base, dim) — resolve each column to its actual side from
-          // the table schemas, and reject when both orientations resolve
-          // (same names on both tables: positional guessing would build
-          // a silently wrong join)
-          val baseCols = liveState(base).columns.map(_.name).toSet
-          val dimCols = liveState(dim).columns.map(_.name).toSet
-          val (fk2, pk2) =
-            if (fk == pk) {
-              require(baseCols(fk) && dimCols(fk),
-                s"ON $fk = $pk: both tables need column $fk")
-              (fk, pk)
-            } else {
-              val fwd = baseCols(fk) && dimCols(pk)
-              val rev = baseCols(pk) && dimCols(fk)
-              if (fwd && rev) throw new IllegalArgumentException(
-                s"ON $fk = $pk is ambiguous: both columns exist on both " +
-                  "tables — rename one side (qualified names are not in " +
-                  "the MV grammar)")
-              else if (fwd) (fk, pk)
-              else if (rev) (pk, fk)
-              else throw new IllegalArgumentException(
-                s"ON $fk = $pk: cannot resolve sides (base $base has " +
-                  s"${baseCols.toSeq.sorted.mkString(",")}; dim $dim has " +
-                  s"${dimCols.toSeq.sorted.mkString(",")})")
-            }
-          Mv.createJoin(this, mv, base, dim, fk2, pk2,
-            Option(where).map(_.trim), keys.toSeq, sums.toSeq,
-            avgs = avgs.toSeq)
-        }
-      case other => throw new IllegalArgumentException(
-        "unsupported MATERIALIZED VIEW body (grammar: SELECT keys…, " +
-          "COUNT(*) AS n_rows[, SUM(col) AS sum_col…][, MIN(col) AS " +
-          "min_col…][, MAX(col) AS max_col…] FROM base " +
-          s"[JOIN dim ON fk = pk] [WHERE pred] GROUP BY keys…): $other")
+  private def createMaterializedView(mv: String, query: LogicalPlan): Unit = {
+    def grammar = new IllegalArgumentException(
+      "unsupported MATERIALIZED VIEW body (grammar: SELECT keys…, " +
+        "COUNT(*) AS n_rows[, SUM(col) AS sum_col…][, MIN(col) AS " +
+        "min_col…][, MAX(col) AS max_col…] FROM base " +
+        s"[JOIN dim ON fk = pk] [WHERE pred] GROUP BY keys…): ${query.nodeName}")
+    val (grouping, items, child) = query match {
+      case Aggregate(g, i, c, _) => (g, i, c)
+      case _ => throw grammar
+    }
+    val (where, from) = child match {
+      case Filter(c, f) => (Some(c), f)
+      case f => (None, f)
+    }
+    val (base, join) = from match {
+      case UnresolvedRelation(Seq(b), _, _) => (b, None)
+      case Join(UnresolvedRelation(Seq(b), _, _), UnresolvedRelation(Seq(d), _, _),
+          Inner, Some(EqualTo(UnresolvedAttribute(Seq(fk)),
+            UnresolvedAttribute(Seq(pk)))), _) => (b, Some((d, fk, pk)))
+      case _ => throw grammar
+    }
+    val keys, sums, avgs, mins, maxs = scala.collection.mutable.ArrayBuffer.empty[String]
+    var sawCount = false
+    items.foreach { item =>
+      def unsupported = new IllegalArgumentException(
+        s"unsupported MV select item '${item.sql}' — supported: bare group " +
+          "keys, COUNT(*) AS n_rows, SUM(col) AS sum_col, " +
+          "AVG(col) AS avg_col, MIN(col) AS min_col, " +
+          "MAX(col) AS max_col. Note: sums are " +
+          "maintained NULL-safe as COALESCE(SUM(col),0) — an all-NULL " +
+          "group reports 0, not NULL (avg/min/max keep SQL semantics: " +
+          "an all-NULL group is NULL). An AVG materializes its sum_ " +
+          "and cnt_ building blocks as MV columns alongside avg_")
+      item match {
+        case UnresolvedAttribute(Seq(k)) => keys += k
+        case Alias(f: UnresolvedFunction, a) if f.arguments.size == 1 &&
+            !f.isDistinct && f.filter.isEmpty =>
+          (f.nameParts.last.toLowerCase(java.util.Locale.ROOT), f.arguments.head) match {
+            case ("count", Literal(1, _)) if a.equalsIgnoreCase("n_rows") => sawCount = true
+            case (fn @ ("sum" | "avg" | "min" | "max"), UnresolvedAttribute(Seq(c)))
+                if a.toLowerCase(java.util.Locale.ROOT).startsWith(fn + "_") =>
+              require(c.equalsIgnoreCase(a.drop(fn.length + 1)),
+                s"${fn.toUpperCase}($c) must be aliased ${fn}_$c (the " +
+                  s"maintainer's column naming), got $a")
+              Map("sum" -> sums, "avg" -> avgs, "min" -> mins, "max" -> maxs)(fn) += c
+            case _ => throw unsupported
+          }
+        case _ => throw unsupported
+      }
+    }
+    require(sawCount,
+      "MV select list must include COUNT(*) AS n_rows (the maintainer " +
+        "needs the group cardinality to retire emptied groups)")
+    val grpKeys = grouping.map {
+      case UnresolvedAttribute(Seq(k)) => k
+      case _ => throw grammar
+    }
+    require(grpKeys == keys.toSeq,
+      s"GROUP BY (${grpKeys.mkString(",")}) must list exactly the " +
+        s"selected keys (${keys.mkString(",")}) in order")
+    join match {
+      case None =>
+        require(where.isEmpty,
+          "WHERE without JOIN is outside the maintained subset " +
+            "(the Scala API mirrors this: Mv.create has no filter)")
+        Mv.create(this, mv, base, keys.toSeq, sums.toSeq,
+          mins.toSeq, maxs.toSeq, avgs.toSeq)
+      case Some((dim, fk, pk)) =>
+        require(mins.isEmpty && maxs.isEmpty,
+          "MIN/MAX are not maintainable on join MVs (a dim-churn leg " +
+            "would need per-group history) — supported on single-table " +
+            "MVs only")
+        // SQL ON is order-insensitive but Mv.createJoin binds (fk, pk)
+        // to (base, dim) — resolve each column to its actual side from
+        // the table schemas, and reject when both orientations resolve
+        // (same names on both tables: positional guessing would build
+        // a silently wrong join)
+        val baseCols = liveState(base).columns.map(_.name).toSet
+        val dimCols = liveState(dim).columns.map(_.name).toSet
+        val (fk2, pk2) =
+          if (fk == pk) {
+            require(baseCols(fk) && dimCols(fk),
+              s"ON $fk = $pk: both tables need column $fk")
+            (fk, pk)
+          } else {
+            val fwd = baseCols(fk) && dimCols(pk)
+            val rev = baseCols(pk) && dimCols(fk)
+            if (fwd && rev) throw new IllegalArgumentException(
+              s"ON $fk = $pk is ambiguous: both columns exist on both " +
+                "tables — rename one side (qualified names are not in " +
+                "the MV grammar)")
+            else if (fwd) (fk, pk)
+            else if (rev) (pk, fk)
+            else throw new IllegalArgumentException(
+              s"ON $fk = $pk: cannot resolve sides (base $base has " +
+                s"${baseCols.toSeq.sorted.mkString(",")}; dim $dim has " +
+                s"${dimCols.toSeq.sorted.mkString(",")})")
+          }
+        Mv.createJoin(this, mv, base, dim, fk2, pk2, where.map(_.sql),
+          keys.toSeq, sums.toSeq, avgs = avgs.toSeq)
     }
   }
 
-  /** The reference's headline time-travel SQL syntax
-    * (ref README.md:215-220, demos/02_time_travel/demo.py:163-232):
-    * `t AT (VERSION => 42)`, `t AT (VERSION => 'tagname')`,
-    * `t AT (TIMESTAMP => '2024-01-15 14:00:00')`. */
-  private val AtClauseRe =
-    ("""(?is)\b(\w+)\s+AT\s*\(\s*(VERSION|TIMESTAMP)\s*=>\s*""" +
-      """(?:(\d+)|'([^']*)')\s*\)""").r
-
-  /** SQL-level metadata TABLE FUNCTIONS — the `ducklake_snapshots()` /
-    * `ducklake_table_info()` / `ducklake_table_changes(...)` surface
-    * (ref utils/ducklake_utils.py:58-78): rewritten to global temp views
-    * (global: they must resolve from the isolated child session) so
-    * metadata is queryable with plain SQL, no Scala API needed. */
-  private val SnapFnRe = """(?i)graft_snapshots\s*\(\s*\)""".r
-  private val InfoFnRe = """(?i)graft_table_info\s*\(\s*\)""".r
-  private val FilesFnRe = """(?i)graft_files\s*\(\s*\)""".r
-  private val ChangesFnRe =
-    """(?i)graft_table_changes\s*\(\s*'(\w+)'\s*,\s*(\d+)\s*,\s*(\d+)\s*\)""".r
-
-  /** Rewrite the metadata table functions to global temp views. Returns
-    * the rewritten query plus the view names it registered — [[sql]]
-    * drops them once the statement is analyzed (view resolution inlines
-    * the child plan, so the name is not needed afterwards), keeping the
-    * global-temp namespace from accumulating over a session. Matches
-    * inside string literals are left untouched. */
-  private def rewriteMetaFns(query: String): (String, Seq[String]) = {
-    // view names carry the catalog identity COLLISION-FREE: an md5 of
-    // the exact root string (sanitizing the path maps /a/b and /a_b to
-    // the same name, and a 32-bit hash can collide) — two catalogs in
-    // one JVM must never serve each other's metadata. A per-statement
-    // sequence number is appended so CONCURRENT sql() calls (same root,
-    // two threads or two instances) never drop each other's views in
-    // their finally blocks — each statement owns its names outright.
-    val ns = "c" + java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString +
-      "_" + LakeCatalog.metaViewSeq.incrementAndGet()
-    val made = scala.collection.mutable.ArrayBuffer.empty[String]
-    def guard(q: String, re: scala.util.matching.Regex)(
-        mk: scala.util.matching.Regex.Match => String): String = {
-      val spans = LakeCatalog.literalSpans(q)
-      re.replaceAllIn(q, m => java.util.regex.Matcher.quoteReplacement(
-        if (spans(m.start)) m.matched else mk(m)))
-    }
-    var q = query
-    q = guard(q, SnapFnRe) { _ =>
-      val v = s"graft_snapshots_$ns"
-      snapshots().createOrReplaceGlobalTempView(v); made += v
-      s"global_temp.$v"
-    }
-    q = guard(q, InfoFnRe) { _ =>
-      val v = s"graft_table_info_$ns"
-      tableInfo().createOrReplaceGlobalTempView(v); made += v
-      s"global_temp.$v"
-    }
-    q = guard(q, FilesFnRe) { _ =>
-      val v = s"graft_files_$ns"
-      files().createOrReplaceGlobalTempView(v); made += v
-      s"global_temp.$v"
-    }
-    q = guard(q, ChangesFnRe) { m =>
-      val (t, v1, v2) = (m.group(1), m.group(2).toLong, m.group(3).toLong)
-      val alias = s"graft_changes_${ns}_${t}_${v1}_$v2"
-      tableChanges(t, v1, v2).createOrReplaceGlobalTempView(alias)
-      made += alias
-      s"global_temp.$alias"
-    }
-    (q, made.toSeq)
-  }
-
-  /** Normalize the reference's (DuckDB-flavored) SQL type names to ones
-    * Spark's DDL parser accepts — the CREATE TABLE statements in the
-    * reference demos use VARCHAR / INTEGER / DECIMAL(10,2) / TIMESTAMP
-    * (ref demos/01_transaction_rollback/demo.py:35-54). */
-  private def sqlTypeToSpark(t: String): String = {
-    val u = t.trim.toUpperCase
-    if (u.startsWith("VARCHAR") || u == "TEXT" || u == "CHAR") "STRING"
-    else if (u == "INTEGER") "INT"
-    else if (u == "DATETIME") "TIMESTAMP"
-    else if (u == "DOUBLE PRECISION") "DOUBLE"
-    else if (u == "REAL") "FLOAT"
-    else if (u == "BLOB" || u == "BYTEA") "BINARY"
-    else t.trim
-  }
-
-  /** `MERGE INTO` for the SQL router — the standard statement shape
-    * mapped onto [[Tx.mergeClauses]] (one atomic copy-on-write commit,
-    * every clause branch):
+  /** `MERGE INTO` — the standard statement shape mapped onto
+    * [[Tx.mergeClauses]] (one atomic copy-on-write commit, every clause
+    * branch):
     *
     * {{{
     * MERGE INTO t [AS a] USING (select|values body) [AS b]
@@ -986,170 +814,141 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * ON must be a conjunction of same-name key equalities (the lake
     * merge is keyed); UPDATE/INSERT are whole-row (`SET *` / `INSERT *`
     * — Delta's star forms), since the source is schema-aligned first.
-    * Clause conditions may reference both aliases; they are rewritten to
-    * the engine's canonical `t.`/`s.` prefixes (insert conditions see
-    * bare source columns, as in the API). */
-  private def executeMerge(stmt: String): DataFrame = {
-    val HeadRe =
-      """(?is)^MERGE\s+INTO\s+(\w+)(?:\s+AS)?(?:\s+(\w+))?\s+USING\s*\(""".r
-    val m = HeadRe.findFirstMatchIn(stmt).getOrElse(
-      throw new IllegalArgumentException(s"unparseable MERGE head: $stmt"))
-    val table = m.group(1)
-    val tAlias = Option(m.group(2)).getOrElse(table)
-    // balanced-paren scan for the USING body
-    var depth = 1; var i = m.end
-    while (depth > 0 && i < stmt.length) {
-      stmt.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
+    * Clause conditions may reference both aliases; one pass over their
+    * parsed attributes requalifies them to the engine's canonical
+    * `t.`/`s.` (insert conditions see bare source columns, as in the API). */
+  private def executeMerge(m: MergeIntoTable): DataFrame = {
+    val (table, tAlias) = m.targetTable match {
+      case SubqueryAlias(a, r) => (nameOf(r), a.name)
+      case r => (nameOf(r), nameOf(r))
     }
-    require(depth == 0, "unbalanced parens in MERGE USING")
-    val body = stmt.substring(m.end, i - 1)
-    val TailRe = """(?is)^\s*(?:AS\s+)?(\w+)?\s+ON\s+(.+)$""".r
-    val (sAlias, onAndClauses) = stmt.substring(i) match {
-      case TailRe(a, rest) => (Option(a).getOrElse("src"), rest)
-      case other =>
-        throw new IllegalArgumentException(s"unparseable MERGE tail: $other")
+    val (sAlias, source) = m.sourceTable match {
+      case SubqueryAlias(a, q) => (a.name, q)
+      case q => ("src", q)
     }
-    val parts = LakeCatalog.splitWhenTopLevel(onAndClauses)
-    val onCond = parts.head
-    val keys = onCond.split("(?i)\\s+AND\\s+").toSeq.map { eq =>
-      val EqRe = """(?s)^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$""".r
-      eq match {
-        case EqRe(a1, k1, a2, k2)
-            if k1.equalsIgnoreCase(k2) &&
-              Set(a1, a2).map(_.toLowerCase) ==
-                Set(tAlias, sAlias).map(_.toLowerCase) => k1
-        case _ => throw new IllegalArgumentException(
-          s"MERGE ON must be same-name key equalities over both aliases: $eq")
-      }
-    }
-    // Rewrite through a collision-proof placeholder: if the SOURCE alias is
-    // literally "t" (or the target alias "s"), a naive sequential rewrite
-    // (tAlias->"t." first, then sAlias->"s.") would re-rewrite the "t."
-    // tokens pass 1 just produced and silently turn target references into
-    // source references. The  sentinel cannot appear in SQL text, so
-    // pass 2 can never touch pass 1's output.
     require(!tAlias.equalsIgnoreCase(sAlias),
       s"MERGE target and source aliases must differ, both are '$tAlias'")
-    def canon(cond: String, bareSource: Boolean): String = {
-      val ph = "\u0001tgt\u0001."
-      val c1 = cond.replaceAll(s"(?i)\\b$tAlias\\.",
-        java.util.regex.Matcher.quoteReplacement(ph))
-      val c2 =
-        if (bareSource) c1.replaceAll(s"(?i)\\b$sAlias\\.", "")
-        else c1.replaceAll(s"(?i)\\b$sAlias\\.", "s.")
-      c2.replace(ph, "t.")
-    }
-    var cl = MergeClauses()
-    val MatchedDel = """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE$""".r
-    val MatchedUpd =
-      """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+\*$""".r
-    val NotMatchedIns =
-      """(?is)^NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT(?:\s+\*)?$""".r
-    val BySourceDel =
-      """(?is)^NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE$""".r
-    parts.tail.foreach {
-      case BySourceDel(c) =>
-        cl = cl.copy(bySourceDelete =
-          Some(Option(c).map(canon(_, bareSource = false)).getOrElse("true")))
-      case MatchedDel(c) =>
-        cl = cl.copy(matchedDelete =
-          Some(Option(c).map(canon(_, bareSource = false)).getOrElse("true")))
-      case MatchedUpd(c) =>
-        cl = cl.copy(matchedUpdate =
-          Some(Option(c).map(canon(_, bareSource = false)).getOrElse("true")))
-      case NotMatchedIns(c) =>
-        cl = cl.copy(notMatchedInsert =
-          Some(Option(c).map(canon(_, bareSource = true)).getOrElse("true")))
+    def keys(e: Expression): Seq[String] = e match {
+      case And(l, r) => keys(l) ++ keys(r)
+      case EqualTo(UnresolvedAttribute(Seq(a1, k1)), UnresolvedAttribute(Seq(a2, k2)))
+          if k1.equalsIgnoreCase(k2) && Set(a1, a2).map(_.toLowerCase) ==
+            Set(tAlias, sAlias).map(_.toLowerCase) => Seq(k1)
       case other => throw new IllegalArgumentException(
-        s"unsupported MERGE clause: WHEN $other")
+        s"MERGE ON must be same-name key equalities over both aliases: ${other.sql}")
     }
-    inTx(_.mergeClauses(table, sql(body.trim), keys, cl))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Nil))
+    def canon(c: Option[Expression], bareSource: Boolean): Option[String] =
+      Some(c.fold("true")(_.transform {
+        case UnresolvedAttribute(Seq(q, n)) if q.equalsIgnoreCase(tAlias) =>
+          UnresolvedAttribute(Seq("t", n))
+        case UnresolvedAttribute(Seq(q, n)) if q.equalsIgnoreCase(sAlias) =>
+          UnresolvedAttribute(if (bareSource) Seq(n) else Seq("s", n))
+      }.sql))
+    var cl = MergeClauses()
+    (m.matchedActions.map("MATCHED" -> _) ++ m.notMatchedActions.map("NOT MATCHED" -> _) ++
+        m.notMatchedBySourceActions.map("NOT MATCHED BY SOURCE" -> _)).foreach {
+      case ("MATCHED", DeleteAction(c)) => cl = cl.copy(matchedDelete = canon(c, false))
+      case ("MATCHED", UpdateStarAction(c)) => cl = cl.copy(matchedUpdate = canon(c, false))
+      case ("NOT MATCHED", InsertStarAction(c)) => cl = cl.copy(notMatchedInsert = canon(c, true))
+      case ("NOT MATCHED BY SOURCE", DeleteAction(c)) =>
+        cl = cl.copy(bySourceDelete = canon(c, false))
+      case (when, a) => throw new IllegalArgumentException(
+        s"unsupported MERGE clause: WHEN $when … ${a.nodeName} — supported: MATCHED " +
+          "DELETE / UPDATE SET *, NOT MATCHED INSERT *, NOT MATCHED BY SOURCE DELETE")
+    }
+    inTx(_.mergeClauses(table, frame(source), keys(m.mergeCondition), cl))
+    empty
   }
 
-  def sql(query: String): DataFrame = {
-    // inside an open interactive transaction, SELECTs see the STAGED
-    // state (read-your-writes) — the view a SQL database gives between
-    // BEGIN and COMMIT; buildSnapshot is pure construction over the
-    // staged table map, nothing is published
-    val s = activeTx match {
-      case Some((tx, v)) => tx.buildSnapshot(v + 1)
-      case None => current
-    }
-    val iso = spark.newSession()
-    // Time-travel clauses rewrite to versioned temp views BEFORE parsing,
-    // so the syntax composes with arbitrary SQL — joining two versions,
-    // NOT EXISTS diffs across snapshots, tags as stable version names.
-    // Each referenced (table, version) registers the EXACT file list of
-    // that snapshot (same path as readAt — no listing, no stale files).
-    // Matches inside string literals are skipped — `SELECT 't AT
-    // (VERSION => 1)'` is data, not syntax.
-    val (metaQ, metaViews) = rewriteMetaFns(query)
-    val spans = LakeCatalog.literalSpans(metaQ)
-    val rewritten = AtClauseRe.replaceAllIn(metaQ, m => {
-      if (spans(m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-      val table = m.group(1)
-      val v = m.group(2).toUpperCase match {
-        case "VERSION" =>
-          Option(m.group(3)).map(_.toLong).getOrElse(resolveRef(m.group(4)))
-        case _ =>
-          // unquoted digits = epoch millis (a wall-clock string must be
-          // quoted); quoted wall-clocks resolve in the SESSION timezone,
-          // not hardcoded UTC (they coincide under the UTC-pinned bench)
-          Option(m.group(3)) match {
-            case Some(digits) => versionAsOf(digits.toLong)
-            case None =>
-              val raw = m.group(4).trim
-              val zone = java.time.ZoneId.of(
-                spark.conf.get("spark.sql.session.timeZone", "UTC"))
-              val ldt = java.time.LocalDateTime.parse(raw.replace(' ', 'T'))
-              versionAsOf(ldt.atZone(zone).toInstant.toEpochMilli)
-          }
-      }
-      val alias = s"${table}__at_v$v"
-      val snap = snapshot(v)
-      val st = snap.tables.getOrElse(table, throw new NoSuchElementException(
-        s"table $table not in snapshot $v"))
-      readState(st, iso).createOrReplaceTempView(alias)
-      java.util.regex.Matcher.quoteReplacement(alias)
-      }
-    })
-    s.tables.foreach { case (t, st) =>
-      readState(st, iso).createOrReplaceTempView(t)
-    }
-    s.views.foreach { case (v, viewSql) =>
-      iso.sql(viewSql).createOrReplaceTempView(v)
-    }
-    // analysis inlines the metadata views' child plans, so the global
-    // temp names can be dropped immediately — nothing accumulates in
-    // the application-lifetime global_temp namespace
-    try iso.sql(rewritten)
-    finally metaViews.foreach(spark.catalog.dropGlobalTempView)
-  }
+  /** Ad-hoc SQL over the lake — the reference's user-facing query surface
+    * (`ATTACH ...; SELECT ... FROM lake.t`, ref
+    * demos/01_transaction_rollback/demo.py:30,74). Every table and stored
+    * view of the catalog is visible by name (a CTE of the same name
+    * shadows it); inside an open interactive transaction the STAGED state
+    * is read (read-your-writes). Also accepted: `t AT (VERSION => v |
+    * 'tag')` / `t AT (TIMESTAMP => 'wall-clock' | epochMillis)` time
+    * travel (quoted wall-clocks resolve in the session time zone) and the
+    * `graft_snapshots()` / `graft_table_info()` / `graft_files()` /
+    * `graft_table_changes('t', v1, v2)` metadata table functions. Nothing
+    * is registered in any session: lake names are bound in the parsed
+    * plan (see [[bind]]). */
+  def sql(query: String): DataFrame = frame(parse(query))
 
-  /** Materialize a stored view (D3): tables become temp views, the stored
-    * SQL runs against them (ref demos/03_schema_evolution/demo.py:273-288).
-    *
-    * Resolution happens in an ISOLATED child session (`newSession` shares
-    * the SparkContext + cache but has its own temp-view namespace), so
-    * same-named session temp views of the caller are never clobbered and
-    * nothing leaks after materialization. */
+  /** Materialize a stored view (D3, ref
+    * demos/03_schema_evolution/demo.py:273-288) over the current
+    * snapshot; views over views resolve recursively. */
   def readView(name: String): DataFrame = {
     val s = current
-    val sql = s.views.getOrElse(name,
-      throw new NoSuchElementException(s"view not found: $name"))
-    val iso = spark.newSession()
-    s.tables.foreach { case (t, st) =>
-      readState(st, iso).createOrReplaceTempView(t)
+    frame(parse(s.views.getOrElse(name,
+      throw new NoSuchElementException(s"view not found: $name"))), s)
+  }
+
+  private def frame(plan: LogicalPlan): DataFrame = frame(plan, activeTx match {
+    case Some((tx, v)) => tx.buildSnapshot(v + 1)
+    case None => current
+  })
+
+  private def frame(plan: LogicalPlan, s: Snapshot): DataFrame = {
+    require(!plan.isInstanceOf[Command] && !plan.isInstanceOf[ParsedStatement],
+      s"unsupported statement: ${plan.nodeName}")
+    SqlFront.ofRows(spark, bind(plan, s))
+  }
+
+  /** Bind a parsed query's lake references against snapshot `s`: time
+    * travel to that version's exact file list (the [[readAt]] plan), the
+    * metadata table functions to their frames, tables to their
+    * [[readState]] plans and stored views to their own parsed, bound
+    * plans — lazily, only what the query names, so a view over a view
+    * resolves in any order. `ctes` holds the CTE names in scope (they
+    * shadow lake names, as in any SQL database); `views` is the stack of
+    * views being expanded (a cycle is refused). */
+  private def bind(p: LogicalPlan, s: Snapshot, ctes: Set[String] = Set.empty,
+      views: List[String] = Nil): LogicalPlan = {
+    def in(q: LogicalPlan, scope: Set[String] = ctes) = bind(q, s, scope, views)
+    def planOf(df: DataFrame) = df.queryExecution.analyzed
+    def low(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+    def lookup[V](m: Map[String, V], n: String): Option[V] =
+      m.get(n).orElse(m.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v })
+    p match {
+      case w: UnresolvedWith =>
+        var seen = ctes
+        val defs = w.cteRelations.map { case (n, q, d) =>
+          val scope = if (w.allowRecursion) seen + low(n) else seen
+          seen += low(n)
+          (n, in(q, scope).asInstanceOf[SubqueryAlias], d)
+        }
+        w.copy(child = in(w.child, seen), cteRelations = defs)
+      case RelationTimeTravel(UnresolvedRelation(Seq(t), _, _), ts, ver) =>
+        // a version is a number or a tag; a timestamp is epoch millis
+        // unquoted, else a wall-clock in the SESSION time zone
+        val v = ver.map(n => if (n.forall(_.isDigit)) n.toLong else resolveRef(n))
+          .getOrElse(ts.get.eval() match {
+            case wall: org.apache.spark.unsafe.types.UTF8String =>
+              versionAsOf(java.time.LocalDateTime.parse(wall.toString.trim.replace(' ', 'T'))
+                .atZone(java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+                .toInstant.toEpochMilli)
+            case ms => versionAsOf(ms.toString.toLong)
+          })
+        SubqueryAlias(t, planOf(readState(stateOf(snapshot(v), t))))
+      case UnresolvedTableValuedFunction(Seq(fn), args, _) if low(fn).startsWith("graft_") =>
+        planOf((low(fn), args.collect { case l: Literal => l.value.toString }) match {
+          case ("graft_snapshots", Seq()) => snapshots()
+          case ("graft_table_info", Seq()) => tableInfo()
+          case ("graft_files", Seq()) => files()
+          case ("graft_table_changes", Seq(t, v1, v2)) if args.size == 3 =>
+            tableChanges(t, v1.toLong, v2.toLong)
+          case _ => throw new IllegalArgumentException(
+            s"bad lake table function call: $fn(${args.map(_.sql).mkString(", ")})")
+        })
+      case r @ UnresolvedRelation(Seq(n), _, _) if !ctes(low(n)) =>
+        lookup(s.tables, n).map(st => SubqueryAlias(n, planOf(readState(st))))
+          .orElse(lookup(s.views, n).map { text =>
+            require(!views.contains(low(n)), s"view $n references itself")
+            SubqueryAlias(n, bind(parse(text), s, Set.empty, low(n) :: views))
+          }).getOrElse(r)
+      case other => other.mapChildren(in(_)).transformExpressions {
+        case e: SubqueryExpression => e.withNewPlan(in(e.plan))
+      }
     }
-    iso.sql(sql)
   }
 
   // ------------------------------------------------- metadata as DataFrames
@@ -1233,8 +1032,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * correctness gate) can pin when the optimization actually fires. */
   def statsAgg(table: String, cols: Seq[String] = Nil): DataFrame = {
     val st = stateOf(current, table)
-    val defs = cols.map(c => st.columns.find(_.name == c).getOrElse(
-      throw new NoSuchElementException(s"no such column: $table.$c")))
+    val defs = cols.map(columnOf(st, table, _))
     val curV = st.schemaVersion
     // COUNT alone is ALWAYS metadata-exact (footer row counts, DV
     // tombstone counts, and inlined-row counts are all exact); MIN/MAX
@@ -1481,15 +1279,6 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     }.toDF("column_name", "column_type", "null", "default")
   }
 
-  // ------------------------------------------------------------ transactions
-
-  /** Atomic multi-statement, multi-table transaction (M5/M6 — ref
-    * demos/01_transaction_rollback/demo.py:177-214). The body stages
-    * parquet writes + a new manifest; COMMIT is one atomic manifest
-    * publish. On exception staged files are deleted (ROLLBACK). On a
-    * lost publish race the body re-runs against the fresh snapshot
-    * (optimistic concurrency — the DuckLake "many concurrent writers
-    * through one transactional catalog" model, ref README.md:244). */
   // --------------------------------------- interactive SQL transactions
 
   /** Open interactive transaction, if any — the reference's BEGIN
@@ -1503,8 +1292,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * same observable behavior as a serialization failure in a SQL
     * database. One open transaction per catalog instance. Volatile:
     * statements may arrive from a thread other than the one that ran
-    * BEGIN (the metadata-view machinery already supports cross-thread
-    * use), and a stale read here would silently auto-commit a statement
+    * BEGIN, and a stale read here would silently auto-commit a statement
     * that should have staged. */
   @volatile private var activeTx: Option[(Tx, Long)] = None
 
@@ -1908,26 +1696,25 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * the SQL surface (the reference's whole interface is
     * `conn.execute(sql)`; DuckLake exposes the same ops as
     * `ducklake_expire_snapshots()`-style procedure calls). Arguments are
-    * positional: strings in single quotes (doubled quote escapes),
-    * numbers bare. Maintenance runs its own commits (vacuum also runs
-    * physical GC), so calls REFUSE inside an open interactive
-    * transaction rather than doom it to an OCC abort. Every verb returns
-    * ONE row of deterministic after-facts, so a pure-SQL maintenance
-    * lifecycle is ledger-able (l53). */
-  private def executeCall(fn: String, argStr: String): DataFrame = {
-    import LakeCatalog.splitTopLevel
+    * positional literals: strings quoted, numbers bare. Maintenance runs
+    * its own commits (vacuum also runs physical GC), so calls REFUSE
+    * inside an open interactive transaction rather than doom it to an OCC
+    * abort. Every verb returns ONE row of deterministic after-facts, so a
+    * pure-SQL maintenance lifecycle is ledger-able (l53). */
+  private def executeCall(fn: String, args: Seq[Expression]): DataFrame = {
     require(!hasOpenTransaction,
       s"$fn: maintenance procedures cannot run inside an open " +
         "interactive transaction — COMMIT or ROLLBACK first")
-    val args = splitTopLevel(argStr, ',').map(_.trim).filter(_.nonEmpty)
-    def isStr(a: String) = a.length >= 2 && a.head == '\'' && a.last == '\''
-    def str(a: String): String = {
-      require(isStr(a), s"$fn: expected a quoted string argument, got: $a")
-      a.substring(1, a.length - 1).replace("''", "'")
+    def isStr(a: Expression) = a.foldable && a.dataType == StringType
+    def str(a: Expression): String = {
+      require(isStr(a), s"$fn: expected a quoted string argument, got: ${a.sql}")
+      a.eval().toString
     }
-    def num(a: String): Long = {
-      require(a.matches("-?\\d+"), s"$fn: expected a numeric argument, got: $a")
-      a.toLong
+    def num(a: Expression): Long = (if (a.foldable) a.eval() else a) match {
+      case n: Int => n
+      case n: Long => n
+      case _ => throw new IllegalArgumentException(
+        s"$fn: expected a numeric argument, got: ${a.sql}")
     }
     def oneRow(fields: Seq[(String, DataType)], vals: Seq[Any]): DataFrame =
       spark.createDataFrame(
@@ -2106,122 +1893,76 @@ object LakeCatalog {
   val PropAutoCompactMaxFiles = "compact.auto.maxFiles"
   val PropAutoCompactTargetBytes = "compact.auto.targetBytes"
 
-  /** JVM-wide statement counter for metadata-view names — uniqueness
-    * across concurrent sql() calls on the same catalog root. */
-  private[lake] val metaViewSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** JVM-wide count of OCC publish retries (a failed conditional put that
     * re-ran its transaction body). Diagnostic only — read it before and
     * after a workload to measure commit contention (perfbench's
     * `lake.occ_retries` does); concurrent workloads in one JVM share it. */
   val occRetries = new java.util.concurrent.atomic.LongAdder()
-  /** Split `s` on `sep` at paren-depth 0 outside single-quoted strings —
-    * the minimal scanner [[LakeCatalog.execute]]'s UPDATE head needs
-    * (commas inside function calls and string literals must not split). */
-  private[lake] def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.Buffer[String]()
-    val sb = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach {
-      case '\'' => inStr = !inStr; sb += '\''
-      case '(' if !inStr => depth += 1; sb += '('
-      case ')' if !inStr => depth -= 1; sb += ')'
-      case c if c == sep && !inStr && depth == 0 =>
-        out += sb.toString; sb.clear()
-      case c => sb += c
+
+  /** A statement as Spark's own SQL lexer splits it: `all` tokens
+    * (concatenated they give back the text, whitespace and comments
+    * included) and the indices of the significant ones (`sig`: no
+    * whitespace, comments or `;`). String literals and quoted names are
+    * single tokens, so nothing matched on tokens can fire inside one. */
+  private[lake] final class Lexed(text: String) {
+    import org.antlr.v4.runtime.{CharStreams, Token}
+    import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+    private val cps = text.codePoints.toArray
+    private val tokens = {
+      // keywords match in upper case only (Spark's parser feeds its
+      // lexer an upper-casing stream too); token texts keep their case
+      val upper = cps.map(Character.toUpperCase)
+      val lexer = new SqlBaseLexer(CharStreams.fromString(new String(upper, 0, upper.length)))
+      lexer.removeErrorListeners()
+      scala.jdk.CollectionConverters.ListHasAsScala(lexer.getAllTokens).asScala.toIndexedSeq
     }
-    out += sb.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
+    val all: IndexedSeq[String] = tokens.map(t =>
+      new String(cps, t.getStartIndex, t.getStopIndex - t.getStartIndex + 1))
+    val sig: IndexedSeq[Int] = tokens.indices.filter(i =>
+      tokens(i).getChannel == Token.DEFAULT_CHANNEL && tokens(i).getType != SqlBaseLexer.SEMICOLON)
+    def text(k: Int): String = if (k >= 0 && k < sig.size) all(sig(k)) else ""
+    def up(k: Int): String = text(k).toUpperCase(java.util.Locale.ROOT)
+    def isName(k: Int): Boolean = text(k).headOption.exists(c =>
+      c.isLetter || c == '_' || c == '`')
   }
 
-  /** Positions inside single-quoted SQL string literals (quote chars
-    * included) — the statement-level regex rewrites must never fire
-    * there. Doubled `''` escapes toggle twice and net out inside;
-    * backslash escapes (`\'` — Spark's default string-literal escaping)
-    * consume the following character so an escaped quote never reads as
-    * the literal's terminator. */
-  private[lake] def literalSpans(s: String): Array[Boolean] = {
-    val in = new Array[Boolean](s.length)
-    var open = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (open && c == '\\' && i + 1 < s.length) {
-        in(i) = true; in(i + 1) = true; i += 2
-      } else {
-        if (c == '\'') { in(i) = true; open = !open }
-        else in(i) = open
-        i += 1
-      }
+  /** Rewrite the DuckDB forms Spark 4.1's `parsePlan` rejects into ones
+    * it accepts, token by token (see [[LakeCatalog.execute]]): time travel
+    * `AT (VERSION|TIMESTAMP => x)` anywhere, and in CREATE/ALTER TABLE
+    * type position — the token after a column name, or after `TYPE` —
+    * the DuckDB type names; plus `SET DATA TYPE` → `TYPE`. */
+  private[lake] def prePass(lx: Lexed): String = {
+    import lx.up
+    val out = lx.all.toArray
+    def put(k: Int, to: Int, s: String): Unit = {
+      (lx.sig(k) to lx.sig(to)).foreach(out(_) = "")
+      out(lx.sig(k)) = s
     }
-    in
-  }
-
-  /** Split a MERGE tail on clause-level WHEN boundaries only: a WHEN
-    * inside a string literal, inside parens, or inside a CASE..END
-    * expression belongs to a clause CONDITION (`WHEN MATCHED AND CASE
-    * WHEN ... END THEN ...`), not to the clause list, and the naive
-    * `\bWHEN\b` split mis-parsed exactly those. Returns the ON-condition
-    * head followed by each clause body with its WHEN keyword stripped —
-    * the same shape the naive split produced. */
-  private[lake] def splitWhenTopLevel(s: String): Seq[String] = {
-    val spans = literalSpans(s)
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    def wordAt(i: Int, w: String): Boolean =
-      s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-        (i + w.length >= s.length || !isWordChar(s.charAt(i + w.length)))
-    val bounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var depth = 0; var caseDepth = 0
-    var i = 0
-    while (i < s.length) {
-      if (spans(i)) i += 1
-      else s.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
+    val ddl = Set("CREATE", "ALTER")(up(0)) && up(1) == "TABLE"
+    var depth = 0; var body = false; var k = 0
+    while (k < lx.sig.size) {
+      up(k) match {
+        case "(" => depth += 1
+        case ")" => depth -= 1
+        case "AS" if depth == 0 => body = true
         case _ =>
-          if (wordAt(i, "CASE")) { caseDepth += 1; i += 4 }
-          else if (wordAt(i, "END") && caseDepth > 0) { caseDepth -= 1; i += 3 }
-          else if (wordAt(i, "WHEN") && depth == 0 && caseDepth == 0) {
-            bounds += i; i += 4
-          }
-          else i += 1
       }
-    }
-    if (bounds.isEmpty) Seq(s.trim)
-    else {
-      val head = s.substring(0, bounds.head).trim
-      val tails = bounds.indices.map { j =>
-        val from = bounds(j) + 4
-        val to = if (j + 1 < bounds.length) bounds(j + 1) else s.length
-        s.substring(from, to).trim
+      val typePos = ddl && !body && (up(k - 1) == "TYPE" || lx.isName(k - 1) &&
+        (depth == 0 && Set("COLUMN", "COLUMNS")(up(k - 2)) ||
+          depth == 1 && Set("(", ",")(up(k - 2))))
+      (up(k), up(k + 1)) match {
+        case ("AT", "(") if Set("VERSION", "TIMESTAMP")(up(k + 2)) &&
+            up(k + 3) == "=>" && up(k + 5) == ")" =>
+          put(k, k + 5, s"${up(k + 2)} AS OF ${lx.text(k + 4)}"); k += 5
+        case ("SET", "DATA") if ddl && up(k + 2) == "TYPE" => put(k, k + 1, "")
+        case ("DOUBLE", "PRECISION") if typePos => put(k, k + 1, "DOUBLE")
+        case ("TEXT" | "VARCHAR" | "CHAR", next) if typePos && next != "(" => put(k, k, "STRING")
+        case ("DATETIME", _) if typePos => put(k, k, "TIMESTAMP")
+        case ("BLOB" | "BYTEA", _) if typePos => put(k, k, "BINARY")
+        case _ =>
       }
-      head +: tails
+      k += 1
     }
-  }
-
-  /** Split once at the first top-level occurrence of `keyword` (word,
-    * case-insensitive) or `=`; returns (head, Some(tail)) or (s, None). */
-  private[lake] def topLevelSplitOnce(
-      s: String, keyword: String): (String, Option[String]) = {
-    var depth = 0; var inStr = false
-    var i = 0
-    val kw = keyword.toLowerCase
-    while (i < s.length) {
-      val c = s(i)
-      if (c == '\'') inStr = !inStr
-      else if (!inStr && c == '(') depth += 1
-      else if (!inStr && c == ')') depth -= 1
-      else if (!inStr && depth == 0) {
-        if (kw == "=" && c == '=')
-          return (s.substring(0, i), Some(s.substring(i + 1)))
-        if (kw != "=" && s.regionMatches(true, i, kw, 0, kw.length) &&
-            (i == 0 || s(i - 1).isWhitespace) &&
-            (i + kw.length >= s.length || s(i + kw.length).isWhitespace))
-          return (s.substring(0, i), Some(s.substring(i + kw.length)))
-      }
-      i += 1
-    }
-    (s, None)
+    out.mkString
   }
 }

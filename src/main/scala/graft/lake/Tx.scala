@@ -898,7 +898,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       val affected =
         if (cl.bySourceDelete.isDefined) st.files
         else {
-          val affectedPaths = cat.readStateTagged(st, "__file")
+          val affectedPaths = cat.readState(st, Some("__file"))
             .join(src.select(keyCols: _*), keys, "left_semi")
             .filter(col("__file").isNotNull)
             .select("__file").distinct().limit(Tx.MaxAffectedPaths + 1).collect()
@@ -1273,7 +1273,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     // Past the cap (a predicate touching most of a 10^6-file table) the
     // rewrite degenerates to all files — which is the work such an update
     // does anyway — instead of pulling an unbounded path set to the driver.
-    val affectedPaths = matcher(cat.readStateTagged(st, "__file"))
+    val affectedPaths = matcher(cat.readState(st, Some("__file")))
       .select("__file").distinct().limit(Tx.MaxAffectedPaths + 1).collect()
       .map(r => new java.net.URI(r.getString(0)).getPath).toSet
     if (affectedPaths.isEmpty) return

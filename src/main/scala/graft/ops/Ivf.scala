@@ -60,7 +60,7 @@ object Ivf {
     indexMemo.computeIfAbsent((spark, sfDir), _ => build(spark, sfDir))
 
   private def build(spark: SparkSession, sfDir: String): (DataFrame, Array[Vector]) = {
-    graft.functions.DotProduct.register(spark)
+    graft.GraftExtensions.register(spark)
     // cheap parquet count-star (footer row counts), not a data scan
     val total = graft.Tables.embeddings(spark, sfDir).count()
     // quantize in L2-NORMALIZED space: search ranks by cosine, and on the

@@ -165,7 +165,7 @@ object Pipeline {
     * is the codegen'd native dot product (graft.functions.DotProduct) —
     * bit-identical to the sequential-fold HOF it replaces. */
   private[graft] def embNorm(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
+    graft.GraftExtensions.register(s)
     T.embeddings(s, d).selectExpr(
       "vec_id",
       "cast(embedding AS array<double>) AS v")
@@ -1479,7 +1479,7 @@ object Pipeline {
     // end, fully HASH-verified.
     QDef("ss7_filtered_ann",
       (s, d) => {
-        graft.functions.DotProduct.register(s)
+        graft.GraftExtensions.register(s)
         val e = T.embeddings(s, d)
           .selectExpr("vec_id", "cast(label AS bigint) AS label",
             "cast(embedding AS array<double>) AS v")

@@ -55,7 +55,7 @@ object Pq {
     * (subspace, code, centroid) rows. */
   private def build(spark: SparkSession, sfDir: String)
       : (DataFrame, Seq[(Int, Int, Array[Double])], Long) = {
-    graft.functions.DotProduct.register(spark)
+    graft.GraftExtensions.register(spark)
     val total = graft.Tables.embeddings(spark, sfDir).count()
     // PQ in L2-normalized space for the same reason as IVF: ranking is
     // by cosine, and euclidean codebooks on the unit sphere preserve it

@@ -1437,7 +1437,7 @@ object Relational {
     // prefilter, never a correctness change.
     QDef("j8_bloom_semi",
       (s, d) => {
-        graft.functions.BloomContains.register(s)
+        graft.GraftExtensions.register(s)
         val dim = T.orders(s, d)
           .filter(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"))

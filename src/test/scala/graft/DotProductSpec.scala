@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.DotProduct
 
 /** The native codegen'd dot product must be bit-identical to the
   * sequential-fold HOF it replaces (same association order), in both
@@ -10,7 +9,7 @@ class DotProductSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_dot equals the sequential HOF fold bit-for-bit") {
-    DotProduct.register(spark)
+    GraftExtensions.register(spark)
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
     val diff = e.as("a").join(e.as("b"), col("a.vec_id") % 17 === col("b.vec_id") % 13)
@@ -24,7 +23,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("null and length edge cases") {
-    DotProduct.register(spark)
+    GraftExtensions.register(spark)
     val rows = Seq(
       (Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0))),  // 11.0
       (None, Some(Seq(1.0))),                       // null

@@ -434,6 +434,20 @@ class LakeSpec extends SparkSpec {
         "WHERE id IN (SELECT id FROM v_cheap)")
       .as[(Long, Double)].head()
     assert(out === ((2L, 30.0)))
+    // a view over a view resolves whatever the order of the stored views
+    // (past four entries they are a hash map), in sql() and readView()
+    cat.createView("v1", "SELECT id, price FROM p WHERE price > 10.0")
+    cat.createView("v2", "SELECT count(*) AS n FROM v1")
+    (3 to 5).foreach(i => cat.createView(s"v$i", s"SELECT id FROM p WHERE id < $i"))
+    assert(cat.current.views.size === 6)
+    assert(cat.sql("SELECT count(*) AS n FROM p").as[Long].head() === 3L)
+    assert(cat.sql("SELECT n FROM v2").as[Long].head() === 2L)
+    assert(cat.readView("v2").as[Long].head() === 2L)
+    // a CTE shadows a lake table or view of the same name
+    assert(cat.sql("WITH t AS (SELECT 42 AS id) SELECT id FROM t")
+      .as[Int].head() === 42)
+    assert(cat.sql("WITH p AS (SELECT 42 AS id) SELECT id FROM p")
+      .as[Int].collect().toSeq === Seq(42))
   }
 
   test("AT (VERSION/TIMESTAMP/tag) SQL syntax resolves time travel") {
@@ -2002,7 +2016,14 @@ class LakeSpec extends SparkSpec {
     val r1 = cat.read("inv").filter(col("product_id") === 1)
       .select("quantity", "price").as[(Int, Double)].head()
     assert(r1 === ((8, 19.98)))
-    cat.execute("DELETE FROM inv WHERE product_id = 2")
+    // string literals are single lexer tokens: an escaped quote, a
+    // `where` or a comma inside one is data, not syntax
+    cat.execute("UPDATE inv SET product_name = 'it\\'s where x' WHERE product_id = 1")
+    cat.execute("UPDATE inv SET product_name = 'x\\', y' WHERE product_id = 2")
+    assert(cat.read("inv").orderBy("product_id").select("product_name")
+      .as[String].collect().toSeq === Seq("it's where x", "x', y"))
+    // a leading comment is not part of the statement head
+    cat.execute("-- fix\nDELETE FROM inv WHERE product_id = 2")
     assert(cat.read("inv").count() === 1)
     cat.execute("CREATE TABLE kept AS SELECT * FROM inv WHERE quantity > 0")
     cat.execute("CREATE VIEW v_ids AS SELECT product_id FROM inv")
@@ -2023,6 +2044,28 @@ class LakeSpec extends SparkSpec {
     cat.execute("INSERT INTO inv SELECT product_id + 100, product_name, " +
       "quantity, price FROM inv")
     assert(cat.read("inv").count() === 2)
+    cat.execute("DELETE FROM `inv` WHERE product_id = 1")
+    assert(cat.read("inv").count() === 1)
+    // DuckDB type names are rewritten in type position only: a column
+    // named `text`, and a DEFAULT literal holding a paren, stay as written
+    cat.execute("CREATE TABLE d (id INTEGER, text TEXT)")
+    cat.execute("INSERT INTO d VALUES (1, 'a')")
+    cat.execute("ALTER TABLE d ADD COLUMN note VARCHAR DEFAULT 'a (b'")
+    assert(cat.read("d").as[(Int, String, String)].collect().toSeq ===
+      Seq((1, "a", "a (b")))
+    // a parsed write or DDL node the router does not handle is refused
+    // by name, never run as a query
+    val v = cat.currentVersion
+    Seq("INSERT OVERWRITE inv SELECT * FROM inv" -> "InsertIntoStatement",
+      "MERGE INTO inv USING (SELECT 101 AS product_id) s " +
+        "ON inv.product_id = s.product_id " +
+        "WHEN MATCHED THEN UPDATE SET quantity = 0" -> "UpdateAction",
+      "ALTER TABLE inv SET TBLPROPERTIES ('a' = 'b')" -> "SetTableProperties")
+      .foreach { case (q, node) =>
+        assert(intercept[IllegalArgumentException](cat.execute(q))
+          .getMessage.contains(node), q)
+      }
+    assert(cat.currentVersion === v)
   }
 
   test("deletePartitions: pure files drop metadata-only, mixed files rewrite CoW, time travel intact") {
