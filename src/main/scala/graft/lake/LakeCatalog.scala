@@ -19,6 +19,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Aggregate,
   UnresolvedWith, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils.{replaceCharVarcharWithString => typeOf}
 import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.SqlFront
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -197,6 +198,12 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         colStats = colStats)))
   }
 
+  /** The (file name, row position) tombstones of deletion-vector
+    * sidecar directories (manifest-relative). */
+  private[lake] def readTombstones(dirs: Seq[String]): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("file", StringType),
+      StructField("pos", LongType)))).parquet(dirs.map(d => absPath(d).toString): _*)
+
   /** Read a table state: per-schema-version file groups are each scanned
     * with their OWN written schema, then aligned to the current schema by
     * stable column id — add-with-default / drop / rename are pure metadata
@@ -205,17 +212,19 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * string column of that name carries each row's source file path —
     * sourced from `_metadata.file_path` at SCAN level, so it stays
     * resolvable even when the plan gains joins (deletion-vector anti-joins
-    * make `input_file_name()` illegal); inlined rows tag NULL. */
+    * make `input_file_name()` illegal); inlined rows tag NULL. With
+    * `positions`, `__dv_file`/`__dv_pos` carry each row's file name and
+    * row index, the deletion-vector address (NULL for inlined rows). */
   private[lake] def readState(st: TableState,
-      tagCol: Option[String] = None): DataFrame = {
+      tagCol: Option[String] = None, positions: Boolean = false): DataFrame = {
     val cur = st.columns
-    val curSchema = tagCol match {
-      case Some(t) => structOf(cur).add(StructField(t, StringType))
-      case None => structOf(cur)
-    }
+    val extra = tagCol.map(StructField(_, StringType)).toSeq ++
+      (if (positions) Seq(StructField("__dv_file", StringType),
+        StructField("__dv_pos", LongType)) else Nil)
+    val curSchema = StructType(structOf(cur).fields ++ extra)
     /** Align a frame written under schema version v to the current schema
       * by stable column id (renames follow, drops vanish, adds read their
-      * DEFAULT). The tag column, when present, rides along. */
+      * DEFAULT). The `extra` columns, when present, ride along. */
     def align(df: DataFrame, v: Int): DataFrame = {
       val byId = st.columnsAt(v).map(c => c.id -> c).toMap
       df.select(cur.map { c =>
@@ -226,7 +235,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
             expr(c.default.getOrElse("NULL"))
               .cast(DataType.fromJson(c.typeJson)).as(c.name)
         }
-      } ++ tagCol.map(col): _*)
+      } ++ extra.map(f => col(f.name)): _*)
     }
     val fileParts = st.files.groupBy(e => (e.schemaVersion, e.dv.isDefined))
       .toSeq.map { case ((v, hasDv), entries) =>
@@ -246,34 +255,27 @@ class LakeCatalog(val spark: SparkSession, val root: String,
           case Some(t) => raw0.withColumn(t, col("_metadata.file_path"))
           case None => raw0
         }
-        if (!hasDv) align(raw, v)
+        val tagged = if (!hasDv && !positions) raw else raw
+          .withColumn("__dv_file", col("_metadata.file_name"))
+          .withColumn("__dv_pos", col("_metadata.row_index"))
+        if (!hasDv) align(tagged, v)
         else {
           // merge-on-read: anti-join the (broadcast, tiny) tombstone
           // sidecars on (file name, row position) BELOW the align
           // projection — the scan itself never widens, and files whose
           // positions aren't tombstoned stream through untouched
-          val dvDirs = entries.flatMap(_.dv).distinct
-          val dv = spark.read
-            .schema(StructType(Seq(StructField("file", StringType),
-              StructField("pos", LongType))))
-            .parquet(dvDirs.map(d => absPath(d).toString): _*)
-          val tagged = raw
-            .withColumn("__dv_file", col("_metadata.file_name"))
-            .withColumn("__dv_pos", col("_metadata.row_index"))
+          val dv = readTombstones(entries.flatMap(_.dv).distinct)
           align(tagged.join(broadcast(dv),
             tagged("__dv_file") === dv("file") && tagged("__dv_pos") === dv("pos"),
-            "left_anti").drop("__dv_file", "__dv_pos"), v)
+            "left_anti"), v)
         }
       }
     val inlineParts = st.inlined.groupBy(_.schemaVersion).toSeq.map { case (v, batches) =>
       import spark.implicits._
-      val raw0 = spark.read.schema(structOf(st.columnsAt(v)))
+      val raw = spark.read.schema(structOf(st.columnsAt(v)))
         .json(spark.createDataset(batches.flatMap(_.rows)))
-      val raw = tagCol match {
-        case Some(t) => raw0.withColumn(t, lit(null).cast(StringType))
-        case None => raw0
-      }
-      align(raw, v)
+      align(extra.foldLeft(raw)((d, f) =>
+        d.withColumn(f.name, lit(null).cast(f.dataType))), v)
     }
     val parts = fileParts ++ inlineParts
     if (parts.isEmpty)
@@ -1101,12 +1103,14 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * (or the caller passes `keyCols`), a vanished row and an appeared row
     * with the SAME key are paired as one UPDATE and tagged
     * `update_preimage`/`update_postimage` — the change-type fidelity a CDC
-    * consumer needs; keyless tables fall back to insert/delete. Multiset
-    * semantics via exceptAll so duplicate rows diff correctly.
+    * consumer needs; keyless tables fall back to insert/delete. The diff
+    * is one signed aggregation (before-rows -1, after-rows +1, summed per
+    * distinct row) with exceptAll's multiset semantics, so duplicate rows
+    * diff correctly.
     *
-    * Scale shape: the pairing joins operate on the DIFF (changed rows
-    * only), not the table, and the key set of a typical commit is small —
-    * broadcast-sized — so this adds no full-table shuffle.
+    * Scale shape: the diff reads only the churned file entries, not the
+    * table, and update pairing is a window over the aggregate's output
+    * that reuses its shuffle on the keys: one exchange per window.
     *
     * `schemaAtV` pins the OUTPUT schema: both window ends are read
     * through that version's schema — aligned by stable column id exactly
@@ -1126,7 +1130,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     // verbatim (same deletion vector, so no MoR tombstones landed), old
     // inlined batches an untouched prefix — the change feed is exactly
     // the new files + new inlined rows, all 'insert'. That's one scan
-    // of O(delta) instead of two O(table) reads + exceptAll shuffles:
+    // of O(delta) instead of two O(table) reads + a diff aggregate:
     // at 100 TB the difference between reading the day's appends and
     // diffing two full snapshots (the Delta CDF / Iceberg incremental
     // -scan model). Any other shape falls back to the exact
@@ -1223,26 +1227,35 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         val cs = before.columns.intersect(after.columns).toSeq
         (before.select(cs.map(col): _*), after.select(cs.map(col): _*), cs)
       }
-    val appeared = a.exceptAll(b)
-    val vanished = b.exceptAll(a)
+    // SIGNED multiset diff, both directions in one aggregate: before-rows
+    // weigh -1, after-rows +1, and each distinct row's net weight `__n`
+    // says how many copies appeared (> 0) or vanished (< 0). This is
+    // Spark's own RewriteExceptAll done once for a\b and b\a together,
+    // so NULL-safe grouping, NaN/-0.0 normalization and duplicate-row
+    // multiplicity mean exactly what exceptAll means. With keys, the
+    // input is clustered on them first: the aggregate (grouping on a
+    // superset of the keys) and the update-pairing window then share
+    // that one shuffle. A key holding both appeared and vanished rows
+    // is an update; the window groups NULL keys together, as the
+    // diff's own grouping does.
     val keys = if (keyCols.nonEmpty) keyCols
-      else stateOf(snapshot(toV), table).primaryKey.filter(common.contains)
-    if (keys.isEmpty)
-      appeared.withColumn("change_type", lit("insert"))
-        .unionByName(vanished.withColumn("change_type", lit("delete")))
+      else sTo.primaryKey.filter(common.contains)
+    val signed = b.withColumn("__n", lit(-1L))
+      .union(a.withColumn("__n", lit(1L)))
+    val net = (if (keys.isEmpty) signed else signed.repartition(keys.map(col): _*))
+      .groupBy(common.map(col): _*).agg(sum("__n").as("__n"))
+      .filter(col("__n") =!= 0L)
+    val typed = if (keys.isEmpty)
+      when(col("__n") > 0L, "insert").otherwise("delete")
     else {
-      // keys present on BOTH sides of the diff are updates
-      val updKeys = vanished.select(keys.map(col): _*)
-        .intersect(appeared.select(keys.map(col): _*))
-      def split(df: DataFrame, hit: String, miss: String): DataFrame =
-        df.join(broadcast(updKeys), keys, "left_semi")
-          .withColumn("change_type", lit(hit))
-          .unionByName(
-            df.join(broadcast(updKeys), keys, "left_anti")
-              .withColumn("change_type", lit(miss)))
-      split(appeared, "update_postimage", "insert")
-        .unionByName(split(vanished, "update_preimage", "delete"))
+      val byKey = Window.partitionBy(keys.map(col): _*)
+      val upd = max("__n").over(byKey) > 0L && min("__n").over(byKey) < 0L
+      when(col("__n") > 0L, when(upd, "update_postimage").otherwise("insert"))
+        .otherwise(when(upd, "update_preimage").otherwise("delete"))
     }
+    net.withColumn("change_type", typed)
+      .withColumn("__n", explode(array_repeat(lit(1), abs(col("__n")).cast("int"))))
+      .select(common.map(col) :+ col("change_type"): _*)
   }
 
   /** Tag ledger: (ref_name, snapshot_id), the `refs` metadata table. */
@@ -1544,8 +1557,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         "silently skipped as replays of the first's")
     val tag = s"$table:cdc:$streamId:$batchId"
     object AlreadyApplied extends Exception
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col(VersionCol).desc)
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(VersionCol).desc)
     // one (version, key) row survives the preimage filter per commit, so
     // version order alone picks the net state
     val survivors = changes.filter(col(TypeCol) =!= "update_preimage")

@@ -284,7 +284,7 @@ object Mv {
             // manifest check above already said which sides moved, so
             // only the legs with a changed input are BUILT — a dim-only
             // churn never scans the fact change feed and vice versa
-            // (each tableChanges leg is a two-version exceptAll plan —
+            // (each tableChanges leg is a two-version diff aggregate —
             // real jobs, not free)
             val sel = (keys ++ sums ++ mins ++ maxs).distinct.map(col) :+
               col("__sgn")

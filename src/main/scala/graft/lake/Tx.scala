@@ -641,10 +641,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val st = state(table)
     sets.keys.foreach(k =>
       require(st.columns.exists(_.name == k), s"no such column: $k"))
-    // An update touching a PK column can collide with rows in files that
-    // are NOT rewritten — check the rewritten subset against kept files.
-    val touchesPk = sets.keys.exists(st.primaryKey.contains)
-    rewriteAffected(table, where, checkPkAgainstKept = touchesPk) { df =>
+    rewriteAffected(table, where, assigned = Some(sets.keySet)) { df =>
       df.select(st.columns.map { c =>
         sets.get(c.name) match {
           case Some(newVal) =>
@@ -775,58 +772,36 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     flushInlined(table)
     val st = state(table)
     if (st.files.nonEmpty) {
-      // per schema-version scan with the file/position metadata columns
-      // kept alongside the aligned user columns, so `where` (written
-      // against the CURRENT schema) evaluates uniformly
-      val cur = st.columns
-      val matched = st.files.groupBy(_.schemaVersion).toSeq.map {
-        case (v, entries) =>
-          val byId = st.columnsAt(v).map(c => c.id -> c).toMap
-          spark.read.schema(cat.structOf(st.columnsAt(v)))
-            .parquet(entries.map(e => cat.absPath(e.path).toString): _*)
-            .select(cur.map { c =>
-              byId.get(c.id) match {
-                case Some(old) =>
-                  col(old.name).cast(DataType.fromJson(c.typeJson)).as(c.name)
-                case None => expr(c.default.getOrElse("NULL"))
-                  .cast(DataType.fromJson(c.typeJson)).as(c.name)
-              }
-            } :+ col("_metadata.file_name").as("__dv_file")
-              :+ col("_metadata.row_index").as("__dv_pos"): _*)
-      }.reduce(_ unionByName _)
-        .filter(where)
+      // only LIVE rows match: the read anti-joins the existing sidecars,
+      // so new tombstones are disjoint from every old one
+      val matched = cat.readState(st, positions = true).filter(where)
         .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
       // bounded driver set: one (name, tombstones) pair per AFFECTED file
       val newCounts = matched.groupBy("file").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       if (newCounts.nonEmpty) {
         val byName = st.files.map(e => new Path(e.path).getName -> e).toMap
-        // fold prior tombstones of re-touched files into the new sidecar
-        // (deduped: an already-tombstoned row matches the predicate again)
-        val oldDirs = newCounts.keySet.flatMap(byName.get).flatMap(_.dv).toSeq
-        val dvSchema = StructType(Seq(StructField("file", StringType),
-          StructField("pos", LongType)))
-        val prior =
-          if (oldDirs.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
-          else spark.read.schema(dvSchema)
-            .parquet(oldDirs.distinct.map(d => cat.absPath(d).toString): _*)
-            .filter(col("file").isin(newCounts.keys.toSeq: _*))
+        // fold prior tombstones of re-touched files into the new sidecar,
+        // each file's read from its OWN sidecar (a sidecar may also hold
+        // older tombstones of files that have since moved on), so the
+        // union holds every (file, pos) once
+        val prior = newCounts.keys.flatMap(byName.get).filter(_.dv.isDefined)
+          .groupBy(_.dv.get).toSeq.map { case (d, es) =>
+            cat.readTombstones(Seq(d)).filter(col("file").isin(
+              es.map(e => new Path(e.path).getName).toSeq: _*))
+          }
         val dvRel = s"$table/dv/${java.util.UUID.randomUUID().toString.take(12)}"
         val dvAbs = cat.absPath(dvRel)
         stagedDirs += dvAbs
         // repartition (not coalesce) keeps the scan+filter parallel while
         // bounding sidecar fan-out; tombstones are tiny, the shuffle is free
-        matched.unionByName(prior).distinct()
+        prior.foldLeft(matched)(_ unionByName _)
           .repartition(4).write.mode("errorifexists").parquet(dvAbs.toString)
-        val written = spark.read.schema(dvSchema).parquet(dvAbs.toString)
-          .groupBy("file").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
         tables(table) = st.copy(files = st.files.map { e =>
-          val name = new Path(e.path).getName
-          if (newCounts.contains(name))
-            e.copy(dv = Some(dvRel), dvRows = written(name))
-          else e
+          newCounts.get(new Path(e.path).getName) match {
+            case Some(n) => e.copy(dv = Some(dvRel), dvRows = e.dvRows + n)
+            case None => e
+          }
         })
       }
     }
@@ -1170,17 +1145,27 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * this: ~250 jobs per scenario, mostly per-constraint actions). The
     * PK-vs-existing check stays a distributed agg + left-semi join over
     * stats-pruned files — no driver collect. Its violation is demo 1's
-    * rollback trigger (ref demos/01_transaction_rollback/demo.py:137-151). */
+    * rollback trigger (ref demos/01_transaction_rollback/demo.py:137-151).
+    *
+    * `assigned` names the columns an UPDATE set on already-committed
+    * rows: every NOT NULL was checked on all rows when it was added, so
+    * only assigned NOT NULL columns are re-checked, and key uniqueness
+    * only when a PK column is assigned. CHECK predicates always run. */
   private def validate(table: String, st: TableState, df: DataFrame,
       checkPkAgainstExisting: Boolean,
-      uniqueOn: Seq[String] = Nil): Unit = {
-    val nnCols = st.notNull.filter(df.columns.contains)
+      uniqueOn: Seq[String] = Nil,
+      assigned: Option[Set[String]] = None): Unit = {
+    val nnCols = st.notNull.filter(c =>
+      df.columns.contains(c) && assigned.forall(_.contains(c)))
     val checks = st.props.toSeq.collect {
       case (k, pred) if k.startsWith("check.") => (k.stripPrefix("check."), pred)
     }
-    val pkCols = st.primaryKey
+    val pkCols =
+      if (assigned.forall(_.exists(st.primaryKey.contains))) st.primaryKey
+      else Nil
+    // the lead-PK range only prunes the check against existing rows
     val leadPk = st.columns.find(c => pkCols.headOption.contains(c.name))
-      .filter(Stats.comparable)
+      .filter(c => checkPkAgainstExisting && Stats.comparable(c))
     val aggs =
       nnCols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nn_$c")) ++
       checks.map { case (k, pred) =>
@@ -1243,16 +1228,15 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
 
   /** Copy-on-write core: find files with rows matching `where` via ONE
     * file-tagged scan, rewrite only those through `transform`, keep the
-    * rest. Old files stay on disk for time travel. With
-    * `checkPkAgainstKept` the rewritten rows' keys are also checked
-    * against the kept (unrewritten) files via a distributed left-semi
-    * join — needed when an UPDATE changes a PK column. */
+    * rest. Old files stay on disk for time travel. `assigned` is an
+    * UPDATE's set columns (see [[validate]]); when it holds a PK column
+    * the rewritten rows' keys are also checked against the kept
+    * (unrewritten) files via a distributed left-semi join. */
   private def rewriteAffected(table: String, where: Column,
-      checkPkAgainstKept: Boolean = false,
+      assigned: Option[Set[String]] = None,
       pureDelete: Boolean = false)
       (transform: DataFrame => DataFrame): Unit =
-    rewriteAffectedBy(table, _.filter(where), checkPkAgainstKept,
-      pureDelete)(transform)
+    rewriteAffectedBy(table, _.filter(where), assigned, pureDelete)(transform)
 
   /** Generalized CoW core: `matcher` maps the file-tagged scan to the
     * subset of rows whose files must rewrite — a predicate filter for
@@ -1260,7 +1244,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * DataFrame-of-keys delete. */
   private def rewriteAffectedBy(table: String,
       matcher: DataFrame => DataFrame,
-      checkPkAgainstKept: Boolean = false,
+      assigned: Option[Set[String]] = None,
       pureDelete: Boolean = false)
       (transform: DataFrame => DataFrame): Unit = {
     flushInlined(table)
@@ -1290,8 +1274,9 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     // introduce a NOT NULL / CHECK / duplicate-key violation, so the
     // validation scan is skipped (one fewer full pass over the rewrite)
     if (!pureDelete)
-      validate(table, st, rewritten, checkPkAgainstExisting = false)
-    if (checkPkAgainstKept && st.primaryKey.nonEmpty && kept.nonEmpty) {
+      validate(table, st, rewritten, checkPkAgainstExisting = false,
+        assigned = assigned)
+    if (assigned.exists(_.exists(st.primaryKey.contains)) && kept.nonEmpty) {
       val pk = st.primaryKey.map(col)
       val keptKeys = cat.readState(st.copy(files = kept)).select(pk: _*)
       if (!keptKeys.join(rewritten.select(pk: _*), st.primaryKey, "left_semi")

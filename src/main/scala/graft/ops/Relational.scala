@@ -2383,8 +2383,8 @@ object Relational {
           expr("right(p_name, 4)").as("r4"),
           instr(col("p_name"), "o").cast(LongType).as("pos_o"),
           expr("split_part(p_name, ' ', 2)").as("word2"),
-          ltrim(col("p_name"), "bs").as("ltr"),
-          rtrim(col("p_name"), "gt").as("rtr"))
+          expr("TRIM(LEADING 'bs' FROM p_name)").as("ltr"),
+          expr("TRIM(TRAILING 'gt' FROM p_name)").as("rtr"))
         .orderBy("p_partkey"),
       Some("SELECT p_partkey, " +
         "translate(p_name, 'aeiou', '12345') AS xlate, " +

@@ -1,7 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2,
+  ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.StreamFrame
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
@@ -200,7 +203,7 @@ class ChangeFeedProvider extends StreamSourceProvider with DataSourceRegister {
 }
 
 class ChangeFeedSource(spark: SparkSession, parameters: Map[String, String])
-    extends Source {
+    extends Source with SupportsTriggerAvailableNow {
   import ChangeFeed._
 
   private val root = parameters("root")
@@ -265,8 +268,22 @@ class ChangeFeedSource(spark: SparkSession, parameters: Map[String, String])
         .find(s => s >= last && !head.versionExpired(s))
         .getOrElse(head.snapshotId)
     if (v <= startV) None
-    else Some(org.apache.spark.sql.execution.streaming.runtime.LongOffset(v))
+    else Some(LongOffset(v))
   }
+
+  /** `Trigger.AvailableNow` end point: the table's offset when the query
+    * starts. Every batch of the run stops there, so a restart first
+    * replays an uncommitted batch and then drains to this head in further
+    * batches; commits that land during the run wait for the next one. */
+  @volatile private var availableNowEnd = Long.MaxValue
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = getOffset.map(versionOf).getOrElse(startV)
+
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    getOffset.map(o => if (versionOf(o) <= availableNowEnd) o
+        else LongOffset(availableNowEnd))
+      .filter(versionOf(_) > startV).orNull
 
   // LongOffset live, SerializedOffset after checkpoint recovery — both
   // render the version as their json

@@ -52,6 +52,26 @@ class PlanSpec extends SparkSpec {
     assert(!mor.contains("SortMergeJoin"), mor)
   }
 
+  test("a keyed churned change-feed window plans exactly one shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val cat = new graft.lake.LakeCatalog(spark, tmpDir("plancdc"))
+    cat.createTable("t", StructType(Seq(StructField("id", LongType),
+      StructField("v", LongType))), primaryKey = Seq("id"))
+    cat.insert("t", spark.range(0, 1000).selectExpr("id", "id % 7 AS v"))
+    val v1 = cat.currentVersion
+    cat.update("t", col("id") < 10, Map("v" -> (col("v") + 100L)))
+    cat.deleteMor("t", col("id") >= 990)
+    // the signed diff aggregate and the update-pairing window both run
+    // on the one exchange that clusters the churned rows by key
+    val ch = cat.tableChanges("t", v1, cat.currentVersion)
+    val plan = ch.queryExecution.executedPlan
+    assert(walk(plan).count(_.isInstanceOf[ShuffleExchangeExec]) === 1, plan)
+    assert(ch.groupBy("change_type").count().as[(String, Long)].collect().toMap ===
+      Map("update_preimage" -> 10L, "update_postimage" -> 10L, "delete" -> 10L))
+  }
+
   test("hive-partitioned source prunes partitions in the scan") {
     val s = planString("s11_hive_partitions")
     assert(s.contains("PartitionFilters"), s)

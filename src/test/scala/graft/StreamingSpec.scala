@@ -516,6 +516,44 @@ class StreamingSpec extends SparkSpec {
       "folded windows must apply the identical net state")
   }
 
+  test("change-feed under AvailableNow: a restart replays the uncommitted batch, then drains to head") {
+    import graft.streaming.ChangeFeed
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    import org.apache.spark.sql.types._
+    val cat = new graft.lake.LakeCatalog(spark, tmpDir("cdcavail"))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", LongType)))
+    cat.createTable("t", schema, primaryKey = Seq("id"))
+    cat.createTable("r", schema)
+    cat.insert("t", spark.range(0, 10).selectExpr("id", "id AS v"))
+    val ckpt = tmpDir("cdcavail_ck")
+    def run(sinkUp: Boolean): Seq[Long] = {
+      val applied = scala.collection.mutable.ArrayBuffer[Long]()
+      val q = ChangeFeed.readChanges(spark, cat.root, "t", Seq("id"))
+        .writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], id: Long) =>
+          if (!sinkUp) throw new RuntimeException("sink down")
+          cat.applyChangesStreamBatch("r", b.toDF(), Seq("id"), id, "avail")
+          applied += id
+          ()
+        }.start()
+      if (sinkUp) q.awaitTermination()
+      else intercept[StreamingQueryException](q.awaitTermination())
+      applied.toSeq
+    }
+    // batch 0 is planned and its offset logged, but it never commits
+    assert(run(sinkUp = false).isEmpty)
+    // newer commits land while the query is down
+    cat.update("t", col("id") < 3, Map("v" -> lit(-1L)))
+    cat.insert("t", spark.range(10, 15).selectExpr("id", "id AS v"))
+    // one run replays batch 0 at its logged end, then drains to head
+    assert(run(sinkUp = true) === Seq(0L, 1L))
+    assert(cat.read("r").exceptAll(cat.read("t"))
+      .union(cat.read("t").exceptAll(cat.read("r"))).isEmpty)
+  }
+
   test("CDC apply refuses non-row-identifying keys instead of collapsing multiset data") {
     import spark.implicits._
     val cat = new graft.lake.LakeCatalog(spark, tmpDir("cdcdup"))

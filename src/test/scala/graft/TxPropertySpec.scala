@@ -72,71 +72,106 @@ class TxPropertySpec extends SparkSpec {
     // diff the two snapshots' rows on their common columns, classify by
     // key. The reference here is re-derived in plain Scala on collected
     // rows — independent of the production plan entirely.
+    // Each op runs on two tables in one commit: keyed `ord`, and keyless
+    // `dup`, whose rows come in identical pairs (multiplicity 2 on both
+    // sides of a diff) and half of whose oids are NULL; `dup` is diffed
+    // keyless and with keyCols = oid (a key that holds NULLs).
     // ops: 0=insert 1=update 2=CoW delete 3=compact 4=MoR delete
     //      5=ADD COLUMN 6=DROP latest added column
     val dmlGen: Gen[Int] = Gen.choose(0, 6)
+    val tables = Seq("ord", "dup")
     val prop = Prop.forAllNoShrink(Gen.listOfN(6, dmlGen)) { ops =>
       val cat = freshCat()
+      cat.createTable("dup", StructType(Seq(StructField("oid", IntegerType),
+        StructField("pid", IntegerType), StructField("n", IntegerType))))
       var nextOid = 1000
       var added = List.empty[String]
       var colN = 0
-      cat.insert("ord", Seq((1, 1, 1), (2, 2, 2), (3, 3, 3))
-        .toDF("oid", "pid", "n"))
+      def dupRows(oid: Int, pid: Int, n: Int) = {
+        val r = Seq((Option(oid), pid, n), (Option.empty[Int], pid, n))
+        (r ++ r).toDF("oid", "pid", "n")
+      }
+      cat.transaction { tx =>
+        tx.insert("ord", Seq((1, 1, 1), (2, 2, 2), (3, 3, 3))
+          .toDF("oid", "pid", "n"))
+        tx.insert("dup", dupRows(1, 1, 1).union(dupRows(2, 2, 2)))
+      }
       val vStart = cat.currentVersion
-      ops.foreach {
-        case 0 =>
-          cat.insert("ord", Seq((nextOid, 1, 1), (nextOid + 1, 2, 2))
-            .toDF("oid", "pid", "n"))
-          nextOid += 2
-        case 1 => cat.update("ord", col("pid") === 1, Map("n" -> lit(9)))
-        case 2 => cat.delete("ord", col("oid") % 3 === 0)
-        case 3 => cat.compact("ord", 1L << 20)
-        case 4 => cat.deleteMor("ord", col("oid") % 3 === 1)
-        case 5 =>
-          cat.transaction(_.addColumn("ord", s"x$colN", LongType, Some("0")))
-          added ::= s"x$colN"; colN += 1
-        case 6 => added match {
-          case c :: rest =>
-            cat.transaction(_.dropColumn("ord", c)); added = rest
-          case Nil =>
-            cat.insert("ord", Seq((nextOid, 3, 3)).toDF("oid", "pid", "n"))
-            nextOid += 1
+      // the metadata row count must track the rows a read returns (MoR
+      // deletes keep it as rowCount - dvRows) after every op
+      val countsOk = ops.map { op =>
+        cat.transaction { tx =>
+          op match {
+            case 0 =>
+              tx.insert("ord", Seq((nextOid, 1, 1), (nextOid + 1, 2, 2))
+                .toDF("oid", "pid", "n"))
+              tx.insert("dup", dupRows(nextOid, 1, 1))
+              nextOid += 2
+            case 1 => tables.foreach(tx.update(_, col("pid") === 1, Map("n" -> lit(9))))
+            case 2 => tables.foreach(tx.delete(_, col("oid") % 3 === 0))
+            case 3 => tables.foreach(tx.compact(_, 1L << 20))
+            case 4 => tables.foreach(tx.deleteMor(_, col("oid") % 3 === 1))
+            case 5 =>
+              tables.foreach(tx.addColumn(_, s"x$colN", LongType, Some("0")))
+              added ::= s"x$colN"; colN += 1
+            case 6 => added match {
+              case c :: rest =>
+                tables.foreach(tx.dropColumn(_, c)); added = rest
+              case Nil =>
+                tx.insert("ord", Seq((nextOid, 3, 3)).toDF("oid", "pid", "n"))
+                tx.insert("dup", dupRows(nextOid, 3, 3))
+                nextOid += 1
+            }
+          }
+        }
+        tables.forall { t =>
+          val meta = cat.statsAgg(t).head().getLong(0)
+          val live = cat.read(t).count()
+          if (meta != live) System.err.println(
+            s"$t after op $op (ops=$ops): statsAgg n=$meta, read count=$live")
+          meta == live
         }
       }
       val vEnd = cat.currentVersion
-      def rows(v: Long, cols: Seq[String]): Map[Seq[String], Int] =
-        cat.readAt("ord", v).select(cols.map(col): _*).collect()
+      def rows(t: String, v: Long, cols: Seq[String]): Map[Seq[String], Int] =
+        cat.readAt(t, v).select(cols.map(col): _*).collect()
           .map(_.toSeq.map(String.valueOf)).toSeq
           .groupBy(identity).view.mapValues(_.size).toMap
       val windows = (vStart until vEnd).map(v => (v, v + 1)) :+
         ((vStart, vEnd))
-      windows.forall { case (f, t) =>
-        val common = cat.readAt("ord", f).columns
-          .intersect(cat.readAt("ord", t).columns).toSeq
-        val b = rows(f, common); val a = rows(t, common)
-        def minus(x: Map[Seq[String], Int], y: Map[Seq[String], Int]) =
-          x.flatMap { case (r, nx) =>
-            val d = nx - y.getOrElse(r, 0)
-            if (d > 0) Some(r -> d) else None
-          }
-        val appeared = minus(a, b); val vanished = minus(b, a)
-        val ki = common.indexOf("oid")
-        val updKeys = appeared.keySet.map(_(ki))
-          .intersect(vanished.keySet.map(_(ki)))
-        def classify(m: Map[Seq[String], Int], hit: String, miss: String) =
-          m.map { case (r, c) =>
-            ((if (updKeys.contains(r(ki))) hit else miss) +: r) -> c }
-        val expected = classify(appeared, "update_postimage", "insert") ++
-          classify(vanished, "update_preimage", "delete")
-        val got = cat.tableChanges("ord", f, t)
-          .select(("change_type" +: common).map(col): _*).collect()
-          .map(_.toSeq.map(String.valueOf)).toSeq
-          .groupBy(identity).view.mapValues(_.size).toMap
-        val ok = got == expected
-        if (!ok) System.err.println(
-          s"window ($f,$t) ops=$ops\n got=$got\n exp=$expected")
-        ok
-      }
+      // (table, keyCols passed, the key the reference pairs updates on)
+      val feeds = Seq(("ord", Nil, Some("oid")), ("dup", Nil, None),
+        ("dup", Seq("oid"), Some("oid")))
+      val diffsOk = windows.forall { case (f, to) => feeds.forall {
+        case (t, keyCols, key) =>
+          val common = cat.readAt(t, f).columns
+            .intersect(cat.readAt(t, to).columns).toSeq
+          val b = rows(t, f, common); val a = rows(t, to, common)
+          def minus(x: Map[Seq[String], Int], y: Map[Seq[String], Int]) =
+            x.flatMap { case (r, nx) =>
+              val d = nx - y.getOrElse(r, 0)
+              if (d > 0) Some(r -> d) else None
+            }
+          val appeared = minus(a, b); val vanished = minus(b, a)
+          // a key (NULL included) with rows on both sides is an update
+          val ki = key.map(common.indexOf)
+          val updKeys = ki.toSet.flatMap((i: Int) =>
+            appeared.keySet.map(_(i)).intersect(vanished.keySet.map(_(i))))
+          def classify(m: Map[Seq[String], Int], hit: String, miss: String) =
+            m.map { case (r, c) =>
+              ((if (ki.exists(i => updKeys.contains(r(i)))) hit else miss) +: r) -> c }
+          val expected = classify(appeared, "update_postimage", "insert") ++
+            classify(vanished, "update_preimage", "delete")
+          val got = cat.tableChanges(t, f, to, keyCols)
+            .select(("change_type" +: common).map(col): _*).collect()
+            .map(_.toSeq.map(String.valueOf)).toSeq
+            .groupBy(identity).view.mapValues(_.size).toMap
+          val ok = got == expected
+          if (!ok) System.err.println(
+            s"$t keys=$keyCols window ($f,$to) ops=$ops\n got=$got\n exp=$expected")
+          ok
+      }}
+      countsOk.forall(identity) && diffsOk
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
