@@ -1509,10 +1509,20 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       streamId: String = ""): Boolean = {
     val tag = if (streamId.isEmpty) s"$table:$batchId"
       else s"$table:$streamId:$batchId"
+    commitStreamBatch(tag)(_.insert(table, df))
+  }
+
+  /** The one exactly-once commit of the streaming paths: run `body` and
+    * record the monotone `tag` (see [[Tx.markStreamBatchMonotone]]) in ONE
+    * transaction, unless the tag already landed — a replay, or a racing
+    * duplicate that lost the publish race, re-ran and then saw the tag.
+    * Returns whether this call committed; a skipped batch publishes no
+    * empty snapshot. */
+  private[graft] def commitStreamBatch(tag: String)(body: Tx => Unit): Boolean = {
     object AlreadyApplied extends Exception
     try transaction { tx =>
-      if (tx.streamBatchApplied(tag)) throw AlreadyApplied // no empty snapshot
-      tx.insert(table, df)
+      if (tx.streamBatchApplied(tag)) throw AlreadyApplied
+      body(tx)
       tx.markStreamBatchMonotone(tag)
       true
     } catch { case AlreadyApplied => false }
@@ -1521,26 +1531,21 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   /** Exactly-once CDC apply: land one micro-batch of CHANGE-FEED rows
     * (`change_type` + `_commit_version` columns, the
     * [[graft.streaming.ChangeFeed]] shape) into `table`, idempotent on
-    * (table, batchId) exactly like [[insertStreamBatch]]. A batch may
-    * span several upstream commits, so the NET effect per key is applied:
-    * the latest change by commit version wins (preimages are subsumed by
-    * their postimages), every touched key's stale row is deleted, and the
-    * keys whose final state is a live row are re-inserted — one atomic
-    * two-op transaction. At scale both ops are key-joins against the
-    * batch's (small) key set, never table rewrites beyond the touched
-    * files. Returns false when the batch had already landed.
+    * (table, streamId, batchId) like [[insertStreamBatch]]. A batch may
+    * span several upstream commits, so its NET effect per key is applied
+    * ([[applyNetChanges]]). Returns false when the batch had already
+    * landed or nets to nothing.
     *
     * PRECONDITION: `keyCols` must uniquely identify rows in the source
     * table. The change FEED itself supports keyless/multiset data (the
     * diff is an exact multiset diff), but this net-effect APPLY keeps one
     * surviving row per key — duplicate rows sharing a key within one
     * commit would be nondeterministically collapsed, silently diverging
-    * the replica. The guard below fails loudly instead; multiset data
-    * belongs on [[graft.streaming.LakeStream.replicate]] (append-only)
-    * or a bespoke multiset apply.
+    * the replica. The apply fails loudly instead; multiset data belongs
+    * on [[graft.streaming.LakeStream.replicate]] (append-only) or a
+    * bespoke multiset apply.
     *
-    * `streamId` extends the idempotence key to (table, streamId,
-    * batchId) and is REQUIRED: batch ids come from the CHECKPOINT, so a
+    * `streamId` is REQUIRED: batch ids come from the CHECKPOINT, so a
     * different stream (fresh checkpoint — ids restart at 0) writing the
     * same table would otherwise collide with the first stream's tags
     * and silently skip its early batches as "replays". Distinct logical
@@ -1549,77 +1554,81 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * checkpoint location when the caller doesn't name one. */
   def applyChangesStreamBatch(table: String, changes: DataFrame,
       keyCols: Seq[String], batchId: Long, streamId: String): Boolean = {
-    import graft.streaming.ChangeFeed.{TypeCol, VersionCol}
     require(streamId.nonEmpty,
       "applyChangesStreamBatch requires a streamId — batch ids restart " +
         "at 0 with every fresh checkpoint, so without a per-stream " +
         "namespace a second logical stream's early batches would be " +
         "silently skipped as replays of the first's")
-    val tag = s"$table:cdc:$streamId:$batchId"
-    object AlreadyApplied extends Exception
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(VersionCol).desc)
-    // one (version, key) row survives the preimage filter per commit, so
-    // version order alone picks the net state
-    val survivors = changes.filter(col(TypeCol) =!= "update_preimage")
-      .persist()
-    val latest = survivors
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .persist()
-    try {
-      // key-uniqueness guard: >1 surviving change row in one (key,
-      // commit) group means the key does NOT identify a row upstream and
-      // the collapse below would be nondeterministic. One aggregation
-      // over the (small, persisted) batch.
-      val dup = survivors
-        .groupBy((keyCols :+ VersionCol).map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-        .limit(1).collect()
-      if (dup.nonEmpty)
-        throw new IllegalArgumentException(
-          s"CDC apply to '$table': key (${keyCols.mkString(", ")}) is not " +
-            "unique within one source commit — net-effect apply requires " +
-            "row-identifying keys; multiset data cannot be replicated " +
-            "by key")
-      // an empty net change is a deterministic no-op: skip the commit
-      // entirely (idempotent without a batch tag) — also what keeps a
-      // consumer writing into the SAME catalog from generating commits
-      // for batches its own sink traffic triggered. The count doubles as
-      // the write-width gate below and is one cached-scan job (latest is
-      // persisted), replacing what isEmpty would have cost.
-      val net = latest.count()
-      if (net == 0L) return false
-      // Net changes keep the key window's shuffle partitioning (one
-      // partition per shuffle slot). A typical micro-batch is TINY
-      // relative to the table, and writing it at shuffle width litters
-      // the sink with one near-empty file per slot per batch — scans of
-      // a long-running replica then pay a per-file task constant for
-      // thousands of files that hold a few rows each. Collapse small
-      // batches to one file (and one broadcastable delete-key partition);
-      // large backfill batches keep their full write parallelism.
-      val keyed =
-        if (net <= graft.streaming.ChangeFeed.SmallNetRows) latest.coalesce(1)
-        else latest
-      transaction { tx =>
-        if (tx.streamBatchApplied(tag)) throw AlreadyApplied // no empty snapshot
-        // ONE copy-on-write pass applies the whole net change: the carried
-        // change_type routes each source row (delete rows remove their
-        // target match and insert nothing; a delete for an absent key is a
-        // no-op, as in the delete+insert pair this replaces — which
-        // rewrote the same affected files TWICE)
-        tx.mergeClauses(table, keyed.drop(VersionCol), keyCols, MergeClauses(
-          matchedDelete = Some(s"s.$TypeCol = 'delete'"),
-          matchedUpdate = Some(s"s.$TypeCol <> 'delete'"),
-          notMatchedInsert = Some(s"$TypeCol <> 'delete'")),
-          carry = Seq(TypeCol))
-        tx.markStreamBatchMonotone(tag)
-        true
-      }
-    } catch { case AlreadyApplied => false }
-    finally {
-      latest.unpersist(blocking = false)
-      survivors.unpersist(blocking = false)
+    applyNetChanges(s"$table:cdc:$streamId:$batchId",
+      Seq(LakeCatalog.NetChange(table, changes, keyCols,
+        s"CDC apply to '$table': key (${keyCols.mkString(", ")}) is not " +
+          "unique within one source commit — net-effect apply requires " +
+          "row-identifying keys; multiset data cannot be replicated " +
+          "by key")),
+      _ => ()).contains(true)
+  }
+
+  /** Net-effect apply of change-feed rows to one or more tables as ONE
+    * exactly-once commit tagged `tag` ([[commitStreamBatch]], after
+    * `prelude`). Per batch: preimages are dropped (their postimages
+    * subsume them) and the latest change per key by `_commit_version`
+    * wins. A key with more than one surviving row in one commit does not
+    * identify a row upstream, so the collapse would be nondeterministic:
+    * the batch's `notUnique` message is raised instead. Then each table
+    * gets ONE copy-on-write merge: the carried `change_type` routes every
+    * net row — a delete removes its target match and inserts nothing (a
+    * delete for an absent key is a no-op), anything else upserts.
+    * Batches that net to no rows are skipped; None when all of them do
+    * (nothing committed), else whether this call committed. */
+  private[graft] def applyNetChanges(tag: String,
+      batches: Seq[LakeCatalog.NetChange], prelude: Tx => Unit): Option[Boolean] = {
+    import graft.streaming.ChangeFeed.{SmallNetRows, TypeCol, VersionCol}
+    // __rn ranks each key's rows newest first (one row per key and commit
+    // survives the preimage filter, so version order alone picks the net
+    // state); __n counts rows per (key, commit) for the guard. Both
+    // windows cluster on the keys, so they share one exchange.
+    val marked = batches.map { b =>
+      val keys = b.keyCols.map(col)
+      b.changes.filter(col(TypeCol) =!= "update_preimage")
+        .withColumn("__rn", row_number().over(
+          Window.partitionBy(keys: _*).orderBy(col(VersionCol).desc)))
+        .withColumn("__n", count(lit(1)).over(
+          Window.partitionBy(keys :+ col(VersionCol): _*)))
+        .persist()
     }
+    try {
+      // the key guard and the net row count are one aggregate over the
+      // cached windows. An empty net change is a deterministic no-op: no
+      // commit at all — also what keeps a consumer writing into the SAME
+      // catalog from generating commits for batches its own sink traffic
+      // triggered. The count doubles as the write-width gate: a typical
+      // micro-batch is TINY, and writing it at shuffle width litters the
+      // replica with a near-empty file per shuffle slot per batch, which
+      // every later scan pays a per-file task constant for — so small
+      // ones collapse to one file (and one broadcastable key partition);
+      // backfill-sized ones keep their parallelism.
+      val nets = batches.zip(marked).flatMap { case (b, m) =>
+        val r = m.agg(max(col("__n")), count(when(col("__rn") === 1, true)))
+          .head()
+        if (!r.isNullAt(0) && r.getLong(0) > 1L)
+          throw new IllegalArgumentException(b.notUnique)
+        val net = m.filter(col("__rn") === 1).drop("__rn", "__n", VersionCol)
+        val n = r.getLong(1)
+        if (n == 0L) None
+        else Some(b -> (if (n <= SmallNetRows) net.coalesce(1) else net))
+      }
+      if (nets.isEmpty) None
+      else Some(commitStreamBatch(tag) { tx =>
+        prelude(tx)
+        nets.foreach { case (b, net) =>
+          tx.mergeClauses(b.table, net, b.keyCols, MergeClauses(
+            matchedDelete = Some(s"s.$TypeCol = 'delete'"),
+            matchedUpdate = Some(s"s.$TypeCol <> 'delete'"),
+            notMatchedInsert = Some(s"$TypeCol <> 'delete'")),
+            carry = Seq(TypeCol))
+        }
+      })
+    } finally marked.foreach(_.unpersist(blocking = false))
   }
 
   /** Merge-on-read DELETE (deletion vectors) — see [[Tx.deleteMor]]. */
@@ -1910,6 +1919,12 @@ object LakeCatalog {
     * after a workload to measure commit contention (perfbench's
     * `lake.occ_retries` does); concurrent workloads in one JVM share it. */
   val occRetries = new java.util.concurrent.atomic.LongAdder()
+
+  /** One table's share of a [[LakeCatalog.applyNetChanges]] commit:
+    * change-feed rows for `table`, the keys that identify its rows, and
+    * the message that refuses keys which do not. */
+  private[graft] final case class NetChange(table: String, changes: DataFrame,
+      keyCols: Seq[String], notUnique: String)
 
   /** A statement as Spark's own SQL lexer splits it: `all` tokens
     * (concatenated they give back the text, whitespace and comments

@@ -20,7 +20,7 @@ import scala.collection.mutable
   */
 object Tx {
   /** Cap on driver-collected affected-file paths in copy-on-write DML;
-    * beyond it the op rewrites the whole table (see rewriteAffected). */
+    * beyond it the op rewrites the whole table (see affectedFiles). */
   val MaxAffectedPaths = 100000
 }
 
@@ -641,7 +641,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val st = state(table)
     sets.keys.foreach(k =>
       require(st.columns.exists(_.name == k), s"no such column: $k"))
-    rewriteAffected(table, where, assigned = Some(sets.keySet)) { df =>
+    rewriteAffectedBy(table, _.filter(where), assigned = Some(sets.keySet)) { df =>
       df.select(st.columns.map { c =>
         sets.get(c.name) match {
           case Some(newVal) =>
@@ -662,7 +662,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * it evaluates NULL are kept — so the keep-filter is NOT(coalesce(where,
     * false)), consistent with affected-file discovery via filter(where). */
   def delete(table: String, where: Column): Unit = {
-    rewriteAffected(table, where, pureDelete = true)(
+    rewriteAffectedBy(table, _.filter(where), pureDelete = true)(
       _.filter(not(coalesce(where, lit(false)))))
     change("tables_deleted_from", table)
   }
@@ -814,7 +814,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * spells it `INSERT ... ON CONFLICT DO UPDATE`). Copy-on-write like
     * update/delete: affected files are found with ONE file-tagged
     * left-semi join against the source keys (bounded driver path set,
-    * same cap as rewriteAffected), only those are rewritten, and the
+    * same cap as affectedFiles), only those are rewritten, and the
     * write cost is proportional to the matched-file fraction — at 100 TB
     * a merge touching 0.1% of keys rewrites ~0.1% of files. The source
     * must be key-unique (SQL MERGE cardinality rule) and is aligned to
@@ -826,7 +826,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
   /** Full MERGE with the Delta/Iceberg clause set (see [[MergeClauses]]).
     * Copy-on-write like the plain upsert: affected files are found with
     * ONE file-tagged left-semi join against the source keys (bounded
-    * driver path set, same cap as rewriteAffected) and only those are
+    * driver path set, same cap as affectedFiles) and only those are
     * rewritten — EXCEPT when a `bySourceDelete` clause is present, where
     * any target row may be deleted, so the whole table rewrites (the
     * clause is inherently O(table), exactly as in Delta). The source must
@@ -872,16 +872,8 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     } else {
       val affected =
         if (cl.bySourceDelete.isDefined) st.files
-        else {
-          val affectedPaths = cat.readState(st, Some("__file"))
-            .join(src.select(keyCols: _*), keys, "left_semi")
-            .filter(col("__file").isNotNull)
-            .select("__file").distinct().limit(Tx.MaxAffectedPaths + 1).collect()
-            .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-          if (affectedPaths.size > Tx.MaxAffectedPaths) st.files
-          else st.files.filter(e =>
-            affectedPaths.contains(cat.absPath(e.path).toUri.getPath))
-        }
+        else affectedFiles(st,
+          _.join(src.select(keyCols: _*), keys, "left_semi"))
       val kept = st.files.filterNot(affected.contains)
       // one left-outer pass decides every target row's fate (NULL keys
       // never match, as in SQL MERGE ON); a NULL clause condition is not
@@ -905,7 +897,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
         }: _*)
       // NOT MATCHED is decidable against the AFFECTED files alone: every
       // source key present in the table lives in an affected file by
-      // construction (affectedPaths is the semi-join of the full file-
+      // construction (affectedFiles is the semi-join of the full file-
       // tagged state against the source keys, and flushInlined put every
       // row in a file) — so the anti-join probes O(affected), never the
       // O(table) full state. At 100 TB that is the difference between a
@@ -913,13 +905,8 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       // batch.
       val out = rewritten.unionByName(insertRows(tgt))
       // merging on non-PK keys can collide with rows in kept files
-      if (st.primaryKey.nonEmpty && st.primaryKey != keys && kept.nonEmpty) {
-        val pk = st.primaryKey.map(col)
-        val keptKeys = cat.readState(st.copy(files = kept)).select(pk: _*)
-        if (!keptKeys.join(out.select(pk: _*), st.primaryKey, "left_semi").isEmpty)
-          throw new ConstraintViolation(
-            s"duplicate key after merge: $table(${st.primaryKey.mkString(",")})")
-      }
+      if (st.primaryKey.nonEmpty && st.primaryKey != keys)
+        checkKeptKeys(table, st, kept, out, "merge")
       val written =
         writeFiles(table, applyPartitionLayout(st, out), st.schemaVersion)
       tables(table) = st.copy(files = kept ++ written)
@@ -1226,22 +1213,13 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     }
   }
 
-  /** Copy-on-write core: find files with rows matching `where` via ONE
-    * file-tagged scan, rewrite only those through `transform`, keep the
-    * rest. Old files stay on disk for time travel. `assigned` is an
+  /** Copy-on-write core: `matcher` maps the file-tagged scan to the rows
+    * whose files must rewrite — a predicate filter for [[delete]]/
+    * [[update]], a distributed semi-join for the DataFrame-of-keys
+    * delete. Only those files go through `transform`; the rest carry
+    * over, and old files stay on disk for time travel. `assigned` is an
     * UPDATE's set columns (see [[validate]]); when it holds a PK column
-    * the rewritten rows' keys are also checked against the kept
-    * (unrewritten) files via a distributed left-semi join. */
-  private def rewriteAffected(table: String, where: Column,
-      assigned: Option[Set[String]] = None,
-      pureDelete: Boolean = false)
-      (transform: DataFrame => DataFrame): Unit =
-    rewriteAffectedBy(table, _.filter(where), assigned, pureDelete)(transform)
-
-  /** Generalized CoW core: `matcher` maps the file-tagged scan to the
-    * subset of rows whose files must rewrite — a predicate filter for
-    * [[delete]]/[[update]], a distributed semi-join for the
-    * DataFrame-of-keys delete. */
+    * the rewritten rows' keys are also checked against the kept files. */
   private def rewriteAffectedBy(table: String,
       matcher: DataFrame => DataFrame,
       assigned: Option[Set[String]] = None,
@@ -1250,44 +1228,56 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     flushInlined(table)
     val st = state(table)
     if (st.files.isEmpty) return
-    // input_file_name() yields a URL (file:///…, possibly %-encoded);
-    // Hadoop Path.toUri renders file:/… — compare on the decoded path
-    // component so the two spellings always line up.
-    // The collect is BOUNDED: distinct file paths up to MaxAffectedPaths+1.
-    // Past the cap (a predicate touching most of a 10^6-file table) the
-    // rewrite degenerates to all files — which is the work such an update
-    // does anyway — instead of pulling an unbounded path set to the driver.
-    val affectedPaths = matcher(cat.readState(st, Some("__file")))
-      .select("__file").distinct().limit(Tx.MaxAffectedPaths + 1).collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    if (affectedPaths.isEmpty) return
-    val affected =
-      if (affectedPaths.size > Tx.MaxAffectedPaths) st.files
-      else st.files.filter(e =>
-        affectedPaths.contains(cat.absPath(e.path).toUri.getPath))
+    val affected = affectedFiles(st, matcher)
+    if (affected.isEmpty) return
     val kept = st.files.filterNot(affected.contains)
     // Rewrite affected files group-wise by their written schema version,
     // aligned to the current schema (same path as readState).
-    val sub = st.copy(files = affected)
-    val rewritten = transform(cat.readState(sub))
+    val rewritten = transform(cat.readState(st.copy(files = affected)))
     // a pure delete keeps a SUBSET of already-committed rows — it cannot
     // introduce a NOT NULL / CHECK / duplicate-key violation, so the
     // validation scan is skipped (one fewer full pass over the rewrite)
     if (!pureDelete)
       validate(table, st, rewritten, checkPkAgainstExisting = false,
         assigned = assigned)
-    if (assigned.exists(_.exists(st.primaryKey.contains)) && kept.nonEmpty) {
-      val pk = st.primaryKey.map(col)
-      val keptKeys = cat.readState(st.copy(files = kept)).select(pk: _*)
-      if (!keptKeys.join(rewritten.select(pk: _*), st.primaryKey, "left_semi")
-          .isEmpty)
-        throw new ConstraintViolation(
-          s"duplicate key after update: $table(${st.primaryKey.mkString(",")})")
-    }
+    if (assigned.exists(_.exists(st.primaryKey.contains)))
+      checkKeptKeys(table, st, kept, rewritten, "update")
     val written =
       writeFiles(table, applyPartitionLayout(st, rewritten), st.schemaVersion)
     tables(table) = st.copy(files = kept ++ written)
   }
+
+  /** The files of `st` holding a row that `matcher` keeps from the
+    * file-tagged scan. `_metadata.file_path` is a URL (file:///…,
+    * possibly %-encoded) where Hadoop's Path.toUri renders file:/…, so
+    * the two compare on the decoded path component. The collect is
+    * BOUNDED: distinct paths up to MaxAffectedPaths+1; past the cap (a
+    * predicate touching most of a 10^6-file table) every file counts as
+    * affected — the work such a rewrite does anyway — instead of pulling
+    * an unbounded path set to the driver. */
+  private def affectedFiles(st: TableState,
+      matcher: DataFrame => DataFrame): Seq[FileEntry] = {
+    val affectedPaths = matcher(cat.readState(st, Some("__file")))
+      .filter(col("__file").isNotNull)
+      .select("__file").distinct().limit(Tx.MaxAffectedPaths + 1).collect()
+      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    if (affectedPaths.size > Tx.MaxAffectedPaths) st.files
+    else st.files.filter(e =>
+      affectedPaths.contains(cat.absPath(e.path).toUri.getPath))
+  }
+
+  /** Refuses a rewrite whose `rows` carry a primary key that a `kept`
+    * (unrewritten) file of `st` already holds: one distributed left-semi
+    * join, skipped when every file is rewritten. */
+  private def checkKeptKeys(table: String, st: TableState,
+      kept: Seq[FileEntry], rows: DataFrame, op: String): Unit =
+    if (kept.nonEmpty) {
+      val pk = st.primaryKey.map(col)
+      val keptKeys = cat.readState(st.copy(files = kept)).select(pk: _*)
+      if (!keptKeys.join(rows.select(pk: _*), st.primaryKey, "left_semi").isEmpty)
+        throw new ConstraintViolation(
+          s"duplicate key after $op: $table(${st.primaryKey.mkString(",")})")
+    }
 
   /** Stage parquet files for `df` under `<root>/<table>/data/<uuid>/`;
     * returns manifest entries with footer-exact row counts plus per-file

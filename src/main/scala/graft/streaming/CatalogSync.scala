@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 
 import graft.lake.LakeCatalog
 
 /** One table's replication mapping in a multi-table sync: `src` in the
   * source catalog streams into `dst` in the destination catalog; `keys`
-  * must uniquely identify rows (the same net-effect-apply precondition as
+  * must uniquely identify rows (the precondition of the net-effect apply,
+  * [[LakeCatalog.applyNetChanges]], shared with
   * [[LakeCatalog.applyChangesStreamBatch]]). */
 final case class TableSync(src: String, dst: String, keys: Seq[String])
 
@@ -39,28 +39,19 @@ final case class TableSync(src: String, dst: String, keys: Seq[String])
   *    sync point and a racing duplicate pass loses the tag check and
   *    skips (the destination catalog IS the checkpoint);
   *  - bounded plans: a deep backlog folds its oldest sync points into one
-  *    coarse live-to-live diff per table (exact net effect, same fold as
-  *    [[ChangeFeed]]'s `maxWindowsPerBatch`), so a pass is at most
-  *    `maxTxnsPerPass` destination transactions regardless of lag.
+  *    coarse live-to-live diff per table (exact net effect; the planner,
+  *    [[ChangeFeed.windowEnds]], is the one the per-table feed's
+  *    `maxWindowsPerBatch` uses), so a pass is at most `maxTxnsPerPass`
+  *    destination transactions regardless of lag.
   *
   * Scale shape: sync-point discovery is one manifest-head read plus an
   * in-memory header scan (zero jobs); each applied window is the same
   * O(churn) [[LakeCatalog.tableChanges]] diff the per-table feed plans —
-  * executor-side scans/joins, nothing collected on the driver beyond the
-  * key-uniqueness guard's LIMIT 1. Replicating K tables costs the sum of
-  * their churn, never a function of table size.
+  * executor-side scans/joins, nothing collected on the driver beyond one
+  * row per table (the key guard and net row count). Replicating K tables
+  * costs the sum of their churn, never a function of table size.
   */
 object CatalogSync {
-
-  /** Kinds that end a streamed table's column identity (see
-    * [[ChangeFeed.IdentityBreakKinds]]). */
-  private def identityBreaks(h: graft.lake.SnapHeader, table: String): Boolean =
-    ChangeFeed.IdentityBreakKinds.exists(k =>
-      h.changes.getOrElse(k, Nil).contains(table))
-
-  private def touchesData(h: graft.lake.SnapHeader, tables: Set[String]): Boolean =
-    h.changes.exists { case (k, ts) =>
-      ChangeFeed.DataKinds.contains(k) && ts.exists(tables.contains) }
 
   /** The last committed sync point for `streamId`, read from the
     * destination catalog's stream-tag high-water marks (O(1), immune to
@@ -122,55 +113,15 @@ object CatalogSync {
     val head = srcCat.current
     val from = lastOffset(dstCat, streamId)
     if (head.snapshotId <= from) return 0L
-    val srcNames = tables.map(_.src).toSet
-    val window = head.history.iterator
-      .filter(h => h.snapshotId > from && h.snapshotId <= head.snapshotId)
-      .toSeq
-    // identity-break guard, per table, same remedy story as ChangeFeed:
-    // retained headers plus the per-name stamp (exact even after the
-    // breaking commit's header was compacted away)
-    for (t <- tables) {
-      val headerBreak = window.find(identityBreaks(_, t.src)).map(_.snapshotId)
-      val stamped = head.identityBreaks.get(t.src).filter(_ > from)
-      (headerBreak ++ stamped).headOption.foreach { bv =>
-        val remedy = if (from == 0L)
-          "; sync only the name's current incarnation by seeding the " +
-            "replica and offset past the break"
-        else "; re-seed the replica and start a fresh sync stream"
-        throw new IllegalStateException(
-          s"table '${t.src}' was dropped, replaced or renamed at " +
-            s"v$bv — its column identity ended there" + remedy)
-      }
+    // sync points: the live versions in (from, head] where ANY synced
+    // table's data changed, closed and folded like the per-table feed
+    val points = ChangeFeed.windowEnds(head, head, tables.map(_.src), from,
+        head.snapshotId, maxTxnsPerPass) { _ =>
+      if (from == 0L)
+        "; sync only the name's current incarnation by seeding the " +
+          "replica and offset past the break"
+      else "; re-seed the replica and start a fresh sync stream"
     }
-    // sync points: live versions in (from, head] where ANY synced table's
-    // data changed; expired interiors merge into the next live point, a
-    // trailing expired run closes with one live-to-live window at head.
-    // Trailing detection uses lastDataVersion stamps (exact even when
-    // expired headers were compacted away) plus the retained headers.
-    val livePoints = window.iterator
-      .filterNot(h => head.versionExpired(h.snapshotId))
-      .filter(touchesData(_, srcNames))
-      .map(_.snapshotId).toSeq
-    val lastDataMax = tables.iterator
-      .flatMap(t => head.tables.get(t.src)).map(_.lastDataVersion)
-      .foldLeft(0L)(math.max)
-    val hasTrailingExpired =
-      (lastDataMax > livePoints.lastOption.getOrElse(from) &&
-        lastDataMax <= head.snapshotId) ||
-      window.iterator
-        .filter(h => head.versionExpired(h.snapshotId))
-        .filter(touchesData(_, srcNames))
-        .exists(_.snapshotId > livePoints.lastOption.getOrElse(from))
-    val points0 =
-      if (hasTrailingExpired && livePoints.lastOption.forall(_ < head.snapshotId))
-        livePoints :+ head.snapshotId
-      else livePoints
-    // backlog fold: keep the last maxTxnsPerPass-1 points fine-grained,
-    // everything older becomes one coarse exact diff
-    val points =
-      if (points0.size <= maxTxnsPerPass) points0
-      else points0(points0.size - maxTxnsPerPass) +:
-        points0.drop(points0.size - maxTxnsPerPass + 1)
     // per-table schema anchors: pinned wins; else the anchor PERSISTED
     // on the replica at first pass; else this pass's head (first pass —
     // persisted below inside the pass's first destination transaction,
@@ -197,7 +148,7 @@ object CatalogSync {
           tx.setProperty(t.dst, anchorKey, anchors(t.src).toString)
       }
     }
-    val headersByV = window.map(h => h.snapshotId -> h).toMap
+    val headersByV = head.history.map(h => h.snapshotId -> h).toMap
     var committed = 0L
     var lastTagged = from
     var prev = from
@@ -208,80 +159,38 @@ object CatalogSync {
       // stamp backstops headers that tail compaction dropped.
       val touched = tables.filter { t =>
         ((prev + 1) to v).exists(i =>
-          headersByV.get(i).exists(touchesData(_, Set(t.src)))) ||
+          headersByV.get(i).exists(ChangeFeed.changesData(_, Seq(t.src)))) ||
         srcCat.snapshot(v).tables.get(t.src)
           .exists(st => st.lastDataVersion > prev && st.lastDataVersion <= v)
       }
-      val tag = s"catsync:$streamId:$v"
-      object AlreadyApplied extends Exception
-      val changes: Seq[(TableSync, DataFrame)] = touched.map { t =>
-        val chg = srcCat
-          .tableChanges(t.src, prev, v, t.keys,
-            schemaAtV = Some(anchors(t.src)))
-          .filter(col(ChangeFeed.TypeCol) =!= "update_preimage")
-          .persist()
-        (t, chg)
+      // every touched table's window lands in ONE destination commit with
+      // the sync point's tag; stamped with v like a feed window, so the
+      // net-effect reduction is the per-table feed's
+      val changes = touched.map { t =>
+        LakeCatalog.NetChange(t.dst,
+          srcCat.tableChanges(t.src, prev, v, t.keys,
+              schemaAtV = Some(anchors(t.src)))
+            .withColumn(ChangeFeed.VersionCol, lit(v)),
+          t.keys,
+          s"catalog sync '${t.src}' -> '${t.dst}': key " +
+            s"(${t.keys.mkString(", ")}) is not unique within one " +
+            "sync window — net-effect apply requires row-identifying " +
+            "keys")
       }
-      try {
-        // key-uniqueness guard per table (one LIMIT-1 action each over
-        // the persisted O(churn) window)
-        changes.foreach { case (t, chg) =>
-          val dup = chg.groupBy(t.keys.map(col): _*)
-            .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-            .limit(1).collect()
-          if (dup.nonEmpty)
-            throw new IllegalArgumentException(
-              s"catalog sync '${t.src}' -> '${t.dst}': key " +
-                s"(${t.keys.mkString(", ")}) is not unique within one " +
-                "sync window — net-effect apply requires row-identifying " +
-                "keys")
-        }
-        // count doubles as the write-width gate (cheap: chg is persisted):
-        // small windows collapse to one file per apply instead of littering
-        // the replica with a near-empty file per shuffle slot per sync point
-        val nonEmpty = changes
-          .map { case (t, chg) => (t, chg, chg.count()) }
-          .collect { case (t, chg, n) if n > 0 =>
-            (t, if (n <= ChangeFeed.SmallNetRows) chg.coalesce(1) else chg) }
-        if (nonEmpty.nonEmpty) {
-          try {
-            dstCat.transaction { tx =>
-              if (tx.streamBatchApplied(tag)) throw AlreadyApplied
-              persistAnchors(tx)
-              nonEmpty.foreach { case (t, chg) =>
-                // one CoW pass per table: the carried change_type routes
-                // each net row (same fused apply as
-                // LakeCatalog.applyChangesStreamBatch)
-                tx.mergeClauses(t.dst, chg, t.keys, graft.lake.MergeClauses(
-                  matchedDelete = Some(s"s.${ChangeFeed.TypeCol} = 'delete'"),
-                  matchedUpdate = Some(s"s.${ChangeFeed.TypeCol} <> 'delete'"),
-                  notMatchedInsert = Some(s"${ChangeFeed.TypeCol} <> 'delete'")),
-                  carry = Seq(ChangeFeed.TypeCol))
-              }
-              // catsync tags are monotone per streamId (source snapshot
-              // versions) — high-water ledger, O(streams) state
-              tx.markStreamBatchMonotone(tag)
-            }
-            committed += 1
-          } catch { case AlreadyApplied => () }
+      dstCat.applyNetChanges(s"catsync:$streamId:$v", changes, persistAnchors)
+        .foreach { applied =>
+          if (applied) committed += 1
           lastTagged = v
         }
-      } finally changes.foreach(_._2.unpersist(blocking = false))
       prev = v
     }
     // every window since the last tag netted to zero rows (e.g. an UPDATE
     // writing identical values): advance the offset with one metadata-only
     // commit so future passes stop re-diffing the dead window. At most one
-    // such commit per pass, and only when something was consumed.
-    if (points.nonEmpty && lastTagged != points.last) {
-      val tag = s"catsync:$streamId:${points.last}"
-      object Done extends Exception
-      try dstCat.transaction { tx =>
-        if (tx.streamBatchApplied(tag)) throw Done // racing pass beat us
-        persistAnchors(tx)
-        tx.markStreamBatchMonotone(tag)
-      } catch { case Done => () }
-    }
+    // such commit per pass, and only when something was consumed; a racing
+    // pass that already tagged it wins.
+    if (points.nonEmpty && lastTagged != points.last)
+      dstCat.commitStreamBatch(s"catsync:$streamId:${points.last}")(persistAnchors)
     committed
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftshim.StreamFrame
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types._
 
-import graft.lake.LakeCatalog
+import graft.lake.{LakeCatalog, SnapHeader, Snapshot}
 
 /** The table CHANGE FEED as a streaming source — streaming
   * `table_changes()` (ref utils/ducklake_utils.py:65-78 exposes the batch
@@ -112,19 +112,86 @@ object ChangeFeed {
     "ckpt-" + d.take(6).map("%02x".format(_)).mkString
   }
 
-  /** Feed schema = the table's columns + change_type + commit version.
-    * The source itself anchors at its construction-time version; this
-    * helper (used for pre-construction schema queries) reads the current
-    * one — the same thing up to a benign planning race. */
+  /** Feed schema of the source `parameters` name. The source itself
+    * anchors at its construction-time version; this helper (used for
+    * pre-construction schema queries) reads the current one when no
+    * `anchorVersion` is pinned — the same thing up to a benign planning
+    * race. */
   def feedSchema(spark: SparkSession, parameters: Map[String, String]): StructType = {
     val cat = new LakeCatalog(spark, parameters("root"))
-    val base = parameters.get("anchorVersion") match {
-      case Some(v) => cat.readAt(parameters("table"), v.toLong)
-      case None => cat.read(parameters("table"))
-    }
-    StructType(base.schema.fields.toSeq :+
+    feedSchema(cat, parameters("table"),
+      parameters.get("anchorVersion").fold(cat.currentVersion)(_.toLong))
+  }
+
+  /** Feed schema = the table's columns at `anchorV` + change_type +
+    * commit version. */
+  private[streaming] def feedSchema(cat: LakeCatalog, table: String,
+      anchorV: Long): StructType =
+    StructType(cat.readAt(table, anchorV).schema.fields.toSeq :+
       StructField(TypeCol, StringType, nullable = false) :+
       StructField(VersionCol, LongType, nullable = false))
+
+  /** Does header `h` record a change to the DATA of any of `tables`? */
+  private[streaming] def changesData(h: SnapHeader, tables: Seq[String]): Boolean =
+    h.changes.exists { case (k, ts) =>
+      DataKinds.contains(k) && ts.exists(tables.contains) }
+
+  /** The change windows of `tables` over `(fromV, toV]`, as the ordered
+    * end versions of consecutive windows (the first opens at `fromV`,
+    * each next one at the previous end): one per live commit that
+    * changed any table's DATA. Zero jobs — headers and stamps only.
+    * `head` is the snapshot at `toV`; expiry is read from `headNow`, the
+    * current head, since a vacuum that committed after `toV` expired
+    * versions `toV`'s own ledger cannot know about.
+    *
+    * A window may not cross an identity break of any of `tables` (a
+    * REPLACE, a rename in EITHER direction, a DROP — id-anchored
+    * alignment across it would be meaningless): the refusal names the
+    * first break and ends with `remedy(breaks)`, the table's break
+    * versions in order. Two signals, both consulted: the retained-header
+    * scan (complete for windows younger than tail compaction, and the
+    * only signal in pre-aggV2 manifests) and the per-name break stamp
+    * (exact even after the breaking commit's header was compacted away).
+    *
+    * Expired interior commits merge into the next live window (the diff
+    * between live snapshots carries their net effect exactly). TRAILING
+    * expired data commits have no later live one to merge into, so one
+    * extra live-to-live window closes at `toV` (which the caller keeps
+    * live) — detected from the lastDataVersion stamps (exact even when
+    * the expired headers were compacted away) or the retained headers.
+    *
+    * FAN-OUT CAP: past `maxWindows` windows the oldest fold into ONE
+    * coarse exact diff — the net effect per key over the span is the
+    * same, only per-commit granularity coarsens — so a consumer resuming
+    * after any backlog plans at most `maxWindows` windows. */
+  private[streaming] def windowEnds(head: Snapshot, headNow: Snapshot,
+      tables: Seq[String], fromV: Long, toV: Long, maxWindows: Int)
+      (remedy: Seq[Long] => String): Seq[Long] = {
+    val window = head.history
+      .filter(h => h.snapshotId > fromV && h.snapshotId <= toV)
+    for (t <- tables) {
+      val headerBreaks = window.filter(h => IdentityBreakKinds.exists(k =>
+        h.changes.getOrElse(k, Nil).contains(t))).map(_.snapshotId)
+      val stampedBreak = head.identityBreaks.get(t)
+        .filter(bv => bv > fromV && bv <= toV)
+      val breaks = (headerBreaks ++ stampedBreak).distinct.sorted
+      breaks.headOption.foreach { bv =>
+        throw new IllegalStateException(
+          s"table '$t' was dropped, replaced or renamed at " +
+            s"v$bv — its column identity ended there" + remedy(breaks))
+      }
+    }
+    val (expired, live) = window.filter(changesData(_, tables))
+      .partition(h => headNow.versionExpired(h.snapshotId))
+    val liveVs = live.map(_.snapshotId)
+    val lastLive = liveVs.lastOption.getOrElse(fromV)
+    val lastData = tables.flatMap(head.tables.get)
+      .map(_.lastDataVersion).foldLeft(0L)(math.max)
+    val hasTrailingExpired = (lastData > lastLive && lastData <= toV) ||
+      expired.exists(_.snapshotId > lastLive)
+    val ends = if (hasTrailingExpired) liveVs :+ toV else liveVs
+    if (ends.size <= maxWindows) ends
+    else ends(ends.size - maxWindows) +: ends.drop(ends.size - maxWindows + 1)
   }
 
   /** `spark.readStream` over the change feed of `table` in the lake at
@@ -149,9 +216,10 @@ object ChangeFeed {
 
   /** One checkpointed incremental CDC pass: consume the change feed of
     * `src` committed since the last pass with this checkpoint and apply
-    * its net effect to `dst` ([[LakeCatalog.applyChangesStreamBatch]] —
-    * atomic, batch-id-deduped, so a replay or sink retry is exactly-once
-    * end to end). `observe` sees each APPLIED batch (already persisted).
+    * its net effect to `dst` ([[LakeCatalog.applyChangesStreamBatch]]:
+    * the net-change apply [[CatalogSync]] shares, atomic and
+    * batch-id-deduped, so a replay or sink retry is exactly-once end to
+    * end). `observe` sees each APPLIED batch (already persisted).
     * Returns the number of batches applied this pass — 0 when nothing
     * new was committed upstream.
     *
@@ -234,10 +302,7 @@ class ChangeFeedSource(spark: SparkSession, parameters: Map[String, String])
     s"anchorVersion v$anchorV of '$table' has been vacuumed — anchor at " +
       "a live version")
 
-  override val schema: StructType =
-    StructType(cat.readAt(table, anchorV).schema.fields.toSeq :+
-      StructField(TypeCol, StringType, nullable = false) :+
-      StructField(VersionCol, LongType, nullable = false))
+  override val schema: StructType = feedSchema(cat, table, anchorV)
   private val valueCols = schema.fields.dropRight(2).map(_.name).toSeq
 
   /** One manifest-head read; no Spark jobs and no O(versions) scan: the
@@ -305,75 +370,16 @@ class ChangeFeedSource(spark: SparkSession, parameters: Map[String, String])
           "feed at it is gone; retention must outlive the stream's lag " +
           "(start a fresh checkpoint to resume from live history)")
     }
-    val head = cat.snapshot(toV)
-    val window = head.history.iterator
-      .filter(h => h.snapshotId > fromV && h.snapshotId <= toV).toSeq
-    // a REPLACE (or a rename in EITHER direction: this table renamed
-    // away, or another renamed over this name) restarts column identity —
-    // id-anchored alignment across it would be meaningless; a DROP ends
-    // the feed even if nothing re-creates the name
-    // two signals, both consulted: the retained-header scan (complete
-    // for windows younger than tail compaction, and the only signal in
-    // pre-aggV2 manifests) and the per-name break stamp (exact even
-    // after the breaking commit's header was compacted away — a feed
-    // whose fromV is 0 or a tag-pinned pre-break version must refuse,
-    // not silently diff across restarted column ids)
-    val headerBreaks = window.filter(h => IdentityBreakKinds.exists(k =>
-      h.changes.getOrElse(k, Nil).contains(table))).map(_.snapshotId)
-    val stampedBreak = head.identityBreaks.get(table)
-      .filter(bv => bv > fromV && bv <= toV)
-    val breaks = (headerBreaks ++ stampedBreak).distinct.sorted
-    breaks.headOption.foreach { bv =>
-      // a FRESH stream (no checkpointed start) that trips this guard did
-      // exactly what "start a fresh stream" asks — the actual remedy is a
-      // startingVersion past the LAST identity break, so say so
-      val remedy = if (start.isEmpty)
+    // a FRESH stream (no checkpointed start) that trips the identity-
+    // break guard did exactly what "start a fresh stream" asks — the
+    // actual remedy is a startingVersion past the LAST break, so say so
+    val endpoints = windowEnds(cat.snapshot(toV), headNow, Seq(table),
+        fromV, toV, maxWindows) { breaks =>
+      if (start.isEmpty)
         s"; to stream the name's current incarnation, pass " +
           s"startingVersion = ${breaks.max}"
       else "; start a fresh change stream"
-      throw new IllegalStateException(
-        s"table '$table' was dropped, replaced or renamed at " +
-          s"v$bv — its column identity ended there" + remedy)
     }
-    // commits in (fromV, toV] whose changes touched this table's DATA;
-    // expired interior versions merge into the next live window (their
-    // net effect is still exact — the diff is between live snapshots)
-    val liveDataVs = window.iterator
-      .filterNot(h => headNow.versionExpired(h.snapshotId))
-      .filter(h => h.changes.exists { case (k, ts) =>
-        DataKinds.contains(k) && ts.contains(table) })
-      .map(_.snapshotId).toSeq
-    // TRAILING expired data commits (after the last live data commit)
-    // have no later live data commit to merge into — close the batch
-    // with one extra live-to-live window up to toV so their net rows
-    // still flow (toV itself is live: getOffset clamps past expiry and
-    // the check above already rejected an expired endpoint). Detected
-    // from the lastDataVersion stamp (exact even when the expired
-    // headers were compacted away) OR the retained headers (pre-stamp
-    // manifests).
-    val lastData = head.tables.get(table).map(_.lastDataVersion).getOrElse(0L)
-    val hasTrailingExpired =
-      (lastData > liveDataVs.lastOption.getOrElse(fromV) && lastData <= toV) ||
-      window.iterator
-        .filter(h => headNow.versionExpired(h.snapshotId))
-        .filter(h => h.changes.exists { case (k, ts) =>
-          DataKinds.contains(k) && ts.contains(table) })
-        .exists(h => h.snapshotId > liveDataVs.lastOption.getOrElse(fromV))
-    val dataVs0 =
-      if (hasTrailingExpired && liveDataVs.lastOption.forall(_ < toV))
-        liveDataVs :+ toV
-      else liveDataVs
-    // FAN-OUT CAP: a consumer resuming after a long backlog would plan
-    // one union leg per consumed commit; beyond `maxWindows` commits the
-    // oldest are folded into ONE coarse (fromV, foldTo] diff — the merged
-    // diff is exact (net effect per key over the span), only the
-    // per-commit `_commit_version` tagging coarsens: the folded rows all
-    // carry the fold point's version. The plan is then <= maxWindows
-    // union legs regardless of backlog depth.
-    val endpoints =
-      if (dataVs0.size <= maxWindows) dataVs0
-      else dataVs0(dataVs0.size - maxWindows) +:
-        dataVs0.drop(dataVs0.size - maxWindows + 1)
     val windows = (fromV +: endpoints).zip(endpoints).map {
       case (a, b) => changesAt(a, b)
     }

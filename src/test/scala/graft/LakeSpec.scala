@@ -268,6 +268,25 @@ class LakeSpec extends SparkSpec {
       === Array((1, "a"), (2, "b")))
   }
 
+  test("MERGE on a non-PK key that moves a PK onto a key in an untouched file is rejected") {
+    val cat = newLake()
+    cat.createTable("t", StructType(Seq(
+      StructField("id", IntegerType), StructField("code", StringType),
+      StructField("v", IntegerType))), primaryKey = Seq("id"))
+    cat.insert("t", Seq((1, "a", 10), (2, "b", 20)).toDF("id", "code", "v"))
+    cat.insert("t", Seq((3, "c", 30)).toDF("id", "code", "v")) // kept file
+    val v0 = cat.currentVersion
+    // matched on code 'a': only the first file rewrites, and its row's
+    // new id 3 already lives in the second, untouched file
+    val ex = intercept[ConstraintViolation] {
+      cat.merge("t", Seq((3, "a", 99)).toDF("id", "code", "v"), Seq("code"))
+    }
+    assert(ex.getMessage.contains("duplicate key after merge"))
+    assert(cat.currentVersion === v0)
+    assert(cat.read("t").orderBy("id").as[(Int, String, Int)].collect()
+      === Array((1, "a", 10), (2, "b", 20), (3, "c", 30)))
+  }
+
   test("schema evolution: add-with-default / backfill / drop / rename / type change") {
     val cat = newLake()
     cat.createTable("events", StructType(Seq(

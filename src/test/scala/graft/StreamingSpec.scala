@@ -577,6 +577,23 @@ class StreamingSpec extends SparkSpec {
       .toDF("k", "v", "change_type", "_commit_version")
     assert(cat.applyChangesStreamBatch("r", ok, Seq("k"), 0L, "dup"))
     assert(cat.read("r").count() === 2L)
+    // catalog sync applies the same way: a keyless source holding a
+    // duplicated sync key refuses, leaving replica and offset untouched
+    import graft.streaming.{CatalogSync, TableSync}
+    cat.createTable("s", schema)
+    cat.createTable("rs", schema)
+    val maps = Seq(TableSync("s", "rs", Seq("k")))
+    cat.insert("s", Seq((1L, 10L), (2L, 30L)).toDF("k", "v"))
+    assert(CatalogSync.pass(cat, cat, maps, "dup") === 1L)
+    val offset = CatalogSync.lastOffset(cat, "dup")
+    cat.insert("s", Seq((3L, 40L), (3L, 50L)).toDF("k", "v"))
+    val ex2 = intercept[IllegalArgumentException] {
+      CatalogSync.pass(cat, cat, maps, "dup")
+    }
+    assert(ex2.getMessage.contains("not unique"))
+    assert(cat.read("rs").orderBy("k").as[(Long, Long)].collect()
+      === Array((1L, 10L), (2L, 30L)))
+    assert(CatalogSync.lastOffset(cat, "dup") === offset)
   }
 
   test("streaming dedup collapses a duplicated stream back to the batch profile") {
@@ -681,11 +698,24 @@ class StreamingSpec extends SparkSpec {
       else cat.insert(if (i % 2 == 0) "a" else "b",
         Seq((i.toLong, i.toLong * 10)).toDF("id", "v"))
     }
+    // pin every third data commit up to i = 24, then expire the rest:
+    // the trailing data commits (i = 25..30) have no later live one to
+    // merge into, so the pass must close with one live-to-live window at
+    // head (the tables' lastDataVersion stamps or retained headers say so)
+    val firstData = cat.currentVersion - 29
+    (3 to 24 by 3).foreach(i => cat.tag(s"keep$i", firstData + i - 1))
+    cat.createTable("pad", aS)
+    (1 to 3).foreach(i =>
+      cat.insert("pad", Seq((i.toLong, 0L)).toDF("id", "v")))
+    cat.vacuum(keepLast = 2, orphanGraceMs = 0L)
+    assert((firstData + 24 to firstData + 29).forall(cat.current.versionExpired))
+    val srcHead = cat.currentVersion
     val maps = Seq(TableSync("a", "ra", Seq("id")),
       TableSync("b", "rb", Seq("id")))
     val n = CatalogSync.pass(cat, cat, maps, "f1", maxTxnsPerPass = 5)
     assert(n >= 1L && n <= 5L,
       s"backlog must fold to <= maxTxnsPerPass transactions, saw $n")
+    assert(CatalogSync.lastOffset(cat, "f1") === srcHead)
     def eqTo(src: String, dst: String): Boolean =
       cat.read(dst).exceptAll(cat.read(src))
         .union(cat.read(src).exceptAll(cat.read(dst))).isEmpty
