@@ -386,9 +386,9 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     })
 
   /** Enable per-file HLL NDV sketches on `colName`: every subsequent
-    * write stores a mergeable distinct-count sketch in the manifest
-    * entry (existing files stay unsketched until rewritten — run
-    * [[compact]] to backfill). See [[approxDistinct]]. */
+    * write or import stores a mergeable distinct-count sketch in the
+    * manifest entry (existing files stay unsketched until rewritten —
+    * run [[compact]] to backfill). See [[approxDistinct]]. */
   def ndvIndex(table: String, colName: String): Unit =
     transaction(_.setProperty(table, "index.ndv", colName))
 
@@ -423,7 +423,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   }
 
   /** Enable a per-file BLOOM index on `colName` for point lookups: every
-    * subsequent write builds a sidecar filter next to its data files
+    * subsequent write or import builds a sidecar filter for its data files
     * (existing files stay unindexed until rewritten — run [[compact]] to
     * backfill). See [[readPoint]]. */
   def bloomIndex(table: String, colName: String): Unit =
@@ -1689,17 +1689,17 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * source clauses — see [[Tx.mergeClauses]] and [[MergeClauses]]. */
   def mergeClauses(table: String, source: DataFrame, keys: Seq[String],
       clauses: MergeClauses): Unit =
-    transaction(_.mergeClauses(table, source, keys, clauses))
+    inTx(_.mergeClauses(table, source, keys, clauses))
 
   def createView(name: String, sql: String): Unit =
-    transaction(_.createView(name, sql))
+    inTx(_.createView(name, sql))
 
   /** CHECK constraint — see [[Tx.addCheck]]. */
   def addCheck(table: String, name: String, predicateSql: String): Unit =
-    transaction(_.addCheck(table, name, predicateSql))
+    inTx(_.addCheck(table, name, predicateSql))
 
   def dropCheck(table: String, name: String): Unit =
-    transaction(_.dropCheck(table, name))
+    inTx(_.dropCheck(table, name))
 
   /** Tag `version` (default: the current snapshot) with a stable name —
     * see [[Tx.tag]]. Tagged snapshots survive [[vacuum]]. */
@@ -1844,10 +1844,11 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     // deleted regardless of age; grace only protects never-referenced
     // paths. Normalized through absPath so relative and (legacy)
     // absolute manifest entries compare correctly.
-    val deadFiles = toDelete.flatMap(v =>
-      snapshot(v).tables.values.flatMap(_.files.flatMap(e =>
+    def referenced(snaps: Iterator[Snapshot]): Set[String] =
+      snaps.flatMap(_.tables.values.flatMap(_.files.flatMap(e =>
         (e.path +: (e.blooms.values.toSeq ++ e.dv)).map(p =>
           absPath(p).toUri.getPath)))).toSet
+    val deadFiles = referenced(toDelete.iterator.map(snapshot))
     toDelete.foreach { v =>
       store.deleteVersion(v)
       snapCache.remove(v)
@@ -1857,10 +1858,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     // staged blobs for a newer commit are never swept)
     val keptSnaps = store.availableVersions().sorted.map(snapshot)
     store.gcBlobs(keptSnaps, head.snapshotId)
-    val live = keptSnaps
-      .flatMap(_.tables.values.flatMap(_.files.flatMap(e =>
-        (e.path +: (e.blooms.values.toSeq ++ e.dv)).map(p =>
-          absPath(p).toUri.getPath)))).toSet
+    val live = referenced(keptSnaps.iterator)
     // walk <root>/<table>/{data,index,dv}/** and drop parquet files /
     // bloom sidecars / deletion-vector parts no kept snapshot references
     // (also catches dirs from dropped tables). DV entries in the manifest

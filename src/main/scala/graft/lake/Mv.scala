@@ -111,8 +111,17 @@ object Mv {
   def create(cat: LakeCatalog, mv: String, base: String,
       keys: Seq[String], sums: Seq[String],
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
-      avgs: Seq[String] = Nil): Unit = {
-    requireNoOpenTx(cat, "Mv.create")
+      avgs: Seq[String] = Nil): Unit =
+    createWith(cat, "Mv.create", mv, base, keys, sums, mins, maxs, avgs,
+      Nil)(_.read(base))
+
+  /** The create transaction of both MV shapes: they differ only in the
+    * `source` frame and the extra spec `props`. */
+  private def createWith(cat: LakeCatalog, what: String, mv: String,
+      base: String, keys: Seq[String], sums: Seq[String], mins: Seq[String],
+      maxs: Seq[String], avgs: Seq[String], props: Seq[(String, String)])(
+      source: Tx => DataFrame): Unit = {
+    requireNoOpenTx(cat, what)
     cat.transaction { tx =>
       require(keys.nonEmpty, "mv needs at least one group key")
       // an AVG rides on sum+count: its sum_ column joins the maintained
@@ -120,7 +129,7 @@ object Mv {
       // column is maintained alongside, and avg_ is derived at write
       val sumsAll = (sums ++ avgs).distinct
       val aggs = aggExprs(sumsAll, mins, maxs, avgs)
-      val df = withAvgs(tx.read(base).groupBy(keys.map(col): _*)
+      val df = withAvgs(source(tx).groupBy(keys.map(col): _*)
         .agg(aggs.head, aggs.tail: _*), avgs)
       tx.createTable(mv, df.schema, primaryKey = keys)
       tx.insert(mv, df)
@@ -130,6 +139,7 @@ object Mv {
       if (avgs.nonEmpty) tx.setProperty(mv, PAvgs, avgs.mkString(","))
       if (mins.nonEmpty) tx.setProperty(mv, PMins, mins.mkString(","))
       if (maxs.nonEmpty) tx.setProperty(mv, PMaxs, maxs.mkString(","))
+      props.foreach { case (k, v) => tx.setProperty(mv, k, v) }
       tx.setProperty(mv, PVersion, tx.commitVersion.toString)
     }
   }
@@ -155,32 +165,13 @@ object Mv {
       fk: String, pk: String, filter: Option[String],
       keys: Seq[String], sums: Seq[String],
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
-      avgs: Seq[String] = Nil): Unit = {
-    requireNoOpenTx(cat, "Mv.createJoin")
-    cat.transaction { tx =>
-    require(keys.nonEmpty, "mv needs at least one group key")
-    val sumsAll = (sums ++ avgs).distinct
-    val f0 = tx.read(base)
-    val f = filter.map(f0.filter).getOrElse(f0)
-    val aggs = aggExprs(sumsAll, mins, maxs, avgs)
-    val df = withAvgs(joinFrames(f, tx.read(dim), fk, pk)
-      .groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*), avgs)
-    tx.createTable(mv, df.schema, primaryKey = keys)
-    tx.insert(mv, df)
-    tx.setProperty(mv, PBase, base)
-    tx.setProperty(mv, PKeys, keys.mkString(","))
-    tx.setProperty(mv, PSums, sumsAll.mkString(","))
-    if (avgs.nonEmpty) tx.setProperty(mv, PAvgs, avgs.mkString(","))
-    if (mins.nonEmpty) tx.setProperty(mv, PMins, mins.mkString(","))
-    if (maxs.nonEmpty) tx.setProperty(mv, PMaxs, maxs.mkString(","))
-    tx.setProperty(mv, PDim, dim)
-    tx.setProperty(mv, PFk, fk)
-    tx.setProperty(mv, PPk, pk)
-    filter.foreach(tx.setProperty(mv, PFilter, _))
-    tx.setProperty(mv, PVersion, tx.commitVersion.toString)
+      avgs: Seq[String] = Nil): Unit =
+    createWith(cat, "Mv.createJoin", mv, base, keys, sums, mins, maxs, avgs,
+      Seq(PDim -> dim, PFk -> fk, PPk -> pk) ++ filter.map(PFilter -> _)) {
+      tx =>
+        val f0 = tx.read(base)
+        joinFrames(filter.map(f0.filter).getOrElse(f0), tx.read(dim), fk, pk)
     }
-  }
 
   /** Advance `mv` to the base table's current state. Returns "noop"
     * (already fresh), "incremental" (delta applied) or "full"

@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -489,8 +489,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val st = state(table)
     val aligned = alignToSchema(df, st)
     validate(table, st, aligned, checkPkAgainstExisting = true)
-    val written =
-      writeFiles(table, applyPartitionLayout(st, aligned), st.schemaVersion)
+    val written = writeFiles(table, st, applyPartitionLayout(st, aligned))
     tables(table) = st.copy(files = st.files ++ written)
     change("tables_inserted_into", table)
   }
@@ -523,13 +522,14 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * (name-matched, order-free); extra physical columns are rejected
     * (they would silently vanish after the first CoW cycle). Rows pass
     * the same distributed validation as an insert (PK uniqueness incl.
-    * against existing rows, NOT NULL, CHECK constraints). */
+    * against existing rows, NOT NULL, CHECK constraints), and the entries
+    * get the same metadata as written files ([[fileEntries]]). */
   def addDataFiles(table: String, dir: String): Unit = {
     flushInlined(table)
     val st = state(table)
     val dirPath = new Path(dir)
-    val parts = cat.fs.globStatus(new Path(dirPath, "*.parquet")).toSeq
-    require(parts.nonEmpty, s"no parquet files under $dir")
+    require(cat.fs.globStatus(new Path(dirPath, "*.parquet")).nonEmpty,
+      s"no parquet files under $dir")
     val declared = cat.structOf(st.columns).fields
       .map(f => f.name -> f.dataType).toMap
     val physical = spark.read.parquet(dir).schema
@@ -545,60 +545,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     }
     val rows = spark.read.schema(cat.structOf(st.columns)).parquet(dir)
     validate(table, st, rows, checkPkAgainstExisting = true)
-    val withRows = parts.map { fst =>
-      val p = fst.getPath
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(p, cat.hadoopConf))
-      val n = try reader.getRecordCount finally reader.close()
-      (p, fst.getLen, n)
-    }
-    // same stats + partition-value harvest as a native write — imported
-    // files prune exactly like written ones (imports are rare and big,
-    // so no small-write gate here)
-    val statCols = {
-      val prioritized = st.columns.sortBy(c =>
-        (!st.partitionBy.contains(c.name), !st.primaryKey.contains(c.name)))
-      prioritized.filter(Stats.comparable).take(8)
-    }
-    val pvalCols = st.partitionBy
-    val MaxPvals = 64
-    val harvest: Map[String, (Map[String, ColStat], Map[String, Seq[String]])] =
-      if (statCols.isEmpty && pvalCols.isEmpty) Map.empty
-      else {
-        val aggs = statCols.flatMap { c =>
-          Seq(min(col(c.name)).cast("string").as(s"min_${c.name}"),
-            max(col(c.name)).cast("string").as(s"max_${c.name}"),
-            count(col(c.name)).as(s"cnt_${c.name}"))
-        } ++ pvalCols.map { c =>
-          collect_set(col(c).cast("string")).as(s"pv_$c")
-        } :+ count(lit(1)).as("__rows")
-        rows.groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val fileRows = r.getAs[Long]("__rows")
-            val stats = statCols.flatMap { c =>
-              val mn = r.getAs[String](s"min_${c.name}")
-              val mx = r.getAs[String](s"max_${c.name}")
-              if (mn == null || mx == null ||
-                !Stats.safeValue(c, mn) || !Stats.safeValue(c, mx)) None
-              else Some(c.name -> ColStat(mn, mx,
-                Some(fileRows - r.getAs[Long](s"cnt_${c.name}"))))
-            }.toMap
-            val pv = pvalCols.flatMap { c =>
-              val vs = r.getAs[scala.collection.Seq[String]](s"pv_$c")
-              if (vs == null || vs.size > MaxPvals) None
-              else Some(c -> vs.toSeq.sorted)
-            }.toMap
-            new java.net.URI(r.getAs[String]("__f")).getPath -> (stats, pv)
-          }.toMap
-      }
-    val entries = withRows.map { case (p, len, n) =>
-      val abs = p.toUri.getPath
-      val (stats, pv) = harvest.getOrElse(abs,
-        (Map.empty[String, ColStat], Map.empty[String, Seq[String]]))
-      FileEntry(abs, len, n, st.schemaVersion, stats, pv)
-    }
+    val entries = fileEntries(table, st, dirPath, rows.schema, external = true)
     tables(table) = st.copy(files = st.files ++ entries)
     change("tables_files_added", table)
   }
@@ -628,7 +575,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val st = state(table)
     if (st.inlined.isEmpty) return
     val df = cat.readState(st.copy(files = Nil))
-    val written = writeFiles(table, df, st.schemaVersion)
+    val written = writeFiles(table, st, df)
     tables(table) = st.copy(files = st.files ++ written, inlined = Nil)
   }
 
@@ -743,8 +690,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     if (mixed.nonEmpty) {
       val rewritten = cat.readState(st.copy(files = mixed))
         .filter(not(coalesce(inlinedPred, lit(false))))
-      val written = writeFiles(table, applyPartitionLayout(st, rewritten),
-        st.schemaVersion)
+      val written = writeFiles(table, st, applyPartitionLayout(st, rewritten))
       tables(table) = st.copy(files = untouched ++ written)
     } else {
       tables(table) = st.copy(files = untouched)
@@ -866,8 +812,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     }).drop(carry: _*)
     if (st.files.isEmpty) {
       val out = insertRows(src.limit(0))
-      val written =
-        writeFiles(table, applyPartitionLayout(st, out), st.schemaVersion)
+      val written = writeFiles(table, st, applyPartitionLayout(st, out))
       tables(table) = st.copy(files = st.files ++ written)
     } else {
       val affected =
@@ -907,8 +852,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       // merging on non-PK keys can collide with rows in kept files
       if (st.primaryKey.nonEmpty && st.primaryKey != keys)
         checkKeptKeys(table, st, kept, out, "merge")
-      val written =
-        writeFiles(table, applyPartitionLayout(st, out), st.schemaVersion)
+      val written = writeFiles(table, st, applyPartitionLayout(st, out))
       tables(table) = st.copy(files = kept ++ written)
     }
     change("tables_merged", table)
@@ -918,18 +862,9 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
   def compact(table: String, targetFileBytes: Long): Unit = {
     flushInlined(table)
     val st = state(table)
-    if (st.files.isEmpty) return
-    val total = st.files.map(_.sizeBytes).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    // partitioned tables compact WITHIN the partition layout (each value
-    // stays in one file) instead of round-robin across everything
-    val df =
-      if (st.partitionBy.isEmpty) read(table).repartition(n)
-      else read(table).repartition(n, st.partitionBy.map(col): _*)
-        .sortWithinPartitions(st.partitionBy.map(col): _*)
-    val written = writeFiles(table, df, st.schemaVersion)
-    tables(table) = st.copy(files = written)
-    change("tables_compacted", table)
+    if (st.files.nonEmpty)
+      relayout(table, st, st.files, targetFileBytes, "tables_compacted")(
+        compactLayout(st))
   }
 
   /** Selective compaction: fold ONLY files smaller than `smallBytes`
@@ -943,19 +878,18 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       smallBytes: Long): Unit = {
     flushInlined(table)
     val st = state(table)
-    val (small, big) = st.files.partition(_.sizeBytes < smallBytes)
-    if (small.size < 2) return
-    val total = small.map(_.sizeBytes).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    val smallDf = cat.readState(st.copy(files = small))
-    val df =
-      if (st.partitionBy.isEmpty) smallDf.repartition(n)
-      else smallDf.repartition(n, st.partitionBy.map(col): _*)
-        .sortWithinPartitions(st.partitionBy.map(col): _*)
-    val written = writeFiles(table, df, st.schemaVersion)
-    tables(table) = st.copy(files = big ++ written)
-    change("tables_compacted", table)
+    val small = st.files.filter(_.sizeBytes < smallBytes)
+    if (small.size >= 2)
+      relayout(table, st, small, targetFileBytes, "tables_compacted")(
+        compactLayout(st))
   }
+
+  // partitioned tables compact WITHIN the partition layout (each value
+  // stays in one file) instead of round-robin across everything
+  private def compactLayout(st: TableState)(df: DataFrame, n: Int): DataFrame =
+    if (st.partitionBy.isEmpty) df.repartition(n)
+    else df.repartition(n, st.partitionBy.map(col): _*)
+      .sortWithinPartitions(st.partitionBy.map(col): _*)
 
   /** Data-layout maintenance — the OPTIMIZE ... ZORDER/cluster analog:
     * rewrite the live files RANGE-PARTITIONED + sorted on `cols`, so each
@@ -970,15 +904,11 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val st = state(table)
     require(cols.nonEmpty && cols.forall(c => st.columns.exists(_.name == c)),
       s"cluster columns must exist on $table")
-    if (st.files.isEmpty) return
-    val total = st.files.map(_.sizeBytes).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    val key = cols.map(col)
-    val df = read(table).repartitionByRange(n, key: _*)
-      .sortWithinPartitions(key: _*)
-    val written = writeFiles(table, df, st.schemaVersion)
-    tables(table) = st.copy(files = written)
-    change("tables_clustered", table)
+    if (st.files.nonEmpty)
+      relayout(table, st, st.files, targetFileBytes, "tables_clustered") {
+        (df, n) => df.repartitionByRange(n, cols.map(col): _*)
+          .sortWithinPartitions(cols.map(col): _*)
+      }
   }
 
   /** Z-ORDER layout rewrite: multi-dimensional clustering so manifest
@@ -1080,17 +1010,29 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val zbits = (for (j <- 0 until bits; i <- 0 until k)
       yield s"(shiftleft(shiftright(__b$i, $j) & 1, ${j * k + i}))")
       .mkString(" + ")
-    val total = st.files.map(_.sizeBytes).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    val df = df0
-      .selectExpr((df0.columns.map(c => s"`$c`") ++ bucketExprs): _*)
-      .selectExpr((df0.columns.map(c => s"`$c`") :+ s"$zbits AS __zkey"): _*)
-      .repartitionByRange(n, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-    val written = writeFiles(table, df, st.schemaVersion)
-    tables(table) = st.copy(files = written)
-    change("tables_clustered", table)
+    val cs = df0.columns.map(c => s"`$c`")
+    relayout(table, st, st.files, targetFileBytes, "tables_clustered") {
+      (df, n) => df.selectExpr((cs ++ bucketExprs): _*)
+        .selectExpr((cs :+ s"$zbits AS __zkey"): _*)
+        .repartitionByRange(n, col("__zkey"))
+        .sortWithinPartitions("__zkey")
+        .drop("__zkey")
+    }
+  }
+
+  /** The rewrite tail of every layout op: read `rewrite` (files of `st`),
+    * lay it out into ceil(bytes/target) files, write them, and replace
+    * the rewritten entries. Each op supplies only its `layout`. */
+  private def relayout(table: String, st: TableState, rewrite: Seq[FileEntry],
+      targetFileBytes: Long, kind: String)(
+      layout: (DataFrame, Int) => DataFrame): Unit = {
+    val n = math.max(1,
+      math.ceil(rewrite.map(_.sizeBytes).sum.toDouble / targetFileBytes).toInt)
+    val written = writeFiles(table, st,
+      layout(cat.readState(st.copy(files = rewrite)), n))
+    val gone = rewrite.toSet
+    tables(table) = st.copy(files = st.files.filterNot(gone) ++ written)
+    change(kind, table)
   }
 
   // ------------------------------------------------------------- internals
@@ -1242,8 +1184,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
         assigned = assigned)
     if (assigned.exists(_.exists(st.primaryKey.contains)))
       checkKeptKeys(table, st, kept, rewritten, "update")
-    val written =
-      writeFiles(table, applyPartitionLayout(st, rewritten), st.schemaVersion)
+    val written = writeFiles(table, st, applyPartitionLayout(st, rewritten))
     tables(table) = st.copy(files = kept ++ written)
   }
 
@@ -1279,132 +1220,120 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
           s"duplicate key after $op: $table(${st.primaryKey.mkString(",")})")
     }
 
-  /** Stage parquet files for `df` under `<root>/<table>/data/<uuid>/`;
-    * returns manifest entries with footer-exact row counts plus per-file
-    * min/max stats for the PK columns (one distributed pass over only the
-    * new files) — the pruning index that keeps PK checks O(overlapping
-    * files) instead of O(table) at scale. */
-  private def writeFiles(table: String, df: DataFrame,
-      schemaVersion: Int): Seq[FileEntry] = {
-    val rel = s"$table/data/${java.util.UUID.randomUUID().toString.take(12)}"
-    val abs = cat.absPath(rel)
+  /** Stage parquet files for `df` under `<root>/<table>/data/<uuid>/` and
+    * return their manifest entries ([[fileEntries]]). */
+  private def writeFiles(table: String, st: TableState,
+      df: DataFrame): Seq[FileEntry] = {
+    val abs = cat.absPath(
+      s"$table/data/${java.util.UUID.randomUUID().toString.take(12)}")
     stagedDirs += abs
     df.write.mode("errorifexists").parquet(abs.toString)
-    // harvest min/max for every comparable column (PK first, capped at 8
-    // to bound manifest size) — powers PK-check pruning AND readRange.
-    // Tiny writes skip the harvest pass: missing stats degrade to
-    // scanning (always correct), and a small file is cheap to scan —
-    // this keeps single-row appends at one Spark job, not two.
-    // footer-exact row counts first (cheap metadata reads); the row total
-    // gates the stats pass below
-    val rootQ = cat.fs.makeQualified(new Path(cat.root)).toUri.getPath
-      .stripSuffix("/")
-    // stat columns decided up front: when every one is footer-exact
-    // (integral/date) the min/max harvest comes from the SAME footer
-    // open that yields the row count — zero extra Spark jobs (the
-    // Iceberg write-time stats model; the distributed harvest pass
-    // below only remains for string/double stat columns and partition
-    // value sets, whose footer stats aren't trustworthy-exact)
-    val statColsPre = tables.get(table).map { st =>
-      val prioritized = st.columns.sortBy(c =>
-        (!st.partitionBy.contains(c.name), !st.primaryKey.contains(c.name)))
-      prioritized.filter(Stats.comparable).take(8)
-    }.getOrElse(Nil)
-    val pvalColsPre = tables.get(table).map(_.partitionBy).getOrElse(Nil)
-    val footerSafe = pvalColsPre.isEmpty && statColsPre.nonEmpty &&
-      statColsPre.forall(Stats.footerExact)
-    val footerStats = mutable.Map[String, Map[String, ColStat]]()
-    val allParts = cat.fs.globStatus(new Path(abs, "*.parquet")).toSeq.map { fst =>
-      val p = fst.getPath
+    fileEntries(table, st, abs, df.schema, external = false)
+  }
+
+  /** The one path from the parquet files under `dir` to manifest
+    * entries, for files the table wrote and files it imports alike:
+    * footer-exact row counts, per-file min/max stats and partition value
+    * sets (the pruning index that keeps PK checks and range reads
+    * O(overlapping files) instead of O(table)), plus the opt-in
+    * `index.bloom` / `index.ndv` sidecars. `external` (imported) files
+    * keep their absolute paths, are never deleted, and are harvested at
+    * any size; the table's own files get root-relative paths. */
+  private def fileEntries(table: String, st: TableState, dir: Path,
+      schema: StructType, external: Boolean): Seq[FileEntry] = {
+    // stat columns: partition columns first (their stats ARE the
+    // partition index), then PK, then the rest, capped at 8 to bound
+    // manifest size. When every one is footer-exact (integral/date) the
+    // min/max come from the SAME footer open that yields the row count —
+    // zero Spark jobs (the Iceberg write-time stats model); string/double
+    // stats and partition value sets need the harvest aggregate below.
+    val statCols = st.columns.sortBy(c =>
+      (!st.partitionBy.contains(c.name), !st.primaryKey.contains(c.name)))
+      .filter(Stats.comparable).take(8)
+    val pvalCols = st.partitionBy
+    val footerSafe = pvalCols.isEmpty && statCols.nonEmpty &&
+      statCols.forall(Stats.footerExact)
+    val scanned = cat.fs.globStatus(new Path(dir, "*.parquet")).toSeq.map { fst =>
       val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(p, cat.hadoopConf))
-      val rows = try {
-        if (footerSafe) footerStats(p.toUri.getPath) =
-          Stats.fromFooter(reader.getFooter, statColsPre)
-        reader.getRecordCount
-      } finally reader.close()
-      (p, fst.getLen, rows)
+        HadoopInputFile.fromPath(fst.getPath, cat.hadoopConf))
+      try (fst.getPath, fst.getLen, reader.getRecordCount,
+        if (footerSafe) Stats.fromFooter(reader.getFooter, statCols)
+        else Map.empty[String, ColStat])
+      finally reader.close()
     }
-    // empty shuffle buckets (partition-layout writes with fewer values
-    // than partitions) still emit 0-row files — drop them: pure manifest
-    // and scan bloat. Keep one only when the WHOLE write is empty so the
-    // table state stays representable.
+    // zero-row files (empty shuffle buckets of a partition-layout write)
+    // are pure manifest and scan bloat: their entries drop, and the files
+    // the table wrote itself are deleted. One stays only when the WHOLE
+    // set is empty so the table state stays representable.
     val parts =
-      if (allParts.forall(_._3 == 0L)) allParts.take(1)
+      if (scanned.forall(_._3 == 0L)) scanned.take(1)
       else {
-        allParts.filter(_._3 == 0L).foreach(e => cat.fs.delete(e._1, false))
-        allParts.filter(_._3 > 0L)
+        if (!external)
+          scanned.filter(_._3 == 0L).foreach(e => cat.fs.delete(e._1, false))
+        scanned.filter(_._3 > 0L)
       }
-    // partition columns first (their stats ARE the partition index),
-    // then PK, then the rest, capped to bound manifest size; partition
-    // columns additionally harvest their per-file distinct VALUE SET
-    // (capped — a partition-pure or lightly-collided file has a
-    // handful; past the cap the set is dropped and pruning falls back
-    // to min/max, never to wrong answers)
-    val statCols = statColsPre
-    val pvalCols = pvalColsPre
+    // tiny writes skip stats and sidecars: missing stats degrade to
+    // scanning (always correct) and a small file is cheap to scan — this
+    // keeps single-row appends at one Spark job. Imports are rare and
+    // big, so they harvest at any size.
+    val harvested = external || parts.map(_._3).sum >= 64
+    def indexCol(prop: String): Option[String] =
+      st.props.get(prop).filter(c => st.columns.exists(_.name == c))
+    val ndvCol = indexCol("index.ndv")
+    val bloomCol = indexCol("index.bloom")
+    lazy val files = spark.read.schema(schema).parquet(dir.toString)
+    // ONE aggregate per file harvests what the footer cannot give:
+    // string/double min/max + null counts, partition value sets (capped:
+    // past MaxPvals the set drops and pruning falls back to min/max) and
+    // the `index.ndv` HLL sketch, which rides the MANIFEST itself
+    // (base64, ~1-4 KB/file) so LakeCatalog.approxDistinct folds with
+    // zero file reads.
     val MaxPvals = 64
-    val harvest: Map[String, (Map[String, ColStat], Map[String, Seq[String]])] =
-      if ((statCols.isEmpty && pvalCols.isEmpty) || parts.map(_._3).sum < 64)
-        Map.empty
-      else if (footerSafe)
-        parts.map { case (p, _, _) =>
-          val key = p.toUri.getPath
-          key -> (footerStats.getOrElse(key, Map.empty[String, ColStat]),
-            Map.empty[String, Seq[String]])
-        }.toMap
-      else {
-        val aggs = statCols.flatMap { c =>
-          Seq(min(col(c.name)).cast("string").as(s"min_${c.name}"),
-            max(col(c.name)).cast("string").as(s"max_${c.name}"),
-            count(col(c.name)).as(s"cnt_${c.name}"))
-        } ++ pvalCols.map { c =>
-          collect_set(col(c).cast("string")).as(s"pv_$c")
-        } :+ count(lit(1)).as("__rows")
-        spark.read.parquet(abs.toString)
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val fileRows = r.getAs[Long]("__rows")
-            val stats = statCols.flatMap { c =>
-              val mn = r.getAs[String](s"min_${c.name}")
-              val mx = r.getAs[String](s"max_${c.name}")
-              if (mn == null || mx == null ||
-                !Stats.safeValue(c, mn) || !Stats.safeValue(c, mx)) None
-              else Some(c.name -> ColStat(mn, mx,
-                Some(fileRows - r.getAs[Long](s"cnt_${c.name}"))))
-            }.toMap
-            val pv = pvalCols.flatMap { c =>
-              val vs = r.getAs[scala.collection.Seq[String]](s"pv_$c")
-              if (vs == null || vs.size > MaxPvals) None
-              else Some(c -> vs.toSeq.sorted)
-            }.toMap
-            new java.net.URI(r.getAs[String]("__f")).getPath -> (stats, pv)
-          }.toMap
-      }
-    // scheme-free path components on both sides: URI renderings differ
-    // (file:/ vs file:///) and a failed stripPrefix would silently store
-    // an absolute path
-    // opt-in BLOOM index sidecars (table property `index.bloom` = column):
-    // one extra distributed pass builds a per-file bloom over the indexed
-    // column, written NEXT TO the data under <table>/index/ — the filter
-    // pointer rides the manifest, the bytes don't. Skipped for tiny
-    // writes (same gate as stats).
-    val bloomCol = tables.get(table).flatMap(_.props.get("index.bloom"))
-      .filter(c => tables.get(table).exists(_.columns.exists(_.name == c)))
+    val aggs = (if (footerSafe) Nil else statCols).flatMap { c =>
+      Seq(min(col(c.name)).cast("string").as(s"min_${c.name}"),
+        max(col(c.name)).cast("string").as(s"max_${c.name}"),
+        count(col(c.name)).as(s"cnt_${c.name}"))
+    } ++ pvalCols.map(c => collect_set(col(c).cast("string")).as(s"pv_$c")) ++
+      ndvCol.map(c => expr(s"hll_sketch_agg(`$c`)").as("__sk")) :+
+      count(lit(1)).as("__rows")
+    val harvest: Map[String, Row] =
+      if (!harvested || aggs.size == 1) Map.empty
+      else files.groupBy(input_file_name().as("__f"))
+        .agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => new java.net.URI(r.getAs[String]("__f")).getPath -> r).toMap
+    def harvestedStats(r: Row): Map[String, ColStat] = statCols.flatMap { c =>
+      val mn = r.getAs[String](s"min_${c.name}")
+      val mx = r.getAs[String](s"max_${c.name}")
+      if (mn == null || mx == null ||
+        !Stats.safeValue(c, mn) || !Stats.safeValue(c, mx)) None
+      else Some(c.name -> ColStat(mn, mx,
+        Some(r.getAs[Long]("__rows") - r.getAs[Long](s"cnt_${c.name}"))))
+    }.toMap
+    def pvals(r: Row): Map[String, Seq[String]] = pvalCols.flatMap { c =>
+      val vs = r.getAs[scala.collection.Seq[String]](s"pv_$c")
+      if (vs == null || vs.size > MaxPvals) None
+      else Some(c -> vs.toSeq.sorted)
+    }.toMap
+    def sketch(r: Row): Map[String, String] = ndvCol.flatMap(c =>
+      Option(r.getAs[Array[Byte]]("__sk"))
+        .map(sk => c -> java.util.Base64.getEncoder.encodeToString(sk))).toMap
+    // opt-in BLOOM index sidecars (`index.bloom` = column): one more
+    // distributed pass builds a per-file bloom over the indexed column,
+    // written under <table>/index/ — the filter pointer rides the
+    // manifest, the bytes don't.
     val bloomsByPath: Map[String, Map[String, String]] =
-      if (bloomCol.isEmpty || parts.map(_._3).sum < 64) Map.empty
+      if (bloomCol.isEmpty || !harvested) Map.empty
       else {
         import org.apache.spark.util.sketch.BloomFilter
         val c = bloomCol.get
-        val idxRel = s"$table/index/${new Path(rel).getName}"
+        val idxRel =
+          s"$table/index/${java.util.UUID.randomUUID().toString.take(12)}"
         val idxAbs = cat.absPath(idxRel)
         stagedDirs += idxAbs
         cat.fs.mkdirs(idxAbs)
         val rowsByPath = parts.map(p => (p._1.toUri.getPath, p._3)).toMap
         val bRows = spark.sparkContext.broadcast(rowsByPath)
-        val merged = spark.read.parquet(abs.toString)
+        val merged = files
           .select(input_file_name().as("__f"), col(c).cast("string").as("k"))
           .filter(col("k").isNotNull)
           .rdd.mapPartitions { it =>
@@ -1435,32 +1364,21 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
           p -> Map(c -> sideRel)
         }.toMap
       }
-    // opt-in per-file HLL NDV sketches (table property `index.ndv`):
-    // mergeable distinct-count state rides the MANIFEST itself (base64,
-    // ~1-4 KB/file) so table-level approx NDV folds with zero file reads
-    // — see LakeCatalog.approxDistinct. Same tiny-write gate as stats.
-    val ndvCol = tables.get(table).flatMap(_.props.get("index.ndv"))
-      .filter(c => tables.get(table).exists(_.columns.exists(_.name == c)))
-    val ndvByPath: Map[String, Map[String, String]] =
-      if (ndvCol.isEmpty || parts.map(_._3).sum < 64) Map.empty
-      else {
-        val c = ndvCol.get
-        spark.read.parquet(abs.toString)
-          .groupBy(input_file_name().as("__f"))
-          .agg(expr(s"hll_sketch_agg(`$c`)").as("__sk"))
-          .collect()
-          .flatMap { r =>
-            Option(r.getAs[Array[Byte]]("__sk")).map(sk =>
-              new java.net.URI(r.getString(0)).getPath ->
-                Map(c -> java.util.Base64.getEncoder.encodeToString(sk)))
-          }.toMap
-      }
-    parts.map { case (p, len, rows) =>
-      val relPath = p.toUri.getPath.stripPrefix(rootQ).stripPrefix("/")
-      val (stats, pv) = harvest.getOrElse(p.toUri.getPath, (Map.empty[String, ColStat], Map.empty[String, Seq[String]]))
-      FileEntry(relPath, len, rows, schemaVersion, stats, pv,
-        bloomsByPath.getOrElse(p.toUri.getPath, Map.empty),
-        ndv = ndvByPath.getOrElse(p.toUri.getPath, Map.empty))
+    // scheme-free path components on both sides: URI renderings differ
+    // (file:/ vs file:///) and a failed stripPrefix would silently store
+    // an absolute path
+    val rootQ = cat.fs.makeQualified(new Path(cat.root)).toUri.getPath
+      .stripSuffix("/")
+    parts.map { case (p, len, rows, footer) =>
+      val key = p.toUri.getPath
+      val r = harvest.get(key)
+      FileEntry(if (external) key else key.stripPrefix(rootQ).stripPrefix("/"),
+        len, rows, st.schemaVersion,
+        stats = if (footerSafe && harvested) footer
+          else r.map(harvestedStats).getOrElse(Map.empty),
+        pvals = r.map(pvals).getOrElse(Map.empty),
+        blooms = bloomsByPath.getOrElse(key, Map.empty),
+        ndv = r.map(sketch).getOrElse(Map.empty))
     }
   }
 
@@ -1483,18 +1401,21 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     }
   }
 
-  /** Fold this commit's expiry/stream-tag changes into the prior
-    * aggregates, and compact the header tail: beyond
-    * [[Manifest.HeaderRetain]] headers, EXPIRED versions' headers drop
-    * (their facts live in the aggregates; live versions keep theirs).
-    * The expiry ledger stays in BOUNDED floor+exceptions form — the
-    * fold costs O(this vacuum's range), the stored state O(pins). */
-  private case class Aggs(floor: Long, live: Set[Long],
-      seen: Map[String, Long], residual: Set[String],
-      hist: Seq[SnapHeader], hFloor: Long, minDroppedTs: Long,
-      breaks: Map[String, Long])
-
-  private def foldAggs(prior: Snapshot, header: SnapHeader): Aggs = {
+  /** The commit document for version `id` over `prior`: this commit's
+    * changes, the given tables (stamped), views and refs, and the prior
+    * aggregates with this commit's expiry/stream-tag changes folded in.
+    * The header tail is compacted: beyond [[Manifest.HeaderRetain]]
+    * headers, EXPIRED versions' headers drop (their facts live in the
+    * aggregates; live versions keep theirs). The expiry ledger stays in
+    * BOUNDED floor+exceptions form — the fold costs O(this vacuum's
+    * range), the stored state O(pins). */
+  private def snapshotOf(prior: Snapshot, id: Long,
+      ts: Map[String, TableState], viewDefs: Map[String, String],
+      refs: Map[String, Long]): Snapshot = {
+    val now = System.currentTimeMillis()
+    val sv = prior.schemaVersion + ddlCount
+    val ch = changes.map { case (k, v) => k -> v.toSeq }.toMap
+    val header = SnapHeader(id, now, sv, ch)
     val (f0, live0, s0, r0) = prior.aggsForBuild
     val vs = changes.getOrElse("snapshots_expired", Nil)
       .iterator.map(_.toLong).toSet
@@ -1543,34 +1464,28 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       if (prior.aggV >= 2) prior.identityBreaks else prior.identityBreaksEff
     val breaks = Manifest.IdentityBreakKinds.iterator
       .flatMap(k => changes.getOrElse(k, Nil))
-      .foldLeft(breaks0)((m, n) => m.updated(n, header.snapshotId))
-    Aggs(floor, live, seen, residual, hist, hFloor, minDroppedTs, breaks)
-  }
-
-  private[lake] def buildSnapshot(id: Long): Snapshot = {
-    val ts = System.currentTimeMillis()
-    val sv = base.schemaVersion + ddlCount
-    val ch = changes.map { case (k, v) => k -> v.toSeq }.toMap
-    val header = SnapHeader(id, ts, sv, ch)
-    val a = foldAggs(base, header)
+      .foldLeft(breaks0)((m, n) => m.updated(n, id))
     Snapshot(
       snapshotId = id,
-      timestampMs = ts,
+      timestampMs = now,
       schemaVersion = sv,
       changes = ch,
-      tables = stampVersions(tables.toMap, id),
-      views = views.toMap,
-      history = a.hist,
-      refs = tagRefs.toMap,
+      tables = stampVersions(ts, id),
+      views = viewDefs,
+      history = hist,
+      refs = refs,
       aggV = 2,
-      expiredFloor = a.floor,
-      liveBelow = a.live,
-      txnSeen = a.seen,
-      tagsResidual = a.residual,
-      historyFloor = a.hFloor,
-      minDroppedTsMs = a.minDroppedTs,
-      identityBreaks = a.breaks)
+      expiredFloor = floor,
+      liveBelow = live,
+      txnSeen = seen,
+      tagsResidual = residual,
+      historyFloor = hFloor,
+      minDroppedTsMs = minDroppedTs,
+      identityBreaks = breaks)
   }
+
+  private[lake] def buildSnapshot(id: Long): Snapshot =
+    snapshotOf(base, id, tables.toMap, views.toMap, tagRefs.toMap)
 
   // ------------------------------------------------------ commit rebase
 
@@ -1590,9 +1505,6 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * must have validated disjointness (isRebaseSafe + every concurrent
     * commit table-scoped and disjoint from conflictNames). */
   private[lake] def buildSnapshotOn(nb: Snapshot, id: Long): Snapshot = {
-    val ts = System.currentTimeMillis()
-    val sv = nb.schemaVersion + ddlCount
-    val ch = changes.map { case (k, v) => k -> v.toSeq }.toMap
     val overlaid = touchedNames.foldLeft(nb.tables) { (acc, n) =>
       (tables.get(n), base.tables.get(n)) match {
         case (Some(st), b) if !b.contains(st) => acc + (n -> st)
@@ -1600,26 +1512,8 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
         case _ => acc // read-only touch
       }
     }
-    val header = SnapHeader(id, ts, sv, ch)
     // rebase-safe txns carry no expiry/tag changes (rebaseUnsafe would
     // have forced the re-run path), so folding against nb is exact
-    val a = foldAggs(nb, header)
-    Snapshot(
-      snapshotId = id,
-      timestampMs = ts,
-      schemaVersion = sv,
-      changes = ch,
-      tables = stampVersions(overlaid, id),
-      views = nb.views,
-      history = a.hist,
-      refs = nb.refs,
-      aggV = 2,
-      expiredFloor = a.floor,
-      liveBelow = a.live,
-      txnSeen = a.seen,
-      tagsResidual = a.residual,
-      historyFloor = a.hFloor,
-      minDroppedTsMs = a.minDroppedTs,
-      identityBreaks = a.breaks)
+    snapshotOf(nb, id, overlaid, nb.views, nb.refs)
   }
 }

@@ -230,14 +230,15 @@ object LakeScenarios {
     // L17 — CDC APPLY: the consumer half of the change feed. A source
     // table evolves through insert/update/delete commits; a replica in a
     // SECOND catalog is kept in sync by consuming tableChanges() version
-    // by version and applying each step as ONE atomic commit (pure
-    // deletes remove their keys, inserts + update_postimages land as a
-    // MERGE). The judged output proves replica == source with a
+    // by version and applying each step through the shared net-change
+    // apply (LakeCatalog.applyChangesStreamBatch) as ONE copy-on-write
+    // merge: deletes remove their keys, inserts + update_postimages
+    // upsert. The judged output proves replica == source with a
     // symmetric difference of 0 plus independently recomputed row/sum
     // profiles. Scale shape: each apply step handles the step's DIFF,
-    // never the table, and the delete keys stay a DataFrame end to end —
-    // Tx.delete(keys) anti-joins inside the CoW rewrite, so a version
-    // deleting millions of keys never materializes them on the driver.
+    // never the table, and the change rows stay a DataFrame end to end,
+    // so a version deleting millions of keys never materializes them on
+    // the driver.
     QDef("l17_cdc_apply",
       (s, d) => {
         import s.implicits._
@@ -259,27 +260,8 @@ object LakeScenarios {
           (9992L, "new_2", 20.0), (9993L, "new_3", 30.0))
           .toDF("id", "name", "bal"))                            // v5
         (1L until src.currentVersion).foreach { v =>
-          // one version's change feed feeds three consumers (the routing
-          // decisions and the apply) — persist it and read its
-          // composition in ONE action instead of replaying the
-          // two-version exceptAll plan per consumer
-          val ch = src.tableChanges("c", v, v + 1).persist()
-          try {
-            val kinds = ch.groupBy("change_type").count()
-              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-            val hasDel = kinds.getOrElse("delete", 0L) > 0L
-            val hasUps = kinds.getOrElse("insert", 0L) +
-              kinds.getOrElse("update_postimage", 0L) > 0L
-            val upserts = ch
-              .filter(col("change_type").isin("insert", "update_postimage"))
-              .drop("change_type")
-            val delKeys =
-              ch.filter(col("change_type") === "delete").select("id")
-            dst.transaction { tx =>
-              if (hasDel) tx.delete("c", delKeys, Seq("id"))
-              if (hasUps) tx.merge("c", upserts, Seq("id"))
-            }
-          } finally ch.unpersist(blocking = false)
+          dst.applyChangesStreamBatch("c", src.tableChanges("c", v, v + 1)
+            .withColumn("_commit_version", lit(v + 1)), Seq("id"), v, "l17")
         }
         val a = src.read("c")
         val b = dst.read("c")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.lake.{ConstraintViolation, LakeCatalog, Manifest}
+import graft.lake.{ConstraintViolation, LakeCatalog, Manifest, MergeClauses}
+import org.apache.spark.graftshim.ListenerDrain
 
 /** LakeCatalog core semantics: transactions, rollback, time travel,
   * copy-on-write DML, schema evolution — re-enacting the reference demos
@@ -698,6 +699,33 @@ class LakeSpec extends SparkSpec {
     cat.rollbackTransaction()
     assert(cat.read("t").count() === 3L)
     assert(cat.currentVersion === v + 1)
+  }
+
+  test("mergeClauses, createView, addCheck and dropCheck stage into an open interactive transaction") {
+    val cat = newLake()
+    cat.createTable("t", StructType(Seq(
+      StructField("id", IntegerType), StructField("v", IntegerType))),
+      primaryKey = Seq("id"))
+    cat.insert("t", Seq((1, 10), (2, 20)).toDF("id", "v"))
+    cat.addCheck("t", "non_neg", "v >= 0")
+    val v = cat.currentVersion
+    cat.beginTransaction()
+    cat.mergeClauses("t", Seq((2, 25), (3, 30)).toDF("id", "v"), Seq("id"),
+      MergeClauses(matchedUpdate = Some("true"), notMatchedInsert = Some("true")))
+    cat.createView("big", "SELECT id FROM t WHERE v > 20")
+    cat.addCheck("t", "lt_100", "v < 100")
+    cat.dropCheck("t", "non_neg")
+    assert(cat.currentVersion === v, "nothing publishes before COMMIT")
+    cat.commitTransaction()
+    assert(cat.currentVersion === v + 1)
+    assert(cat.read("t").orderBy("id").as[(Int, Int)].collect().toSeq ===
+      Seq((1, 10), (2, 25), (3, 30)))
+    assert(cat.execute("SELECT count(*) AS n FROM big").as[Long].head() === 2L)
+    assert(cat.current.tables("t").props.keySet.filter(_.startsWith("check.")) ===
+      Set("check.lt_100"))
+    intercept[ConstraintViolation] {
+      cat.insert("t", Seq((4, 100)).toDF("id", "v"))
+    }
   }
 
   test("router: column-list INSERT and PARTITIONED BY create") {
@@ -2197,6 +2225,60 @@ class LakeSpec extends SparkSpec {
     cat.vacuum(keepLast = 1, orphanGraceMs = 0L)
     assert(extFile.isFile, "vacuum never deletes files outside the lake root")
     assert(cat.read("inventory").count() === 6)
+  }
+
+  test("addDataFiles: imported entries carry the bloom and NDV sidecars; external zero-row files stay on disk") {
+    val cat = newLake()
+    cat.createTable("t", StructType(Seq(
+      StructField("id", LongType), StructField("k", LongType))),
+      primaryKey = Seq("id"))
+    cat.bloomIndex("t", "id")
+    cat.ndvIndex("t", "k")
+    // four interleaved files (each spans the FULL id range, so min/max
+    // cannot prune a point lookup — only the bloom can) and an empty one
+    val ext = tmpDir("ext_idx")
+    (0 until 4).foreach(r => spark.range(1000)
+      .selectExpr(s"id * 4 + $r AS id", "id % 97 AS k")
+      .coalesce(1).write.mode("append").parquet(ext))
+    spark.range(0).selectExpr("id", "id AS k")
+      .coalesce(1).write.mode("append").parquet(ext)
+    val onDisk = () => new java.io.File(ext).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    val before = onDisk()
+    assert(before.size === 5)
+    cat.addDataFiles("t", ext)
+    val files = cat.current.tables("t").files
+    assert(files.forall(_.blooms.contains("id")))
+    assert(files.forall(_.ndv.contains("k")))
+    assert(files.size === 4, "the zero-row file gets no entry")
+    assert(files.forall(e => e.rowCount === 1000L && e.stats.contains("id")))
+    // 2001 = 4*500+1 lives in the r = 1 file only
+    assert(cat.pointScanFiles("t", "id", "2001") < files.size)
+    assert(cat.readPoint("t", "id", "2001").count() === 1)
+    val (est, metaOnly) = cat.approxDistinct("t", "k")
+    assert(metaOnly && math.abs(est - 97L) <= 5L)
+    assert(onDisk() === before, "external files, empty ones included, are never deleted")
+  }
+
+  test("an NDV-indexed insert sketches inside the stats aggregate: no extra Spark job") {
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType)))
+    val batch = spark.range(1000).selectExpr("id", "cast(id % 50 AS string) AS s")
+    val sc = spark.sparkContext
+    // the string stat column keeps the insert off the footer-only path,
+    // so its stats come from the per-file harvest aggregate
+    def insertJobs(ndv: Boolean): Int = {
+      val cat = newLake()
+      cat.createTable("t", schema, primaryKey = Seq("id"))
+      if (ndv) cat.ndvIndex("t", "s")
+      val group = s"ndv-insert-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, group)
+      try cat.insert("t", batch) finally sc.clearJobGroup()
+      ListenerDrain.drain(sc)
+      if (ndv) assert(cat.current.tables("t").files.forall(_.ndv.contains("s")))
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    assert(insertJobs(ndv = true) === insertJobs(ndv = false))
   }
 
   test("rename/truncate/dropView: metadata-only DDL verbs, time travel intact") {
