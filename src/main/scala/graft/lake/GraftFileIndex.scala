@@ -180,25 +180,10 @@ final class GraftFileIndex(
       case None => true
     }
 
-  /** Point predicate: range ∩ partition value set ∩ bloom sidecar —
-    * the [[LakeCatalog.readPoint]] candidate test, per pushed filter. */
+  /** Point predicate: [[Stats.mayContain]] per pushed filter. */
   private def point(e: FileEntry, attr: Expression, value: Any): Boolean =
-    colOf(attr) match {
-      case Some(c) => render(c, value) match {
-        case Some(v) =>
-          Stats.overlaps(e.stats.get(c.name), c, v, v) &&
-            (e.pvals.get(c.name) match {
-              case Some(vs) if vs.nonEmpty => vs.contains(v)
-              case _ => true
-            }) &&
-            (e.blooms.get(c.name) match {
-              case Some(rel) => bloomHit(rel, v)
-              case None => true
-            })
-        case None => true
-      }
-      case None => true
-    }
+    colOf(attr).forall(c =>
+      render(c, value).forall(Stats.mayContain(e, c, _, bloomHit)))
 
   /** a <(=) v — the file may match iff its MIN does not exceed v.
     * Non-strict comparison on purpose: equality at the bound keeps the

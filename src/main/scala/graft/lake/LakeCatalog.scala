@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
   UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier,
   UnresolvedProcedure, UnresolvedRelation, UnresolvedTable,
   UnresolvedTableOrView, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo,
-  Expression, Literal, PrimaryKeyConstraint, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast,
+  EqualTo, EvalMode, Expression, Literal, PrimaryKeyConstraint,
+  SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Aggregate,
   AlterColumnSpec, AlterColumns, Assignment, Call, Command,
@@ -247,7 +248,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         // INITIAL plan instead of waiting for AQE repair
         val index = new GraftFileIndex(
           fs.makeQualified(new Path(root)), entries, st.columnsAt(v),
-          absPath, (rel, value) => loadBloom(rel).mightContainString(value))
+          absPath, bloomHit)
         val raw0 = org.apache.spark.sql.graftshim.RelationStats.manifestScan(
           spark, index, structOf(st.columnsAt(v)),
           manifestCatalogStats(st, v, entries))
@@ -333,7 +334,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * overlap. Values are the column's string form (numeric types compare
     * numerically). */
   def readRange(table: String, colName: String, lo: String, hi: String): DataFrame = {
-    val st = stateOf(current, table)
+    val st = liveState(table)
     val c = columnOf(st, table, colName)
     val pruned =
       if (!Stats.comparable(c)) st
@@ -346,7 +347,8 @@ class LakeCatalog(val spark: SparkSession, val root: String,
 
   /** Partition-key equality scan with EXACT file pruning: only files
     * whose recorded partition-value set contains every requested value
-    * are scanned (files without a recorded set are conservatively kept).
+    * are scanned (files without a recorded set fall back to min/max and
+    * bloom sidecars — [[Stats.mayContain]] — else are kept).
     * With the write path hash-clustering on the declared partition
     * columns, a partition read touches one file per batch — hive-style
     * partition pruning at file granularity, driven by manifest metadata
@@ -354,18 +356,13 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * as [[readRange]]); the row-level filter stays on top so pruning can
     * only skip work, never change answers. */
   def readPartition(table: String, eq: Map[String, String]): DataFrame = {
-    val st = stateOf(current, table)
+    val st = liveState(table)
     val typed = eq.map { case (cn, v) =>
       (columnOf(st, table, cn), v)
     }
+    val keys = typed.map { case (c, v) => (c, statKey(c, v)) }
     val pruned = st.copy(files = st.files.filter(f =>
-      typed.forall { case (c, v) =>
-        f.pvals.get(c.name) match {
-          case Some(vs) if vs.nonEmpty => vs.contains(v)
-          case _ => // no value set recorded: fall back to min/max, then keep
-            Stats.overlaps(f.stats.get(c.name), c, v, v)
-        }
-      }))
+      keys.forall { case (c, k) => Stats.mayContain(f, c, k, bloomHit) }))
     typed.foldLeft(readState(pruned)) { case (df, (c, v)) =>
       df.filter(col(c.name) === lit(v).cast(DataType.fromJson(c.typeJson)))
     }
@@ -378,12 +375,23 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.util.sketch.BloomFilter]()
 
-  private def loadBloom(rel: String): org.apache.spark.util.sketch.BloomFilter =
+  /** May the bloom sidecar at `rel` (relative to the root) hold `value`? */
+  private[lake] def bloomHit(rel: String, value: String): Boolean =
     bloomCache.computeIfAbsent(absPath(rel).toUri.getPath, _ => {
       val in = fs.open(absPath(rel))
       try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
       finally in.close()
-    })
+    }).mightContainString(value)
+
+  /** `v` in the encoding the write path harvests min/max, partition
+    * value sets and bloom keys in: Spark's `cast(cast(v AS type) AS
+    * string)` ("7" on a double column is "7.0", "07" on a long is "7").
+    * Probe the manifest with this, never with the caller's raw string.
+    * A value that does not cast to the column's type stays as given. */
+  private[lake] def statKey(c: ColumnDef, v: String): String =
+    Option(Cast(Cast(Literal(v), DataType.fromJson(c.typeJson),
+      Some(spark.sessionState.conf.sessionLocalTimeZone), EvalMode.TRY),
+      StringType).eval()).fold(v)(_.toString)
 
   /** Enable per-file HLL NDV sketches on `colName`: every subsequent
     * write or import stores a mergeable distinct-count sketch in the
@@ -402,7 +410,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * FALLS BACK to an exact distributed COUNT(DISTINCT) — correct,
     * never silently stale. */
   def approxDistinct(table: String, colName: String): (Long, Boolean) = {
-    val st = stateOf(current, table)
+    val st = liveState(table)
     require(st.columns.exists(_.name == colName),
       s"no such column: $table.$colName")
     val metaOk = st.files.nonEmpty && st.inlined.isEmpty &&
@@ -439,7 +447,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * stay candidates (correct, never wrong); the exact row filter runs
     * on top of whatever survives. */
   def readPoint(table: String, colName: String, value: String): DataFrame = {
-    val st = stateOf(current, table)
+    val st = liveState(table)
     val c = columnOf(st, table, colName)
     readState(st.copy(files = pointCandidates(st, c, value)))
       .filter(col(colName) === lit(value).cast(DataType.fromJson(c.typeJson)))
@@ -448,23 +456,16 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   /** Number of files a [[readPoint]] on (colName = value) would scan —
     * the pruning observable the bloom-index contract is judged on. */
   def pointScanFiles(table: String, colName: String, value: String): Long = {
-    val st = stateOf(current, table)
+    val st = liveState(table)
     val c = columnOf(st, table, colName)
     pointCandidates(st, c, value).size.toLong
   }
 
   private def pointCandidates(st: TableState, c: ColumnDef,
-      value: String): Seq[FileEntry] =
-    st.files.filter(f =>
-      Stats.overlaps(f.stats.get(c.name), c, value, value) &&
-        (f.pvals.get(c.name) match {
-          case Some(vs) if vs.nonEmpty => vs.contains(value)
-          case _ => true
-        }) &&
-        (f.blooms.get(c.name) match {
-          case Some(rel) => loadBloom(rel).mightContainString(value)
-          case None => true
-        }))
+      value: String): Seq[FileEntry] = {
+    val k = statKey(c, value)
+    st.files.filter(Stats.mayContain(_, c, k, bloomHit))
+  }
 
   /** Time-travel scan by timestamp: newest snapshot at or before `tsMs`
     * (S3, `AT (TIMESTAMP => ts)` — ref demos/02_time_travel/demo.py:196). */
@@ -494,11 +495,8 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     // earliest dropped header's timestamp, no dropped header can be the
     // true target — the retained headers are complete for the range, so
     // a resolution onto an old tag-PINNED live snapshot is exact and
-    // stays allowed (minDroppedTsMs == 0 with a non-zero floor means a
-    // pre-aggV2 engine dropped headers without recording timestamps —
-    // unknown, keep refusing).
-    if (v < head.historyFloor &&
-        !(head.minDroppedTsMs > 0L && tsMs < head.minDroppedTsMs))
+    // stays allowed.
+    if (v < head.historyFloor && tsMs >= head.minDroppedTsMs)
       throw new NoSuchElementException(
         s"timestamp $tsMs resolves into vacuumed history (below " +
           s"v${head.historyFloor}) — the snapshot it names has been " +
@@ -1033,7 +1031,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * `meta_only` column reports the path taken, so callers (and the
     * correctness gate) can pin when the optimization actually fires. */
   def statsAgg(table: String, cols: Seq[String] = Nil): DataFrame = {
-    val st = stateOf(current, table)
+    val st = liveState(table)
     val defs = cols.map(columnOf(st, table, _))
     val curV = st.schemaVersion
     // COUNT alone is ALWAYS metadata-exact (footer row counts, DV

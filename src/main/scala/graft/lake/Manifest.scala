@@ -37,15 +37,19 @@ import java.util.concurrent.atomic.AtomicLong
   *  - Every snapshot document embeds the HEADER history (id, timestamp,
   *    schema version, change summary per version — O(1) bytes each), so
   *    `snapshots()` / `versionAsOf` resolve from ONE document read
-  *    instead of loading every version. The tail is COMPACTED (round
-  *    15): headers of expired versions beyond [[Manifest.HeaderRetain]]
-  *    drop at commit build, their expiry/stream-tag facts carried by
+  *    instead of loading every version. The tail is COMPACTED: headers
+  *    of expired versions beyond [[Manifest.HeaderRetain]] drop at
+  *    commit build, their expiry/stream-tag facts carried by
   *    eager O(current-state) aggregates on the snapshot — bounding
   *    document size and per-commit metadata writes at O(live + retain)
   *    instead of O(all versions ever) (measured unbounded at 154
   *    ms/commit by 4k commits before the fix).
   *  - Blob contents are immutable → cached process-wide; `LakeCatalog`
   *    additionally caches whole snapshots by version.
+  *  - ONE document format ([[Manifest.Format]]): the stored document is
+  *    the [[Snapshot]] itself, serialized directly with each table's
+  *    `files` left to the blobs; a document below the format is refused
+  *    at load, never read through a fallback.
   *
   * WHERE the documents live is the [[ManifestStore]] seam, with two
   * backends — the reference's catalog-portability story
@@ -148,17 +152,15 @@ final case class TableState(
     partitionBy: Seq[String] = Nil,      // declared partition (clustering) columns
     props: Map[String, String] = Map.empty, // table properties (Iceberg-style)
     // Catalog version of the last commit that changed (or renamed over)
-    // THIS table's logical data — stamped at commit build. Lets the
-    // change feed compute its offset from table state alone (O(1), no
-    // history scan), which is what keeps streams correct after the
-    // header tail is compacted (see Snapshot.history). 0 = unknown
-    // (manifest written before this field existed -> consumers fall
-    // back to a header scan).
+    // THIS table's logical data — stamped at commit build, starting with
+    // the commit that created it. Lets the change feed compute its offset
+    // from table state alone (O(1), no history scan), which is what keeps
+    // streams correct after the header tail is compacted (see
+    // Snapshot.history).
     lastDataVersion: Long = 0L,
     // Catalog version of the last NON-APPEND commit (CoW DML, layout
     // rewrite, schema change) — the append-only streaming contract's
-    // state-level witness, immune to header compaction. 0 = never /
-    // unknown.
+    // state-level witness, immune to header compaction. 0 = never.
     lastNonAppendVersion: Long = 0L) {
   def columns: Seq[ColumnDef] = schemas(schemaVersion.toString)
   def columnsAt(v: Int): Seq[ColumnDef] = schemas(v.toString)
@@ -181,19 +183,15 @@ final case class Snapshot(
     views: Map[String, String],           // view name -> SQL text
     history: Seq[SnapHeader] = Nil,       // headers; compacted tail, see below
     refs: Map[String, Long] = Map.empty,  // tag name -> snapshot id
-    // ---- EAGER AGGREGATES (round 15) -------------------------------
-    // The header history used to be the only source of the expiry
-    // ledger and stream-batch idempotence tags, forcing every document
-    // to embed ALL O(versions) headers forever (measured: 154 ms/commit
-    // and 592 KB docs at 4k commits, growing without bound). These
-    // fields carry the same facts as O(current-state) aggregates,
-    // folded forward at every commit build, so headers become purely
-    // informational and the tail can be compacted: a header older than
-    // [[Manifest.HeaderRetain]] whose version is EXPIRED is dropped
-    // (live versions always keep theirs — snapshots()/time travel list
-    // only live versions). `aggV` versions the scheme: 0 = document
-    // written before the aggregates existed -> readers fold them from
-    // the (then-complete) history once at load.
+    // ---- EAGER AGGREGATES -------------------------------------------
+    // The expiry ledger and stream-batch idempotence tags are carried as
+    // O(current-state) aggregates, folded forward at every commit build,
+    // so headers are purely informational and the tail can be compacted:
+    // a header older than [[Manifest.HeaderRetain]] whose version is
+    // EXPIRED is dropped (live versions always keep theirs —
+    // snapshots()/time travel list only live versions). `aggV` is the
+    // document format; [[ManifestStore.load]] refuses any document below
+    // [[Manifest.Format]].
     aggV: Int = 0,
     // Expiry ledger in BOUNDED form: vacuum expires contiguous prefixes
     // (1 until cutoff, minus tag pins), so the ledger is a FLOOR plus
@@ -219,11 +217,8 @@ final case class Snapshot(
     // unaffected (expiry is checked by number).
     historyFloor: Long = 0L,
     // Earliest timestamp among ALL headers ever dropped by tail
-    // compaction. 0 with historyFloor == 0 means nothing was dropped;
-    // 0 with historyFloor > 0 means "unknown" (headers were dropped by
-    // a pre-aggV2 engine that didn't record timestamps) and timestamp
-    // resolution below the floor stays refused. Folded monotonically at
-    // commit build — O(1) state.
+    // compaction; non-zero exactly when `historyFloor` is. Folded
+    // monotonically at commit build — O(1) state.
     minDroppedTsMs: Long = 0L,
     // Per-NAME last identity-break version: the catalog version of the
     // most recent commit that REPLACED, RENAMED (either direction) or
@@ -232,79 +227,25 @@ final case class Snapshot(
     // id-aligned diffs across v are garbage, and this stamp keeps the
     // guard exact even after the breaking commit's header is compacted
     // away (TableState stamps can't carry it — a drop leaves no state).
-    // Bounded by distinct names ever broken, not by versions. Empty on
-    // documents written before aggV 2 — consumers keep their retained-
-    // header scan as the fallback signal.
+    // Bounded by distinct names ever broken, not by versions.
     identityBreaks: Map[String, Long] = Map.empty) {
-
-  // (floor, liveBelow, txnSeen, tagsResidual) derived once for legacy
-  // (pre-aggregate) documents from their complete header history
-  private lazy val legacyAggs: (Long, Set[Long], Map[String, Long], Set[String]) = {
-    val tags = history.iterator
-      .flatMap(_.changes.getOrElse("stream_batches", Nil)).toSeq
-    val exact = history.iterator
-      .flatMap(_.changes.getOrElse("stream_batches_exact", Nil))
-    val (seen, residual) = Manifest.foldTags(Map.empty, exact.toSet, tags)
-    val expired = history.iterator
-      .flatMap(_.changes.getOrElse("snapshots_expired", Nil))
-      .map(_.toLong).toSet
-    val floor = if (expired.isEmpty) 0L else expired.max
-    ((floor, (1L to floor).filterNot(expired).toSet, seen, residual))
-  }
-
-  /** Last identity-break version per name, as knowable from this
-    * document: the aggV-2 stamp when present, merged with a fold over
-    * the retained headers (the only signal older documents carry). */
-  lazy val identityBreaksEff: Map[String, Long] = {
-    val fromHeaders = history.iterator.flatMap(h =>
-      Manifest.IdentityBreakKinds.iterator
-        .flatMap(k => h.changes.getOrElse(k, Nil))
-        .map(_ -> h.snapshotId))
-      .foldLeft(Map.empty[String, Long]) { case (m, (n, v)) =>
-        if (m.getOrElse(n, 0L) < v) m.updated(n, v) else m
-      }
-    fromHeaders.foldLeft(identityBreaks) { case (m, (n, v)) =>
-      if (m.getOrElse(n, 0L) < v) m.updated(n, v) else m
-    }
-  }
 
   /** Is `v` expired (vacuumed)? The ledger rides the OCC snapshot chain
     * (not a live store listing), so tag() and expiry serialize instead
     * of racing. O(1). */
-  def versionExpired(v: Long): Boolean = {
-    val (floor, live) =
-      if (aggV >= 1) (expiredFloor, liveBelow)
-      else (legacyAggs._1, legacyAggs._2)
-    v >= 1L && v <= floor && !live.contains(v)
-  }
-
-  /** Materialized expiry ledger — O(floor); prefer [[versionExpired]]
-    * in engine paths. */
-  def expiredVersions: Set[Long] = {
-    val (floor, live) =
-      if (aggV >= 1) (expiredFloor, liveBelow)
-      else (legacyAggs._1, legacyAggs._2)
-    (1L to floor).filterNot(live.contains).toSet
-  }
+  def versionExpired(v: Long): Boolean =
+    v >= 1L && v <= expiredFloor && !liveBelow.contains(v)
 
   /** Has `tag` been committed? High-water semantics for numeric-suffix
     * tags written by the engine's monotone paths (see `txnSeen`);
     * exact-match for user tags (which land in the residual set whatever
     * their shape — so a numeric-suffix tag is also looked up there). */
-  def streamTagApplied(tag: String): Boolean = {
-    val (seen, residual) =
-      if (aggV >= 1) (txnSeen, tagsResidual)
-      else (legacyAggs._3, legacyAggs._4)
+  def streamTagApplied(tag: String): Boolean =
     Manifest.splitTag(tag) match {
       case Some((prefix, id)) =>
-        seen.get(prefix).exists(id <= _) || residual.contains(tag)
-      case None => residual.contains(tag)
+        txnSeen.get(prefix).exists(id <= _) || tagsResidual.contains(tag)
+      case None => tagsResidual.contains(tag)
     }
-  }
-
-  private[lake] def aggsForBuild: (Long, Set[Long], Map[String, Long], Set[String]) =
-    if (aggV >= 1) (expiredFloor, liveBelow, txnSeen, tagsResidual)
-    else legacyAggs
 }
 
 /** Typed comparisons over the string-encoded file stats. Only types whose
@@ -369,7 +310,7 @@ object Stats {
 
   /** Can [lo,hi] of an incoming batch intersect this file's range?
     * Missing stats — or any value outside the safely-ordered encoding
-    * (legacy manifests, exotic probe dates) — must assume yes. */
+    * (untrusted footers, exotic probe dates) — must assume yes. */
   def overlaps(st: Option[ColStat], c: ColumnDef, lo: String, hi: String): Boolean =
     st match {
       case Some(ColStat(mn, mx, _)) =>
@@ -378,6 +319,18 @@ object Stats {
         else cmp(c, mn, hi) <= 0 && cmp(c, lo, mx) <= 0
       case None => true
     }
+
+  /** May file `e` hold value `v` of column `c`? The one point-membership
+    * rule: the min/max range, the partition value set and the bloom
+    * sidecar (probed through `bloomHit(sidecar, v)`) must each admit `v`.
+    * Every missing piece admits it — a file is only skipped on proof.
+    * The value sets and blooms match strings exactly, so `v` must be in
+    * the harvest's `cast(col AS string)` form ([[LakeCatalog.statKey]]). */
+  def mayContain(e: FileEntry, c: ColumnDef, v: String,
+      bloomHit: (String, String) => Boolean): Boolean =
+    overlaps(e.stats.get(c.name), c, v, v) &&
+      e.pvals.get(c.name).forall(vs => vs.isEmpty || vs.contains(v)) &&
+      e.blooms.get(c.name).forall(bloomHit(_, v))
 
   /** Safe typed comparison of two stat-encoded values: None when either
     * side is outside the safely-ordered encoding (then callers must NOT
@@ -467,7 +420,13 @@ object Stats {
 }
 
 object Manifest {
-  private[lake] implicit val fmts: Formats = Serialization.formats(NoTypeHints)
+  /** The stored document IS the snapshot; a table's `files` live in its
+    * blobs, so they are never written into the document. */
+  private[lake] implicit val fmts: Formats = Serialization.formats(NoTypeHints) +
+    FieldSerializer[TableState](FieldSerializer.ignore("files"))
+
+  /** The document format every commit writes (`Snapshot.aggV`). */
+  val Format = 2
 
   /** Fold a table's blob list into one when it grows past this — bounds
     * read fan-out at O(threshold) blob fetches per table. */
@@ -492,9 +451,12 @@ object Manifest {
   private[lake] val StampKinds: Set[String] =
     DataChangeKinds + "tables_renamed"
 
-  /** Kinds that break the APPEND-ONLY streaming contract (CoW DML,
-    * layout rewrites, schema changes) — stamped into
-    * TableState.lastNonAppendVersion. */
+  /** Kinds that break the APPEND-ONLY streaming contract — stamped into
+    * TableState.lastNonAppendVersion. CoW DML and layout rewrites
+    * re-stage surviving rows as new files (a file stream would replay
+    * them), MoR deletes leave tombstoned rows a raw file source cannot
+    * subtract, and schema changes make the capture schema wrong for
+    * files written before the change. */
   val NonAppendKinds: Set[String] = Set(
     "tables_updated", "tables_deleted_from", "tables_merged",
     "tables_replaced", "tables_restored", "tables_compacted",
@@ -504,8 +466,7 @@ object Manifest {
     * column ids; a rename in either direction re-points what the name
     * denotes; a drop ends it outright. Folded into
     * [[Snapshot.identityBreaks]] at commit build so change-feed guards
-    * survive header-tail compaction (the streaming layer aliases this
-    * set — it is defined here because the stamp is lake state). */
+    * survive header-tail compaction. */
   val IdentityBreakKinds: Seq[String] = Seq(
     "tables_replaced", "tables_renamed", "tables_renamed_from",
     "tables_dropped")
@@ -538,38 +499,6 @@ object Manifest {
   }
 
   val empty: Snapshot = Snapshot(0L, 0L, 0L, Map.empty, Map.empty, Map.empty)
-
-  /** Stored snapshot document: TableState minus `files` (those live in
-    * the referenced blobs). */
-  private[lake] final case class TableDoc(
-      schemaVersion: Int,
-      schemas: Map[String, Seq[ColumnDef]],
-      primaryKey: Seq[String],
-      notNull: Seq[String],
-      nextColId: Int,
-      inlined: Seq[InlineBatch],
-      blobs: Seq[String],
-      partitionBy: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty,
-      lastDataVersion: Long = 0L,
-      lastNonAppendVersion: Long = 0L)
-  private[lake] final case class SnapshotDoc(
-      snapshotId: Long,
-      timestampMs: Long,
-      schemaVersion: Long,
-      changes: Map[String, Seq[String]],
-      tables: Map[String, TableDoc],
-      views: Map[String, String],
-      history: Seq[SnapHeader],
-      refs: Map[String, Long] = Map.empty,
-      aggV: Int = 0,
-      expiredFloor: Long = 0L,
-      liveBelow: Seq[Long] = Nil,
-      txnSeen: Map[String, Long] = Map.empty,
-      tagsResidual: Seq[String] = Nil,
-      historyFloor: Long = 0L,
-      minDroppedTsMs: Long = 0L,
-      identityBreaks: Map[String, Long] = Map.empty)
 
   /** Immutable blob contents, cached process-wide; keys are namespaced by
     * store location. Entries are dropped when vacuum deletes the blob. */
@@ -634,7 +563,10 @@ trait ManifestStore {
   final def load(v: Long): Snapshot = {
     if (v == 0L) return Manifest.empty
     manifestFileReads.incrementAndGet()
-    val doc = JsonMethods.parse(readDoc(v)).extract[SnapshotDoc]
+    val doc = JsonMethods.parse(readDoc(v)).extract[Snapshot]
+    if (doc.aggV < Format) throw new IllegalStateException(
+      s"manifest v$v has document format ${doc.aggV}: it predates the " +
+        s"current format $Format and cannot be read")
     // Cold loads parse every blob's JSON — measured ~12 µs/entry
     // single-threaded (12 s for a 10⁶-entry table, BASELINE.md), and
     // a long-lived table spreads its entries over MANY per-commit
@@ -651,17 +583,8 @@ trait ManifestStore {
         Future.sequence(cold.map(b => Future { loadBlob(b); () })),
         Duration.Inf)
     }
-    val tables = doc.tables.map { case (name, td) =>
-      name -> TableState(td.schemaVersion, td.schemas,
-        td.blobs.flatMap(loadBlob), td.primaryKey, td.notNull,
-        td.nextColId, td.inlined, td.blobs, td.partitionBy, td.props,
-        td.lastDataVersion, td.lastNonAppendVersion)
-    }
-    Snapshot(doc.snapshotId, doc.timestampMs, doc.schemaVersion, doc.changes,
-      tables, doc.views, doc.history, doc.refs, doc.aggV,
-      doc.expiredFloor, doc.liveBelow.toSet, doc.txnSeen,
-      doc.tagsResidual.toSet, doc.historyFloor, doc.minDroppedTsMs,
-      doc.identityBreaks)
+    doc.copy(tables = doc.tables.map { case (name, st) =>
+      name -> st.copy(files = st.blobs.flatMap(loadBlob)) })
   }
 
   /** Atomically publish `s` as version `v`, deltaing each table's file
@@ -693,17 +616,7 @@ trait ManifestStore {
       name -> st.copy(blobs = blobs)
     }
     val stored = s.copy(tables = storedTables)
-    val doc = SnapshotDoc(stored.snapshotId, stored.timestampMs,
-      stored.schemaVersion, stored.changes,
-      storedTables.map { case (n, st) =>
-        n -> TableDoc(st.schemaVersion, st.schemas, st.primaryKey,
-          st.notNull, st.nextColId, st.inlined, st.blobs, st.partitionBy,
-          st.props, st.lastDataVersion, st.lastNonAppendVersion)
-      }, stored.views, stored.history, stored.refs, stored.aggV,
-      stored.expiredFloor, stored.liveBelow.toSeq.sorted, stored.txnSeen,
-      stored.tagsResidual.toSeq.sorted, stored.historyFloor,
-      stored.minDroppedTsMs, stored.identityBreaks)
-    if (writeDocExclusive(v, Serialization.write(doc))) Some(stored)
+    if (writeDocExclusive(v, Serialization.write(stored))) Some(stored)
     else {
       written.foreach(dropBlob)
       None

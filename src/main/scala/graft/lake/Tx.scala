@@ -443,10 +443,9 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * deletion happens AFTER the commit, in [[LakeCatalog.vacuum]]. */
   private[lake] def expireSnapshots(keepLast: Int): Seq[Long] = {
     val cutoff = math.max(1L, base.snapshotId - keepLast + 1)
-    val already = base.expiredVersions
     val pinned = tagRefs.values.toSet
     val es = (1L until cutoff)
-      .filterNot(v => already.contains(v) || pinned.contains(v))
+      .filterNot(v => base.versionExpired(v) || pinned.contains(v))
     es.foreach(v => change("snapshots_expired", v.toString))
     es
   }
@@ -671,19 +670,14 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val typed = eq.map { case (cn, v) =>
       val c = st.columns.find(_.name == cn).getOrElse(
         throw new NoSuchElementException(s"no such column: $table.$cn"))
-      (c, v)
+      (c, cat.statKey(c, v))
     }
     // drop: every recorded value set is exactly the probed value
     val (dropped, kept0) = st.files.partition(f =>
       typed.forall { case (c, v) => f.pvals.get(c.name).contains(Seq(v)) })
     // among the kept, only files that might CONTAIN the tuple rewrite
     val (mixed, untouched) = kept0.partition(f =>
-      typed.forall { case (c, v) =>
-        f.pvals.get(c.name) match {
-          case Some(vs) if vs.nonEmpty => vs.contains(v)
-          case _ => Stats.overlaps(f.stats.get(c.name), c, v, v)
-        }
-      })
+      typed.forall { case (c, v) => Stats.mayContain(f, c, v, cat.bloomHit) })
     val inlinedPred = typed.map { case (c, v) =>
       col(c.name) === lit(v).cast(DataType.fromJson(c.typeJson))
     }.reduce(_ && _)
@@ -1416,20 +1410,20 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val sv = prior.schemaVersion + ddlCount
     val ch = changes.map { case (k, v) => k -> v.toSeq }.toMap
     val header = SnapHeader(id, now, sv, ch)
-    val (f0, live0, s0, r0) = prior.aggsForBuild
+    val f0 = prior.expiredFloor
     val vs = changes.getOrElse("snapshots_expired", Nil)
       .iterator.map(_.toLong).toSet
     val (floor, live) =
-      if (vs.isEmpty) (f0, live0)
+      if (vs.isEmpty) (f0, prior.liveBelow)
       else {
         val nf = math.max(f0, vs.max)
         // versions newly under the floor that this vacuum did NOT
         // expire (tag pins, and anything already expired is <= f0)
         val newLive = ((f0 + 1) to nf).filterNot(vs.contains)
-        (nf, (live0 ++ newLive) -- vs)
+        (nf, (prior.liveBelow ++ newLive) -- vs)
       }
     def expired(v: Long): Boolean = v >= 1L && v <= floor && !live.contains(v)
-    val (seen, residual0) = Manifest.foldTags(s0, r0,
+    val (seen, residual0) = Manifest.foldTags(prior.txnSeen, prior.tagsResidual,
       changes.getOrElse("stream_batches", Nil).toSeq)
     // user tags keep exact-match semantics whatever their shape — they
     // fold straight into the residual set, never the high-water map
@@ -1445,26 +1439,14 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
           dropped.foldLeft(prior.historyFloor)((f, h) => math.max(f, h.snapshotId)),
           if (dropped.isEmpty) 0L else dropped.map(_.timestampMs).min)
       }
-    // earliest dropped-header timestamp, folded monotonically; sticky
-    // "unknown" (0) when headers were already dropped WITHOUT recorded
-    // timestamps — a floor with no minDroppedTs means a pre-aggV2
-    // engine dropped them, and that unknown must survive every later
-    // commit (not just the upgrade commit: prior.aggV is already 2 one
-    // commit after the upgrade, but the unrecorded drops are still in
-    // the lineage). Timestamp time travel below the floor then stays
-    // refused (conservative, never wrong).
+    // earliest dropped-header timestamp, folded monotonically (0 = none)
     val minDroppedTs =
-      if (prior.historyFloor > 0L && prior.minDroppedTsMs == 0L) 0L
-      else if (droppedTs == 0L) prior.minDroppedTsMs
+      if (droppedTs == 0L) prior.minDroppedTsMs
       else if (prior.minDroppedTsMs == 0L) droppedTs
       else math.min(prior.minDroppedTsMs, droppedTs)
-    // per-name identity-break stamp; a pre-aggV2 prior seeds from its
-    // retained headers once (everything knowable at that point)
-    val breaks0 =
-      if (prior.aggV >= 2) prior.identityBreaks else prior.identityBreaksEff
     val breaks = Manifest.IdentityBreakKinds.iterator
       .flatMap(k => changes.getOrElse(k, Nil))
-      .foldLeft(breaks0)((m, n) => m.updated(n, id))
+      .foldLeft(prior.identityBreaks)((m, n) => m.updated(n, id))
     Snapshot(
       snapshotId = id,
       timestampMs = now,
@@ -1474,7 +1456,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       views = viewDefs,
       history = hist,
       refs = refs,
-      aggV = 2,
+      aggV = Manifest.Format,
       expiredFloor = floor,
       liveBelow = live,
       txnSeen = seen,

@@ -55,21 +55,9 @@ object CatalogSync {
 
   /** The last committed sync point for `streamId`, read from the
     * destination catalog's stream-tag high-water marks (O(1), immune to
-    * header-tail compaction; falls back to the legacy header fold for
-    * pre-aggregate manifests inside streamTagApplied's machinery).
-    * 0 = never synced. */
-  def lastOffset(dstCat: LakeCatalog, streamId: String): Long = {
-    val head = dstCat.current
-    val prefix = s"catsync:$streamId"
-    val seen =
-      if (head.aggV >= 1) head.txnSeen
-      else { // legacy manifest: fold retained headers once
-        val tags = head.history.iterator
-          .flatMap(_.changes.getOrElse("stream_batches", Nil)).toSeq
-        graft.lake.Manifest.foldTags(Map.empty, Set.empty, tags)._1
-      }
-    seen.getOrElse(prefix, 0L)
-  }
+    * header-tail compaction). 0 = never synced. */
+  def lastOffset(dstCat: LakeCatalog, streamId: String): Long =
+    dstCat.current.txnSeen.getOrElse(s"catsync:$streamId", 0L)
 
   /** One incremental multi-table pass: replicate every `tables` mapping
     * from `srcCat` into `dstCat`, aligned on source commit versions.

@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftshim.StreamFrame
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types._
 
-import graft.lake.{LakeCatalog, SnapHeader, Snapshot}
+import graft.lake.{LakeCatalog, Manifest, SnapHeader, Snapshot}
 
 /** The table CHANGE FEED as a streaming source — streaming
   * `table_changes()` (ref utils/ducklake_utils.py:65-78 exposes the batch
@@ -66,40 +66,6 @@ object ChangeFeed {
     * Backfill-sized batches above it keep their write parallelism. */
   private[graft] val SmallNetRows = 100000L
 
-  /** Commit kinds that can change a table's LOGICAL rows. Layout-only
-    * kinds (`tables_compacted`, `tables_clustered`) and pure DDL
-    * (`tables_altered`, `tables_renamed`) are excluded: their logical
-    * delta under the stream's anchor projection is empty by construction
-    * (compaction/clustering rewrite bytes, not rows; an add/drop/rename
-    * doesn't change what existing rows read as through the anchor
-    * schema), so reading them would be paying O(rewritten bytes) to emit
-    * nothing. (Defined in the lake layer — the same set drives the
-    * per-table lastDataVersion stamp the offset reads.) */
-  private[streaming] val DataKinds: Set[String] =
-    graft.lake.Manifest.DataChangeKinds
-
-  /** Kinds that advance the stream's OFFSET: the data kinds plus the
-    * identity-breaking ones the guard must surface promptly. The offset
-    * is the last version TOUCHING the table, not the catalog head —
-    * snapshots are catalog-level, so a head offset would re-trigger on
-    * every unrelated commit; worse, a consumer LANDING its batches in
-    * the same catalog (the l50/CDC shape) would chase its own sink
-    * commits forever. */
-  private[streaming] val OffsetKinds = DataKinds ++ Set(
-    "tables_replaced", "tables_renamed", "tables_renamed_from",
-    "tables_dropped")
-
-  /** Commit kinds that END the streamed table's column identity: a
-    * replace restarts column ids; a rename-AWAY (`tables_renamed_from`)
-    * or a rename-over of this name means the name no longer denotes the
-    * anchored table; a drop ends the feed outright. Id-anchored alignment
-    * across any of these would be silent garbage, so getBatch refuses.
-    * Defined in the lake layer (the per-name break version is stamped
-    * into [[graft.lake.Snapshot.identityBreaks]] at commit build, so the
-    * guard survives header-tail compaction). */
-  private[streaming] val IdentityBreakKinds: Seq[String] =
-    graft.lake.Manifest.IdentityBreakKinds
-
   /** Stable stream identity derived from a checkpoint location: batch
     * ids are scoped to the checkpoint, so its (normalized) path is the
     * natural namespace for idempotence tags. Hashed to keep tags short
@@ -131,10 +97,14 @@ object ChangeFeed {
       StructField(TypeCol, StringType, nullable = false) :+
       StructField(VersionCol, LongType, nullable = false))
 
-  /** Does header `h` record a change to the DATA of any of `tables`? */
+  /** Does header `h` record a change to the DATA of any of `tables`?
+    * Layout-only kinds (compaction, clustering) and pure DDL are not data
+    * kinds: their logical delta under the stream's anchor projection is
+    * empty by construction, so reading them would pay O(rewritten bytes)
+    * to emit nothing. */
   private[streaming] def changesData(h: SnapHeader, tables: Seq[String]): Boolean =
     h.changes.exists { case (k, ts) =>
-      DataKinds.contains(k) && ts.exists(tables.contains) }
+      Manifest.DataChangeKinds.contains(k) && ts.exists(tables.contains) }
 
   /** The change windows of `tables` over `(fromV, toV]`, as the ordered
     * end versions of consecutive windows (the first opens at `fromV`,
@@ -149,9 +119,9 @@ object ChangeFeed {
     * alignment across it would be meaningless): the refusal names the
     * first break and ends with `remedy(breaks)`, the table's break
     * versions in order. Two signals, both consulted: the retained-header
-    * scan (complete for windows younger than tail compaction, and the
-    * only signal in pre-aggV2 manifests) and the per-name break stamp
-    * (exact even after the breaking commit's header was compacted away).
+    * scan (every break inside a window younger than tail compaction) and
+    * the per-name break stamp (only the LAST break of each name, but
+    * exact even after the breaking commit's header was compacted away).
     *
     * Expired interior commits merge into the next live window (the diff
     * between live snapshots carries their net effect exactly). TRAILING
@@ -170,8 +140,8 @@ object ChangeFeed {
     val window = head.history
       .filter(h => h.snapshotId > fromV && h.snapshotId <= toV)
     for (t <- tables) {
-      val headerBreaks = window.filter(h => IdentityBreakKinds.exists(k =>
-        h.changes.getOrElse(k, Nil).contains(t))).map(_.snapshotId)
+      val headerBreaks = window.filter(h => Manifest.IdentityBreakKinds
+        .exists(k => h.changes.getOrElse(k, Nil).contains(t))).map(_.snapshotId)
       val stampedBreak = head.identityBreaks.get(t)
         .filter(bv => bv > fromV && bv <= toV)
       val breaks = (headerBreaks ++ stampedBreak).distinct.sorted
@@ -307,28 +277,24 @@ class ChangeFeedSource(spark: SparkSession, parameters: Map[String, String])
 
   /** One manifest-head read; no Spark jobs and no O(versions) scan: the
     * raw offset is the table's `lastDataVersion` stamp (written at every
-    * data/rename-over commit build — immune to header-tail compaction; a
-    * pre-stamp manifest falls back to the retained-header scan). A table
-    * that is GONE at head (dropped or renamed away) forces one batch at
-    * the head version so getBatch refuses loudly instead of idling. If
-    * vacuum has expired the stamped version itself (quiescent table,
-    * later commits all elsewhere), it is clamped UP to the next live
-    * version — the diff between live snapshots carries the same net
-    * rows, and without the clamp every stream over the table (including
-    * a brand-new checkpoint) would hit getBatch's expiry check forever
-    * on a fully-readable table. */
+    * data/rename-over commit build, creation included — immune to
+    * header-tail compaction). The offset is the last version TOUCHING the
+    * table, not the catalog head: snapshots are catalog-level, so a head
+    * offset would re-trigger on every unrelated commit, and a consumer
+    * landing its batches in the same catalog would chase its own sink
+    * commits forever. A table that is GONE at head (dropped or renamed
+    * away) forces one batch at the head version so getBatch refuses
+    * loudly instead of idling. If vacuum has expired the stamped
+    * version itself (quiescent table, later commits all elsewhere), it
+    * is clamped UP to the next live version — the diff between live
+    * snapshots carries the same net rows, and without the clamp every
+    * stream over the table (including a brand-new checkpoint) would hit
+    * getBatch's expiry check forever on a fully-readable table. */
   override def getOffset: Option[Offset] = {
     val head = cat.current
-    val last = head.tables.get(table) match {
-      case None => head.snapshotId // gone: force a loud refusal
-      case Some(st) if st.lastDataVersion > 0L => st.lastDataVersion
-      case Some(_) => // manifest predates the stamp: header scan
-        head.history.reverseIterator
-          .find(h => h.changes.exists { case (k, ts) =>
-            OffsetKinds.contains(k) && ts.contains(table) })
-          .map(_.snapshotId).getOrElse(0L)
-    }
-    val v = if (last == 0L || !head.versionExpired(last)) last
+    // gone: force a loud refusal
+    val last = head.tables.get(table).fold(head.snapshotId)(_.lastDataVersion)
+    val v = if (!head.versionExpired(last)) last
       else head.history.iterator.map(_.snapshotId)
         .find(s => s >= last && !head.versionExpired(s))
         .getOrElse(head.snapshotId)

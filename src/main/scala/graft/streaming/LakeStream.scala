@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.lake.LakeCatalog
+import graft.lake.{LakeCatalog, Manifest}
 
 /** The lake as a STREAMING SOURCE — the other half of the streaming
   * lakehouse loop (EventStream.sinkToLake is stream→lake; this is
@@ -39,14 +39,6 @@ object LakeStream {
     * filter/project/derive — append mode) and land each micro-batch as an
     * atomic, batch-id-deduped commit into `dst`. Re-running with the same
     * checkpoint and no new upstream commits is a no-op. */
-  /** Change kinds that break the append-only streaming contract: CoW DML
-    * and layout rewrites re-stage surviving rows as new files (the stream
-    * would replay them), MoR deletes leave tombstoned rows the raw file
-    * source cannot subtract, and schema changes make the capture schema
-    * wrong for files written before the change. */
-  private val NonAppendKinds: Set[String] =
-    graft.lake.Manifest.NonAppendKinds
-
   def replicate(cat: LakeCatalog, src: String, dst: String,
       transform: DataFrame => DataFrame, checkpointDir: String,
       streamId: String = ""): Unit = {
@@ -59,7 +51,8 @@ object LakeStream {
     val stamped = head.tables.get(src).map(_.lastNonAppendVersion)
       .filter(_ > 0L)
     val violations = head.history.flatMap { h =>
-      NonAppendKinds.filter(k => h.changes.getOrElse(k, Nil).contains(src))
+      Manifest.NonAppendKinds
+        .filter(k => h.changes.getOrElse(k, Nil).contains(src))
         .map(k => s"v${h.snapshotId}:$k")
     } ++ stamped.filterNot(v =>
       head.history.exists(_.snapshotId == v)).map(v => s"v$v:<compacted>")

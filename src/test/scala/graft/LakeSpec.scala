@@ -680,6 +680,27 @@ class LakeSpec extends SparkSpec {
     assert(cat.read("t").select("id").as[Int].collect().toSet === Set(1, 2, 9))
   }
 
+  test("metadata readers see the open interactive transaction's staged writes") {
+    val cat = newLake()
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr("id", "id * 10 AS k")
+    cat.createTableAs("t", rows(1, 101))
+    cat.execute("BEGIN")
+    cat.insert("t", rows(101, 201)) // staged: ids 101..200
+    assert(cat.read("t").count() === 200L)
+    val agg = cat.statsAgg("t", Seq("id")).head()
+    assert(agg.getAs[Long]("n") === 200L && agg.getAs[Long]("max_id") === 200L)
+    assert(agg.getAs[Boolean]("meta_only"), "fixture: the metadata path")
+    assert(cat.readRange("t", "id", "95", "105").count() === 11L)
+    assert(cat.readPoint("t", "id", "150").count() === 1L)
+    assert(cat.pointScanFiles("t", "id", "150") >= 1L)
+    assert(cat.readPartition("t", Map("k" -> "1500")).count() === 1L)
+    assert(cat.approxDistinct("t", "id")._1 === 200L)
+    cat.execute("ROLLBACK")
+    assert(cat.statsAgg("t").head().getAs[Long]("n") === 100L)
+    assert(cat.readPoint("t", "id", "150").count() === 0L)
+    assert(cat.pointScanFiles("t", "id", "150") === 0L)
+  }
+
   test("Scala mutators stage into an open interactive transaction") {
     val cat = newLake()
     cat.createTableAs("t", Seq(1, 2).toDF("id"))
@@ -914,7 +935,7 @@ class LakeSpec extends SparkSpec {
       // if the tag landed, its snapshot must be fully readable
       cat.current.refs.get(s"pin-$round").foreach { v =>
         assert(cat.readAt("t", v).count() >= 0)
-        assert(!cat.current.expiredVersions.contains(v),
+        assert(!cat.current.versionExpired(v),
           s"round $round: tagged v$v is in the expiry ledger")
       }
     }
@@ -2190,6 +2211,42 @@ class LakeSpec extends SparkSpec {
       cat.read("t").orderBy("id").collect().toSeq)
   }
 
+  test("partition and point probes key the manifest in Spark's cast-string form") {
+    val cat = newLake()
+    // >= 64 rows per write, so the harvest records sidecars and value sets
+    val ids = spark.range(1, 201)
+    cat.createTable("t", StructType(Seq(
+      StructField("x", DoubleType), StructField("n", LongType))))
+    cat.bloomIndex("t", "x")
+    cat.insert("t", ids.selectExpr("cast(id AS double) AS x", "id AS n"))
+    cat.createTable("u", StructType(Seq(StructField("n", LongType))))
+    cat.bloomIndex("u", "n")
+    cat.insert("u", ids.toDF("n"))
+    cat.createTable("p", StructType(Seq(
+      StructField("n", LongType), StructField("d", LongType))),
+      partitionBy = Seq("d"))
+    cat.insert("p", ids.selectExpr("id AS n", "id % 5 AS d"))
+    assert(cat.current.tables("t").files.forall(_.blooms.contains("x")) &&
+      cat.current.tables("u").files.forall(_.blooms.contains("n")) &&
+      cat.current.tables("p").files.forall(_.pvals.contains("d")),
+      "fixture: bloom sidecars and partition value sets recorded")
+    // the manifest holds "7.0", "7" and "2"; the probes "7", "07" and
+    // "02" must still find the rows the typed row filter matches
+    assert(cat.readPartition("t", Map("x" -> "7")).count() === 1L)
+    assert(cat.readPoint("t", "x", "7").count() === 1L)
+    assert(cat.readPartition("u", Map("n" -> "07")).count() === 1L)
+    assert(cat.pointScanFiles("u", "n", "07") ===
+      cat.pointScanFiles("u", "n", "7"))
+    assert(cat.readPartition("p", Map("d" -> "02")).count() === 40L)
+    cat.deletePartitions("t", Map("x" -> "7"))
+    cat.deletePartitions("u", Map("n" -> "07"))
+    cat.deletePartitions("p", Map("d" -> "02"))
+    def ns(t: String) = cat.read(t).select("n").as[Long].collect().sorted.toSeq
+    assert(ns("t") === (1L to 200L).filterNot(_ == 7L))
+    assert(ns("u") === (1L to 200L).filterNot(_ == 7L))
+    assert(ns("p") === (1L to 200L).filterNot(_ % 5 == 2L))
+  }
+
   test("addDataFiles: zero-copy import, CoW rewrite drops the reference, vacuum never touches external files") {
     val cat = newLake()
     cat.createTable("inventory", invSchema, primaryKey = Seq("product_id"))
@@ -2475,8 +2532,8 @@ class LakeSpec extends SparkSpec {
       "a live (tag-pinned) version keeps its header")
     assert(head.historyFloor > tagV, "compaction recorded its floor")
     // the expiry ledger is COMPLETE despite dropped headers
-    assert(head.expiredVersions.size > 250)
-    assert(head.expiredVersions.contains(tagV - 1))
+    assert((1L to head.snapshotId).count(head.versionExpired) > 250)
+    assert(head.versionExpired(tagV - 1))
     // exactly-once dedup survives: a replay of the early batch is a no-op
     assert(!cat.insertStreamBatch("g", spark.range(0, 1).toDF("id"), 0L))
     // timestamp time travel into the dropped range refuses LOUDLY
@@ -2639,48 +2696,93 @@ class LakeSpec extends SparkSpec {
     assert(ex.getMessage.contains("vacuumed"))
   }
 
-  test("unknown dropped-header timestamps stay unknown one commit AFTER the aggV upgrade") {
-    val root = tmpDir("lakeaggup")
+  test("a document below format 2 is refused at load") {
+    val root = tmpDir("lakeold")
     val cat = new LakeCatalog(spark, root)
     cat.createTable("g", StructType(Seq(StructField("id", LongType)))) // v1
     cat.insert("g", spark.range(0, 3).toDF("id")) // v2
-    cat.tag("keep", cat.currentVersion) // pins v2 live through vacuum
-    cat.insert("g", spark.range(3, 5).toDF("id")) // v3 — will be dropped
-    Thread.sleep(5)
-    val probe = System.currentTimeMillis() // true target: v3
-    Thread.sleep(5)
-    (1 to 300).foreach(i =>
-      cat.transaction(_.setProperty("g", "pad", i.toString)))
-    cat.vacuum(keepLast = 10, orphanGraceMs = 0L)
-    val head = cat.current
-    assert(head.historyFloor > 0 && head.minDroppedTsMs > 0L)
-    // forge the head document into the pre-aggV2 shape: headers were
-    // dropped, but no timestamp was recorded for them
-    val docPath = java.nio.file.Paths.get(root, "_manifest",
-      s"v${cat.currentVersion}.json")
+    val docPath = java.nio.file.Paths.get(root, "_manifest", "v2.json")
     val doc = new String(java.nio.file.Files.readAllBytes(docPath), "UTF-8")
-    val forged = doc
-      .replaceFirst(""""aggV"\s*:\s*\d+""", "\"aggV\":1")
-      .replaceFirst(""""minDroppedTsMs"\s*:\s*\d+""", "\"minDroppedTsMs\":0")
-    assert(forged != doc, "fixture: the doc must carry both fields")
-    java.nio.file.Files.write(docPath, forged.getBytes("UTF-8"))
-    // fresh catalog = upgrade path; churn until MORE headers drop, this
-    // time with recorded timestamps (all AFTER the probe)
-    val cat2 = new LakeCatalog(spark, root)
-    assert(cat2.current.minDroppedTsMs === 0L)
-    (1 to 300).foreach(i =>
-      cat2.transaction(_.setProperty("g", "pad2", i.toString)))
-    cat2.vacuum(keepLast = 10, orphanGraceMs = 0L)
-    val h2 = cat2.current
-    assert(h2.historyFloor > head.historyFloor, "fixture: new drops landed")
-    assert(h2.minDroppedTsMs === 0L,
-      "unknown must stay sticky — post-upgrade drops must not convert " +
-        "it to their own (later) timestamp")
-    // the probe's true target (v3) was dropped without a timestamp: a
-    // known-looking minDroppedTsMs would resolve this to the PINNED v2
-    // — the wrong older live snapshot — instead of refusing
-    val ex = intercept[NoSuchElementException](cat2.versionAsOf(probe))
-    assert(ex.getMessage.contains("vacuumed"))
+    def refusal(forged: String): String = {
+      assert(forged != doc, "fixture: the doc must carry its format")
+      java.nio.file.Files.write(docPath, forged.getBytes("UTF-8"))
+      intercept[IllegalStateException](new LakeCatalog(spark, root).current)
+        .getMessage
+    }
+    val m1 = refusal(doc.replaceFirst(""""aggV"\s*:\s*\d+""", "\"aggV\":1"))
+    assert(m1.contains("v2") && m1.contains("format 1") && m1.contains("predates"), m1)
+    // a document written before the format field existed reads as 0
+    val m0 = refusal(doc.replaceFirst(""""aggV"\s*:\s*\d+,""", ""))
+    assert(m0.contains("format 0") && m0.contains("predates"), m0)
+    // the refusal is per document: the untouched v1 still loads
+    assert(new LakeCatalog(spark, root).snapshot(1L).tables.contains("g"))
+  }
+
+  test("the snapshot document round-trips every field on the file and JDBC stores") {
+    import graft.lake._
+    val cols = Seq(ColumnDef(1, "id", "\"long\"", None),
+      ColumnDef(2, "day", "\"string\"", Some("'d0'")))
+    val files = Seq(
+      FileEntry("data/t/a.parquet", 100L, 10L, 1,
+        Map("id" -> ColStat("1", "10", Some(0L))), Map("day" -> Seq("d1")),
+        Map("id" -> "data/t/a.id.bloom"), Some("_dv/d1.parquet"), 2L,
+        Map("id" -> "AAEC")),
+      FileEntry("data/t/b.parquet", 50L, 5L, 1))
+    val t = TableState(1, Map("1" -> cols), files, Seq("id"), Seq("id"), 3,
+      inlined = Seq(InlineBatch(1, Seq("""{"id":11,"day":"d2"}"""))),
+      blobs = Seq("stale"), partitionBy = Seq("day"),
+      props = Map("index.bloom" -> "id"), lastDataVersion = 8L,
+      lastNonAppendVersion = 6L)
+    val ch = Map("tables_inserted_into" -> Seq("t"))
+    val s = Snapshot(9L, 1700000000000L, 2L, ch, Map("t" -> t),
+      Map("v" -> "SELECT id FROM t"), Seq(SnapHeader(9L, 1700000000000L, 2L, ch)),
+      refs = Map("keep" -> 3L), aggV = Manifest.Format, expiredFloor = 5L,
+      liveBelow = Set(3L), txnSeen = Map("sink:t" -> 4L),
+      tagsResidual = Set("user:x"), historyFloor = 4L,
+      minDroppedTsMs = 1600000000000L, identityBreaks = Map("old" -> 2L))
+    // fixture: every field differs from its default, so a field the
+    // document drops cannot hide behind a default on the way back in
+    def allSet(p: Product, dflt: Product): Unit =
+      p.productElementNames.zip(p.productIterator.zip(dflt.productIterator))
+        .foreach { case (n, (a, b)) => assert(a != b, s"fixture: $n is default") }
+    allSet(s, Manifest.empty)
+    allSet(t, TableState(0, Map.empty, Nil, Nil, Nil, 0))
+
+    def check(stored: Snapshot, doc: String, fresh: () => LakeCatalog,
+        cold: () => LakeCatalog): Unit = {
+      assert(stored === s.copy(tables = Map("t" -> t.copy(
+        blobs = stored.tables("t").blobs))))
+      assert(stored.tables("t").blobs.nonEmpty)
+      assert(!doc.contains(".parquet") && !doc.contains("\"files\""),
+        s"file entries belong in the blobs: $doc")
+      assert(fresh().current === stored)
+      // another namespace misses the process-wide blob cache, so the
+      // files must come back from the stored blobs themselves
+      assert(cold().current === stored)
+    }
+
+    val fileRoot = tmpDir("rtfile")
+    val fstored = new FileManifestStore(fileRoot, spark.sparkContext.hadoopConfiguration)
+      .publish(9L, s, Manifest.empty).get
+    val coldRoot = tmpDir("rtcold")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(fileRoot, "_manifest"), new java.io.File(coldRoot, "_manifest"))
+    check(fstored, new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(fileRoot, "_manifest", "v9.json")), "UTF-8"),
+      () => new LakeCatalog(spark, fileRoot), () => new LakeCatalog(spark, coldRoot))
+
+    val dbRoot = tmpDir("rtjdbc")
+    val dsn = s"jdbc:derby:$dbRoot/catalog_db;create=true"
+    val jstored = new JdbcManifestStore(dsn).publish(9L, s, Manifest.empty).get
+    val conn = java.sql.DriverManager.getConnection(dsn)
+    val jdoc = try {
+      val rs = conn.createStatement()
+        .executeQuery("SELECT doc FROM graft_manifests WHERE version = 9")
+      assert(rs.next()); rs.getString(1)
+    } finally conn.close()
+    check(jstored, jdoc, () => new LakeCatalog(spark, dbRoot, Some(dsn)),
+      () => new LakeCatalog(spark, dbRoot,
+        Some(s"jdbc:derby:directory:$dbRoot/catalog_db")))
   }
 
   test("DESCRIBE and SHOW TABLES route through the SQL surface") {
