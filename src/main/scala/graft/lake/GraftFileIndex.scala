@@ -16,11 +16,13 @@ import org.apache.spark.sql.types.StructType
   *    10^6 files this deletes the object-store LIST/HEAD storm that
   *    `spark.read.parquet(paths*)` pays to build an InMemoryFileIndex.
   *  - Pushed data filters prune files BEFORE the scan is planned, from
-  *    the same per-file min/max, partition value sets and bloom
-  *    sidecars that power the explicit `readRange`/`readPartition`/
-  *    `readPoint` APIs — so a plain `read(t).filter(...)` now skips
-  *    like the dedicated APIs do, for every predicate shape Catalyst
-  *    pushes (conjunctions, disjunctions, comparisons, IN, null tests).
+  *    per-file min/max, partition value sets and bloom sidecars, for
+  *    every predicate shape Catalyst pushes (conjunctions, disjunctions,
+  *    comparisons, IN, null tests). This is the ONLY place that decides
+  *    from manifest metadata whether a file may hold a row: the
+  *    `readRange`/`readPartition`/`readPoint` APIs, `deletePartitions`
+  *    and the PK check state a typed filter and take the files the
+  *    planned scan lists ([[LakeCatalog.scannedEntries]]).
   *  - Pruning is CONSERVATIVE by construction: any expression shape or
   *    value encoding it doesn't understand keeps the file, and Spark
   *    re-applies the full predicate row-level — skipping can only save
@@ -48,17 +50,19 @@ final class GraftFileIndex(
   override def inputFiles: Array[String] =
     entries.map(e => abs(e.path).toString).toArray
 
+  /** The entries that may hold a row passing every one of `dataFilters`. */
+  def kept(dataFilters: Seq[Expression]): Seq[FileEntry] =
+    dataFilters.foldLeft(entries)((es, f) => es.filter(keep(_, f)))
+
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = dataFilters.foldLeft(entries)((es, f) => es.filter(keep(_, f)))
-    Seq(PartitionDirectory(InternalRow.empty, kept.map { e =>
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, kept(dataFilters).map { e =>
       // fabricated from manifest metadata — length must be EXACT (it is:
       // recorded at write), mtime/locality are unused by the reader
       FileStatusWithMetadata(new FileStatus(
         e.sizeBytes, false, 1, 128L * 1024 * 1024, 0L, abs(e.path)),
         Map.empty)
     }))
-  }
 
   /** Literal → the stats-string encoding [[Stats.cmpValues]] orders:
     * numeric toString (cmp parses), strings verbatim, dates as the
@@ -180,10 +184,16 @@ final class GraftFileIndex(
       case None => true
     }
 
-  /** Point predicate: [[Stats.mayContain]] per pushed filter. */
+  /** May file `e` hold `attr = value`? The min/max range, the partition
+    * value set and the bloom sidecar must each admit the rendered value
+    * (the harvest's `cast(col AS string)` form); every missing piece
+    * admits it, so a file is only skipped on proof. */
   private def point(e: FileEntry, attr: Expression, value: Any): Boolean =
-    colOf(attr).forall(c =>
-      render(c, value).forall(Stats.mayContain(e, c, _, bloomHit)))
+    colOf(attr).forall(c => render(c, value).forall { v =>
+      Stats.overlaps(e.stats.get(c.name), c, v, v) &&
+        e.pvals.get(c.name).forall(vs => vs.isEmpty || vs.contains(v)) &&
+        e.blooms.get(c.name).forall(bloomHit(_, v))
+    })
 
   /** a <(=) v — the file may match iff its MIN does not exceed v.
     * Non-strict comparison on purpose: equality at the bound keeps the

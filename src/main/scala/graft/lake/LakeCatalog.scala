@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
   UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier,
   UnresolvedProcedure, UnresolvedRelation, UnresolvedTable,
   UnresolvedTableOrView, UnresolvedTableValuedFunction}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast,
-  EqualTo, EvalMode, Expression, Literal, PrimaryKeyConstraint,
-  SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo,
+  Expression, Literal, PrimaryKeyConstraint, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Aggregate,
   AlterColumnSpec, AlterColumns, Assignment, Call, Command,
@@ -19,6 +18,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Aggregate,
   RenameTable, ShowTables, SubqueryAlias, TruncateTable, UnresolvedTableSpec,
   UnresolvedWith, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils.{replaceCharVarcharWithString => typeOf}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.SqlFront
@@ -315,6 +315,11 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     case Some((tx, _)) => tx.stagedState(table)
     case None => stateOf(current, table)
   }
+  /** Every table as [[liveState]] sees it. */
+  private def liveTables: Map[String, TableState] = activeTx match {
+    case Some((tx, _)) => tx.stagedTables
+    case None => current.tables
+  }
 
   /** Current-snapshot scan (S2) — read-your-writes when an interactive
     * transaction is open, matching the SQL surface (the Scala mutators
@@ -326,47 +331,47 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   def readAt(table: String, version: Long): DataFrame =
     readState(stateOf(snapshot(version), table))
 
-  /** Range scan with manifest-stats file pruning: only files whose
-    * [min,max] for `colName` can intersect [lo,hi] are handed to Spark —
-    * metadata-level skipping BEFORE plan construction, on top of the
-    * parquet row-group skipping Spark already does. At 100 TB this is the
-    * difference between listing 10^6 files and scanning the 10^2 that
-    * overlap. Values are the column's string form (numeric types compare
-    * numerically). */
+  /** Range scan `lo <= colName <= hi`, values in the column's string
+    * form. The scan's [[GraftFileIndex]] hands Spark only the files whose
+    * manifest [min,max] can intersect the range — metadata-level skipping
+    * before the scan runs, on top of parquet's row-group skipping. At
+    * 100 TB this is the difference between listing 10^6 files and
+    * scanning the 10^2 that overlap. */
   def readRange(table: String, colName: String, lo: String, hi: String): DataFrame = {
     val st = liveState(table)
     val c = columnOf(st, table, colName)
-    val pruned =
-      if (!Stats.comparable(c)) st
-      else st.copy(files = st.files.filter(e =>
-        Stats.overlaps(e.stats.get(colName), c, lo, hi)))
-    readState(pruned)
-      .filter(col(colName) >= lit(lo).cast(DataType.fromJson(c.typeJson)) &&
-        col(colName) <= lit(hi).cast(DataType.fromJson(c.typeJson)))
+    readState(st).filter(col(colName).between(litOf(c, lo), litOf(c, hi)))
   }
 
-  /** Partition-key equality scan with EXACT file pruning: only files
-    * whose recorded partition-value set contains every requested value
-    * are scanned (files without a recorded set fall back to min/max and
-    * bloom sidecars — [[Stats.mayContain]] — else are kept).
-    * With the write path hash-clustering on the declared partition
-    * columns, a partition read touches one file per batch — hive-style
-    * partition pruning at file granularity, driven by manifest metadata
-    * instead of directory layout. Values in string form (same contract
-    * as [[readRange]]); the row-level filter stays on top so pruning can
-    * only skip work, never change answers. */
+  /** Partition-key equality scan, values in string form. The scan's
+    * [[GraftFileIndex]] skips every file whose recorded partition-value
+    * set, min/max or bloom sidecar excludes a requested value. With the
+    * write path hash-clustering on the declared partition columns, a
+    * partition read touches one file per batch — hive-style partition
+    * pruning at file granularity, driven by manifest metadata instead of
+    * directory layout. */
   def readPartition(table: String, eq: Map[String, String]): DataFrame = {
     val st = liveState(table)
-    val typed = eq.map { case (cn, v) =>
-      (columnOf(st, table, cn), v)
-    }
-    val keys = typed.map { case (c, v) => (c, statKey(c, v)) }
-    val pruned = st.copy(files = st.files.filter(f =>
-      keys.forall { case (c, k) => Stats.mayContain(f, c, k, bloomHit) }))
-    typed.foldLeft(readState(pruned)) { case (df, (c, v)) =>
-      df.filter(col(c.name) === lit(v).cast(DataType.fromJson(c.typeJson)))
+    eq.foldLeft(readState(st)) { case (df, (cn, v)) =>
+      df.filter(col(cn) === litOf(columnOf(st, table, cn), v))
     }
   }
+
+  /** `v` (a caller's string) as a literal of column `c`'s type. */
+  private[lake] def litOf(c: ColumnDef, v: String): Column =
+    lit(v).cast(DataType.fromJson(c.typeJson))
+
+  /** The manifest entries the planned lake scans of `df` read: each
+    * [[GraftFileIndex]] applied to its scan's pushed data filters. The
+    * tombstone-sidecar scans are not lake files and are skipped.
+    * Planning only — no Spark job runs. */
+  private[lake] def scannedEntries(df: DataFrame): Seq[FileEntry] =
+    df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.relation.location match {
+        case index: GraftFileIndex => index.kept(s.dataFilters)
+        case _ => Nil
+      }
+    }.flatten
 
   /** Loaded bloom sidecars, cached process-wide by absolute path —
     * immutable once written (new files get new sidecars), so the cache
@@ -383,15 +388,10 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       finally in.close()
     }).mightContainString(value)
 
-  /** `v` in the encoding the write path harvests min/max, partition
-    * value sets and bloom keys in: Spark's `cast(cast(v AS type) AS
-    * string)` ("7" on a double column is "7.0", "07" on a long is "7").
-    * Probe the manifest with this, never with the caller's raw string.
-    * A value that does not cast to the column's type stays as given. */
-  private[lake] def statKey(c: ColumnDef, v: String): String =
-    Option(Cast(Cast(Literal(v), DataType.fromJson(c.typeJson),
-      Some(spark.sessionState.conf.sessionLocalTimeZone), EvalMode.TRY),
-      StringType).eval()).fold(v)(_.toString)
+  /** Column `c`'s name in the schema file `e` was written under — the
+    * key of its stats and sketches there; None when `c` was added later. */
+  private def writtenName(st: TableState, e: FileEntry, c: ColumnDef): Option[String] =
+    st.columnsAt(e.schemaVersion).find(_.id == c.id).map(_.name)
 
   /** Enable per-file HLL NDV sketches on `colName`: every subsequent
     * write or import stores a mergeable distinct-count sketch in the
@@ -411,14 +411,13 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * never silently stale. */
   def approxDistinct(table: String, colName: String): (Long, Boolean) = {
     val st = liveState(table)
-    require(st.columns.exists(_.name == colName),
-      s"no such column: $table.$colName")
+    val c = columnOf(st, table, colName)
+    val sketched = st.files.map(e => writtenName(st, e, c).flatMap(e.ndv.get))
     val metaOk = st.files.nonEmpty && st.inlined.isEmpty &&
-      st.files.forall(e => e.dvRows == 0L && e.ndv.contains(colName))
+      st.files.forall(_.dvRows == 0L) && sketched.forall(_.isDefined)
     if (metaOk) {
       import spark.implicits._
-      val sketches = st.files
-        .map(e => java.util.Base64.getDecoder.decode(e.ndv(colName)))
+      val sketches = sketched.flatten.map(java.util.Base64.getDecoder.decode(_: String))
       val est = spark.createDataset(sketches).toDF("s")
         .agg(expr("hll_sketch_estimate(hll_union_agg(s))"))
         .head().getLong(0)
@@ -439,33 +438,19 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       tx.setProperty(table, "index.bloom", colName)
     }
 
-  /** POINT lookup with bloom file skipping: candidate files pass the
-    * min/max stats gate first, then each candidate's bloom sidecar is
-    * probed (lazily loaded, cached) and definite misses are skipped —
-    * at 100 TB the difference between "scan the key's range stripe" and
-    * "read the one file that can hold the key". Files without a sidecar
-    * stay candidates (correct, never wrong); the exact row filter runs
-    * on top of whatever survives. */
-  def readPoint(table: String, colName: String, value: String): DataFrame = {
-    val st = liveState(table)
-    val c = columnOf(st, table, colName)
-    readState(st.copy(files = pointCandidates(st, c, value)))
-      .filter(col(colName) === lit(value).cast(DataType.fromJson(c.typeJson)))
-  }
+  /** POINT lookup `colName = value`: the scan's [[GraftFileIndex]]
+    * passes the min/max gate, then probes each candidate's bloom sidecar
+    * (lazily loaded, cached) and skips definite misses — at 100 TB the
+    * difference between "scan the key's range stripe" and "read the one
+    * file that can hold the key". Files without a sidecar stay
+    * candidates; the exact row filter runs on top of whatever survives. */
+  def readPoint(table: String, colName: String, value: String): DataFrame =
+    readPartition(table, Map(colName -> value))
 
   /** Number of files a [[readPoint]] on (colName = value) would scan —
     * the pruning observable the bloom-index contract is judged on. */
-  def pointScanFiles(table: String, colName: String, value: String): Long = {
-    val st = liveState(table)
-    val c = columnOf(st, table, colName)
-    pointCandidates(st, c, value).size.toLong
-  }
-
-  private def pointCandidates(st: TableState, c: ColumnDef,
-      value: String): Seq[FileEntry] = {
-    val k = statKey(c, value)
-    st.files.filter(Stats.mayContain(_, c, k, bloomHit))
-  }
+  def pointScanFiles(table: String, colName: String, value: String): Long =
+    scannedEntries(readPoint(table, colName, value)).size.toLong
 
   /** Time-travel scan by timestamp: newest snapshot at or before `tsMs`
     * (S3, `AT (TIMESTAMP => ts)` — ref demos/02_time_travel/demo.py:196). */
@@ -1038,9 +1023,10 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     // tombstone counts, and inlined-row counts are all exact); MIN/MAX
     // additionally need every file to carry stats for the column and no
     // tombstones (a deleted row may have held the extreme)
+    val fileStats = defs.map(d =>
+      st.files.map(e => writtenName(st, e, d).flatMap(e.stats.get)))
     val metaOk = defs.isEmpty || (defs.forall(Stats.comparable) &&
-      st.files.forall(e => e.dvRows == 0L &&
-        defs.forall(d => e.stats.contains(d.name))) &&
+      st.files.forall(_.dvRows == 0L) && fileStats.forall(_.forall(_.isDefined)) &&
       st.inlined.forall(_.schemaVersion == curV))
     val outSchema = StructType(
       StructField("n", LongType, nullable = false) +:
@@ -1075,12 +1061,10 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         case _ => s
       }
       val n = st.files.map(_.liveRows).sum + st.inlinedRowCount
-      val vals = defs.flatMap { d =>
-        val fileMins = st.files.map(_.stats(d.name).min)
-        val fileMaxs = st.files.map(_.stats(d.name).max)
+      val vals = defs.zip(fileStats).flatMap { case (d, fs) =>
         val inl = inlinedVals(d.name)
-        val mins = fileMins ++ inl
-        val maxs = fileMaxs ++ inl
+        val mins = fs.flatten.map(_.min) ++ inl
+        val maxs = fs.flatten.map(_.max) ++ inl
         Seq(
           if (mins.isEmpty) null else typed(d, mins.reduce(Stats.minOf(d, _, _))),
           if (maxs.isEmpty) null else typed(d, maxs.reduce(Stats.maxOf(d, _, _))))
@@ -1265,13 +1249,13 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   /** `information_schema.tables` analog (D11). */
   def listTables(): DataFrame = {
     import spark.implicits._
-    current.tables.keys.toSeq.sorted.toDF("table_name")
+    liveTables.keys.toSeq.sorted.toDF("table_name")
   }
 
   /** `information_schema.columns` / DESCRIBE analog (D10/D11). */
   def listColumns(): DataFrame = {
     import spark.implicits._
-    current.tables.toSeq.sortBy(_._1).flatMap { case (t, st) =>
+    liveTables.toSeq.sortBy(_._1).flatMap { case (t, st) =>
       st.columns.zipWithIndex.map { case (c, i) =>
         (t, c.name, DataType.fromJson(c.typeJson).simpleString,
           i + 1, !st.notNull.contains(c.name), c.default)
@@ -1282,7 +1266,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
 
   def describe(table: String): DataFrame = {
     import spark.implicits._
-    val st = stateOf(current, table)
+    val st = liveState(table)
     st.columns.map { c =>
       (c.name, DataType.fromJson(c.typeJson).simpleString,
         if (st.notNull.contains(c.name)) "NO" else "YES",

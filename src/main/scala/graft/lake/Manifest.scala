@@ -308,7 +308,7 @@ object Stats {
     case _ => a.compareTo(b)
   }
 
-  /** Can [lo,hi] of an incoming batch intersect this file's range?
+  /** Can [lo,hi] intersect this file's range?
     * Missing stats — or any value outside the safely-ordered encoding
     * (untrusted footers, exotic probe dates) — must assume yes. */
   def overlaps(st: Option[ColStat], c: ColumnDef, lo: String, hi: String): Boolean =
@@ -319,18 +319,6 @@ object Stats {
         else cmp(c, mn, hi) <= 0 && cmp(c, lo, mx) <= 0
       case None => true
     }
-
-  /** May file `e` hold value `v` of column `c`? The one point-membership
-    * rule: the min/max range, the partition value set and the bloom
-    * sidecar (probed through `bloomHit(sidecar, v)`) must each admit `v`.
-    * Every missing piece admits it — a file is only skipped on proof.
-    * The value sets and blooms match strings exactly, so `v` must be in
-    * the harvest's `cast(col AS string)` form ([[LakeCatalog.statKey]]). */
-  def mayContain(e: FileEntry, c: ColumnDef, v: String,
-      bloomHit: (String, String) => Boolean): Boolean =
-    overlaps(e.stats.get(c.name), c, v, v) &&
-      e.pvals.get(c.name).forall(vs => vs.isEmpty || vs.contains(v)) &&
-      e.blooms.get(c.name).forall(bloomHit(_, v))
 
   /** Safe typed comparison of two stat-encoded values: None when either
     * side is outside the safely-ordered encoding (then callers must NOT

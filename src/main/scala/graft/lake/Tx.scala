@@ -79,6 +79,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
   /** Staged state lookup for the catalog's interactive-SQL surface
     * (read-your-writes SELECTs between BEGIN and COMMIT). */
   private[lake] def stagedState(table: String): TableState = state(table)
+  private[lake] def stagedTables: Map[String, TableState] = tables.toMap
 
   // ------------------------------------------------------------------- DDL
 
@@ -653,42 +654,32 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
   }
 
   /** Retention delete by partition-key equality — the `DELETE WHERE
-    * day = X` / `DROP PARTITION` fast path: a file whose recorded
-    * partition-value set is EXACTLY the probed tuple is dropped from the
-    * manifest with zero I/O (every row provably matches); only files
-    * that MIGHT mix matching and non-matching rows rewrite copy-on-write
-    * (and only when their stats can't disprove a match). At 100 TB a
-    * daily retention sweep on a day-partitioned table is pure metadata —
-    * the shape Hive/Iceberg users express as dropping partitions. Rows
-    * never covered by any file vanish exactly like [[delete]] with the
-    * equivalent predicate (the semantics are identical; only the cost
-    * differs). */
+    * day = X` / `DROP PARTITION` fast path. The lake scan's
+    * [[GraftFileIndex]] picks the files that may hold the tuple; among
+    * them, a file it proves holds NO row to keep (min = max = the probed
+    * value with zero nulls, on every probed column) is dropped from the
+    * manifest with zero I/O, and only the rest rewrite copy-on-write. At
+    * 100 TB a daily retention sweep on a day-partitioned table is pure
+    * metadata — the shape Hive/Iceberg users express as dropping
+    * partitions. The semantics are exactly [[delete]] with the
+    * equivalent predicate; only the cost differs. */
   def deletePartitions(table: String, eq: Map[String, String]): Unit = {
     flushInlined(table)
     val st = state(table)
     require(eq.nonEmpty, "deletePartitions requires at least one key=value")
-    val typed = eq.map { case (cn, v) =>
+    val probes = eq.toSeq.map { case (cn, v) =>
       val c = st.columns.find(_.name == cn).getOrElse(
         throw new NoSuchElementException(s"no such column: $table.$cn"))
-      (c, cat.statKey(c, v))
+      (col(cn), cat.litOf(c, v))
     }
-    // drop: every recorded value set is exactly the probed value
-    val (dropped, kept0) = st.files.partition(f =>
-      typed.forall { case (c, v) => f.pvals.get(c.name).contains(Seq(v)) })
-    // among the kept, only files that might CONTAIN the tuple rewrite
-    val (mixed, untouched) = kept0.partition(f =>
-      typed.forall { case (c, v) => Stats.mayContain(f, c, v, cat.bloomHit) })
-    val inlinedPred = typed.map { case (c, v) =>
-      col(c.name) === lit(v).cast(DataType.fromJson(c.typeJson))
-    }.reduce(_ && _)
-    if (mixed.nonEmpty) {
-      val rewritten = cat.readState(st.copy(files = mixed))
-        .filter(not(coalesce(inlinedPred, lit(false))))
-      val written = writeFiles(table, st, applyPartitionLayout(st, rewritten))
-      tables(table) = st.copy(files = untouched ++ written)
-    } else {
-      tables(table) = st.copy(files = untouched)
-    }
+    val pred = probes.map { case (c, v) => c === v }.reduce(_ && _)
+    // NOT coalesce(pred, false), in shapes the index prunes
+    val keep = probes.map { case (c, v) => c =!= v || c.isNull }.reduce(_ || _)
+    val hit = cat.scannedEntries(cat.readState(st).filter(pred))
+    val mixed = cat.scannedEntries(cat.readState(st.copy(files = hit)).filter(keep))
+    val rewritten = if (mixed.isEmpty) Nil else writeFiles(table, st,
+      applyPartitionLayout(st, cat.readState(st.copy(files = mixed)).filter(keep)))
+    tables(table) = st.copy(files = st.files.filterNot(hit.toSet) ++ rewritten)
     change("tables_deleted_from", table)
   }
 
@@ -1104,8 +1095,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
         Seq(count_distinct(struct(uniqueOn.map(col): _*)).as("n_ukeys"))
        else Nil) ++
       leadPk.toSeq.flatMap(c => Seq(
-        min(col(c.name)).cast("string").as("pk_min"),
-        max(col(c.name)).cast("string").as("pk_max")))
+        min(col(c.name)).as("pk_min"), max(col(c.name)).as("pk_max")))
     if (aggs.isEmpty) return
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     nnCols.foreach { c =>
@@ -1128,20 +1118,14 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
         throw new ConstraintViolation(
           s"duplicate key in inserted rows: $table(${pkCols.mkString(",")})")
       if (checkPkAgainstExisting && (st.files.nonEmpty || st.inlined.nonEmpty)) {
-        // stats-based file pruning: only files whose lead-PK-column range
-        // overlaps the incoming batch's range can contain a duplicate —
-        // at scale this turns a full-table key scan into a ranged one
-        val pruned = leadPk match {
-          case Some(c) =>
-            val mn = row.getAs[String]("pk_min")
-            val mx = row.getAs[String]("pk_max")
-            if (mn == null) st.copy(files = Nil)
-            else st.copy(files = st.files.filter(e =>
-              Stats.overlaps(e.stats.get(c.name), c, mn, mx)))
-          case None => st
-        }
+        // only files whose lead-PK range overlaps the incoming batch's
+        // can hold a duplicate: the range filter lets the lake scan skip
+        // the rest — at scale a full-table key scan becomes a ranged one
+        val all = cat.readState(st)
+        val ranged = leadPk.fold(all)(c => all.filter(col(c.name)
+          .between(lit(row.getAs[Any]("pk_min")), lit(row.getAs[Any]("pk_max")))))
         val pk = pkCols.map(col)
-        val existing = cat.readState(pruned).select(pk: _*)
+        val existing = ranged.select(pk: _*)
         if (!existing.join(df.select(pk: _*), pkCols, "left_semi").isEmpty)
           throw new ConstraintViolation(
             s"duplicate key: $table(${pkCols.mkString(",")}) already exists")
@@ -1266,10 +1250,11 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
           scanned.filter(_._3 == 0L).foreach(e => cat.fs.delete(e._1, false))
         scanned.filter(_._3 > 0L)
       }
-    // tiny writes skip stats and sidecars: missing stats degrade to
-    // scanning (always correct) and a small file is cheap to scan — this
-    // keeps single-row appends at one Spark job. Imports are rare and
-    // big, so they harvest at any size.
+    // tiny writes skip the harvest and sidecars (footer stats are kept,
+    // they cost no job): missing stats degrade to scanning (always
+    // correct) and a small file is cheap to scan — this keeps single-row
+    // appends at one Spark job. Imports are rare and big, so they
+    // harvest at any size.
     val harvested = external || parts.map(_._3).sum >= 64
     def indexCol(prop: String): Option[String] =
       st.props.get(prop).filter(c => st.columns.exists(_.name == c))
@@ -1368,8 +1353,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
       val r = harvest.get(key)
       FileEntry(if (external) key else key.stripPrefix(rootQ).stripPrefix("/"),
         len, rows, st.schemaVersion,
-        stats = if (footerSafe && harvested) footer
-          else r.map(harvestedStats).getOrElse(Map.empty),
+        stats = if (footerSafe) footer else r.map(harvestedStats).getOrElse(Map.empty),
         pvals = r.map(pvals).getOrElse(Map.empty),
         blooms = bloomsByPath.getOrElse(key, Map.empty),
         ndv = r.map(sketch).getOrElse(Map.empty))

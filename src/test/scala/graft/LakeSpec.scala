@@ -695,7 +695,19 @@ class LakeSpec extends SparkSpec {
     assert(cat.pointScanFiles("t", "id", "150") >= 1L)
     assert(cat.readPartition("t", Map("k" -> "1500")).count() === 1L)
     assert(cat.approxDistinct("t", "id")._1 === 200L)
+    // staged DDL shows in DESCRIBE, listColumns and SHOW TABLES
+    def names(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).as[String].collect().toSeq
+    def described = names(cat.execute("DESCRIBE t"), "column_name")
+    def listed = names(cat.listColumns().filter(col("table_name") === "t"), "column_name")
+    def tables = names(cat.execute("SHOW TABLES"), "table_name")
+    cat.execute("ALTER TABLE t ADD COLUMN v INTEGER")
+    cat.execute("CREATE TABLE u (x INTEGER)")
+    assert(described === Seq("id", "k", "v") && listed === Seq("id", "k", "v"))
+    assert(tables === Seq("t", "u"))
     cat.execute("ROLLBACK")
+    assert(described === Seq("id", "k") && listed === Seq("id", "k"))
+    assert(tables === Seq("t"))
     assert(cat.statsAgg("t").head().getAs[Long]("n") === 100L)
     assert(cat.readPoint("t", "id", "150").count() === 0L)
     assert(cat.pointScanFiles("t", "id", "150") === 0L)
@@ -1534,11 +1546,17 @@ class LakeSpec extends SparkSpec {
     assert(!r2.getBoolean(3) && r2.getLong(1) === 1L)
     val cnt = cat.statsAgg("t").head()
     assert(cnt.getLong(0) === 1000L && cnt.getBoolean(1))
-    // a tiny table (stats harvest skipped) falls back too — same values
+    // a tiny write skips the stats harvest but keeps its footer min/max
+    // (exact on integral columns), so it still answers from metadata
     val cat2 = newLake()
     cat2.createTableAs("s", Seq((1L, 9L), (2L, 8L)).toDF("id", "v"))
     val r3 = cat2.statsAgg("s", Seq("v")).head()
-    assert(!r3.getBoolean(3) && r3.getLong(1) === 8L && r3.getLong(2) === 9L)
+    assert(r3.getBoolean(3) && r3.getLong(1) === 8L && r3.getLong(2) === 9L)
+    // a tiny double column has neither footer stats nor a harvest: it
+    // falls back to a scan — same values
+    cat2.createTableAs("f", Seq((1L, 9.5), (2L, 8.5)).toDF("id", "v"))
+    val r4 = cat2.statsAgg("f", Seq("v")).head()
+    assert(!r4.getBoolean(3) && r4.getDouble(1) === 8.5 && r4.getDouble(2) === 9.5)
   }
 
   test("non-finite doubles never poison stats: reads, CBO fold and pruning survive NaN/Infinity") {
@@ -2209,6 +2227,18 @@ class LakeSpec extends SparkSpec {
     cat2.delete("t", col("k") === "k0")
     assert(cat2.read("t").orderBy("id").collect().toSeq ===
       cat.read("t").orderBy("id").collect().toSeq)
+    // a file whose value set is the probe alone but which also holds
+    // NULL days (collect_set skips NULLs) rewrites, keeping the NULLs
+    val ext = tmpDir("ext_nulls")
+    spark.range(200).selectExpr("cast(id AS int) AS id",
+      "CASE WHEN id < 100 THEN 'd55' END AS day", "'k1' AS k")
+      .coalesce(1).write.mode("overwrite").parquet(ext)
+    cat2.addDataFiles("t", ext)
+    assert(cat2.current.tables("t").files.exists(_.pvals.get("day")
+      .contains(Seq("d55"))), "fixture")
+    cat2.deletePartitions("t", Map("day" -> "d55"))
+    assert(cat2.read("t").filter(col("day").isNull).count() === 100L)
+    assert(cat2.read("t").filter(col("day") === "d55").count() === 0L)
   }
 
   test("partition and point probes key the manifest in Spark's cast-string form") {
@@ -2245,6 +2275,54 @@ class LakeSpec extends SparkSpec {
     assert(ns("t") === (1L to 200L).filterNot(_ == 7L))
     assert(ns("u") === (1L to 200L).filterNot(_ == 7L))
     assert(ns("p") === (1L to 200L).filterNot(_ % 5 == 2L))
+  }
+
+  test("probes, deletePartitions, the PK check and the metadata answers key each file by its write-time column name") {
+    // a column renamed away and a new one added under its old name: the
+    // files written before hold stats, blooms and sketches under that
+    // name for the OLD column, while every row reads the new one's 5
+    val cat = newLake()
+    cat.createTable("t", StructType(Seq(StructField("id", LongType))))
+    cat.bloomIndex("t", "id")
+    cat.ndvIndex("t", "id")
+    cat.insert("t", spark.range(100, 200).toDF("id"))
+    cat.transaction { tx =>
+      tx.renameColumn("t", "id", "old_id")
+      tx.addColumn("t", "id", LongType, Some("5"))
+    }
+    val want = cat.read("t").filter(col("id") === 5L).count()
+    assert(want === 100L)
+    assert(cat.readPoint("t", "id", "5").count() === want)
+    assert(cat.readRange("t", "id", "5", "5").count() === want)
+    assert(cat.readPartition("t", Map("id" -> "5")).count() === want)
+    // pointScanFiles only plans: no Spark job
+    val sc = spark.sparkContext
+    val group = s"point-scan-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val scanned = try cat.pointScanFiles("t", "id", "5") finally sc.clearJobGroup()
+    ListenerDrain.drain(sc)
+    assert(scanned > 0L)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    val agg = cat.statsAgg("t", Seq("id")).head()
+    assert(agg.getAs[Long]("min_id") === 5L && agg.getAs[Long]("max_id") === 5L)
+    assert(cat.approxDistinct("t", "id")._1 === 1L)
+    cat.deletePartitions("t", Map("id" -> "5"))
+    assert(cat.read("t").count() === 0L)
+    // the PK check against existing rows: after the swap the key is k,
+    // its files record it as a, and their stats under the name k belong
+    // to k_old (1000..1099)
+    cat.createTable("p", StructType(Seq(
+      StructField("a", LongType), StructField("k", LongType))),
+      primaryKey = Seq("a"))
+    cat.insert("p", spark.range(100).selectExpr("id AS a", "id + 1000 AS k"))
+    cat.transaction { tx =>
+      tx.renameColumn("p", "k", "k_old")
+      tx.renameColumn("p", "a", "k")
+    }
+    intercept[ConstraintViolation] {
+      cat.insert("p", Seq((5L, 0L)).toDF("k", "k_old"))
+    }
+    assert(cat.read("p").filter(col("k") === 5L).count() === 1L)
   }
 
   test("addDataFiles: zero-copy import, CoW rewrite drops the reference, vacuum never touches external files") {

@@ -479,33 +479,56 @@ class TxPropertySpec extends SparkSpec {
   }
 
   test("deletePartitions is semantics-equal to delete on random layouts and probes") {
-    // random row sets over a small value domain, random partition layout
-    // (partitioned on the probed column, on another column, or not at
-    // all), random probe value (present or absent): the fast path must
-    // produce exactly what the generic CoW predicate delete produces
-    val rowGen = for {
-      id <- Gen.choose(1, 60); day <- Gen.choose(0, 4); k <- Gen.choose(0, 2)
-    } yield (id, s"d$day", s"k$k")
-    val layoutGen = Gen.oneOf(Seq("day"), Seq("k"), Nil)
-    val probeGen = Gen.choose(0, 5).map(v => s"d$v") // d5 never exists
-    val prop = Prop.forAllNoShrink(
-      Gen.listOfN(40, rowGen), layoutGen, probeGen) { (rows0, layout, probe) =>
-      val rows = rows0.groupBy(_._1).map(_._2.head).toList // unique ids
-      val schema = StructType(Seq(
-        StructField("id", IntegerType), StructField("day", StringType),
-        StructField("k", StringType)))
-      val fast = new LakeCatalog(spark, tmpDir("dpfast"))
-      val slow = new LakeCatalog(spark, tmpDir("dpslow"))
-      Seq(fast, slow).foreach { c =>
-        c.createTable("t", schema, primaryKey = Seq("id"),
-          partitionBy = layout)
-        if (rows.nonEmpty) c.insert("t", rows.toDF("id", "day", "k"))
-      }
-      fast.deletePartitions("t", Map("day" -> probe))
-      slow.delete("t", col("day") === probe)
-      val a = fast.read("t").orderBy("id").collect().toSeq
-      val b = slow.read("t").orderBy("id").collect().toSeq
-      a == b
+    // random writes of >= 64 rows (so the harvest records value sets and
+    // stats), each over one or two days plus NULL days; each trial runs
+    // every partition layout (on the probed column, on another column,
+    // none) at a random shuffle width (1: a write is one file; 2: a day
+    // may share a file with the NULL bucket) and a random probe (mostly
+    // a present day): the fast path must produce exactly what the
+    // generic CoW predicate delete produces
+    val writeGen = for {
+      days <- Gen.frequency(2 -> 1, 1 -> 2).flatMap(Gen.pick(_, 0 to 5))
+      n <- Gen.choose(64, 90)
+      rows <- Gen.listOfN(n, Gen.zip(
+        Gen.frequency(3 -> Gen.oneOf(days.toSeq).map(d => s"d$d"),
+          1 -> Gen.const(null: String)),
+        Gen.choose(0, 2).map(k => s"k$k")))
+    } yield rows
+    val trialGen = for {
+      writes <- Gen.listOfN(2, writeGen)
+      width <- Gen.frequency(2 -> 1, 1 -> 2)
+      probe <- Gen.frequency( // d6 never exists
+        4 -> Gen.oneOf(writes.flatten.flatMap(r => Option(r._1))),
+        1 -> Gen.const("d6"))
+    } yield (writes, width, probe)
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("day", StringType),
+      StructField("k", StringType)))
+    val widthKey = "spark.sql.shuffle.partitions"
+    val prop = Prop.forAllNoShrink(trialGen) { case (writes, width, probe) =>
+      val priorWidth = spark.conf.get(widthKey)
+      spark.conf.set(widthKey, width.toString)
+      try {
+        val starts = writes.scanLeft(0)(_ + _.size)
+        val batches = writes.zip(starts).map { case (rows, s) =>
+          rows.zipWithIndex.map { case ((d, k), i) => (s + i, d, k) }
+            .toDF("id", "day", "k")
+        }
+        def lake(layout: Seq[String]): LakeCatalog = {
+          val c = new LakeCatalog(spark, tmpDir("dprop"))
+          c.createTable("t", schema, partitionBy = layout)
+          batches.foreach(c.insert("t", _))
+          c
+        }
+        val slow = lake(Nil)
+        slow.delete("t", col("day") === probe)
+        val want = slow.read("t").orderBy("id").collect().toSeq
+        Seq(Seq("day"), Seq("k"), Nil).forall { layout =>
+          val fast = lake(layout)
+          fast.deletePartitions("t", Map("day" -> probe))
+          fast.read("t").orderBy("id").collect().toSeq == want
+        }
+      } finally spark.conf.set(widthKey, priorWidth)
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
