@@ -157,16 +157,20 @@ object Tables {
     * Assuming ns unconditionally silently collapses a µs timeline 1000×
     * (the round-7 streaming regression). */
   private def events0(spark: SparkSession, sfDir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    eventsTs(spark.read.parquet(s"$sfDir/events.parquet"))
+  }
+
+  /** Normalize a batch or streaming read of events.parquet (made with the
+    * nanos-as-long conf set) to one ts type, TimestampType: raw nanos
+    * truncate to µs; TIMESTAMP(MICROS, isAdjustedToUTC=false) surfaces as
+    * TIMESTAMP_NTZ and casts 1:1 (the session TZ is pinned UTC). */
+  private[graft] def eventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType      => raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
       case TimestampType => raw
-      // TIMESTAMP(MICROS, isAdjustedToUTC=false) surfaces as TIMESTAMP_NTZ;
-      // normalize to TimestampType (session TZ is pinned UTC, so the naive
-      // value maps 1:1) so downstream code sees ONE ts type at all times
       case _             => raw.withColumn("ts", col("ts").cast(TimestampType))
     }
   }

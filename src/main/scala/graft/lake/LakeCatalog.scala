@@ -748,10 +748,6 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         Mv.create(this, mv, base, keys.toSeq, sums.toSeq,
           mins.toSeq, maxs.toSeq, avgs.toSeq)
       case Some((dim, fk, pk)) =>
-        require(mins.isEmpty && maxs.isEmpty,
-          "MIN/MAX are not maintainable on join MVs (a dim-churn leg " +
-            "would need per-group history) — supported on single-table " +
-            "MVs only")
         // SQL ON is order-insensitive but Mv.createJoin binds (fk, pk)
         // to (base, dim) — resolve each column to its actual side from
         // the table schemas, and reject when both orientations resolve
@@ -779,7 +775,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
                 s"${dimCols.toSeq.sorted.mkString(",")})")
           }
         Mv.createJoin(this, mv, base, dim, fk2, pk2, where.map(_.sql),
-          keys.toSeq, sums.toSeq, avgs = avgs.toSeq)
+          keys.toSeq, sums.toSeq, mins.toSeq, maxs.toSeq, avgs.toSeq)
     }
   }
 
@@ -1107,11 +1103,52 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * empty table — the creation commit's rows stream as plain inserts. */
   def tableChanges(table: String, fromV: Long, toV: Long,
       keyCols: Seq[String] = Nil, schemaAtV: Option[Long] = None): DataFrame = {
+    val (signed, appendOnly) = signedChanges(table, fromV, toV, schemaAtV)
+    val common = signed.columns.toSeq.filterNot(_ == "__w")
+    if (appendOnly)
+      return signed.select(common.map(col): _*)
+        .withColumn("change_type", lit("insert"))
+    // each distinct row's net weight `__w` says how many copies appeared
+    // (> 0) or vanished (< 0). This is Spark's own RewriteExceptAll done
+    // once for a\b and b\a together, so NULL-safe grouping, NaN/-0.0
+    // normalization and duplicate-row multiplicity mean exactly what
+    // exceptAll means. With keys, the input is clustered on them first:
+    // the aggregate (grouping on a superset of the keys) and the
+    // update-pairing window then share that one shuffle. A key holding
+    // both appeared and vanished rows is an update; the window groups
+    // NULL keys together, as the diff's own grouping does.
+    val keys = if (keyCols.nonEmpty) keyCols
+      else stateOf(snapshot(toV), table).primaryKey.filter(common.contains)
+    val net = (if (keys.isEmpty) signed else signed.repartition(keys.map(col): _*))
+      .groupBy(common.map(col): _*).agg(sum("__w").as("__w"))
+      .filter(col("__w") =!= 0L)
+    val typed = if (keys.isEmpty)
+      when(col("__w") > 0L, "insert").otherwise("delete")
+    else {
+      val byKey = Window.partitionBy(keys.map(col): _*)
+      val upd = max("__w").over(byKey) > 0L && min("__w").over(byKey) < 0L
+      when(col("__w") > 0L, when(upd, "update_postimage").otherwise("insert"))
+        .otherwise(when(upd, "update_preimage").otherwise("delete"))
+    }
+    net.withColumn("change_type", typed)
+      .withColumn("__w", explode(array_repeat(lit(1), abs(col("__w")).cast("int"))))
+      .select(common.map(col) :+ col("change_type"): _*)
+  }
+
+  /** The signed rows of a change window, before any netting: the
+    * window's common columns (see [[tableChanges]] for `schemaAtV`) plus
+    * a weight column `__w`, −1 for each row of the before side and +1
+    * for each row of the after side. Rows present at both ends cancel in
+    * any sum over `__w`, so a consumer that only sums weights (the MV
+    * maintainer) needs no per-row net aggregate. The flag is true for an
+    * append-only window: only its new rows, each +1, and no diff. */
+  private[lake] def signedChanges(table: String, fromV: Long, toV: Long,
+      schemaAtV: Option[Long] = None): (DataFrame, Boolean) = {
     // APPEND-ONLY fast path: when the manifest says the window only
     // ADDED data — schema unchanged, every old file entry still present
     // verbatim (same deletion vector, so no MoR tombstones landed), old
     // inlined batches an untouched prefix — the change feed is exactly
-    // the new files + new inlined rows, all 'insert'. That's one scan
+    // the new files + new inlined rows, each +1. That's one scan
     // of O(delta) instead of two O(table) reads + a diff aggregate:
     // at 100 TB the difference between reading the day's appends and
     // diffing two full snapshots (the Delta CDF / Iceberg incremental
@@ -1180,8 +1217,8 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       val oldFiles = sFrom.files.toSet
       val sub = sTo.copy(files = sTo.files.filterNot(oldFiles),
         inlined = sTo.inlined.drop(sFrom.inlined.size))
-      return readSub(sub).select(commonNames.map(col): _*)
-        .withColumn("change_type", lit("insert"))
+      return (readSub(sub).select(commonNames.map(col): _*)
+        .withColumn("__w", lit(1L)), true)
     }
     // CHURNED-FILES diff: with an unchanged schema, every file entry
     // present verbatim at both window ends (same path, same deletion
@@ -1193,7 +1230,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     // — the change feed is O(churn), which is what lets an incremental
     // MV refresh stay O(delta) at 100 TB. A schema change falls back to
     // the full common-column diff below.
-    val (b, a, common) =
+    val (b, a) =
       if (colsAligned) {
         val toSet = sTo.files.toSet; val fromSet = sFrom.files.toSet
         val inlEq = sFrom.inlined == sTo.inlined
@@ -1202,42 +1239,14 @@ class LakeCatalog(val spark: SparkSession, val root: String,
         val aSub = sTo.copy(files = sTo.files.filterNot(fromSet),
           inlined = if (inlEq) Nil else sTo.inlined)
         (readSub(bSub).select(commonNames.map(col): _*),
-          readSub(aSub).select(commonNames.map(col): _*), commonNames)
+          readSub(aSub).select(commonNames.map(col): _*))
       } else {
         val before = readAt(table, fromV)
         val after = readAt(table, toV)
         val cs = before.columns.intersect(after.columns).toSeq
-        (before.select(cs.map(col): _*), after.select(cs.map(col): _*), cs)
+        (before.select(cs.map(col): _*), after.select(cs.map(col): _*))
       }
-    // SIGNED multiset diff, both directions in one aggregate: before-rows
-    // weigh -1, after-rows +1, and each distinct row's net weight `__n`
-    // says how many copies appeared (> 0) or vanished (< 0). This is
-    // Spark's own RewriteExceptAll done once for a\b and b\a together,
-    // so NULL-safe grouping, NaN/-0.0 normalization and duplicate-row
-    // multiplicity mean exactly what exceptAll means. With keys, the
-    // input is clustered on them first: the aggregate (grouping on a
-    // superset of the keys) and the update-pairing window then share
-    // that one shuffle. A key holding both appeared and vanished rows
-    // is an update; the window groups NULL keys together, as the
-    // diff's own grouping does.
-    val keys = if (keyCols.nonEmpty) keyCols
-      else sTo.primaryKey.filter(common.contains)
-    val signed = b.withColumn("__n", lit(-1L))
-      .union(a.withColumn("__n", lit(1L)))
-    val net = (if (keys.isEmpty) signed else signed.repartition(keys.map(col): _*))
-      .groupBy(common.map(col): _*).agg(sum("__n").as("__n"))
-      .filter(col("__n") =!= 0L)
-    val typed = if (keys.isEmpty)
-      when(col("__n") > 0L, "insert").otherwise("delete")
-    else {
-      val byKey = Window.partitionBy(keys.map(col): _*)
-      val upd = max("__n").over(byKey) > 0L && min("__n").over(byKey) < 0L
-      when(col("__n") > 0L, when(upd, "update_postimage").otherwise("insert"))
-        .otherwise(when(upd, "update_preimage").otherwise("delete"))
-    }
-    net.withColumn("change_type", typed)
-      .withColumn("__n", explode(array_repeat(lit(1), abs(col("__n")).cast("int"))))
-      .select(common.map(col) :+ col("change_type"): _*)
+    (b.withColumn("__w", lit(-1L)).union(a.withColumn("__w", lit(1L))), false)
   }
 
   /** Tag ledger: (ref_name, snapshot_id), the `refs` metadata table. */

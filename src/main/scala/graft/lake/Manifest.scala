@@ -9,7 +9,6 @@ import org.json4s.jackson.Serialization
 import java.nio.file.{Files, Paths, FileAlreadyExistsException}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 /** Versioned catalog metadata — the Spark-native analog of DuckLake's
   * "metadata is just rows in a transactional store" design
@@ -493,8 +492,11 @@ object Manifest {
   private[lake] val blobCache = new ConcurrentHashMap[String, Seq[FileEntry]]()
 
   /** Diagnostic: physical snapshot-document reads (cache misses at the
-    * catalog layer). Tests assert metadata-read complexity with this. */
-  val manifestFileReads = new AtomicLong(0)
+    * catalog layer) made by the calling thread. Tests assert
+    * metadata-read complexity with this; counting per thread keeps the
+    * reads of suites running concurrently in the same JVM out of it. */
+  val manifestFileReads: ThreadLocal[java.lang.Long] =
+    ThreadLocal.withInitial(() => 0L)
 
   def manifestDir(root: String) = new Path(root, "_manifest")
 
@@ -550,7 +552,7 @@ trait ManifestStore {
 
   final def load(v: Long): Snapshot = {
     if (v == 0L) return Manifest.empty
-    manifestFileReads.incrementAndGet()
+    manifestFileReads.set(manifestFileReads.get + 1)
     val doc = JsonMethods.parse(readDoc(v)).extract[Snapshot]
     if (doc.aggV < Format) throw new IllegalStateException(
       s"manifest v$v has document format ${doc.aggV}: it predates the " +

@@ -15,31 +15,38 @@ import org.apache.spark.sql.functions._
   * catalog version it reflects. `refresh` advances it by applying the
   * CHANGE FEED between that watermark and now:
   *
-  *  - the delta rows ([[LakeCatalog.tableChanges]]) are aggregated per
-  *    group with a +1/−1 sign (insert/update_postimage vs
-  *    delete/update_preimage), one shuffle over the DELTA;
+  *  - the delta is the window's SIGNED rows
+  *    ([[LakeCatalog.signedChanges]]: −1 for a before-side row, +1 for
+  *    an after-side row), and each group's delta is Σ weight·row — one
+  *    shuffle over the DELTA, no per-row netting: a row re-staged
+  *    unchanged by a copy-on-write rewrite cancels in the sums, and a
+  *    group whose deltas all net to zero is left alone;
   *  - changed groups join the current MV on the group key (delta-sized
-  *    build side) and merge back copy-on-write; groups whose count
-  *    reaches zero are deleted.
+  *    build side) and apply in ONE copy-on-write MERGE: a group with
+  *    rows left updates or inserts, a group whose count reaches zero is
+  *    deleted, and a group never seen that nets to zero inserts nothing.
   *
   * Work is O(changed rows + changed groups), never O(base table) — at
   * 100 TB a daily refresh costs the day's delta, not a table scan. When
   * the watermark version has been vacuumed away the change feed is
-  * unreadable, so refresh falls back to a full recompute (correct,
+  * unreadable, so refresh falls back to a full recompute, applied by
+  * the same MERGE with a not-matched-by-source delete (correct,
   * proportional to the table — the documented cost of expiring history
   * an MV still needed). count/sum (and anything derivable: avg) are
   * maintained purely from the delta. min/max are maintained with the
-  * standard split: an INSERT-ONLY delta folds in as
+  * standard split: a group whose delta rows all weigh +1 folds in as
   * least/greatest(old, delta-min/max) — still O(delta) — while a group
-  * touched by any delete/update-preimage recomputes from the base via a
+  * holding any negative-weight row recomputes from the base via a
   * semi-join on exactly the affected group keys (O(changed groups'
   * rows); when deletes are rare, almost every refresh takes the fast
-  * path). Join MVs accept min/max with the same split: the fast fold
-  * applies when every delta leg is insert-only, and any negative-signed
-  * row (fact delete OR dim churn — dim legs multiply signs in) routes
-  * its groups to the exact recompute, which re-runs the filter+join for
-  * just those groups via a semi-join on the affected keys — O(changed
-  * groups' fact rows), the same bound as the base-table delete path.
+  * path; a copy-on-write rewrite's re-staged rows count as negative
+  * there, so their groups recompute too). Join MVs accept min/max with
+  * the same split: join legs multiply their inputs' weights, and any
+  * negative-weight row (fact delete OR dim churn) routes its groups to
+  * the exact recompute, which re-runs the filter+join for just those
+  * groups via a semi-join on the affected keys — O(changed groups' fact
+  * rows), the same bound as the base-table delete path. The recomputed
+  * rows ride the same MERGE as the folded ones.
   *
   * Counts and sums ride integer/decimal arithmetic end-to-end when the
   * summed columns are integral; for floating columns the caller should
@@ -153,8 +160,8 @@ object Mv {
     *
     * Refresh algebra (signed multiset semantics): with base/dim deltas
     * ΔF/ΔD between the watermark and now,
-    * Δ(F⋈D) = ΔF⋈D₀ ∪ F₀⋈ΔD ∪ ΔF⋈ΔD, each row signed by the product
-    * of its inputs' change signs. Both "old" sides come from TIME TRAVEL
+    * Δ(F⋈D) = ΔF⋈D₀ ∪ F₀⋈ΔD ∪ ΔF⋈ΔD, each row weighted by the product
+    * of its inputs' weights. Both "old" sides come from TIME TRAVEL
     * at the watermark version (snapshots are catalog-level, so one
     * watermark covers both tables). When the dim did not change — the
     * overwhelmingly common refresh — only the ΔF⋈D₀ leg runs and the
@@ -247,166 +254,134 @@ object Mv {
         // which remains the documented full-recompute cost of expiring
         // history an MV needed.
         if (curV - lastV < WatermarkRenewGap) throw AlreadyFresh
-      } else if (tx.versionExpired(lastV)) {
-        // watermark vacuumed: the feed below it is gone — full reload
-        mode = "full"
-        tx.delete(mv, lit(true))
-        val f = withFilter(tx.read(base))
-        val src = joinSpec match {
-          case Some((dim, fk, pk)) => joinFrames(f, tx.read(dim), fk, pk)
-          case None => f
-        }
-        val aggs = aggExprs(sums, mins, maxs, avgs)
-        tx.insert(mv, withAvgs(src.groupBy(keys.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*), avgs))
       } else {
-        mode = "incremental"
-        val sign = when(
-          col("change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L)
-        // signed delta rows carrying keys + summed columns + `__sgn`
-        val delta: DataFrame = joinSpec match {
-          case None =>
-            withFilter(cat.tableChanges(base, lastV, curV))
-              .withColumn("__sgn", sign)
-          case Some((dim, fk, pk)) =>
-            // Δ(F⋈D) = ΔF⋈D₀ ∪ F₀⋈ΔD ∪ ΔF⋈ΔD (signs multiply); old
-            // states via time travel at the shared watermark. The
-            // manifest check above already said which sides moved, so
-            // only the legs with a changed input are BUILT — a dim-only
-            // churn never scans the fact change feed and vice versa
-            // (each tableChanges leg is a two-version diff aggregate —
-            // real jobs, not free)
-            val sel = (keys ++ sums ++ mins ++ maxs).distinct.map(col) :+
-              col("__sgn")
-            def dF = withFilter(cat.tableChanges(base, lastV, curV))
-              .withColumn("__sf", sign).drop("change_type")
-            def dD = cat.tableChanges(dim, lastV, curV)
-              .withColumn("__sd", sign).drop("change_type")
-            if (!dChanged) {
-              // unchanged dim (the common refresh): one O(fact-delta) leg
-              joinFrames(dF, cat.readAt(dim, lastV), fk, pk)
-                .withColumn("__sgn", col("__sf")).select(sel: _*)
-            } else if (!bChanged) {
-              // dim-only churn: one O(dim-delta) leg over the old facts
-              joinFrames(withFilter(cat.readAt(base, lastV)), dD, fk, pk)
-                .withColumn("__sgn", col("__sd")).select(sel: _*)
-            } else {
-              val dFv = dF; val dDv = dD
-              val leg1 = joinFrames(dFv, cat.readAt(dim, lastV), fk, pk)
-                .withColumn("__sgn", col("__sf")).select(sel: _*)
-              val fOld = withFilter(cat.readAt(base, lastV))
-              val leg2 = joinFrames(fOld, dDv, fk, pk)
-                .withColumn("__sgn", col("__sd")).select(sel: _*)
-              val leg3 = joinFrames(dFv, dDv, fk, pk)
-                .withColumn("__sgn", col("__sf") * col("__sd"))
-                .select(sel: _*)
-              leg1.unionByName(leg2).unionByName(leg3)
-            }
-        }
-        // __hasneg flags groups touched by a delete/update_preimage —
-        // the only rows that can invalidate a running min/max
-        val dAggs = (sum(col("__sgn")).as("__dn") +:
-          sums.map(c => sum(col("__sgn") * col(c)).as(s"__d_$c"))) ++
-          // signed NON-NULL count — the avg denominators' delta
-          avgs.map(c => sum(col("__sgn") *
-            when(col(c).isNotNull, 1L).otherwise(0L)).as(s"__dc_$c")) ++
-          mins.map(c => min(when(col("__sgn") > 0, col(c))).as(s"__dmin_$c")) ++
-          maxs.map(c => max(when(col("__sgn") > 0, col(c))).as(s"__dmax_$c")) :+
-          max(when(col("__sgn") < 0, lit(1)).otherwise(lit(0))).as("__hasneg")
-        // the per-group delta is consumed up to three times (merge,
-        // zero-group gate, min/max recompute keys) and each consumer
-        // would otherwise replay the whole change-feed plan — persist
-        // the changed-groups-sized frame and read its two routing flags
-        // in ONE action (which also materializes the cache)
-        val deltaAgg = delta.groupBy(keys.map(col): _*)
-          .agg(dAggs.head, dAggs.tail: _*).persist()
-        try {
-        val flags = deltaAgg.agg(
-          count(lit(1)).as("__g"),
-          max(col("__hasneg")).as("__hn"),
-          min(col("__dn")).as("__mindn")).head()
-        val nGroups = flags.getLong(0)
-        val anyNeg = nGroups > 0 && flags.getInt(1) == 1
-        val mayEmpty = nGroups > 0 && flags.getLong(2) < 0L
-        if (nGroups > 0) {
-        // join changed groups against their CURRENT MV row (delta-sized)
-        val cur = tx.read(mv)
-        // insert-only groups fold in purely from the delta: sums add,
-        // min/max fold as least/greatest(old, delta) — both NULL-skipping,
-        // matching SQL MIN/MAX semantics
-        val fastGroups =
-          if (mins.isEmpty && maxs.isEmpty) deltaAgg
-          else deltaAgg.filter(col("__hasneg") === 0)
-        val joined = fastGroups.join(cur, keys, "left_outer")
-        // NULL-safe delta apply: a delta batch whose summed values are
-        // all NULL aggregates to a NULL __d_ — adding that raw would
-        // clobber the existing group sum to NULL. Sums here follow the
-        // COALESCE(SUM(x),0) convention (a group with only NULL values
-        // reports 0), stated in the object scaladoc.
-        def newSum(c: String): Column = {
-          val t = cur.schema(s"sum_$c").dataType
-          coalesce(col(s"sum_$c"), lit(0L).cast(t)) +
-            coalesce(col(s"__d_$c"), lit(0L).cast(t))
-        }
-        def newCnt(c: String): Column =
-          coalesce(col(s"cnt_$c"), lit(0L)) +
-            coalesce(col(s"__dc_$c"), lit(0L))
-        val updated = joined.select(
-          (keys.map(col) ++
-            Seq((coalesce(col("n_rows"), lit(0L)) + col("__dn")).as("n_rows")) ++
-            sums.map(c => newSum(c).as(s"sum_$c")) ++
-            avgs.map(c => newCnt(c).as(s"cnt_$c")) ++
-            mins.map(c => least(col(s"min_$c"), col(s"__dmin_$c")).as(s"min_$c")) ++
-            maxs.map(c =>
-              greatest(col(s"max_$c"), col(s"__dmax_$c")).as(s"max_$c")) ++
-            // avg re-derived from the merged sum+count (write-path rule)
-            avgs.map(c => when(newCnt(c) > 0L,
-              newSum(c).cast("double") / newCnt(c)).as(s"avg_$c"))): _*)
-        tx.merge(mv, updated, keys)
-        // a group can only hit zero if some group's row-delta is
-        // negative — insert-only refreshes (the common case) skip the
-        // delete pass entirely. With min/max maintained the pass is
-        // dead even then: a negative sign sets __hasneg, which routes
-        // the group OUT of the fast fold and into the exact recompute
-        // below (delete(delKeys) covers its emptied groups), so every
-        // merged group here had a strictly positive row-delta.
-        if (mayEmpty && mins.isEmpty && maxs.isEmpty)
-          tx.delete(mv, col("n_rows") <= 0L)
-        if ((mins.nonEmpty || maxs.nonEmpty) && anyNeg) {
-          // delete-touched groups: the retired value may have BEEN the
-          // min/max, so recompute exactly those groups from the source —
-          // for a join MV that means re-running the filter+join, still
-          // restricted by a semi-join on the affected keys (the keys may
-          // come from either side, so the cut applies after the join):
-          // O(changed groups' fact rows), the bound the scaladoc states
-          val delKeys = deltaAgg.filter(col("__hasneg") === 1)
-            .select(keys.map(col): _*)
-          val aggs = aggExprs(sums, mins, maxs, avgs)
-          val src = joinSpec match {
+        // a vacuumed watermark leaves no change feed below it: full reload
+        val full = !watermarkLive
+        mode = if (full) "full" else "incremental"
+        val aggs = aggExprs(sums, mins, maxs, avgs)
+        def recompute(src: DataFrame): DataFrame = withAvgs(src
+          .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*), avgs)
+        def current: DataFrame = joinSpec.foldLeft(withFilter(tx.read(base))) {
+          case (f, (dim, fk, pk)) => joinFrames(f, tx.read(dim), fk, pk) }
+        // ONE copy-on-write pass writes every path: a row with n_rows > 0
+        // updates or inserts its group, n_rows <= 0 deletes it (a group
+        // emptied by the delta, or the -1 sentinel of a recomputed group
+        // that vanished), and a group never seen that nets to zero
+        // inserts nothing. The full reload also deletes every group the
+        // recompute no longer has.
+        def apply(rows: DataFrame): Unit =
+          tx.mergeClauses(mv, rows, keys, MergeClauses(
+            matchedDelete = Some("s.n_rows <= 0"),
+            matchedUpdate = Some("s.n_rows > 0"),
+            notMatchedInsert = Some("n_rows > 0"),
+            bySourceDelete = Option.when(full)("true")))
+        if (full) apply(recompute(current))
+        else {
+          val minMax = mins.nonEmpty || maxs.nonEmpty
+          // signed delta rows carrying keys + aggregated columns + `__w`
+          // (−1 before-side, +1 after-side; see LakeCatalog.signedChanges)
+          def signed(t: String): DataFrame = cat.signedChanges(t, lastV, curV)._1
+          val delta: DataFrame = joinSpec match {
+            case None => withFilter(signed(base))
             case Some((dim, fk, pk)) =>
-              joinFrames(withFilter(tx.read(base)), tx.read(dim), fk, pk)
-            case None => withFilter(tx.read(base))
+              // Δ(F⋈D) = ΔF⋈D₀ ∪ F₀⋈ΔD ∪ ΔF⋈ΔD, each row weighted by the
+              // product of its inputs' weights (old states weigh 1, via
+              // time travel at the shared watermark). The manifest check
+              // above already said which sides moved, so only the legs
+              // with a changed input are BUILT — a dim-only churn never
+              // scans the fact change feed and vice versa
+              lazy val dF = withFilter(signed(base))
+                .withColumnRenamed("__w", "__wf")
+              lazy val dD = signed(dim).withColumnRenamed("__w", "__wd")
+              def f0 = withFilter(cat.readAt(base, lastV)).withColumn("__wf", lit(1L))
+              def d0 = cat.readAt(dim, lastV).withColumn("__wd", lit(1L))
+              val sel = (keys ++ sums ++ mins ++ maxs).distinct.map(col) :+
+                (col("__wf") * col("__wd")).as("__w")
+              Seq(Option.when(bChanged)((dF, d0)),
+                Option.when(dChanged)((f0, dD)),
+                Option.when(bChanged && dChanged)((dF, dD))).flatten
+                .map { case (f, d) => joinFrames(f, d, fk, pk).select(sel: _*) }
+                .reduce(_ unionByName _)
           }
-          val recomputed = withAvgs(src
-            .join(delKeys, keys, "left_semi")
-            .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*), avgs)
-          // ONE copy-on-write pass applies the whole recompute: groups
-          // that vanished from the source carry an n_rows = -1 sentinel
-          // and DELETE; surviving groups UPDATE; a group born inside
-          // this window INSERTs (count(*) can never be negative, so the
-          // sentinel is unambiguous). Replaces the former
-          // delete(delKeys) + insert(recomputed) pair — two file
-          // rewrites of the same MV rows — with a single one.
-          val applySrc = delKeys.join(recomputed, keys, "left_outer")
-            .withColumn("n_rows", coalesce(col("n_rows"), lit(-1L)))
-          tx.mergeClauses(mv, applySrc, keys, MergeClauses(
-            matchedDelete = Some("s.n_rows < 0"),
-            matchedUpdate = Some("s.n_rows >= 0"),
-            notMatchedInsert = Some("n_rows >= 0")))
+          // Δ per group = Σ weight·row: the count, sums and non-NULL
+          // counts (the avg denominators) sum the weight; rows re-staged
+          // unchanged by a copy-on-write rewrite cancel here. `__hasneg`
+          // flags a group holding a negative-weight row — one that may
+          // have retired its running min/max
+          val w = col("__w")
+          val dAggs = (sum(w).as("__dn") +:
+            sums.map(c => sum(w * col(c)).as(s"__d_$c"))) ++
+            avgs.map(c => sum(when(col(c).isNotNull, w).otherwise(0L)).as(s"__dc_$c")) ++
+            mins.map(c => min(when(w > 0, col(c))).as(s"__dmin_$c")) ++
+            maxs.map(c => max(when(w > 0, col(c))).as(s"__dmax_$c")) :+
+            max(when(w < 0, lit(1)).otherwise(lit(0))).as("__hasneg")
+          // a group whose deltas all net to zero keeps its MV row as is,
+          // unless a negative row sends it to the min/max recompute
+          val changed = ((col("__dn") =!= 0L) +:
+            (sums.map(c => coalesce(col(s"__d_$c") =!= 0, lit(false))) ++
+              avgs.map(c => col(s"__dc_$c") =!= 0L))) ++
+            Option.when(minMax)(col("__hasneg") === 1)
+          // the per-group delta feeds the routing flags, the fast fold and
+          // the recompute keys, and each would otherwise replay the whole
+          // change-feed plan — persist the changed-groups-sized frame and
+          // read its two routing flags in ONE action (which also
+          // materializes the cache)
+          val deltaAgg = delta.groupBy(keys.map(col): _*)
+            .agg(dAggs.head, dAggs.tail: _*).filter(changed.reduce(_ || _))
+            .persist()
+          try {
+            val flags = deltaAgg.agg(count(lit(1)), max(col("__hasneg"))).head()
+            if (flags.getLong(0) > 0) {
+              // groups with no negative row fold in purely from the delta
+              // against their CURRENT MV row (delta-sized): sums add,
+              // min/max fold as least/greatest(old, delta) — both
+              // NULL-skipping, matching SQL MIN/MAX semantics
+              val cur = tx.read(mv)
+              val fastGroups =
+                if (minMax) deltaAgg.filter(col("__hasneg") === 0) else deltaAgg
+              // NULL-safe delta apply: a delta batch whose summed values
+              // are all NULL aggregates to a NULL __d_ — adding that raw
+              // would clobber the existing group sum to NULL. Sums here
+              // follow the COALESCE(SUM(x),0) convention (a group with
+              // only NULL values reports 0), stated in the object scaladoc.
+              def newSum(c: String): Column = {
+                val t = cur.schema(s"sum_$c").dataType
+                coalesce(col(s"sum_$c"), lit(0L).cast(t)) +
+                  coalesce(col(s"__d_$c"), lit(0L).cast(t))
+              }
+              def newCnt(c: String): Column =
+                coalesce(col(s"cnt_$c"), lit(0L)) + col(s"__dc_$c")
+              val folded = fastGroups.join(cur, keys, "left_outer").select(
+                (keys.map(col) ++
+                  Seq((coalesce(col("n_rows"), lit(0L)) + col("__dn")).as("n_rows")) ++
+                  sums.map(c => newSum(c).as(s"sum_$c")) ++
+                  avgs.map(c => newCnt(c).as(s"cnt_$c")) ++
+                  mins.map(c => least(col(s"min_$c"), col(s"__dmin_$c")).as(s"min_$c")) ++
+                  maxs.map(c =>
+                    greatest(col(s"max_$c"), col(s"__dmax_$c")).as(s"max_$c")) ++
+                  // avg re-derived from the merged sum+count (write-path rule)
+                  avgs.map(c => when(newCnt(c) > 0L,
+                    newSum(c).cast("double") / newCnt(c)).as(s"avg_$c"))): _*)
+              // groups with a negative row: the retired value may have
+              // BEEN the min/max, so recompute exactly those groups from
+              // the source — for a join MV that re-runs the filter+join,
+              // still cut by a semi-join on the affected keys (the keys
+              // may come from either side, so the cut applies after the
+              // join): O(changed groups' rows). A group gone from the
+              // source carries the n_rows = -1 sentinel (count(*) is never
+              // negative, so it is unambiguous)
+              val rows = if (!minMax || flags.getInt(1) == 0) folded else {
+                val delKeys = deltaAgg.filter(col("__hasneg") === 1)
+                  .select(keys.map(col): _*)
+                folded.unionByName(delKeys.join(
+                  recompute(current.join(delKeys, keys, "left_semi")),
+                  keys, "left_outer")
+                  .withColumn("n_rows", coalesce(col("n_rows"), lit(-1L))))
+              }
+              apply(rows)
+            }
+          } finally deltaAgg.unpersist(blocking = false)
         }
-        }
-        } finally deltaAgg.unpersist(blocking = false)
       }
       tx.setProperty(mv, PVersion, tx.commitVersion.toString)
     } catch { case AlreadyFresh => () }

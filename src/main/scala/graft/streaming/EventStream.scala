@@ -22,54 +22,37 @@ import org.apache.spark.sql.types._
   */
 object EventStream {
 
-  /** events.parquet schema; ts is [[TimestampType]] for a TIMESTAMP(MICROS)
-    * file or [[LongType]] (raw nanos, via the nanos-as-long legacy conf)
-    * for a TIMESTAMP(NANOS) one — see [[readEvents]]. */
-  private def rawSchema(tsType: DataType) = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Replay the driver events table as a file-source stream.
     *
     * The file has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
     * across driver testdata generations, and a file stream source needs an
-    * explicit schema — so probe the encoding with a one-footer batch read
-    * first (ns surfaces as Long under the legacy conf, µs as a native
-    * timestamp) and truncate ns→µs only when the file really is ns.
-    * Assuming ns unconditionally silently collapses a µs timeline 1000×
-    * (the round-7 streaming regression: windows never closed, every
-    * click/purchase pair landed inside the join interval). */
-  // the encoding probe is one driver-side footer read per call — st4/st7
+    * explicit schema — so take the file's own schema from a one-footer
+    * batch read (ns surfaces as Long under the legacy conf, µs as a native
+    * timestamp) and normalize ts exactly as the batch loader does
+    * ([[graft.Tables.eventsTs]]). Assuming ns unconditionally silently
+    * collapses a µs timeline 1000× (the round-7 streaming regression:
+    * windows never closed, every click/purchase pair landed inside the
+    * join interval). */
+  // the schema probe is one driver-side footer read per call — st4/st7
   // build two stream sides each, and a benchmark session replays the st*
-  // queries many times, so memoize the detected ts type. The type is a
-  // property of the FILE, not the session, so key by (dir, mtime): no
-  // SparkSession is retained (sessions come and go across test suites)
-  // and regenerating events.parquet in the same dir invalidates the entry.
-  private val tsTypeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), DataType]()
+  // queries many times, so memoize the schema. It is a property of the
+  // FILE, not the session, so key by (dir, mtime): no SparkSession is
+  // retained (sessions come and go across test suites) and regenerating
+  // events.parquet in the same dir invalidates the entry.
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
 
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = new org.apache.hadoop.fs.Path(s"$sfDir/events.parquet")
     val mtime = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(path).getModificationTime
-    val fileTsType = tsTypeMemo.computeIfAbsent((sfDir, mtime), _ =>
-      spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType)
-    val stream = spark.readStream
-      .schema(rawSchema(fileTsType))
+    val schema = schemaMemo.computeIfAbsent((sfDir, mtime), _ =>
+      spark.read.parquet(s"$sfDir/events.parquet").schema)
+    graft.Tables.eventsTs(spark.readStream
+      .schema(schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    fileTsType match {
-      case LongType      => stream.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case TimestampType => stream
-      // TIMESTAMP_NTZ file: normalize to TimestampType (session TZ pinned
-      // UTC) so every downstream consumer sees one ts type
-      case _             => stream.withColumn("ts", col("ts").cast(TimestampType))
-    }
+      .parquet(sfDir))
   }
 
   /** Watermarked tumbling-window aggregation (1-hour windows, 2-hour

@@ -1303,6 +1303,76 @@ class LakeSpec extends SparkSpec {
     assert(mvState() === recompute())
   }
 
+  test("join MV refresh: a group that nets to zero inside one window is never inserted") {
+    // grp 1 is born by a dim update (k = 1 moves to it) and loses its
+    // only fact row (id = 1) in the same window: its legs sum to a count
+    // and sum of 0, so it must not land in the MV as a zero-count row
+    val cat = newLake()
+    cat.createTableAs("f", Seq((1L, 1L, 10L), (5L, 5L, 50L)).toDF("id", "k", "v"))
+    cat.createTableAs("dm", Seq((1L, 0L), (3L, 0L), (5L, 2L)).toDF("k", "grp"))
+    graft.lake.Mv.createJoin(cat, "m", "f", "dm", "k", "k", None,
+      Seq("grp"), Seq("v"))
+    cat.update("dm", col("k") === 1L, Map("grp" -> lit(1L)))
+    cat.delete("f", col("id") === 1L)
+    cat.insert("f", Seq((2L, 3L, 20L)).toDF("id", "k", "v"))
+    assert(graft.lake.Mv.refresh(cat, "m") === "incremental")
+    val want = cat.read("f").join(cat.read("dm"), "k").groupBy("grp")
+      .agg(count(lit(1)).as("n_rows"), sum("v").as("sum_v"))
+      .orderBy("grp").collect().map(_.toString).toSeq
+    assert(want === Seq("[0,1,20]", "[2,1,50]"))
+    assert(cat.read("m").select("grp", "n_rows", "sum_v").orderBy("grp")
+      .collect().map(_.toString).toSeq === want)
+    assert(!cat.read("m").select("grp").as[Long].collect().contains(1L))
+  }
+
+  test("MV refresh writes each path as one merge: the commit header lists the MV under tables_merged only") {
+    // sum-only deletes (an emptied group), a min/max recompute, and the
+    // full reload after vacuum each apply through one MERGE — no
+    // separate delete or insert pass over the MV
+    def kv(): LakeCatalog = {
+      val cat = newLake()
+      cat.createTable("t", StructType(Seq(StructField("id", LongType),
+        StructField("k", LongType), StructField("v", LongType))),
+        primaryKey = Seq("id"))
+      cat.insert("t", spark.range(0, 2000)
+        .selectExpr("id", "id % 50 AS k", "id * 3 AS v"))
+      cat
+    }
+    def refreshed(cat: LakeCatalog, mode: String, minMax: Boolean): Unit = {
+      assert(graft.lake.Mv.refresh(cat, "m") === mode)
+      val changes = cat.current.history.last.changes
+      assert(changes.getOrElse("tables_merged", Nil) === Seq("m"))
+      assert(!changes.contains("tables_deleted_from"))
+      assert(!changes.contains("tables_inserted_into"))
+      val aggs = Seq(count(lit(1)).as("n_rows"), sum("v").as("sum_v")) ++
+        (if (minMax) Seq(min("v").as("min_v"), max("v").as("max_v")) else Nil)
+      val cols = Seq("k", "n_rows", "sum_v") ++
+        (if (minMax) Seq("min_v", "max_v") else Nil)
+      assert(cat.read("m").select(cols.map(col): _*).orderBy("k")
+        .collect().map(_.toString).toSeq ===
+        cat.read("t").groupBy("k").agg(aggs.head, aggs.tail: _*)
+          .orderBy("k").collect().map(_.toString).toSeq)
+    }
+    val sumOnly = kv()
+    graft.lake.Mv.create(sumOnly, "m", "t", Seq("k"), Seq("v"))
+    sumOnly.update("t", col("id") % 97 === 0, Map("v" -> (col("v") + 1L)))
+    sumOnly.delete("t", col("k") === 3L)
+    refreshed(sumOnly, "incremental", minMax = false)
+    val minMax = kv()
+    graft.lake.Mv.create(minMax, "m", "t", Seq("k"), Seq("v"),
+      mins = Seq("v"), maxs = Seq("v"))
+    minMax.insert("t", spark.range(100000, 101000)
+      .selectExpr("id", "id % 50 AS k", "id AS v"))
+    minMax.delete("t", col("id") < 10L)
+    refreshed(minMax, "incremental", minMax = true)
+    val full = kv()
+    graft.lake.Mv.create(full, "m", "t", Seq("k"), Seq("v"))
+    full.insert("t", spark.range(100000, 100010)
+      .selectExpr("id", "id % 50 AS k", "id AS v"))
+    full.vacuum(keepLast = 1)
+    refreshed(full, "full", minMax = false)
+  }
+
   test("Mv Scala API refuses to run inside an open interactive transaction") {
     val cat = newLake()
     cat.createTableAs("b", Seq((1L, 10L)).toDF("k", "v"))
@@ -1753,13 +1823,21 @@ class LakeSpec extends SparkSpec {
     assert(path === "incremental")
     assert(cat.sql("SELECT sum_v FROM m WHERE grp = 'b'")
       .head().getLong(0) === 42L)
+    // MIN/MAX on a join MV maintains as Mv.createJoin does: a dim update
+    // moves k = 2 into group a, group b empties, and the max stays exact
+    cat.execute("CREATE MATERIALIZED VIEW mx AS " +
+      "SELECT grp, COUNT(*) AS n_rows, MAX(v) AS max_v " +
+      "FROM f JOIN dim ON k = k GROUP BY grp")
+    cat.update("dim", col("k") === 2, Map("grp" -> lit("a")))
+    assert(cat.execute("REFRESH MATERIALIZED VIEW mx").head().getString(1)
+      === "incremental")
+    val mxWant = cat.read("f").join(cat.read("dim"), "k").groupBy("grp")
+      .agg(count(lit(1)).as("n_rows"), max("v").as("max_v"))
+      .orderBy("grp").collect().map(_.toString).toSeq
+    assert(mxWant === Seq("[a,5,22]"))
+    assert(cat.sql("SELECT grp, n_rows, max_v FROM mx ORDER BY grp")
+      .collect().map(_.toString).toSeq === mxWant)
     // the maintainer's subset is enforced loudly, not silently mangled:
-    // MIN/MAX are single-table only (a dim-churn leg would need history)
-    intercept[IllegalArgumentException] {
-      cat.execute("CREATE MATERIALIZED VIEW bad1 AS " +
-        "SELECT grp, COUNT(*) AS n_rows, MAX(v) AS max_v " +
-        "FROM f JOIN dim ON k = k GROUP BY grp")
-    }
     // COUNT(*) AS n_rows is mandatory (retires emptied groups)
     intercept[IllegalArgumentException] {
       cat.execute("CREATE MATERIALIZED VIEW bad1b AS " +

@@ -237,32 +237,55 @@ class TxPropertySpec extends SparkSpec {
   }
 
   test("MV refresh equals a full recompute after any random churn sequence") {
-    // the min/max MV's routing (insert-only fast fold vs exact
-    // recompute vs full reload, manifest-gated noops, the one-pass
-    // sentinel merge) must be invisible: after every refresh the MV is
-    // row-identical to recomputing the aggregate from scratch.
+    // the MV routing (insert-only fast fold vs exact recompute vs full
+    // reload, manifest-gated noops, the one-pass merge) must be
+    // invisible: after every refresh each MV is row-identical to
+    // recomputing its aggregate from scratch. One op stream maintains a
+    // min/max MV, a sum-only MV (emptied groups delete) and a min/max
+    // join MV over a dim whose rows move between groups (the join legs).
     // ops: 0=insert 1=update 2=CoW delete 3=MoR delete
     //      4=unrelated-table commit 5=refresh now 6=vacuum(keepLast=2)
+    //      7=dim update
     val dmlGen: Gen[Int] = Gen.frequency(
-      3 -> 0, 2 -> 1, 2 -> 2, 2 -> 3, 2 -> 4, 3 -> 5, 1 -> 6)
+      3 -> 0, 2 -> 1, 2 -> 2, 2 -> 3, 2 -> 4, 3 -> 5, 1 -> 6, 2 -> 7)
     val prop = Prop.forAllNoShrink(Gen.listOfN(8, dmlGen)) { ops =>
       val cat = new LakeCatalog(spark, tmpDir("lakemvprop"))
       cat.createTableAs("other", spark.range(3).toDF("id"))
       cat.createTableAs("base", spark.range(0, 120)
         .selectExpr("id", "id % 5 AS k",
           "CASE WHEN id % 11 = 0 THEN NULL ELSE id * 3 END AS v"))
+      cat.createTableAs("dm", spark.range(5).selectExpr("id AS k", "id % 2 AS grp"))
       graft.lake.Mv.create(cat, "base_by_k", "base", Seq("k"),
         sums = Seq("v"), mins = Seq("v"), maxs = Seq("v"))
+      graft.lake.Mv.create(cat, "base_sum", "base", Seq("k"), Seq("v"))
+      graft.lake.Mv.createJoin(cat, "base_by_grp", "base", "dm", "k", "k",
+        None, Seq("grp"), sums = Seq("v"), mins = Seq("v"), maxs = Seq("v"))
+      val mvs = Seq("base_by_k", "base_sum", "base_by_grp")
       var nextId = 1000L
-      def recompute() = cat.read("base").groupBy("k")
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(sum("v"), lit(0L)).as("sum_v"),
-          min("v").as("min_v"), max("v").as("max_v"))
-        .orderBy("k").collect().map(_.toString).toSeq
-      def mvState() = cat.read("base_by_k")
-        .select("k", "n_rows", "sum_v", "min_v", "max_v")
-        .orderBy("k").collect().map(_.toString).toSeq
-      val modes = scala.collection.mutable.ArrayBuffer.empty[String]
+      def recompute(mv: String) = {
+        val (src, key) =
+          if (mv == "base_by_grp") (cat.read("base").join(cat.read("dm"), "k"), "grp")
+          else (cat.read("base"), "k")
+        val aggs = Seq(count(lit(1)).as("n_rows"),
+          coalesce(sum("v"), lit(0L)).as("sum_v")) ++
+          (if (mv == "base_sum") Nil else Seq(min("v").as("min_v"), max("v").as("max_v")))
+        src.groupBy(key).agg(aggs.head, aggs.tail: _*)
+          .orderBy(key).collect().map(_.toString).toSeq
+      }
+      def mvState(mv: String) = {
+        val cols = (if (mv == "base_by_grp") "grp" else "k") +:
+          (Seq("n_rows", "sum_v") ++
+            (if (mv == "base_sum") Nil else Seq("min_v", "max_v")))
+        cat.read(mv).select(cols.map(col): _*).orderBy(cols.head)
+          .collect().map(_.toString).toSeq
+      }
+      def refreshAll(): Boolean = mvs.forall { mv =>
+        val mode = graft.lake.Mv.refresh(cat, mv)
+        val ok = mvState(mv) == recompute(mv)
+        if (!ok) System.err.println(s"$mv after $mode refresh (ops=$ops)\n" +
+          s" got=${mvState(mv)}\n exp=${recompute(mv)}")
+        ok
+      }
       var midOk = true
       ops.foreach {
         case 0 =>
@@ -276,15 +299,14 @@ class TxPropertySpec extends SparkSpec {
         case 3 => cat.deleteMor("base", col("id") % 13 === 3)
         case 4 => cat.insert("other",
           spark.range(nextId, nextId + 1).toDF("id")); nextId += 1
-        case 5 =>
-          modes += graft.lake.Mv.refresh(cat, "base_by_k")
-          if (mvState() != recompute()) midOk = false
+        case 5 => if (!refreshAll()) midOk = false
         case 6 =>
           try cat.vacuum(keepLast = 2)
           catch { case _: RuntimeException => () } // nothing to expire
+        case 7 => cat.update("dm", col("k") === nextId % 5,
+          Map("grp" -> (col("grp") + 1L) % 3L)); nextId += 1
       }
-      modes += graft.lake.Mv.refresh(cat, "base_by_k")
-      midOk && mvState() == recompute()
+      refreshAll() && midOk
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
