@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Manifest-backed [[FileIndex]] — the scale piece that turns every lake
   * scan's pushed predicates into FILE-level skipping at plan time (the
@@ -64,21 +64,6 @@ final class GraftFileIndex(
         Map.empty)
     }))
 
-  /** Literal → the stats-string encoding [[Stats.cmpValues]] orders:
-    * numeric toString (cmp parses), strings verbatim, dates as the
-    * zero-padded ISO form (guarded by safeValue); None = not renderable
-    * (null literal, exotic type/value) → no pruning on this conjunct. */
-  private def render(c: ColumnDef, value: Any): Option[String] = {
-    if (value == null) return None
-    val s = c.typeJson match {
-      case "\"date\"" =>
-        java.time.LocalDate.ofEpochDay(
-          value.asInstanceOf[Number].longValue()).toString
-      case _ => value.toString
-    }
-    if (Stats.safeValue(c, s)) Some(s) else None
-  }
-
   private def colOf(e: Expression): Option[ColumnDef] = e match {
     case a: AttributeReference => byName.get(a.name).filter(Stats.comparable)
     case _ => None
@@ -128,7 +113,7 @@ final class GraftFileIndex(
     case LessThanOrEqual(l: Literal, a) => above(e, a, l.value)
     case StartsWith(a, Literal(p, _)) if p != null =>
       colOf(a) match {
-        case Some(c) if c.typeJson == "\"string\"" =>
+        case Some(c) if a.dataType == StringType =>
           val pre = p.toString
           // every string with this prefix sits in [pre, nextPrefix):
           // bump the last non-￿ char and drop the tail — when the
@@ -176,7 +161,7 @@ final class GraftFileIndex(
     colOf(attr) match {
       case Some(c) =>
         !(for {
-          v <- render(c, value)
+          v <- Stats.encode(c, value)
           st <- e.stats.get(c.name)
           lo <- Stats.cmpValues(c, st.min, v)
           hi <- Stats.cmpValues(c, st.max, v)
@@ -185,11 +170,11 @@ final class GraftFileIndex(
     }
 
   /** May file `e` hold `attr = value`? The min/max range, the partition
-    * value set and the bloom sidecar must each admit the rendered value
+    * value set and the bloom sidecar must each admit the encoded value
     * (the harvest's `cast(col AS string)` form); every missing piece
     * admits it, so a file is only skipped on proof. */
   private def point(e: FileEntry, attr: Expression, value: Any): Boolean =
-    colOf(attr).forall(c => render(c, value).forall { v =>
+    colOf(attr).forall(c => Stats.encode(c, value).forall { v =>
       Stats.overlaps(e.stats.get(c.name), c, v, v) &&
         e.pvals.get(c.name).forall(vs => vs.isEmpty || vs.contains(v)) &&
         e.blooms.get(c.name).forall(bloomHit(_, v))
@@ -202,7 +187,7 @@ final class GraftFileIndex(
     colOf(attr) match {
       case Some(c) =>
         (for {
-          v <- render(c, value)
+          v <- Stats.encode(c, value)
           st <- e.stats.get(c.name)
           r <- Stats.cmpValues(c, st.min, v)
         } yield r <= 0).getOrElse(true)
@@ -214,7 +199,7 @@ final class GraftFileIndex(
     colOf(attr) match {
       case Some(c) =>
         (for {
-          v <- render(c, value)
+          v <- Stats.encode(c, value)
           st <- e.stats.get(c.name)
           r <- Stats.cmpValues(c, st.max, v)
         } yield r >= 0).getOrElse(true)

@@ -84,11 +84,11 @@ class LakeCatalog(val spark: SparkSession, val root: String,
 
   /** Catalyst statistics for one schema-version file group, built from
     * manifest metadata already in memory (zero file reads, zero jobs):
-    * exact row count and byte size, per-column min/max for numeric
-    * columns covered by EVERY file's footer stats (a partial range could
-    * zero-out a filter estimate wrongly — all-or-nothing keeps the
-    * estimate conservative), and NDV folded driver-side from the opt-in
-    * per-file HLL sketches. With `spark.sql.cbo.enabled` +
+    * exact row count and byte size, and per column the [[Stats.fold]]
+    * of its file stats: min/max for numeric columns covered by EVERY
+    * file's stats (a partial range could zero-out a filter estimate
+    * wrongly — all-or-nothing keeps the estimate conservative), and NDV
+    * from the opt-in per-file HLL sketches. With `spark.sql.cbo.enabled` +
     * `spark.sql.cbo.planStats.enabled` these flow into FilterEstimation/
     * JoinEstimation, so broadcast choice and join ordering on lake
     * tables are decided in the INITIAL plan instead of waiting for AQE
@@ -100,28 +100,10 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.catalyst.TableIdentifier
     import org.apache.spark.sql.catalyst.catalog._
     val cols = st.columnsAt(v)
-    val integralTypes = Set("\"integer\"", "\"long\"", "\"short\"", "\"byte\"")
-    def integral(c: ColumnDef) = integralTypes(c.typeJson)
-    def numeric(c: ColumnDef) =
-      integral(c) || c.typeJson == "\"double\"" || c.typeJson == "\"float\""
     val totalRows = entries.map(_.rowCount).sum
     val colStats = cols.iterator.flatMap { c =>
-      val ranges = entries.map(_.stats.get(c.name))
-      val covered = entries.nonEmpty && ranges.forall(_.isDefined)
-      // Legacy manifests (pre non-finite harvest guard) can still carry
-      // "NaN"/"Infinity" min/max in double columns; those don't parse as
-      // BigDecimal, and this fold runs on EVERY read — degrade that
-      // column's stats to none instead of making the table unreadable.
-      def dec(s: String): Option[BigDecimal] =
-        scala.util.Try(BigDecimal(s)).toOption
-      val minMax =
-        if (numeric(c) && covered) {
-          val mins = ranges.flatten.map(s => dec(s.min))
-          val maxs = ranges.flatten.map(s => dec(s.max))
-          if (mins.forall(_.isDefined) && maxs.forall(_.isDefined))
-            (Some(mins.flatten.min.toString), Some(maxs.flatten.max.toString))
-          else (None, None)
-        } else (None, None)
+      val f = Stats.fold(c, entries, _ => Some(c.name))
+      val (mn, mx) = if (Stats.numeric(c)) (f.min, f.max) else (None, None)
       // exact null count only when EVERY file's harvest proved one —
       // a partial sum would misestimate IS NULL filters. NOT NULL
       // columns (which include every PRIMARY KEY column — createTable
@@ -132,22 +114,8 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       // a different current column's constraint.
       val notNullNow = st.columns
         .find(_.id == c.id).exists(cur => st.notNull.contains(cur.name))
-      val nulls =
-        if (covered && ranges.flatten.forall(_.nulls.isDefined))
-          Some(BigInt(ranges.flatten.flatMap(_.nulls).sum))
-        else if (notNullNow) Some(BigInt(0))
-        else None
-      val ndvExact =
-        if (entries.nonEmpty && entries.forall(_.ndv.contains(c.name))) {
-          // driver-side sketch union: O(files) tiny deserializations,
-          // no Spark job — the sketches are mergeable by design
-          val u = new org.apache.datasketches.hll.Union(12)
-          entries.foreach { e =>
-            u.update(org.apache.datasketches.hll.HllSketch.heapify(
-              java.util.Base64.getDecoder.decode(e.ndv(c.name))))
-          }
-          Some(BigInt(math.max(1L, u.getEstimate.toLong)))
-        } else None
+      val nulls = f.nulls.map(BigInt(_))
+        .orElse(if (notNullNow) Some(BigInt(0)) else None)
       // FilterEstimation requires distinctCount+nullCount alongside
       // min/max. NDV sources in decreasing exactness: the HLL sketch;
       // a single-column PRIMARY KEY (unique by constraint, so ndv =
@@ -162,7 +130,7 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       // current-schema identity of this file column (id-matched: renames
       // must not alias constraints across different columns)
       val curName = st.columns.find(_.id == c.id).map(_.name)
-      val ndv = ndvExact
+      val ndv = f.ndv.map(n => BigInt(math.max(1L, n)))
         .orElse {
           if (curName.exists(n => st.primaryKey == Seq(n)))
             Some(BigInt(totalRows)) // unique by constraint within the group
@@ -178,14 +146,12 @@ class LakeCatalog(val spark: SparkSession, val root: String,
           else None
         }
         .orElse {
-          if (integral(c) && minMax._1.isDefined && nulls.isDefined) {
-            val span = BigDecimal(minMax._2.get) - BigDecimal(minMax._1.get) + 1
-            Some(BigInt(totalRows).min(span.toBigInt).max(BigInt(1)))
-          } else None
+          for (lo <- mn; hi <- mx if Stats.integral(c) && nulls.isDefined)
+            yield BigInt(totalRows).min(BigInt(hi) - BigInt(lo) + 1).max(BigInt(1))
         }
-      if (minMax._1.isEmpty && ndv.isEmpty) None
+      if (mn.isEmpty && ndv.isEmpty) None
       else Some(c.name -> CatalogColumnStat(distinctCount = ndv,
-        min = minMax._1, max = minMax._2, nullCount = nulls))
+        min = mn, max = mx, nullCount = nulls))
     }.toMap
     CatalogTable(
       identifier = TableIdentifier("graft_lake_scan"), // display-only
@@ -401,31 +367,25 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     transaction(_.setProperty(table, "index.ndv", colName))
 
   /** Approximate COUNT(DISTINCT colName) folded from the manifest's
-    * per-file HLL sketches — ZERO data files read (the cardinality input
-    * every join planner wants, answered the way Iceberg/DuckDB answer it
-    * from stats). The merge is one driver-local job over the sketch
-    * bytes. Returns (estimate, metaOnly); when any file lacks a sketch
-    * (written before [[ndvIndex]], or a tiny write), carries tombstones
-    * (deleted rows would still be counted), or inlined rows exist, it
-    * FALLS BACK to an exact distributed COUNT(DISTINCT) — correct,
-    * never silently stale. */
+    * per-file HLL sketches — ZERO data files read and ZERO Spark jobs:
+    * the sketches union on the driver ([[Stats.fold]], the same fold the
+    * CBO column stats use). The cardinality input every join planner
+    * wants, answered the way Iceberg/DuckDB answer it from stats.
+    * Returns (estimate, metaOnly); when any file lacks a sketch (written
+    * before [[ndvIndex]], or a tiny write), carries tombstones (deleted
+    * rows would still be counted), or inlined rows exist, it FALLS BACK
+    * to an exact distributed COUNT(DISTINCT) — correct, never silently
+    * stale. */
   def approxDistinct(table: String, colName: String): (Long, Boolean) = {
     val st = liveState(table)
     val c = columnOf(st, table, colName)
-    val sketched = st.files.map(e => writtenName(st, e, c).flatMap(e.ndv.get))
-    val metaOk = st.files.nonEmpty && st.inlined.isEmpty &&
-      st.files.forall(_.dvRows == 0L) && sketched.forall(_.isDefined)
-    if (metaOk) {
-      import spark.implicits._
-      val sketches = sketched.flatten.map(java.util.Base64.getDecoder.decode(_: String))
-      val est = spark.createDataset(sketches).toDF("s")
-        .agg(expr("hll_sketch_estimate(hll_union_agg(s))"))
-        .head().getLong(0)
-      (est, true)
-    } else {
-      val exact = read(table).agg(countDistinct(col(colName)))
-        .head().getLong(0)
-      (exact, false)
+    val ndv =
+      if (st.inlined.nonEmpty || st.files.exists(_.dvRows > 0L)) None
+      else Stats.fold(c, st.files, writtenName(st, _, c)).ndv
+    ndv match {
+      case Some(est) => (est, true)
+      case None =>
+        (read(table).agg(countDistinct(col(colName))).head().getLong(0), false)
     }
   }
 
@@ -1001,69 +961,50 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   }
 
   /** Metadata-only aggregate — `COUNT(*)` / `MIN` / `MAX` answered from
-    * the manifest alone, ZERO data files read (DuckDB and Iceberg both
-    * play this trick from their stats tables). At 100 TB the difference
+    * the manifest alone, ZERO data files read and ZERO Spark jobs: the
+    * answer is [[Stats.fold]] over the file stats and inlined rows,
+    * returned as a local relation (DuckDB and Iceberg both play this
+    * trick from their stats tables). At 100 TB the difference
     * is "one cached metadata document" vs "a full-table scan". COUNT is
     * always answerable: per-file footer row counts minus deletion-vector
     * tombstones plus manifest-inlined rows are all exact. MIN/MAX take
     * the metadata path only when it is provably exact — every file
-    * carries stats for the column and none has tombstones (a deleted row
-    * may have held the extreme) — and otherwise FALL BACK to a scan; the
+    * carries stats for the column, none has tombstones (a deleted row
+    * may have held the extreme) and every inlined row is at the current
+    * schema version — and otherwise FALL BACK to a scan; the
     * `meta_only` column reports the path taken, so callers (and the
     * correctness gate) can pin when the optimization actually fires. */
   def statsAgg(table: String, cols: Seq[String] = Nil): DataFrame = {
+    import org.json4s._
     val st = liveState(table)
     val defs = cols.map(columnOf(st, table, _))
-    val curV = st.schemaVersion
+    // inlined rows live in the manifest document itself — folding them
+    // is still a metadata-only read (no file I/O)
+    val inlined = st.inlined.flatMap(_.rows)
+      .map(org.json4s.jackson.JsonMethods.parse(_))
+    val folds = defs.map(d => Stats.fold(d, st.files, writtenName(st, _, d),
+      inlined.map(_ \ d.name).map {
+        case JNothing | JNull => null
+        case v => v.values
+      }))
     // COUNT alone is ALWAYS metadata-exact (footer row counts, DV
     // tombstone counts, and inlined-row counts are all exact); MIN/MAX
-    // additionally need every file to carry stats for the column and no
-    // tombstones (a deleted row may have held the extreme)
-    val fileStats = defs.map(d =>
-      st.files.map(e => writtenName(st, e, d).flatMap(e.stats.get)))
-    val metaOk = defs.isEmpty || (defs.forall(Stats.comparable) &&
-      st.files.forall(_.dvRows == 0L) && fileStats.forall(_.forall(_.isDefined)) &&
-      st.inlined.forall(_.schemaVersion == curV))
-    val outSchema = StructType(
-      StructField("n", LongType, nullable = false) +:
-      defs.flatMap(d => Seq(
-        StructField(s"min_${d.name}", DataType.fromJson(d.typeJson)),
-        StructField(s"max_${d.name}", DataType.fromJson(d.typeJson)))) :+
-      StructField("meta_only", BooleanType, nullable = false))
+    // additionally need a covered fold, no tombstones (a deleted row may
+    // have held the extreme) and no inlined rows at an older schema
+    // version (they would need the rename/default alignment)
+    val metaOk = defs.isEmpty || (folds.forall(_.covered) &&
+      st.files.forall(_.dvRows == 0L) &&
+      st.inlined.forall(_.schemaVersion == st.schemaVersion))
     if (metaOk) {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      // inlined rows live in the manifest document itself — folding them
-      // is still a metadata-only read (no file I/O)
-      val inlinedJson = st.inlined.flatMap(_.rows).map(JsonMethods.parse(_))
-      def inlinedVals(name: String): Seq[String] = inlinedJson.flatMap { j =>
-        j \ name match {
-          case JNothing | JNull => None
-          case JString(s) => Some(s)
-          case JInt(i) => Some(i.toString)
-          case JLong(l) => Some(l.toString)
-          case JDouble(d) => Some(d.toString)
-          case JDecimal(d) => Some(d.toString)
-          case other => Some(JsonMethods.compact(JsonMethods.render(other)))
-        }
-      }
-      def typed(d: ColumnDef, s: String): Any = d.typeJson match {
-        case "\"integer\"" => s.toInt
-        case "\"long\"" => s.toLong
-        case "\"short\"" => s.toShort
-        case "\"byte\"" => s.toByte
-        case "\"double\"" => s.toDouble
-        case "\"float\"" => s.toFloat
-        case _ => s
-      }
+      val outSchema = StructType(
+        StructField("n", LongType, nullable = false) +:
+        defs.flatMap(d => Seq(
+          StructField(s"min_${d.name}", DataType.fromJson(d.typeJson)),
+          StructField(s"max_${d.name}", DataType.fromJson(d.typeJson)))) :+
+        StructField("meta_only", BooleanType, nullable = false))
       val n = st.files.map(_.liveRows).sum + st.inlinedRowCount
-      val vals = defs.zip(fileStats).flatMap { case (d, fs) =>
-        val inl = inlinedVals(d.name)
-        val mins = fs.flatten.map(_.min) ++ inl
-        val maxs = fs.flatten.map(_.max) ++ inl
-        Seq(
-          if (mins.isEmpty) null else typed(d, mins.reduce(Stats.minOf(d, _, _))),
-          if (maxs.isEmpty) null else typed(d, maxs.reduce(Stats.maxOf(d, _, _))))
+      val vals = defs.zip(folds).flatMap { case (d, f) =>
+        Seq(f.min, f.max).map(_.map(Stats.decode(d, _)).orNull)
       }
       spark.createDataFrame(
         java.util.List.of(Row.fromSeq(n +: vals :+ true)), outSchema)
@@ -1290,11 +1231,13 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * demos/01_transaction_rollback/demo.py:85-104,148-151). While open,
     * every DML/DDL statement routed through [[execute]] stages into it
     * and SELECTs read the STAGED state (read-your-writes); COMMIT
-    * publishes ONE snapshot covering everything staged. Interactive
-    * statements cannot be replayed, so on a losing OCC race COMMIT
-    * aborts (discarding the staged files) instead of retrying — the
-    * same observable behavior as a serialization failure in a SQL
-    * database. One open transaction per catalog instance. Volatile:
+    * publishes ONE snapshot covering everything staged. A lost OCC race
+    * REBASES like [[transaction]] when every commit that landed since
+    * BEGIN is table-scoped and disjoint from what the transaction
+    * touched; otherwise, since interactive statements cannot be
+    * replayed, COMMIT aborts (discarding the staged files) instead of
+    * retrying — the same observable behavior as a serialization failure
+    * in a SQL database. One open transaction per catalog instance. Volatile:
     * statements may arrive from a thread other than the one that ran
     * BEGIN, and a stale read here would silently auto-commit a statement
     * that should have staged. */
@@ -1321,13 +1264,10 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     val (tx, v) = activeTx.getOrElse(
       throw new IllegalStateException("COMMIT without an open transaction"))
     activeTx = None
-    val next = tx.buildSnapshot(v + 1)
-    store.publish(v + 1, next, snapshot(v)) match {
-      case Some(stored) => snapCache.put(v + 1, stored)
-      case None =>
-        tx.cleanupStaged()
-        throw new IllegalStateException("commit conflict: a concurrent " +
-          "writer published first; transaction rolled back")
+    if (!publishOrRebase(tx, v, v)) {
+      tx.cleanupStaged()
+      throw new IllegalStateException("commit conflict: a concurrent " +
+        "writer published a conflicting change first; transaction rolled back")
     }
   }
 
@@ -1370,17 +1310,29 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       val result =
         try f(tx)
         catch { case e: Throwable => tx.cleanupStaged(); throw e }
-      var pubBase = base
-      var rebasing = true
-      while (rebasing) {
-        val next = if (pubBase == base) tx.buildSnapshot(base + 1)
-          else tx.buildSnapshotOn(snapshot(pubBase), pubBase + 1)
-        store.publish(pubBase + 1, next, snapshot(pubBase)) match {
-          case Some(stored) =>
-            snapCache.put(pubBase + 1, stored)
-            return result
-          case None => ()
-        }
+      if (publishOrRebase(tx, base, base)) return result
+      tx.cleanupStaged()
+      attempts += 1
+      LakeCatalog.occRetries.increment()
+      Thread.sleep(rnd.nextLong(math.min(200L, 4L << math.min(attempts, 5))) + 1L)
+    }
+    throw new IllegalStateException(s"commit contention after $attempts attempts")
+  }
+
+  /** Publish `tx`, built on version `base`, as the next snapshot. On a
+    * lost race it REBASES onto the new head when `tx` is rebase-safe and
+    * every commit that landed since is table-scoped and disjoint from
+    * it, and tries again. False when a conflicting commit landed: the
+    * caller re-runs or aborts, and owns the staged files. */
+  @scala.annotation.tailrec
+  private def publishOrRebase(tx: Tx, base: Long, pubBase: Long): Boolean = {
+    val next = if (pubBase == base) tx.buildSnapshot(base + 1)
+      else tx.buildSnapshotOn(snapshot(pubBase), pubBase + 1)
+    store.publish(pubBase + 1, next, snapshot(pubBase)) match {
+      case Some(stored) =>
+        snapCache.put(pubBase + 1, stored)
+        true
+      case None =>
         val headV = currentVersion
         val conc = snapshot(headV).history
           .filter(h => h.snapshotId > pubBase && h.snapshotId <= headV)
@@ -1389,14 +1341,8 @@ class LakeCatalog(val spark: SparkSession, val root: String,
             k.startsWith("tables_") &&
               names.forall(n => !tx.conflictNames.contains(n)) }
         }
-        if (disjoint) pubBase = headV else rebasing = false
-      }
-      tx.cleanupStaged()
-      attempts += 1
-      LakeCatalog.occRetries.increment()
-      Thread.sleep(rnd.nextLong(math.min(200L, 4L << math.min(attempts, 5))) + 1L)
+        if (disjoint) publishOrRebase(tx, base, headV) else false
     }
-    throw new IllegalStateException(s"commit contention after $attempts attempts")
   }
 
   // --------------------------------------------- single-op convenience APIs
@@ -1651,10 +1597,6 @@ class LakeCatalog(val spark: SparkSession, val root: String,
   def delete(table: String, where: Column): Unit =
     inTx(_.delete(table, where))
 
-  /** Distributed DELETE by a DataFrame of keys — see [[Tx.delete]]. */
-  def delete(table: String, keys: DataFrame, keyCols: Seq[String]): Unit =
-    inTx(_.delete(table, keys, keyCols))
-
   /** Partition-retention fast-path delete — see [[Tx.deletePartitions]]. */
   def deletePartitions(table: String, eq: Map[String, String]): Unit =
     inTx(_.deletePartitions(table, eq))
@@ -1816,9 +1758,13 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * reads are untouched. Data files referenced by NO snapshot at all
     * (staged by an in-flight or crashed transaction) are only collected
     * once older than `orphanGraceMs`, so a slow concurrent writer's
-    * staged-but-unpublished files survive the sweep. */
+    * staged-but-unpublished files survive the sweep. Refused inside an
+    * open interactive transaction, like `CALL graft_vacuum`: its expiry
+    * commit is not table-scoped, so the later COMMIT could not rebase. */
   def vacuum(keepLast: Int = 10, orphanGraceMs: Long = 60L * 60 * 1000): Unit = {
     require(keepLast >= 1, "must keep at least the current snapshot")
+    require(!hasOpenTransaction, "vacuum cannot run inside an open " +
+      "interactive transaction — COMMIT or ROLLBACK first")
     if (currentVersion == 0) return
     val startMs = System.currentTimeMillis()
     // phase 1: commit the decision (skip the empty snapshot when there

@@ -247,32 +247,57 @@ final case class Snapshot(
     }
 }
 
-/** Typed comparisons over the string-encoded file stats. Only types whose
-  * string casts order-compare safely are harvested (integral, double,
-  * string); anything else simply gets no stats — pruning then degrades to
-  * scanning, never to wrong answers. */
+/** The one reader and writer of manifest column statistics.
+  *
+  * ENCODING CONTRACT. A file's per-column min/max ([[ColStat]]) are
+  * stored as the string Spark's `cast(value AS string)` renders: decimal
+  * integers, Java-style doubles, strings verbatim, dates as zero-padded
+  * ISO `yyyy-MM-dd`. Only integral, floating-point, string and date
+  * columns are [[comparable]]; anything else gets no stats. A value is
+  * stored or compared only when it is [[safeValue]], i.e. its string
+  * order under [[cmp]] is the column's true order; anything else simply
+  * is not recorded or compared — pruning degrades to scanning and
+  * metadata answers to a scan, never to a wrong answer.
+  *
+  * Every other module goes through this object: [[encode]] turns a
+  * driver-side value (a Catalyst literal, a parquet footer extreme, an
+  * inlined row's JSON value) into the stored form, [[decode]] turns a
+  * stored string back into the column's external value, [[overlaps]]/
+  * [[cmpValues]] order stored values for file skipping, and [[fold]]
+  * folds per-file stats into one column's table-level answer (the CBO
+  * column stats, `statsAgg`, `approxDistinct`). */
 object Stats {
-  def comparable(c: ColumnDef): Boolean = c.typeJson match {
-    case "\"integer\"" | "\"long\"" | "\"short\"" | "\"byte\"" |
-         "\"double\"" | "\"float\"" | "\"string\"" => true
-    // dates cast to zero-padded ISO strings ("2024-06-01"), which are
-    // timezone-independent and whose lexicographic order IS calendar
-    // order — the string comparator below is exact for them. TIMESTAMPS
-    // are deliberately NOT comparable: the string harvest renders them
-    // in the writing session's timezone, so cross-session pruning could
-    // silently drop matching files — pruning must never be wrong, only
-    // conservative.
-    case "\"date\"" => true
+  import org.apache.spark.sql.types._
+
+  /** Comparable column types, keyed by their `ColumnDef.typeJson`.
+    * TIMESTAMPS are deliberately NOT comparable: the string harvest
+    * renders them in the writing session's timezone, so cross-session
+    * pruning could silently drop matching files. Dates are: their ISO
+    * rendering is timezone-independent and its lexicographic order IS
+    * calendar order. */
+  private val Comparable: Map[String, DataType] =
+    Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
+      StringType, DateType).map(t => t.json -> t).toMap
+
+  private def typeOf(c: ColumnDef): Option[DataType] = Comparable.get(c.typeJson)
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
+
+  def comparable(c: ColumnDef): Boolean = typeOf(c).isDefined
+
+  /** Numeric columns — the ones whose folded min/max feed CBO. */
+  def numeric(c: ColumnDef): Boolean = typeOf(c).exists(_.isInstanceOf[NumericType])
+
+  def integral(c: ColumnDef): Boolean = typeOf(c).exists(isIntegral)
 
   /** Zero-padded 4-digit-year ISO date — the ONLY date rendering whose
     * lexicographic order is calendar order. Years ≥10000 render with
     * more digits (Spark prefixes '+') and BCE years with '-', and both
     * break string ordering ("9999-…" > "+10000-…"; "-0044" > "-0100"
-    * as strings but is the LATER year). Out-of-range values are simply
-    * not harvested and never compared — pruning degrades to scanning,
-    * never to wrong answers. */
+    * as strings but is the LATER year). */
   private val SafeDate = java.util.regex.Pattern.compile("""\d{4}-\d{2}-\d{2}""")
 
   /** Is this stat/probe value safe to order-compare under the column's
@@ -281,30 +306,55 @@ object Stats {
     * by UTF-8 bytes (Spark's UTF8String), while [[cmp]] uses UTF-16
     * `compareTo` — the two agree on every BMP-only string but can
     * DISAGREE when a supplementary character (surrogate pair) is
-    * involved, and pruning must never be wrong, so such values simply
-    * aren't compared (the file is kept). FLOATING-POINT values must be
-    * finite: Spark's min/max order NaN as the LARGEST value, so a single
-    * NaN row makes a file's max the string "NaN", and "NaN"/"Infinity"
-    * don't parse as BigDecimal in the catalog-stats fold — one such
-    * harvested value must never make a table unplannable or a prune
-    * decision wrong. Non-finite extremes simply aren't recorded:
-    * pruning (and CBO stats) degrade to scanning, never to a throw. */
-  def safeValue(c: ColumnDef, v: String): Boolean = c.typeJson match {
-    case "\"date\"" => SafeDate.matcher(v).matches()
-    case "\"string\"" =>
-      !v.exists(ch => ch >= '\uD800' && ch <= '\uDFFF')
-    case "\"double\"" | "\"float\"" =>
-      try java.lang.Double.isFinite(java.lang.Double.parseDouble(v))
-      catch { case _: NumberFormatException => false }
-    case _ => true
+    * involved. FLOATING-POINT values must be finite: Spark's min/max
+    * order NaN as the LARGEST value, so a single NaN row makes a file's
+    * max the string "NaN". Integral values must parse as a long. */
+  def safeValue(c: ColumnDef, v: String): Boolean = typeOf(c) match {
+    case Some(DateType) => SafeDate.matcher(v).matches()
+    case Some(StringType) => !v.exists(ch => ch >= '\uD800' && ch <= '\uDFFF')
+    case Some(FloatType | DoubleType) => v.toDoubleOption.exists(_.isFinite)
+    case Some(_) => v.toLongOption.isDefined
+    case None => false
   }
 
-  private def cmp(c: ColumnDef, a: String, b: String): Int = c.typeJson match {
-    case "\"integer\"" | "\"long\"" | "\"short\"" | "\"byte\"" =>
-      java.lang.Long.compare(a.toLong, b.toLong)
-    case "\"double\"" | "\"float\"" =>
+  private def cmp(c: ColumnDef, a: String, b: String): Int = typeOf(c) match {
+    case Some(t) if isIntegral(t) => java.lang.Long.compare(a.toLong, b.toLong)
+    case Some(FloatType | DoubleType) =>
       java.lang.Double.compare(a.toDouble, b.toDouble)
     case _ => a.compareTo(b)
+  }
+
+  /** Epoch-day window where `LocalDate.toString` and Spark's
+    * date→string cast agree on the zero-padded 4-digit-year ISO form:
+    * 0001-01-01 .. 9999-12-31. */
+  private val MinSafeEpochDay = java.time.LocalDate.of(1, 1, 1).toEpochDay
+  private val MaxSafeEpochDay = java.time.LocalDate.of(9999, 12, 31).toEpochDay
+
+  /** A driver-side value → its stored form. Dates take epoch days (a
+    * Catalyst date literal, a parquet footer's int32) or ISO text (an
+    * inlined row's JSON); every other type renders with `toString`
+    * (Catalyst's `UTF8String` included). None for a null, a
+    * non-comparable column, or a value outside the safe encoding. */
+  def encode(c: ColumnDef, v: Any): Option[String] = (typeOf(c), v) match {
+    case (None, _) | (_, null) => None
+    case (Some(DateType), n: Number) =>
+      val day = n.longValue
+      if (day < MinSafeEpochDay || day > MaxSafeEpochDay) None
+      else Some(java.time.LocalDate.ofEpochDay(day).toString)
+    case (_, x) => Some(x.toString).filter(safeValue(c, _))
+  }
+
+  /** A stored value → the column's external value (what a scan's `Row`
+    * holds for it; dates as `LocalDate`). */
+  def decode(c: ColumnDef, s: String): Any = typeOf(c) match {
+    case Some(ByteType) => s.toByte
+    case Some(ShortType) => s.toShort
+    case Some(IntegerType) => s.toInt
+    case Some(LongType) => s.toLong
+    case Some(FloatType) => s.toFloat
+    case Some(DoubleType) => s.toDouble
+    case Some(DateType) => java.time.LocalDate.parse(s)
+    case _ => s
   }
 
   /** Can [lo,hi] intersect this file's range?
@@ -326,13 +376,51 @@ object Stats {
     if (!safeValue(c, a) || !safeValue(c, b)) None
     else Some(cmp(c, a, b))
 
-  /** Smaller / larger of two stat values under the column's type order —
-    * for folding per-file min/max into a table-level answer
-    * (metadata-only aggregates). */
-  def minOf(c: ColumnDef, a: String, b: String): String =
-    if (cmp(c, a, b) <= 0) a else b
-  def maxOf(c: ColumnDef, a: String, b: String): String =
-    if (cmp(c, a, b) >= 0) a else b
+  /** One column's table-level statistics, folded from per-file stats.
+    * `covered`: every file carries an orderable stat and every extra
+    * value encodes — only then are `min`/`max` exact (they are None when
+    * not covered or when there is nothing to fold). `nulls`: the exact
+    * null count when every file's stat records one. `ndv`: the rounded
+    * union of every file's HLL sketch, when every file has one and there
+    * are no extra values. */
+  final case class Folded(covered: Boolean, min: Option[String],
+      max: Option[String], nulls: Option[Long], ndv: Option[Long])
+
+  /** Fold column `c` over `entries` — `nameIn(e)` is its name in the
+    * schema `e` was written under, None when `e` predates it — plus
+    * `values`, driver-side values held outside files (inlined rows).
+    * The NDV union runs on the driver over the sketch bytes: O(files)
+    * tiny deserializations, no Spark job (the sketches are mergeable by
+    * design, and lgK 12 is what `hll_sketch_agg` writes). */
+  def fold(c: ColumnDef, entries: Seq[FileEntry],
+      nameIn: FileEntry => Option[String], values: Seq[Any] = Nil): Folded = {
+    val stats = entries.map(e => nameIn(e).flatMap(e.stats.get))
+    val extra = values.filter(_ != null).map(encode(c, _))
+    val ranges = stats.flatten.map(s => (s.min, s.max)) ++
+      extra.flatten.map(v => (v, v))
+    val covered = comparable(c) && stats.forall(_.isDefined) &&
+      extra.forall(_.isDefined) &&
+      ranges.forall { case (lo, hi) => safeValue(c, lo) && safeValue(c, hi) }
+    def pick(vs: Seq[String], keepLeft: Int => Boolean) =
+      if (!covered || vs.isEmpty) None
+      else Some(vs.reduce((a, b) => if (keepLeft(cmp(c, a, b))) a else b))
+    val nulls =
+      if (stats.forall(_.exists(_.nulls.isDefined)))
+        Some(stats.flatMap(_.get.nulls).sum + values.count(_ == null))
+      else None
+    val sketches = entries.map(e => nameIn(e).flatMap(e.ndv.get))
+    val ndv =
+      if (entries.isEmpty || values.nonEmpty || sketches.exists(_.isEmpty)) None
+      else {
+        val u = new org.apache.datasketches.hll.Union(12)
+        sketches.flatten.foreach(s => u.update(
+          org.apache.datasketches.hll.HllSketch.heapify(
+            java.util.Base64.getDecoder.decode(s))))
+        Some(math.round(u.getEstimate))
+      }
+    Folded(covered, pick(ranges.map(_._1), _ <= 0), pick(ranges.map(_._2), _ >= 0),
+      nulls, ndv)
+  }
 
   /** Types whose parquet FOOTER statistics are exact and render
     * byte-identically to the Spark `cast(col AS string)` harvest:
@@ -343,26 +431,8 @@ object Stats {
     * serves them as ANSWERS, not just pruning bounds); float/double are
     * excluded (NaN-containing columns break the footer/SQL min-max
     * equivalence and NaN presence is not detectable from the footer). */
-  def footerExact(c: ColumnDef): Boolean = c.typeJson match {
-    case "\"integer\"" | "\"long\"" | "\"short\"" | "\"byte\"" |
-         "\"date\"" => true
-    case _ => false
-  }
-
-  /** Epoch-day window where `LocalDate.toString` and Spark's
-    * date→string cast agree on the zero-padded 4-digit-year ISO form:
-    * 0001-01-01 .. 9999-12-31. Outside it the renderings diverge
-    * ('+10000-…') — the stat is dropped, pruning degrades to scanning. */
-  private val MinSafeEpochDay = java.time.LocalDate.of(1, 1, 1).toEpochDay
-  private val MaxSafeEpochDay = java.time.LocalDate.of(9999, 12, 31).toEpochDay
-
-  private def renderFooterValue(c: ColumnDef, v: Long): Option[String] =
-    c.typeJson match {
-      case "\"date\"" =>
-        if (v < MinSafeEpochDay || v > MaxSafeEpochDay) None
-        else Some(java.time.LocalDate.ofEpochDay(v).toString)
-      case _ => Some(v.toString)
-    }
+  def footerExact(c: ColumnDef): Boolean =
+    typeOf(c).exists(t => isIntegral(t) || t == DateType)
 
   /** Per-file min/max harvested from the parquet FOOTER the write path
     * already opens for row counts — zero Spark jobs, the Iceberg-style
@@ -399,7 +469,7 @@ object Stats {
         }
       }
       if (!trusted || !seen) None
-      else for (mn <- renderFooterValue(c, lo); mx <- renderFooterValue(c, hi))
+      else for (mn <- encode(c, lo); mx <- encode(c, hi))
         yield c.name -> ColStat(mn, mx,
           if (nullsKnown) Some(nulls) else None)
     }.toMap
@@ -513,10 +583,6 @@ trait ManifestStore {
 
   // ------------------------------------------------------ backend primitives
   def currentVersion(): Long
-  /** Oldest version still materialized — vacuum moves this forward; the
-    * visible snapshot history starts here (expired versions are listed
-    * nowhere and refuse time travel). 1 when nothing was ever expired. */
-  def minAvailableVersion(): Long
   /** Every version still materialized. Tag-retained vacuums leave HOLES
     * (an old tagged snapshot outlives its untagged neighbors), so the
     * snapshot feed filters on membership, not on a min bound. One
@@ -656,11 +722,6 @@ final class FileManifestStore(root: String, conf: Configuration)
   def currentVersion(): Long = {
     val vs = listVersions()
     if (vs.isEmpty) 0L else vs.max
-  }
-
-  def minAvailableVersion(): Long = {
-    val vs = listVersions()
-    if (vs.isEmpty) 1L else vs.min
   }
 
   def availableVersions(): Seq[Long] = listVersions()
@@ -842,14 +903,6 @@ final class JdbcManifestStore(dsn: String) extends ManifestStore {
     try {
       val rs = st.executeQuery("SELECT MAX(version) FROM graft_manifests")
       if (rs.next() && rs.getObject(1) != null) rs.getLong(1) else 0L
-    } finally st.close()
-  }
-
-  def minAvailableVersion(): Long = withConn { c =>
-    val st = c.createStatement()
-    try {
-      val rs = st.executeQuery("SELECT MIN(version) FROM graft_manifests")
-      if (rs.next() && rs.getObject(1) != null) rs.getLong(1) else 1L
     } finally st.close()
   }
 

@@ -588,7 +588,7 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     val st = state(table)
     sets.keys.foreach(k =>
       require(st.columns.exists(_.name == k), s"no such column: $k"))
-    rewriteAffectedBy(table, _.filter(where), assigned = Some(sets.keySet)) { df =>
+    rewriteAffectedBy(table, where, assigned = Some(sets.keySet)) { df =>
       df.select(st.columns.map { c =>
         sets.get(c.name) match {
           case Some(newVal) =>
@@ -609,47 +609,8 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     * it evaluates NULL are kept — so the keep-filter is NOT(coalesce(where,
     * false)), consistent with affected-file discovery via filter(where). */
   def delete(table: String, where: Column): Unit = {
-    rewriteAffectedBy(table, _.filter(where), pureDelete = true)(
+    rewriteAffectedBy(table, where, pureDelete = true)(
       _.filter(not(coalesce(where, lit(false)))))
-    change("tables_deleted_from", table)
-  }
-
-  /** M4 copy-on-write `DELETE` by a DataFrame of keys — the CDC-apply /
-    * anti-join form. Where [[delete]] takes a predicate (which a caller
-    * with a large key SET would have to inline as a million-literal
-    * `isin`, materializing the keys on the driver), this form keeps the
-    * keys distributed end to end: affected files are found with a
-    * left-semi join against the tagged scan and the rewrite is a
-    * left-anti join — both shuffle-or-broadcast plans Catalyst sizes at
-    * runtime. A 100-TB CDC step deleting millions of keys never touches
-    * the driver. NULL semantics match [[delete]]: a row with a NULL key
-    * column never matches the anti join, so it is kept. */
-  def delete(table: String, keys: DataFrame, keyCols: Seq[String]): Unit = {
-    flushInlined(table)
-    val st = state(table)
-    keyCols.foreach(k => require(st.columns.exists(_.name == k),
-      s"no such column: $table.$k"))
-    require(keyCols.nonEmpty, "delete-by-keys requires at least one key column")
-    // align key types to the table's column types so join keys compare
-    // exactly — but only through LOSSLESS (up)casts. A narrowing cast
-    // (LongType key 4294967301 vs an IntegerType column) would wrap to 5
-    // in non-ANSI mode and silently delete the wrong row; an un-castable
-    // value would become NULL and silently match nothing. Fail loudly
-    // instead and make the caller cast deliberately.
-    val k = keys.select(keyCols.map { kc =>
-      val c = st.columns.find(_.name == kc).get
-      val target = DataType.fromJson(c.typeJson)
-      val from = keys.schema(kc).dataType
-      require(from == target ||
-        org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, target),
-        s"delete-by-keys: key column $kc is $from but $table.$kc is " +
-          s"$target — a narrowing cast could silently match the wrong " +
-          s"rows; cast the key DataFrame explicitly if intended")
-      col(kc).cast(target).as(kc)
-    }: _*).distinct()
-    rewriteAffectedBy(table,
-      tagged => tagged.join(k, keyCols, "left_semi"), pureDelete = true)(
-      affected => affected.join(k, keyCols, "left_anti"))
     change("tables_deleted_from", table)
   }
 
@@ -1133,22 +1094,20 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
     }
   }
 
-  /** Copy-on-write core: `matcher` maps the file-tagged scan to the rows
-    * whose files must rewrite — a predicate filter for [[delete]]/
-    * [[update]], a distributed semi-join for the DataFrame-of-keys
-    * delete. Only those files go through `transform`; the rest carry
+  /** Copy-on-write core of [[delete]]/[[update]]: the files holding a
+    * row that passes `where` go through `transform`; the rest carry
     * over, and old files stay on disk for time travel. `assigned` is an
     * UPDATE's set columns (see [[validate]]); when it holds a PK column
     * the rewritten rows' keys are also checked against the kept files. */
   private def rewriteAffectedBy(table: String,
-      matcher: DataFrame => DataFrame,
+      where: Column,
       assigned: Option[Set[String]] = None,
       pureDelete: Boolean = false)
       (transform: DataFrame => DataFrame): Unit = {
     flushInlined(table)
     val st = state(table)
     if (st.files.isEmpty) return
-    val affected = affectedFiles(st, matcher)
+    val affected = affectedFiles(st, _.filter(where))
     if (affected.isEmpty) return
     val kept = st.files.filterNot(affected.contains)
     // Rewrite affected files group-wise by their written schema version,

@@ -15,6 +15,23 @@ class LakeSpec extends SparkSpec {
 
   private def newLake(): LakeCatalog = new LakeCatalog(spark, tmpDir("lake"))
 
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def jobsIn[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val out = try f finally sc.clearJobGroup()
+    ListenerDrain.drain(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** A DATE value as a scan returns it (java.sql.Date, or LocalDate
+    * under the Java 8 datetime API). */
+  private def day(v: Any): java.time.LocalDate = v match {
+    case d: java.sql.Date => d.toLocalDate
+    case d: java.time.LocalDate => d
+  }
+
   private val invSchema = StructType(Seq(
     StructField("product_id", IntegerType),
     StructField("product_name", StringType),
@@ -678,6 +695,41 @@ class LakeSpec extends SparkSpec {
     cat2.insert("t", Seq((9, 90)).toDF("id", "v")) // concurrent writer
     intercept[IllegalStateException] { cat.execute("COMMIT") }
     assert(cat.read("t").select("id").as[Int].collect().toSet === Set(1, 2, 9))
+  }
+
+  test("interactive COMMIT rebases over disjoint commits; a same-table commit aborts it") {
+    val root = tmpDir("lake")
+    val cat = new LakeCatalog(spark, root)
+    cat.execute("CREATE TABLE a (id INTEGER)")
+    cat.execute("CREATE TABLE b (id INTEGER)")
+    def ids(t: String) = cat.read(t).select("id").as[Int].collect().toSet
+    // a second catalog writes another table while the transaction is open
+    cat.execute("BEGIN")
+    cat.execute("INSERT INTO a VALUES (1)")
+    new LakeCatalog(spark, root).insert("b", Seq(2).toDF("id"))
+    cat.execute("COMMIT")
+    assert(ids("a") === Set(1) && ids("b") === Set(2))
+    // maintenance this catalog commits on another table inside the open
+    // transaction (compact runs its own commit)
+    cat.insert("b", Seq(3).toDF("id"))
+    cat.execute("BEGIN")
+    cat.execute("INSERT INTO a VALUES (4)")
+    cat.compact("b")
+    cat.execute("COMMIT")
+    assert(ids("a") === Set(1, 4) && ids("b") === Set(2, 3))
+    assert(cat.current.tables("b").files.size === 1)
+    // a commit on the same table still aborts the transaction
+    cat.execute("BEGIN")
+    cat.execute("INSERT INTO a VALUES (5)")
+    new LakeCatalog(spark, root).insert("a", Seq(6).toDF("id"))
+    intercept[IllegalStateException] { cat.execute("COMMIT") }
+    assert(ids("a") === Set(1, 4, 6))
+    // vacuum's expiry commit could never rebase: refused while open
+    cat.execute("BEGIN")
+    intercept[IllegalArgumentException] { cat.vacuum(keepLast = 1) }
+    cat.execute("ROLLBACK")
+    cat.vacuum(keepLast = 1)
+    assert(ids("a") === Set(1, 4, 6) && ids("b") === Set(2, 3))
   }
 
   test("metadata readers see the open interactive transaction's staged writes") {
@@ -1602,13 +1654,22 @@ class LakeSpec extends SparkSpec {
 
   test("statsAgg answers count/min/max from the manifest, falls back when inexact") {
     val cat = newLake()
-    cat.createTableAs("t", spark.range(1000).selectExpr("id", "id * 2 AS v"))
-    cat.insertInlined("t", Seq((5000L, 42L)).toDF("id", "v"))
-    val r = cat.statsAgg("t", Seq("id", "v")).head()
+    cat.createTableAs("t", spark.range(1000).selectExpr("id", "id * 2 AS v",
+      "date_add(DATE'2024-01-01', CAST(id % 366 AS INT)) AS d",
+      "CAST(id AS STRING) AS s"))
+    cat.insertInlined("t", Seq((5000L, 42L, java.sql.Date.valueOf("2023-12-31"), "zz"))
+      .toDF("id", "v", "d", "s"))
+    val (rows, aggJobs) = jobsIn(cat.statsAgg("t", Seq("id", "v", "d", "s")).collect())
+    val r = rows.head
+    assert(aggJobs === 0, "the metadata path runs no Spark job")
     assert(r.getLong(0) === 1001L)                 // n
     assert(r.getLong(1) === 0L && r.getLong(2) === 5000L)  // min/max id
     assert(r.getLong(3) === 0L && r.getLong(4) === 1998L)  // min/max v... inlined 42 < 1998
-    assert(r.getBoolean(5))                        // meta_only
+    // dates come back typed; the inlined row holds the minimum
+    assert(day(r.get(5)) === java.time.LocalDate.of(2023, 12, 31))
+    assert(day(r.get(6)) === java.time.LocalDate.of(2024, 12, 31))
+    assert(r.getString(7) === "0" && r.getString(8) === "zz")
+    assert(r.getBoolean(9))                        // meta_only
     // MoR tombstones make MIN/MAX inexact from metadata -> scan fallback,
     // same answer shape; count-only stays metadata-exact
     cat.deleteMor("t", col("id") === 0L)
@@ -1627,6 +1688,12 @@ class LakeSpec extends SparkSpec {
     cat2.createTableAs("f", Seq((1L, 9.5), (2L, 8.5)).toDF("id", "v"))
     val r4 = cat2.statsAgg("f", Seq("v")).head()
     assert(!r4.getBoolean(3) && r4.getDouble(1) === 8.5 && r4.getDouble(2) === 9.5)
+    // a tiny DATE column keeps exact footer stats too
+    cat2.createTableAs("dt", Seq((1L, java.sql.Date.valueOf("2024-01-05")),
+      (2L, java.sql.Date.valueOf("2024-03-01"))).toDF("id", "d"))
+    val r5 = cat2.statsAgg("dt", Seq("d")).head()
+    assert(r5.getBoolean(3) && day(r5.get(1)) === java.time.LocalDate.of(2024, 1, 5) &&
+      day(r5.get(2)) === java.time.LocalDate.of(2024, 3, 1))
   }
 
   test("non-finite doubles never poison stats: reads, CBO fold and pruning survive NaN/Infinity") {
@@ -1724,8 +1791,9 @@ class LakeSpec extends SparkSpec {
     cat.ndvIndex("t", "k")
     cat.compact("t", targetFileBytes = 64L << 10) // backfills sketches
     assert(cat.current.tables("t").files.forall(_.ndv.contains("k")))
-    val (est, meta) = cat.approxDistinct("t", "k")
+    val ((est, meta), ndvJobs) = jobsIn(cat.approxDistinct("t", "k"))
     assert(meta && math.abs(est - 997L) <= 997L * 0.05)
+    assert(ndvJobs === 0, "the sketches union on the driver")
     // new inserts keep the table fully sketched; estimate tracks growth
     cat.insert("t", spark.range(5000).selectExpr("id + 100000 AS id",
       "id % 997 + 2000 AS k"))
