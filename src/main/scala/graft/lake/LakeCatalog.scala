@@ -823,15 +823,19 @@ class LakeCatalog(val spark: SparkSession, val root: String,
       throw new NoSuchElementException(s"view not found: $name"))), s)
   }
 
-  private def frame(plan: LogicalPlan): DataFrame = frame(plan, activeTx match {
-    case Some((tx, v)) => tx.buildSnapshot(v + 1)
-    case None => current
-  })
+  /** Inside an open interactive transaction the statement binds to the
+    * staged state, and every table it reads joins the transaction's
+    * conflict set (so COMMIT cannot rebase past a write to it). */
+  private def frame(plan: LogicalPlan): DataFrame = activeTx match {
+    case Some((tx, v)) => frame(plan, tx.buildSnapshot(v + 1), tx.stagedState(_))
+    case None => frame(plan, current)
+  }
 
-  private def frame(plan: LogicalPlan, s: Snapshot): DataFrame = {
+  private def frame(plan: LogicalPlan, s: Snapshot,
+      read: String => Unit = _ => ()): DataFrame = {
     require(!plan.isInstanceOf[Command] && !plan.isInstanceOf[ParsedStatement],
       s"unsupported statement: ${plan.nodeName}")
-    SqlFront.ofRows(spark, bind(plan, s))
+    SqlFront.ofRows(spark, bind(plan, s, read))
   }
 
   /** Bind a parsed query's lake references against snapshot `s`: time
@@ -839,16 +843,17 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * metadata table functions to their frames, tables to their
     * [[readState]] plans and stored views to their own parsed, bound
     * plans — lazily, only what the query names, so a view over a view
-    * resolves in any order. `ctes` holds the CTE names in scope (they
-    * shadow lake names, as in any SQL database); `views` is the stack of
-    * views being expanded (a cycle is refused). */
-  private def bind(p: LogicalPlan, s: Snapshot, ctes: Set[String] = Set.empty,
-      views: List[String] = Nil): LogicalPlan = {
-    def in(q: LogicalPlan, scope: Set[String] = ctes) = bind(q, s, scope, views)
+    * resolves in any order. `read` is told each table bound from `s`;
+    * `ctes` holds the CTE names in scope (they shadow lake names, as in
+    * any SQL database); `views` is the stack of views being expanded (a
+    * cycle is refused). */
+  private def bind(p: LogicalPlan, s: Snapshot, read: String => Unit,
+      ctes: Set[String] = Set.empty, views: List[String] = Nil): LogicalPlan = {
+    def in(q: LogicalPlan, scope: Set[String] = ctes) = bind(q, s, read, scope, views)
     def planOf(df: DataFrame) = df.queryExecution.analyzed
     def low(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-    def lookup[V](m: Map[String, V], n: String): Option[V] =
-      m.get(n).orElse(m.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v })
+    def lookup[V](m: Map[String, V], n: String): Option[(String, V)] =
+      m.get(n).map(n -> _).orElse(m.find(_._1.equalsIgnoreCase(n)))
     p match {
       case w: UnresolvedWith =>
         var seen = ctes
@@ -881,11 +886,13 @@ class LakeCatalog(val spark: SparkSession, val root: String,
             s"bad lake table function call: $fn(${args.map(_.sql).mkString(", ")})")
         })
       case r @ UnresolvedRelation(Seq(n), _, _) if !ctes(low(n)) =>
-        lookup(s.tables, n).map(st => SubqueryAlias(n, planOf(readState(st))))
-          .orElse(lookup(s.views, n).map { text =>
-            require(!views.contains(low(n)), s"view $n references itself")
-            SubqueryAlias(n, bind(parse(text), s, Set.empty, low(n) :: views))
-          }).getOrElse(r)
+        lookup(s.tables, n).map { case (k, st) =>
+          read(k)
+          SubqueryAlias(n, planOf(readState(st)))
+        }.orElse(lookup(s.views, n).map { case (_, text) =>
+          require(!views.contains(low(n)), s"view $n references itself")
+          SubqueryAlias(n, bind(parse(text), s, read, Set.empty, low(n) :: views))
+        }).getOrElse(r)
       case other => other.mapChildren(in(_)).transformExpressions {
         case e: SubqueryExpression => e.withNewPlan(in(e.plan))
       }
@@ -1234,7 +1241,8 @@ class LakeCatalog(val spark: SparkSession, val root: String,
     * publishes ONE snapshot covering everything staged. A lost OCC race
     * REBASES like [[transaction]] when every commit that landed since
     * BEGIN is table-scoped and disjoint from what the transaction
-    * touched; otherwise, since interactive statements cannot be
+    * touched (every table a statement wrote or read, SQL reads
+    * included); otherwise, since interactive statements cannot be
     * replayed, COMMIT aborts (discarding the staged files) instead of
     * retrying — the same observable behavior as a serialization failure
     * in a SQL database. One open transaction per catalog instance. Volatile:

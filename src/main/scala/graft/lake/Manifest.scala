@@ -377,39 +377,37 @@ object Stats {
     else Some(cmp(c, a, b))
 
   /** One column's table-level statistics, folded from per-file stats.
-    * `covered`: every file carries an orderable stat and every extra
-    * value encodes — only then are `min`/`max` exact (they are None when
-    * not covered or when there is nothing to fold). `nulls`: the exact
-    * null count when every file's stat records one. `ndv`: the rounded
-    * union of every file's HLL sketch, when every file has one and there
-    * are no extra values. */
-  final case class Folded(covered: Boolean, min: Option[String],
-      max: Option[String], nulls: Option[Long], ndv: Option[Long])
-
-  /** Fold column `c` over `entries` — `nameIn(e)` is its name in the
-    * schema `e` was written under, None when `e` predates it — plus
-    * `values`, driver-side values held outside files (inlined rows).
-    * The NDV union runs on the driver over the sketch bytes: O(files)
-    * tiny deserializations, no Spark job (the sketches are mergeable by
+    * Each answer is folded on first use, so a caller pays only for what
+    * it reads (the CBO reads min/max of numeric columns only,
+    * approxDistinct reads only `ndv`). `covered`: every file carries an
+    * orderable stat and every extra value encodes — only then are
+    * `min`/`max` exact (they are None when not covered or when there is
+    * nothing to fold). `nulls`: the exact null count when every file's
+    * stat records one. `ndv`: the rounded union of every file's HLL
+    * sketch, when every file has one and there are no extra values. The
+    * union runs on the driver over the sketch bytes: O(files) tiny
+    * deserializations, no Spark job (the sketches are mergeable by
     * design, and lgK 12 is what `hll_sketch_agg` writes). */
-  def fold(c: ColumnDef, entries: Seq[FileEntry],
-      nameIn: FileEntry => Option[String], values: Seq[Any] = Nil): Folded = {
-    val stats = entries.map(e => nameIn(e).flatMap(e.stats.get))
-    val extra = values.filter(_ != null).map(encode(c, _))
-    val ranges = stats.flatten.map(s => (s.min, s.max)) ++
+  final class Folded private[Stats] (c: ColumnDef, entries: Seq[FileEntry],
+      nameIn: FileEntry => Option[String], values: Seq[Any]) {
+    private lazy val stats = entries.map(e => nameIn(e).flatMap(e.stats.get))
+    private lazy val extra = values.filter(_ != null).map(encode(c, _))
+    private lazy val ranges = stats.flatten.map(s => (s.min, s.max)) ++
       extra.flatten.map(v => (v, v))
-    val covered = comparable(c) && stats.forall(_.isDefined) &&
+    lazy val covered: Boolean = comparable(c) && stats.forall(_.isDefined) &&
       extra.forall(_.isDefined) &&
       ranges.forall { case (lo, hi) => safeValue(c, lo) && safeValue(c, hi) }
-    def pick(vs: Seq[String], keepLeft: Int => Boolean) =
+    private def pick(vs: Seq[String], keepLeft: Int => Boolean) =
       if (!covered || vs.isEmpty) None
       else Some(vs.reduce((a, b) => if (keepLeft(cmp(c, a, b))) a else b))
-    val nulls =
+    lazy val min: Option[String] = pick(ranges.map(_._1), _ <= 0)
+    lazy val max: Option[String] = pick(ranges.map(_._2), _ >= 0)
+    lazy val nulls: Option[Long] =
       if (stats.forall(_.exists(_.nulls.isDefined)))
         Some(stats.flatMap(_.get.nulls).sum + values.count(_ == null))
       else None
-    val sketches = entries.map(e => nameIn(e).flatMap(e.ndv.get))
-    val ndv =
+    lazy val ndv: Option[Long] = {
+      val sketches = entries.map(e => nameIn(e).flatMap(e.ndv.get))
       if (entries.isEmpty || values.nonEmpty || sketches.exists(_.isEmpty)) None
       else {
         val u = new org.apache.datasketches.hll.Union(12)
@@ -418,9 +416,15 @@ object Stats {
             java.util.Base64.getDecoder.decode(s))))
         Some(math.round(u.getEstimate))
       }
-    Folded(covered, pick(ranges.map(_._1), _ <= 0), pick(ranges.map(_._2), _ >= 0),
-      nulls, ndv)
+    }
   }
+
+  /** Fold column `c` over `entries` — `nameIn(e)` is its name in the
+    * schema `e` was written under, None when `e` predates it — plus
+    * `values`, driver-side values held outside files (inlined rows). */
+  def fold(c: ColumnDef, entries: Seq[FileEntry],
+      nameIn: FileEntry => Option[String], values: Seq[Any] = Nil): Folded =
+    new Folded(c, entries, nameIn, values)
 
   /** Types whose parquet FOOTER statistics are exact and render
     * byte-identically to the Spark `cast(col AS string)` harvest:

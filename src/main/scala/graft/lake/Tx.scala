@@ -77,7 +77,8 @@ class Tx private[lake] (cat: LakeCatalog, base: Snapshot) {
   def read(table: String): DataFrame = cat.readState(state(table))
 
   /** Staged state lookup for the catalog's interactive-SQL surface
-    * (read-your-writes SELECTs between BEGIN and COMMIT). */
+    * (read-your-writes SELECTs between BEGIN and COMMIT); like [[read]],
+    * it adds the table to the conflict set. */
   private[lake] def stagedState(table: String): TableState = state(table)
   private[lake] def stagedTables: Map[String, TableState] = tables.toMap
 

@@ -685,51 +685,47 @@ class LakeSpec extends SparkSpec {
     cat.execute("ROLLBACK")
     assert(cat.read("t").count() === 2L)
     assert(cat.currentVersion === v)
-    // losing the OCC race aborts the interactive txn instead of retrying
-    // (its statements cannot be replayed); the concurrent write — from a
-    // SECOND catalog instance over the same store (this instance's Scala
-    // mutators stage into the open txn, see the mixed-API test) — survives
+    // losing the OCC race to a commit on a table the txn touched aborts
+    // it instead of retrying (its statements cannot be replayed); the
+    // concurrent write — from a SECOND catalog instance over the same
+    // store (this instance's Scala mutators stage into the open txn, see
+    // the mixed-API test) — survives
     cat.execute("BEGIN")
     cat.execute("INSERT INTO t VALUES (3, 30)")
     val cat2 = new LakeCatalog(spark, root)
     cat2.insert("t", Seq((9, 90)).toDF("id", "v")) // concurrent writer
     intercept[IllegalStateException] { cat.execute("COMMIT") }
     assert(cat.read("t").select("id").as[Int].collect().toSet === Set(1, 2, 9))
-  }
-
-  test("interactive COMMIT rebases over disjoint commits; a same-table commit aborts it") {
-    val root = tmpDir("lake")
-    val cat = new LakeCatalog(spark, root)
-    cat.execute("CREATE TABLE a (id INTEGER)")
-    cat.execute("CREATE TABLE b (id INTEGER)")
+    // a commit on a table the transaction neither read nor wrote does not
+    // conflict: COMMIT rebases onto it
     def ids(t: String) = cat.read(t).select("id").as[Int].collect().toSet
-    // a second catalog writes another table while the transaction is open
+    cat.execute("CREATE TABLE a (id INTEGER)")
     cat.execute("BEGIN")
     cat.execute("INSERT INTO a VALUES (1)")
-    new LakeCatalog(spark, root).insert("b", Seq(2).toDF("id"))
+    cat2.insert("t", Seq((10, 100)).toDF("id", "v"))
     cat.execute("COMMIT")
-    assert(ids("a") === Set(1) && ids("b") === Set(2))
-    // maintenance this catalog commits on another table inside the open
-    // transaction (compact runs its own commit)
-    cat.insert("b", Seq(3).toDF("id"))
+    assert(ids("a") === Set(1) && ids("t") === Set(1, 2, 9, 10))
+    // nor does maintenance this catalog commits on another table inside
+    // the open transaction (compact runs its own commit)
     cat.execute("BEGIN")
     cat.execute("INSERT INTO a VALUES (4)")
-    cat.compact("b")
+    cat.compact("t")
     cat.execute("COMMIT")
-    assert(ids("a") === Set(1, 4) && ids("b") === Set(2, 3))
-    assert(cat.current.tables("b").files.size === 1)
-    // a commit on the same table still aborts the transaction
+    assert(ids("a") === Set(1, 4) && ids("t") === Set(1, 2, 9, 10))
+    assert(cat.current.tables("t").files.size === 1)
+    // a table a statement only READ is in the conflict set too: the
+    // INSERT below was computed from a t that a concurrent write changed
     cat.execute("BEGIN")
-    cat.execute("INSERT INTO a VALUES (5)")
-    new LakeCatalog(spark, root).insert("a", Seq(6).toDF("id"))
+    cat.execute("INSERT INTO a SELECT max(id) FROM t")
+    cat2.delete("t", col("id") === 10)
     intercept[IllegalStateException] { cat.execute("COMMIT") }
-    assert(ids("a") === Set(1, 4, 6))
+    assert(ids("a") === Set(1, 4) && ids("t") === Set(1, 2, 9))
     // vacuum's expiry commit could never rebase: refused while open
     cat.execute("BEGIN")
     intercept[IllegalArgumentException] { cat.vacuum(keepLast = 1) }
     cat.execute("ROLLBACK")
     cat.vacuum(keepLast = 1)
-    assert(ids("a") === Set(1, 4, 6) && ids("b") === Set(2, 3))
+    assert(ids("a") === Set(1, 4) && ids("t") === Set(1, 2, 9))
   }
 
   test("metadata readers see the open interactive transaction's staged writes") {
@@ -2442,13 +2438,9 @@ class LakeSpec extends SparkSpec {
     assert(cat.readRange("t", "id", "5", "5").count() === want)
     assert(cat.readPartition("t", Map("id" -> "5")).count() === want)
     // pointScanFiles only plans: no Spark job
-    val sc = spark.sparkContext
-    val group = s"point-scan-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    val scanned = try cat.pointScanFiles("t", "id", "5") finally sc.clearJobGroup()
-    ListenerDrain.drain(sc)
+    val (scanned, scanJobs) = jobsIn(cat.pointScanFiles("t", "id", "5"))
     assert(scanned > 0L)
-    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    assert(scanJobs === 0)
     val agg = cat.statsAgg("t", Seq("id")).head()
     assert(agg.getAs[Long]("min_id") === 5L && agg.getAs[Long]("max_id") === 5L)
     assert(cat.approxDistinct("t", "id")._1 === 1L)
@@ -2545,19 +2537,15 @@ class LakeSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("s", StringType)))
     val batch = spark.range(1000).selectExpr("id", "cast(id % 50 AS string) AS s")
-    val sc = spark.sparkContext
     // the string stat column keeps the insert off the footer-only path,
     // so its stats come from the per-file harvest aggregate
     def insertJobs(ndv: Boolean): Int = {
       val cat = newLake()
       cat.createTable("t", schema, primaryKey = Seq("id"))
       if (ndv) cat.ndvIndex("t", "s")
-      val group = s"ndv-insert-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, group)
-      try cat.insert("t", batch) finally sc.clearJobGroup()
-      ListenerDrain.drain(sc)
+      val (_, jobs) = jobsIn(cat.insert("t", batch))
       if (ndv) assert(cat.current.tables("t").files.forall(_.ndv.contains("s")))
-      sc.statusTracker.getJobIdsForGroup(group).length
+      jobs
     }
     assert(insertJobs(ndv = true) === insertJobs(ndv = false))
   }
